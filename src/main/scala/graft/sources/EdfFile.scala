@@ -54,12 +54,13 @@ object EdfFile {
     def isDiscontiguous: Boolean = reserved == "EDF+D"
 
     /** Bytes per data record (sum over signals of 2·nrSamples). */
-    def recordBytes: Long = signals.map(_.nrSamples.toLong * 2).sum
+    lazy val recordBytes: Long = signals.map(_.nrSamples.toLong * 2).sum
 
     /** Start datetime in µs since epoch, UTC (reference edf.py:99-103:
-      * yy < 85 → 20yy else 19yy).
+      * yy < 85 → 20yy else 19yy). Parsed on first use, so a malformed
+      * date fails where it is first needed, not when the header parses.
       */
-    def startUs: Long = {
+    lazy val startUs: Long = {
       val Array(d, mo, y2) = startDate.split("\\.").map(_.trim.toInt)
       val Array(h, mi, s) = startTime.split("\\.").map(_.trim.toInt)
       val y = if (y2 < 85) y2 + 2000 else y2 + 1900

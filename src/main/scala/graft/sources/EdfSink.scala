@@ -234,8 +234,9 @@ object EdfSink {
     *
     * Consecutive samples almost always share their key (the EDF reader
     * emits per-(record, channel) runs), so the pack caches the last key
-    * and resolves it with two memcmps + one floorDiv per row, falling
-    * back to the broadcast match only on run boundaries.
+    * and its open block, and resolves a row with two memcmps + one
+    * floorDiv, falling back to the broadcast match and the open-block
+    * map only on run boundaries.
     */
   private[graft] val PackBlock = 4096
   private[graft] val MaxOpenBins = 256 // bound pack memory on very wide inputs
@@ -273,7 +274,10 @@ object EdfSink {
         // The append match is the same deterministic matchExisting the
         // driver reconcile re-applies to the discovered keys.
         val routeMemo = new java.util.HashMap[(String, String), (Long, Boolean)]()
-        // run cache: last (file, channel) -> route, last part -> key tuple
+        // run cache: last (file, channel) -> route, last part -> key
+        // tuple, and that key's open block (null until looked up, and
+        // again once the block is emitted) — the open-block map is hashed
+        // once per run, not once per sample
         var lastFile: UTF8String = null
         var lastChan: UTF8String = null
         var lastFileStr: String = null
@@ -282,6 +286,7 @@ object EdfSink {
         var lastSkip = false
         var lastPart = Long.MinValue
         var lastKey: (String, String, Long) = null
+        var lastBuf: PackBuf = null
         def newRun(f: UTF8String, c: UTF8String, rate: Double): Unit = {
           // clone: the UTF8Strings point into the scan's reused row buffer
           lastFile = f.clone(); lastChan = c.clone()
@@ -297,7 +302,7 @@ object EdfSink {
             routeMemo.put(mk, r)
           }
           lastOff = r._1; lastSkip = r._2
-          lastPart = Long.MinValue; lastKey = null
+          lastPart = Long.MinValue; lastKey = null; lastBuf = null
         }
         def emit(key: (String, String, Long), b: PackBuf): InternalRow = {
           val n = b.n
@@ -350,9 +355,10 @@ object EdfSink {
                 if (part != lastPart || lastKey == null) {
                   lastPart = part
                   lastKey = (lastFileStr, lastChanStr, part)
+                  lastBuf = null
                 }
-                var b = open.get(lastKey)
-                if (b == null) {
+                if (lastBuf == null) lastBuf = open.get(lastKey)
+                if (lastBuf == null) {
                   if (open.size >= MaxOpenBins) {
                     // flush the fullest open block to bound memory at
                     // (MaxOpenBins x PackBlock x 24 B) on very wide inputs
@@ -364,12 +370,15 @@ object EdfSink {
                     }
                     out.append(emit(maxK, open.remove(maxK)))
                   }
-                  b = new PackBuf(r.getDouble(5), r.getUTF8String(6).toString)
-                  open.put(lastKey, b)
+                  lastBuf = new PackBuf(r.getDouble(5), r.getUTF8String(6).toString)
+                  open.put(lastKey, lastBuf)
                 }
+                val b = lastBuf
                 b.idx(b.n) = sampleIdx; b.ts(b.n) = r.getLong(3); b.value(b.n) = r.getDouble(4)
                 b.n += 1
-                if (b.n == PackBlock) { open.remove(lastKey); out.append(emit(lastKey, b)) }
+                if (b.n == PackBlock) {
+                  open.remove(lastKey); out.append(emit(lastKey, b)); lastBuf = null
+                }
               }
             }
             if (out.isEmpty && !drained && !it.hasNext) {
@@ -405,20 +414,6 @@ object EdfSink {
     packedBlocks(projected, bExisting, bExOffsets, replayTag, maxSamplesPerFile)
       .repartition(col("file"), col("channel"), col("part"))
       .sortWithinPartitions(col("file"), col("channel"), col("part"), col("first_idx"))
-
-  /** Probe entry points (SinkStageProbe): the pack / dump relations for
-    * an overwrite-mode write of `projected` (7-column raw projection).
-    */
-  private[graft] def packedBlocksProbe(projected: DataFrame, maxSamplesPerFile: Long): DataFrame = {
-    val sc = projected.sparkSession.sparkContext
-    packedBlocks(projected, sc.broadcast(Seq.empty[ExistingChannel]),
-      sc.broadcast(Map.empty[Int, Long]), None, maxSamplesPerFile)
-  }
-  private[graft] def packedDumpProbe(projected: DataFrame, maxSamplesPerFile: Long): DataFrame = {
-    val sc = projected.sparkSession.sparkContext
-    packedDump(projected, sc.broadcast(Seq.empty[ExistingChannel]),
-      sc.broadcast(Map.empty[Int, Long]), None, maxSamplesPerFile)
-  }
 
   /** Intermediate rows between the bin-writing reduce and the manifest
     * assembly: kind 0 = per-bin DISCOVERY (the bin's key, rate/unit, and
@@ -574,17 +569,6 @@ object EdfSink {
     val outPath = new Path(outDir)
     val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     driverFs.mkdirs(outPath)
-    // dev-only phase timing (SPARK_GRAFT_SINK_DEBUG=1): one line per
-    // sink phase so write-throughput work attributes cost to a stage
-    // instead of guessing — zero overhead when unset
-    val dbg = sys.env.get("SPARK_GRAFT_SINK_DEBUG").contains("1")
-    var t0 = System.nanoTime()
-    def phase(name: String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      println(f"[sink-phase] $name ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
-
     // recover manifests staged by a crashed append: a _prev copy with no
     // committed destination is the surviving original — restore it; with
     // a committed destination the crashed run had already merged — drop it
@@ -617,7 +601,6 @@ object EdfSink {
     driverFs.mkdirs(jobTmp)
     val outDirStr = outPath.toString
     val jobTmpStr = jobTmp.toString
-    phase("plan_prep")
 
     // ---- THE job: the sink's ONLY pass over sample volume. ----
     // map:    pack samples into per-(file, channel, part) blocks, append
@@ -968,7 +951,6 @@ object EdfSink {
         finishChannel()
         outBuf.iterator
       }.collect().toSeq.sortBy(d => (d.file, d.channel))
-    phase("main_job")
 
     // ---- driver reconcile: channel-cardinality, zero sample I/O ----
     val keys: Seq[(String, String)] = summaries.map(d => (d.file, d.channel))
@@ -1074,7 +1056,6 @@ object EdfSink {
             d.start, d.end, d.newValues, d.nChunks)
       }
     }
-    phase("reconcile")
 
     // ---- commit job: channel-cardinality renames + manifest compose ----
     if (commitTasks.nonEmpty) {
@@ -1141,7 +1122,6 @@ object EdfSink {
         }
       }
     }
-    phase("commit_job")
 
     // in append mode a matched-but-empty incoming channel can't occur
     // (discovery only lists channels holding rows), but an UNTOUCHED
@@ -1158,7 +1138,6 @@ object EdfSink {
     val allOrds = (existing.map(_.ord) ++ keys.map(keyOrd)).distinct.sorted
     val idxPath = new Path(outPath, "channels.json")
     concatIndex(driverFs, idxPath, allOrds.map(o => new Path(outPath, manifestName(o))))
-    phase("index")
     idxPath.toString
   }
 

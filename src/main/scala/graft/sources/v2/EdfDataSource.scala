@@ -3,6 +3,7 @@ package graft.sources.v2
 import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -489,9 +490,18 @@ final class EdfMicroBatchStream(roots: Seq[String], fields: Array[String],
   * deselected signals' bytes are never transferred. With no keep-set the
   * whole record reads in one call (fewer seeks beats sliced reads when
   * every slice is needed anyway).
+  *
+  * The per-sample loop does no name matching, boxing or hashing: the
+  * projection is resolved once into one column kind per output field,
+  * each signal's calibration constants and rate are computed once, and
+  * `get()` returns ONE reused row filled with primitive setters. That row
+  * is valid until the next `next()` call — the scan's unsafe projection
+  * copies it before anything downstream buffers rows. Columns that are
+  * constant over a (record, signal) run are written once per run.
   */
 final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
     confEntries: Seq[(String, String)], pushdown: EdfPushdown) extends PartitionReader[InternalRow] {
+  import EdfPartitionReader._
 
   private val needsValue = fields.contains("value")
   private val h: EdfHeader = EdfFile.readHeader(part.path)
@@ -503,14 +513,24 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   private val selected = dataSignals.filter { case (s, i) => pushdown.keepSignal(s.label, i) }
   private val sliced = selected.size < dataSignals.size
   private val fileUtf = UTF8String.fromString(part.path)
-  private val labels = h.signals.map(s => UTF8String.fromString(s.label))
-  private val units = h.signals.map(s => UTF8String.fromString(s.physDim))
+  private val labels = h.signals.map(s => UTF8String.fromString(s.label)).toArray
+  private val units = h.signals.map(s => UTF8String.fromString(s.physDim)).toArray
 
-  // whole-record buffer (unpruned path) vs per-selected-signal slices
+  // per-signal constants, indexed by signal position in the header
+  private val selIdx: Array[Int] = selected.map(_._2).toArray
+  private val nrSamples: Array[Int] = h.signals.map(_.nrSamples).toArray
+  private val bitValue: Array[Double] = h.signals.map(_.bitValue).toArray
+  private val offset: Array[Double] = h.signals.map(_.offset).toArray
+  private val rate: Array[Double] = h.signals.indices.map(h.sampleRate).toArray
+
+  // output columns split by how often they change: once per (record,
+  // signal) run, or per sample
+  private val (runOrds, runKinds) = columns(fields, perSample = false)
+  private val (sampleOrds, sampleKinds) = columns(fields, perSample = true)
+  private val row = new SpecificInternalRow(fields.toSeq.map(f => EdfFile.sampleSchema(f).dataType))
+
+  // whole-record buffer (unpruned path) vs per-run slices
   private val buf = if (!sliced) new Array[Byte](recBytes.toInt) else null
-  private val sigBufs: Map[Int, Array[Byte]] =
-    if (sliced && needsValue) selected.map { case (s, i) => i -> new Array[Byte](s.nrSamples * 2) }.toMap
-    else Map.empty
   private val hasTsBounds = pushdown.tsLo != Long.MinValue || pushdown.tsHi != Long.MaxValue
   // EDF+D TAL slice buffer: needed whenever the whole record is NOT read
   // anyway (sliced path), and also whenever time bounds were pushed --
@@ -524,27 +544,37 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   // maximal contiguous runs of selected signals: ONE positioned read per
   // run instead of one per signal — fewer seeks, and exact transfer when
   // neighbors are co-selected (on an object store each run is one range
-  // request). Each entry: (byte offset within the record, run buffer,
-  // members as (signal idx, offset inside the run)).
-  private val sigRuns: Seq[(Long, Array[Byte], Seq[(Int, Int)])] =
+  // request). Each entry: (byte offset within the record, run buffer).
+  // Each member signal decodes straight out of its run buffer.
+  private val sigBytes = new Array[Array[Byte]](h.signals.size)
+  private val sigBase = new Array[Int](h.signals.size)
+  private val sigRuns: Seq[(Long, Array[Byte])] =
     if (sliced && needsValue) {
-      val runs = Seq.newBuilder[(Long, Array[Byte], Seq[(Int, Int)])]
+      val runs = Seq.newBuilder[(Long, Array[Byte])]
       var members = List.empty[(Int, Int)]
       var runStart = -1L
       var runLen = 0
+      def close(): Unit = if (members.nonEmpty) {
+        val rbuf = new Array[Byte](runLen)
+        members.foreach { case (i, o) => sigBytes(i) = rbuf; sigBase(i) = o }
+        runs += ((runStart, rbuf))
+      }
       selected.foreach { case (s, i) =>
         val off = sigOffsets(i)
         val len = s.nrSamples * 2
         if (members.nonEmpty && runStart + runLen == off) {
           members = (i, runLen) :: members; runLen += len
         } else {
-          if (members.nonEmpty) runs += ((runStart, new Array[Byte](runLen), members.reverse))
+          close()
           members = List((i, 0)); runStart = off; runLen = len
         }
       }
-      if (members.nonEmpty) runs += ((runStart, new Array[Byte](runLen), members.reverse))
+      close()
       runs.result()
-    } else Seq.empty
+    } else {
+      if (buf != null) selIdx.foreach { i => sigBytes(i) = buf; sigBase(i) = sigOffsets(i).toInt }
+      Seq.empty
+    }
 
   private var opened = false
   private lazy val in = {
@@ -566,10 +596,9 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   }
 
   private var rec = part.recordLo - 1
-  private var sigPos = 0      // index into selected
+  private var sigPos = 0      // index into selIdx
   private var sampleIdx = 0
   private var recStartUs = 0L
-  private var current: InternalRow = _
 
   private def parseTal(bytes: Array[Byte], off: Int): Long = {
     val len = h.signals(annIdx).nrSamples * 2
@@ -581,17 +610,14 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
     if (!sliced) {
       if (needsValue) in.readFully(recBase, buf)
     } else if (needsValue) {
-      sigRuns.foreach { case (off, rbuf, members) =>
-        in.readFully(recBase + off, rbuf)
-        members.foreach { case (i, o) => System.arraycopy(rbuf, o, sigBufs(i), 0, sigBufs(i).length) }
-      }
+      sigRuns.foreach { case (off, rbuf) => in.readFully(recBase + off, rbuf) }
     }
 
   private def advanceRecord(): Boolean = {
     var found = false
     while (!found) {
       rec += 1
-      if (rec >= part.recordHi) return false
+      if (rec >= part.recordHi) { sigPos = selIdx.length; return false }
       val recBase = h.headerBytes + rec * recBytes
       if (talBuf != null) {
         in.readFully(recBase + sigOffsets(annIdx), talBuf)
@@ -619,39 +645,82 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   }
 
   override def next(): Boolean = {
-    if (rec < part.recordLo) { if (!advanceRecord()) return false }
-    while (sigPos < selected.size && sampleIdx >= selected(sigPos)._1.nrSamples) {
+    if (sigPos >= selIdx.length) return false
+    if (rec < part.recordLo && !advanceRecord()) return false
+    var s = selIdx(sigPos)
+    while (sampleIdx >= nrSamples(s)) {
       sigPos += 1; sampleIdx = 0
+      if (sigPos >= selIdx.length && !advanceRecord()) return false
+      s = selIdx(sigPos)
     }
-    if (sigPos >= selected.size) {
-      if (!advanceRecord()) return false
-      return next()
-    }
-    val (sig, sIdx) = selected(sigPos)
-    val n = sig.nrSamples
     val i = sampleIdx
-    val values: Array[Any] = fields.map {
-      case "file"        => fileUtf
-      case "channel_idx" => sIdx
-      case "channel"     => labels(sIdx)
-      case "unit"        => units(sIdx)
-      case "rate"        => h.sampleRate(sIdx)
-      case "record_idx"  => rec.toLong
-      case "sample_idx"  => rec.toLong * n + i
-      case "ts_us"       => recStartUs + i.toLong * durUs / n
-      case "value" =>
-        val (bytes, base) =
-          if (sliced) (sigBufs(sIdx), 0)
-          else (buf, sigOffsets(sIdx).toInt)
-        val lo = bytes(base + 2 * i) & 0xff
-        val hi = bytes(base + 2 * i + 1)
-        sig.bitValue * (sig.offset + ((hi << 8) | lo).toDouble)
+    if (i == 0) {
+      var c = 0
+      while (c < runOrds.length) {
+        val o = runOrds(c)
+        (runKinds(c): @annotation.switch) match {
+          case FileCol       => row.update(o, fileUtf)
+          case ChannelIdxCol => row.setInt(o, s)
+          case ChannelCol    => row.update(o, labels(s))
+          case UnitCol       => row.update(o, units(s))
+          case RateCol       => row.setDouble(o, rate(s))
+          case RecordIdxCol  => row.setLong(o, rec.toLong)
+        }
+        c += 1
+      }
     }
-    current = InternalRow.fromSeq(values.toIndexedSeq)
+    val n = nrSamples(s)
+    var c = 0
+    while (c < sampleOrds.length) {
+      val o = sampleOrds(c)
+      (sampleKinds(c): @annotation.switch) match {
+        case SampleIdxCol => row.setLong(o, rec.toLong * n + i)
+        case TsUsCol      => row.setLong(o, recStartUs + i.toLong * durUs / n)
+        case ValueCol =>
+          val bytes = sigBytes(s)
+          val base = sigBase(s)
+          val lo = bytes(base + 2 * i) & 0xff
+          val hi = bytes(base + 2 * i + 1)
+          row.setDouble(o, bitValue(s) * (offset(s) + ((hi << 8) | lo).toDouble))
+      }
+      c += 1
+    }
     sampleIdx += 1
     true
   }
 
-  override def get(): InternalRow = current
+  override def get(): InternalRow = row
   override def close(): Unit = if (opened) { try in.close() catch { case _: Throwable => } }
+}
+
+private[v2] object EdfPartitionReader {
+  // output column kinds; run kinds are constant over a (record, signal) run
+  final val FileCol = 0
+  final val ChannelIdxCol = 1
+  final val ChannelCol = 2
+  final val UnitCol = 3
+  final val RateCol = 4
+  final val RecordIdxCol = 5
+  final val SampleIdxCol = 6
+  final val TsUsCol = 7
+  final val ValueCol = 8
+
+  private def kindOf(field: String): Int = field match {
+    case "file"        => FileCol
+    case "channel_idx" => ChannelIdxCol
+    case "channel"     => ChannelCol
+    case "unit"        => UnitCol
+    case "rate"        => RateCol
+    case "record_idx"  => RecordIdxCol
+    case "sample_idx"  => SampleIdxCol
+    case "ts_us"       => TsUsCol
+    case "value"       => ValueCol
+    case other => throw new IllegalArgumentException(s"edf source has no column '$other'")
+  }
+
+  /** (output ordinals, kinds) of the per-run or the per-sample columns. */
+  private def columns(fields: Array[String], perSample: Boolean): (Array[Int], Array[Int]) = {
+    val cols = fields.indices.map(o => (o, kindOf(fields(o)))).filter(c => (c._2 >= SampleIdxCol) == perSample)
+    (cols.map(_._1).toArray, cols.map(_._2).toArray)
+  }
 }

@@ -278,4 +278,88 @@ class EdfDataSourceSpec extends AnyFunSuite {
     }
     assert(e.getMessage != null, s"whole-record read fails on truncated file: $e")
   }
+
+  // ---- row parity with the RDD reference reader (EdfFile.read) on
+  // in-repo fixtures: every DSv2 reader path, compared as row multisets
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
+
+  private def assertParity(v2: org.apache.spark.sql.DataFrame,
+                           ref: org.apache.spark.sql.DataFrame, minRows: Int): Unit = {
+    assert(v2.schema.fieldNames.toSeq == ref.schema.fieldNames.toSeq)
+    val (a, b) = (rowsOf(v2), rowsOf(ref))
+    assert(a.size >= minRows, s"fixture yields rows: ${a.size}")
+    assert(a.distinct.size == a.size, "no row repeats (a reused row escaping uncopied would)")
+    assert(a == b)
+  }
+
+  /** EDF+C whose records mix two rates (4 and 8 samples per 1 s record),
+    * read one record per split so split boundaries are exercised too.
+    */
+  private lazy val mixedRate: (String, Long) = {
+    val tmp = java.nio.file.Files.createTempDirectory("edfparity")
+    val p = s"$tmp/mixed.edf"
+    EdfDFixtures.makeEdfC(p, "00.00.00", Seq("A1", "B2", "C3"), nRecords = 5,
+      samplesPerRecord = Seq(4, 8, 4))
+    (p, EdfFile.readHeader(p).recordBytes)
+  }
+
+  private def v2Mixed = {
+    val (p, recBytes) = mixedRate
+    spark.read.format("edf").option("targetSplitBytes", recBytes.toString).load(p)
+  }
+
+  test("parity: full schema collected with no projection equals EdfFile.read") {
+    val v2 = v2Mixed
+    assert(v2.rdd.getNumPartitions == 5, "one split per record")
+    assertParity(v2, EdfFile.read(spark, Seq(mixedRate._1)), minRows = 5 * 16)
+  }
+
+  test("parity: user schema in non-schema column order") {
+    import org.apache.spark.sql.types._
+    val user = StructType(Seq(StructField("value", DoubleType), StructField("channel", StringType),
+      StructField("ts_us", LongType), StructField("rate", DoubleType),
+      StructField("sample_idx", LongType), StructField("channel_idx", IntegerType)))
+    val v2 = spark.read.schema(user).format("edf")
+      .option("targetSplitBytes", mixedRate._2.toString).load(mixedRate._1)
+    assert(v2.schema.fieldNames.toSeq == user.fieldNames.toSeq)
+    assertParity(v2, EdfFile.read(spark, Seq(mixedRate._1)).select(user.fieldNames.map(col).toSeq: _*),
+      minRows = 5 * 16)
+  }
+
+  test("parity: a projection without value synthesizes rows from the header") {
+    val cols = Seq("file", "channel_idx", "channel", "unit", "rate", "record_idx", "sample_idx", "ts_us")
+    val v2 = v2Mixed.select(cols.map(col): _*)
+    val scan = v2.queryExecution.executedPlan.toString
+    assert(!scan.contains("value"), s"value pruned from the scan:\n$scan")
+    assertParity(v2, EdfFile.read(spark, Seq(mixedRate._1)).select(cols.map(col): _*), minRows = 5 * 16)
+  }
+
+  test("parity: channel filters take the sliced read path") {
+    val ref = EdfFile.read(spark, Seq(mixedRate._1))
+    // one signal; two adjacent signals (one read run); two separated
+    // signals (two read runs)
+    Seq(Seq("B2"), Seq("A1", "B2"), Seq("A1", "C3")).foreach { chans =>
+      val v2 = v2Mixed.filter(col("channel").isin(chans: _*))
+      assert(v2.queryExecution.executedPlan.toString.contains("(channel,"), s"pushed: $chans")
+      assertParity(v2, ref.filter(col("channel").isin(chans: _*)), minRows = 5 * 4)
+    }
+  }
+
+  test("parity: EDF+D with and without ts_us bounds") {
+    val tmp = java.nio.file.Files.createTempDirectory("edfdparity")
+    val p = s"$tmp/disc.edf"
+    EdfDFixtures.makeEdfD(p, Seq(0.0, 10.0, 25.0, 40.0), labels = Seq("D1", "D2"),
+      samplesPerRecord = Seq(4, 8))
+    val h = EdfFile.readHeader(p)
+    val ref = EdfFile.read(spark, Seq(p))
+    assertParity(spark.read.format("edf").load(p), ref, minRows = 4 * 12)
+    // bounds cut inside records 1 and 2: records 0 and 3 are TAL-skipped
+    val (lo, hi) = (h.startUs + 10500000L, h.startUs + 25500000L)
+    val inWindow = col("ts_us") >= lo && col("ts_us") < hi
+    val bounded = spark.read.format("edf").load(p).filter(inWindow)
+    assert(bounded.queryExecution.executedPlan.toString.contains("GreaterThanOrEqual(ts_us"))
+    assertParity(bounded, ref.filter(inWindow), minRows = 12)
+  }
 }

@@ -43,4 +43,46 @@ class EdfPipelineSpec extends AnyFunSuite {
       "2 of 3 per-record splits dropped at plan time via the landed sidecar")
     assert(sliced.count() == 4, "middle record only, row-exact")
   }
+
+  test("process() over EDF+C then an appended EDF+D writes the bytes of the RDD reader path") {
+    // the DSv2 reader feeding the sink's pack must be invisible in the
+    // output: every binary, manifest and channels.json byte equals
+    // EdfSink.write over EdfFile.read (the RDD reference path), across
+    // an overwrite then a gap-carrying append with mixed rates. sig2
+    // spans several pack blocks, and its 12-sample record runs do not
+    // divide PackBlock, so blocks fill and are emitted mid-run.
+    val tmp = Files.createTempDirectory("edfpipeparity")
+    val c = s"$tmp/c.edf"; val d = s"$tmp/d.edf"
+    EdfDFixtures.makeEdfC(c, "00.00.00", Seq("sig1", "sig2"), nRecords = 1200,
+      samplesPerRecord = Seq(4, 12))
+    // 600 records after the EDF+C end, with a 1 h gap after the 300th
+    val onsets = (0 until 600).map(i => 1300.0 + i + (if (i >= 300) 3600 else 0))
+    EdfDFixtures.makeEdfD(d, onsets, labels = Seq("sig1", "sig2"), samplesPerRecord = Seq(4, 12))
+    val viaPipeline = s"$tmp/pipeline"; val viaRdd = s"$tmp/rdd"
+    EdfPipeline.process(spark, Seq(c), viaPipeline)
+    EdfPipeline.process(spark, Seq(d), viaPipeline, mode = "append")
+    graft.sources.EdfSink.write(graft.sources.EdfFile.read(spark, Seq(c)), viaRdd)
+    graft.sources.EdfSink.write(graft.sources.EdfFile.read(spark, Seq(d)), viaRdd, mode = "append")
+
+    def files(dir: String): Map[String, Array[Byte]] = {
+      val root = Paths.get(dir)
+      val it = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        it.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => root.relativize(f).toString -> Files.readAllBytes(f)).toMap
+      } finally it.close()
+    }
+    val (got, want) = (files(viaPipeline), files(viaRdd))
+    assert(got.keySet == want.keySet)
+    Seq("channels.json", "channel.json", "channel-00001.json", "sig1.ts.bin",
+        "sig1-g01-part00000.ts.bin", "sig2-g01-part00000.ts.bin").foreach { f =>
+      assert(want.contains(f), s"$f written: ${want.keySet.toSeq.sorted}")
+    }
+    want.keys.toSeq.sorted.foreach(f => assert(java.util.Arrays.equals(got(f), want(f)), s"$f bytes"))
+    assert(want("sig2.ts.bin").length == 1200 * 12 * 8, "every sig2 sample written")
+    assert(want("sig2-g01-part00000.ts.bin").length == 600 * 12 * 8, "every appended sig2 sample")
+    val first = new String(want("channel.json"))
+    assert("\"index\"".r.findAllIn(first).size == 3, s"one chunk per contiguous run: $first")
+  }
 }

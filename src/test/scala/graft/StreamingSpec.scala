@@ -387,38 +387,8 @@ class StreamingSpec extends AnyFunSuite {
   private def stripTag(manifest: String): String =
     manifest.replaceAll(""",\s*\{"key": "appendTag", "value": "[^"]*"\}""", "")
 
-  private def makeEdfC(path: String, startTime: String, labels: Seq[String]): Unit = {
-    def pad(s: String, n: Int): Array[Byte] = {
-      val b = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      b ++ Array.fill(n - b.length)(' '.toByte)
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    val nSig = labels.size
-    out.write(pad("0", 8)); out.write(pad("patient", 80)); out.write(pad("rec", 80))
-    out.write(pad("01.01.20", 8)); out.write(pad(startTime, 8))
-    out.write(pad((256 + nSig * 256).toString, 8)); out.write(pad("", 44))
-    out.write(pad("3", 8)); out.write(pad("1", 8)); out.write(pad(nSig.toString, 4))
-    labels.foreach(l => out.write(pad(l, 16)))
-    labels.foreach(_ => out.write(pad("", 80)))
-    labels.foreach(_ => out.write(pad("uV", 8)))
-    labels.foreach(_ => out.write(pad("-100", 8)))
-    labels.foreach(_ => out.write(pad("100", 8)))
-    labels.foreach(_ => out.write(pad("-32768", 8)))
-    labels.foreach(_ => out.write(pad("32767", 8)))
-    labels.foreach(_ => out.write(pad("", 80)))
-    labels.foreach(_ => out.write(pad("4", 8)))
-    labels.foreach(_ => out.write(pad("", 32)))
-    (0 until 3).foreach { r =>
-      labels.indices.foreach { s =>
-        (0 until 4).foreach { i =>
-          val v = r * 4 + i + s * 100
-          out.write(v & 0xff); out.write((v >> 8) & 0xff)
-        }
-      }
-    }
-    val f = new java.io.FileOutputStream(path)
-    try f.write(out.toByteArray) finally f.close()
-  }
+  private def makeEdfC(path: String, startTime: String, labels: Seq[String]): Unit =
+    EdfDFixtures.makeEdfC(path, startTime, labels)
 
   test("A13b: EDF files landing in a watched dir stream-ingest and append-match the batch path") {
     import java.nio.file.{Files, Paths}
