@@ -3,8 +3,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    // optional arg: comma-separated query names to bench (default all)
+    val selected = SparkEntry.select(args.lift(0))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up: touch every table and compile one trivial noop write so the
     // first timed query doesn't absorb session/codegen startup
@@ -20,12 +22,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] stats registration skipped: ${e.getMessage}")
     }
-    // optional arg: comma-separated query names to bench (default all)
-    val only = args.lift(0).map(_.split(",").toSet)
-    only.foreach(names => require(names.subsetOf(SparkEntry.queries.keySet),
-      s"unknown query name(s): ${(names -- SparkEntry.queries.keySet).mkString(", ")}"))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       // noop sink forces full evaluation of every output column —

@@ -502,8 +502,10 @@ object PlanAudit {
 
     // EDF DSv2 scan: channel + time predicates must reach the source
     // (per-signal ranged reads + record-window partition pruning)
-    val edfDf = spark.read.format("edf").load("/root/reference/sample_data/sin_wave.edf")
-      .filter(org.apache.spark.sql.functions.col("channel") === "Sin 20Hz" &&
+    val edfPath = java.nio.file.Files.createTempDirectory("planaudit-edf").resolve("audit.edf").toString
+    EdfScaleProbe.generate(edfPath, nSig = 2, samplesPerRec = 256, nRec = 16, gapEveryRecs = 0)
+    val edfDf = spark.read.format("edf").load(edfPath)
+      .filter(org.apache.spark.sql.functions.col("channel") === "ch000" &&
         org.apache.spark.sql.functions.col("ts_us") < Long.MaxValue / 2)
     edfDf.collect()
     val edfScanDesc = edfDf.queryExecution.executedPlan.collectLeaves()

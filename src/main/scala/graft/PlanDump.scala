@@ -18,13 +18,11 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...> [--no-stats-ok]")
     val outDir = args(0)
     val suffix = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val selected = SparkEntry.select(Some(args(2)))
     val noStatsOk = args.contains("--no-stats-ok")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     var statsMarker = ""
     try Tables.register(spark, sfDir, db = "graft_bench")
@@ -36,8 +34,8 @@ object PlanDump {
       System.err.println(s"[plandump] stats registration skipped: ${e.getMessage}")
     }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    selected.foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       val txt = statsMarker + df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")

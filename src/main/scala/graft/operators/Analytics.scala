@@ -477,11 +477,6 @@ object Analytics {
     * joins of edge-sized relations instead of a 34× wedge shuffle + semi
     * join (no cross product, plan-audited).
     */
-  /** The (edges, degrees, oriented-edges) triple behind [[triangleCount]],
-    * exposed so the sf10 scale probe can MEASURE the oriented-wedge
-    * intermediate (Σ C(d⁺,2)) from the exact relation the operator joins,
-    * not a re-derivation that could drift.
-    */
   /** Skew gate for the basket-quadratic operators (B23/B29): pair
     * generation within an order is Σ C(basket, 2) — corpus-linear when
     * baskets are bounded, but ONE pathological 100k-item basket is 5e9
@@ -531,6 +526,10 @@ object Analytics {
       .select(col("p.a").as("a"), col("p.b").as("b"))
   }
 
+  /** The (edges, degrees, oriented-edges) triple behind [[triangleCount]].
+    * The sf10 oriented-wedge figure (Σ C(d⁺,2)) in its Scaladoc was
+    * measured from this exact relation by a since-deleted probe.
+    */
   private[graft] def coPurchaseOriented(t: Tables, maxBasket: Int = 4096): (DataFrame, DataFrame, DataFrame) = {
     val li = t.lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("s"))
     requireBasketBound(li.withColumnRenamed("s", "item"), maxBasket, "triangleCount")
@@ -548,8 +547,8 @@ object Analytics {
 
   /** Orient each edge from the lower (degree, id) endpoint to the higher —
     * the one definition shared by [[coPurchaseOriented]] and the
-    * degree-materializing path in [[triangleCount]], so the operator and
-    * the sf10 wedge probe can never drift.
+    * degree-materializing path in [[triangleCount]], so the two can
+    * never drift.
     */
   private def orientEdges(e: DataFrame, deg: DataFrame): DataFrame = {
     val da = deg.select(col("n").as("a"), col("d").as("da"))

@@ -132,9 +132,10 @@ object EdfOnsetIndex {
       // ~22 pages ≈ 45 KB cold. Reads go through the RAW filesystem in
       // exact page units with page checksums verified against the .crc
       // file HERE (16 crc bytes per page): the checksum LAYER's
-      // positioned reads cost a measured 8-10 KB each regardless of
-      // io.file.buffer.size (SidecarBytesProbe), which made the search
-      // 160 KB instead of 45; integrity is kept, the floor is not.
+      // positioned reads cost 8-10 KB each regardless of
+      // io.file.buffer.size (measured by a since-deleted probe), which
+      // made the search 160 KB instead of 45; integrity is kept, the
+      // floor is not.
       val PageBytes = 2048
       val in = PageReader.open(fs, p, PageBytes)
       try {

@@ -13,7 +13,7 @@ class EdfDataSourceSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
     .getOrCreate()
 
-  val sinEdf = "/root/reference/sample_data/sin_wave.edf"
+  val sinEdf = EdfDFixtures.sinWaveEdf
 
   test("format(\"edf\") reads the same rows as EdfFile.read") {
     val v2 = spark.read.format("edf").load(sinEdf)

@@ -1,24 +1,23 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
-import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.EdfFile
 
-/** A1/A2: EDF reader vs the reference's own sample files and test params
-  * (reference tests/params.py: test.edf = 11 channels x 120000 samples
-  * @200 Hz; sin_wave.edf = 2 channels x 12000 @800 Hz), plus a synthetic
-  * EDF+D file exercising the discontiguous-timestamp path.
+/** A1/A2: EDF reader vs the reference's test params (reference
+  * tests/params.py: test.edf = 11 channels x 120000 samples @200 Hz;
+  * sin_wave.edf = 2 channels x 12000 @800 Hz) on in-repo stand-ins of its
+  * sample files ([[EdfDFixtures.testEdf]], [[EdfDFixtures.sinWaveEdf]]),
+  * plus a synthetic EDF+D file exercising the discontiguous-timestamp path.
   */
 class EdfFileSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
     .getOrCreate()
 
-  val testEdf = "/root/reference/sample_data/test.edf"
-  val sinEdf  = "/root/reference/sample_data/sin_wave.edf"
+  val testEdf = EdfDFixtures.testEdf
+  val sinEdf  = EdfDFixtures.sinWaveEdf
 
   test("header parse matches reference test params (test.edf)") {
     val h = EdfFile.readHeader(testEdf)
@@ -76,46 +75,9 @@ class EdfFileSpec extends AnyFunSuite {
   }
 
   // --- synthetic EDF+D: 1 data signal (4 samples/record) + annotation signal,
-  // 3 records at onsets 0s, 10s, 25s ---
-  private def pad(s: String, n: Int): Array[Byte] = {
-    val b = s.getBytes(StandardCharsets.US_ASCII)
-    require(b.length <= n, s"'$s' wider than $n")
-    b ++ Array.fill(n - b.length)(' '.toByte)
-  }
-
-  private def makeEdfD(path: String, onsets: Seq[Double]): Unit = {
-    val out = new ByteArrayOutputStream()
-    val nSig = 2
-    val annNr = 16 // 32 bytes of TAL per record
-    out.write(pad("0", 8)); out.write(pad("patient", 80)); out.write(pad("rec", 80))
-    out.write(pad("01.01.20", 8)); out.write(pad("00.00.00", 8))
-    out.write(pad((256 + nSig * 256).toString, 8))
-    out.write(pad("EDF+D", 44))
-    out.write(pad(onsets.size.toString, 8)); out.write(pad("1", 8)); out.write(pad(nSig.toString, 4))
-    // signal headers, column-major
-    out.write(pad("sig1", 16)); out.write(pad("EDF Annotations", 16))
-    out.write(pad("", 80)); out.write(pad("", 80))         // transducer
-    out.write(pad("uV", 8)); out.write(pad("", 8))          // physDim
-    out.write(pad("-100", 8)); out.write(pad("-1", 8))      // physMin
-    out.write(pad("100", 8)); out.write(pad("1", 8))        // physMax
-    out.write(pad("-32768", 8)); out.write(pad("-32768", 8))
-    out.write(pad("32767", 8)); out.write(pad("32767", 8))
-    out.write(pad("", 80)); out.write(pad("", 80))          // prefiltering
-    out.write(pad("4", 8)); out.write(pad(annNr.toString, 8))
-    out.write(pad("", 32)); out.write(pad("", 32))          // reserved
-    onsets.zipWithIndex.foreach { case (onset, r) =>
-      // data: 4 int16 LE samples = r*4 + i
-      (0 until 4).foreach { i =>
-        val v = r * 4 + i
-        out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      }
-      val tal = "+" + onset + "\u0014\u0014\u0000"
-      val talBytes = tal.getBytes(StandardCharsets.US_ASCII)
-      out.write(talBytes ++ Array.fill(annNr * 2 - talBytes.length)(0.toByte))
-    }
-    val f = new FileOutputStream(path)
-    try f.write(out.toByteArray) finally f.close()
-  }
+  // digital values record*4 + sample ---
+  private def makeEdfD(path: String, onsets: Seq[Double]): Unit =
+    EdfDFixtures.makeEdfD(path, onsets)
 
   test("EDF+D: per-record TAL onsets drive discontiguous timestamps") {
     val tmp = java.nio.file.Files.createTempDirectory("edfd").toString

@@ -12,7 +12,7 @@ class EdfPipelineSpec extends AnyFunSuite {
 
   test("process() reproduces the reference output contract on test.edf") {
     val out = Files.createTempDirectory("edfpipe").toString
-    val manifest = EdfPipeline.process(spark, Seq("/root/reference/sample_data/test.edf"), out)
+    val manifest = EdfPipeline.process(spark, Seq(EdfDFixtures.testEdf), out)
     assert(Files.exists(Paths.get(manifest)))
     val json = new String(Files.readAllBytes(Paths.get(manifest)))
     // reference tests/params.py: 11 channels @200 Hz

@@ -15,7 +15,7 @@ class EdfSinkSpec extends AnyFunSuite {
 
   test("sink writes per-channel float64 binaries + schema-shaped manifest") {
     val outDir = Files.createTempDirectory("edfsink").toString
-    val df = EdfFile.read(spark, Seq("/root/reference/sample_data/sin_wave.edf")).cache()
+    val df = EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf)).cache()
     EdfSink.write(df, outDir)
 
     val channels = df.select(col("channel")).distinct().collect().map(_.getString(0))
@@ -45,7 +45,7 @@ class EdfSinkSpec extends AnyFunSuite {
 
   test("re-running into a non-empty outDir replaces binaries (no stale bytes)") {
     val outDir = Files.createTempDirectory("edfrerun").toString
-    val df = EdfFile.read(spark, Seq("/root/reference/sample_data/sin_wave.edf"))
+    val df = EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf))
     EdfSink.write(df, outDir)
     // plant a stale orphaned temp dir + corrupt one committed binary
     val bins = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".ts.bin"))
@@ -59,7 +59,7 @@ class EdfSinkSpec extends AnyFunSuite {
 
   test("oversized channels range-partition into ordered part files") {
     val outDir = Files.createTempDirectory("edfparts").toString
-    val df = EdfFile.read(spark, Seq("/root/reference/sample_data/sin_wave.edf")).cache()
+    val df = EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf)).cache()
     EdfSink.write(df, outDir, maxSamplesPerFile = 5000L)
     val ch0 = df.select(col("channel")).distinct().collect().map(_.getString(0)).sorted.head
     val safe = ch0.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -79,8 +79,8 @@ class EdfSinkSpec extends AnyFunSuite {
   test("multi-file AND multi-part combine: per-file stems, per-part suffixes") {
     val tmp = Files.createTempDirectory("edfmp")
     val c1 = s"$tmp/s1.edf"; val c2 = s"$tmp/s2.edf"
-    Files.copy(Paths.get("/root/reference/sample_data/sin_wave.edf"), Paths.get(c1))
-    Files.copy(Paths.get("/root/reference/sample_data/sin_wave.edf"), Paths.get(c2))
+    Files.copy(Paths.get(EdfDFixtures.sinWaveEdf), Paths.get(c1))
+    Files.copy(Paths.get(EdfDFixtures.sinWaveEdf), Paths.get(c2))
     val outDir = Files.createTempDirectory("edfmpout").toString
     EdfSink.write(EdfFile.read(spark, Seq(c1, c2)), outDir, maxSamplesPerFile = 5000L)
     val bins = new java.io.File(outDir).listFiles().map(_.getName).filter(_.endsWith(".ts.bin")).sorted
@@ -146,10 +146,10 @@ class EdfSinkSpec extends AnyFunSuite {
     // test.edf's 11 channels share no labels with sin_wave.edf's 2 —
     // the reference's "no match found -> create new channel" path
     val outDir = Files.createTempDirectory("edfappend2").toString
-    EdfSink.write(EdfFile.read(spark, Seq("/root/reference/sample_data/sin_wave.edf")), outDir)
+    EdfSink.write(EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf)), outDir)
     val sinBins = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".ts.bin"))
       .map(f => f.getName -> Files.size(f.toPath)).toMap
-    EdfSink.write(EdfFile.read(spark, Seq("/root/reference/sample_data/test.edf")), outDir,
+    EdfSink.write(EdfFile.read(spark, Seq(EdfDFixtures.testEdf)), outDir,
       mode = "append")
     val all = new String(Files.readAllBytes(Paths.get(s"$outDir/channels.json")))
     assert("\"name\"".r.findAllIn(all).size == 13, "2 sin_wave + 11 test channels")
@@ -622,7 +622,7 @@ class EdfSinkSpec extends AnyFunSuite {
 
   test("part-file seams never split a contiguous chunk") {
     val outDir = Files.createTempDirectory("edfseam").toString
-    val df = EdfFile.read(spark, Seq("/root/reference/sample_data/sin_wave.edf"))
+    val df = EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf))
     EdfSink.write(df, outDir, maxSamplesPerFile = 5000L)
     val m = new String(Files.readAllBytes(Paths.get(s"$outDir/channel.json")))
     assert("\\{\"index\": ".r.findAllIn(m).size == 1,
@@ -634,8 +634,8 @@ class EdfSinkSpec extends AnyFunSuite {
     // same file twice under different paths = same channel labels twice
     val tmp = Files.createTempDirectory("edfmulti")
     val c1 = s"$tmp/night1.edf"; val c2 = s"$tmp/night2.edf"
-    Files.copy(Paths.get("/root/reference/sample_data/sin_wave.edf"), Paths.get(c1))
-    Files.copy(Paths.get("/root/reference/sample_data/sin_wave.edf"), Paths.get(c2))
+    Files.copy(Paths.get(EdfDFixtures.sinWaveEdf), Paths.get(c1))
+    Files.copy(Paths.get(EdfDFixtures.sinWaveEdf), Paths.get(c2))
     val outDir = Files.createTempDirectory("edfsink2").toString
     val df = EdfFile.read(spark, Seq(c1, c2))
     EdfSink.write(df, outDir)

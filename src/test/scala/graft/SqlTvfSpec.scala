@@ -64,6 +64,27 @@ class SqlTvfSpec extends AnyFunSuite {
       s"unknown name lists the surface: ${e.getMessage.take(200)}")
   }
 
+  test("one registry declares each query: its plan, boundary sort and oracle") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    assert(SparkEntry.queries.size == 177)
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      Set("approx_stats", "bpe_train", "embed_whiten", "hll_distinct", "pq_whiten"),
+      "exactly the documented rows-only queries have no oracle")
+    def rootSort(df: org.apache.spark.sql.DataFrame): Option[Sort] =
+      Some(df.queryExecution.logical).collect { case s: Sort => s }
+    val sorted = rootSort(SparkEntry.queries("q1_pricing")(spark, sf))
+      .getOrElse(fail("q1_pricing has no boundary sort at its root"))
+    assert(sorted.global)
+    assert(sorted.order.map(_.child.sql) == Seq("l_returnflag", "l_linestatus"))
+    assert(rootSort(graft.operators.Analytics.q1Pricing(new Tables(spark, sf))).isEmpty,
+      "the library plan carries no boundary sort")
+    val e = intercept[Exception] {
+      spark.sql(s"SELECT * FROM graft_q('no_such_query', '$sf')").collect()
+    }
+    assert(SparkEntry.queries.keys.forall(e.getMessage.contains),
+      s"unknown name lists every available query: ${e.getMessage.take(200)}")
+  }
+
   test("Tables.register makes TVF plan-time sizing stats-backed: zero jobs") {
     // without registration, graft_q('embed_neardup', dir) pays a count()
     // job DURING SQL ANALYSIS (the maxAllPairs guard asks corpus
