@@ -141,8 +141,8 @@ object EdfScaleProbe {
     val targetGiB = args.lift(1).map(_.toDouble).getOrElse(4.0)
     val nSig = args.lift(2).map(_.toInt).getOrElse(64)
     new java.io.File(work).mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val samplesPerRec = 256

@@ -59,8 +59,8 @@ object RefreshBench {
     val paths = args.lift(3).getOrElse("pairs,fingerprint").split(",").toSet
     val doPairs = paths.contains("pairs")
     val doFp = paths.contains("fingerprint")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t = Tables(spark, sfDir)
     val cur = t.documents.select(col("doc_id"), col("text"))

@@ -191,7 +191,8 @@ object Similarity {
     * (bandBits 13, same 4 bands). The band count therefore self-sizes
     * WITH the width: nBands = 4 + 2·max(0, bandBits − 11) (integer
     * arithmetic the oracle mirrors), re-measured 0.936 at sf10 with the
-    * grown 8 bands (LshRecallProbe). Bands are independent per-band
+    * grown 8 bands (measured by a since-deleted probe; figures in
+    * tools/lsh_recall_r11.json). Bands are independent per-band
     * bucket values — NOT bits of one packed long — so the plane count
     * nBands·bandBits has no 62-bit ceiling. All band values come from
     * ONE native single-pass expression (HyperplaneBands) whose plane
@@ -220,10 +221,11 @@ object Similarity {
   }
 
   /** The LSH path's banded bucket relation (vec_id, band, bval) after
-    * self-sizing and the tiny-corpus clamp — exposed so cost probes can
-    * attribute candidate volume to bucket population (LshRecallProbe).
+    * self-sizing and the tiny-corpus clamp. Candidate volume per bucket
+    * population was measured by a since-deleted probe
+    * (tools/lsh_recall_r12.json `collision_pairs`).
     */
-  private[graft] def embedNearDupLshBanded(t: Tables, nPlanes: Int = 0,
+  private def embedNearDupLshBanded(t: Tables, nPlanes: Int = 0,
                                            bandBits: Int = 0): DataFrame = {
     val bb =
       if (bandBits > 0) bandBits
@@ -482,8 +484,8 @@ object Similarity {
     * lists (the graph is symmetric in candidates, not in rank), then
     * the bounded `graft_topk` heap picks per-node top-k — identical
     * output contract to [[knnGraph]] minus the block restriction.
-    * Candidate recall is the LSH recall story measured in
-    * LshRecallProbe; a node whose true neighbor never collides in any
+    * Candidate recall is the LSH recall story measured by a
+    * since-deleted probe (tools/lsh_recall_r11.json); a node whose true neighbor never collides in any
     * band misses it here — the planted-cluster spec pins the
     * within-cluster case at recall 1.0.
     */

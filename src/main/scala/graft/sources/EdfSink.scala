@@ -31,14 +31,32 @@ import org.apache.spark.sql.types._
   * than one task should own are range-partitioned on sample_idx into
   * numbered part files via `maxSamplesPerFile`.
   *
+  * CHANNEL DIRECTORY: `write` (CONTINUOUS channels) and `writeSpikes`
+  * (UNIT channels) share one directory protocol, parameterised by a
+  * [[Namespace]]:
+  * {{{
+  *              manifests                 index               staged copy              count      binary
+  * CONTINUOUS   channel[-NNNNN].json      channels.json       staged-manifest-N        numValues  .ts.bin
+  * UNIT         unit-channel[-NNNNN].json channels_unit.json  staged-unit-manifest-N   numSpikes  .spikes.bin
+  * }}}
+  * Every file of one namespace is named so no pattern of the other
+  * matches it, so both writers can share one outDir and an overwrite
+  * run replaces only its own namespace. The protocol's steps, in order:
+  * crash recovery (restore staged manifests, sweep temp dirs), read the
+  * existing manifests, match incoming channels, plan final binary names
+  * and ordinals, stage matched manifests and pre-clean, commit (binaries
+  * and manifests, executor-side, rendered by one renderer), then check
+  * every rewritten manifest exists and concatenate the index.
+  *
   * APPEND MODE (reference base.py:146-221 `get_or_create_channel` /
   * `_get_platform_channel`): `mode = "append"` fuzzy-matches incoming
-  * channels against the destination's existing manifests — lowercase-
-  * trimmed name equality, same type, rate within 2 % (`abs(1 - r/r') <
-  * 0.02`), first match in manifest order wins. Matched channels APPEND:
-  * new samples land in new generation part files listed after the
+  * channels against the namespace's existing manifests — lowercase-
+  * trimmed name equality, same type, and for CONTINUOUS channels rate
+  * within 2 % (`abs(1 - r/r') < 0.02`; UNIT channels have no rate), first
+  * match in manifest order wins. Matched channels APPEND:
+  * new samples land in new generation files (`-gNN`) listed after the
   * existing binaries (object stores have no byte-append — the reference's
-  * `open(file,'ab')` becomes "add a part and extend `binaryFiles`";
+  * `open(file,'ab')` becomes "add a generation and extend `binaryFiles`";
   * concatenating the listed files in order reproduces the reference's
   * appended byte stream), chunk indices continue the channel's value
   * stream (offset by the existing `numValues`), and the merged manifest
@@ -88,17 +106,39 @@ object EdfSink {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
 
+  /** A manifest namespace of the channel directory (see the object doc).
+    * `sampled` channels carry a rate (matched within 2 %) and may split
+    * into `-partNNNNN` files, so their generation files always carry a
+    * part number; spike channels have neither and write one file per
+    * generation.
+    */
+  private final case class Namespace(
+      chanType: String,
+      stem: String,
+      index: String,
+      staged: String,
+      countKey: String,
+      binSuffix: String,
+      sampled: Boolean) {
+    def manifestName(ord: Int): String = if (ord == 0) s"$stem.json" else f"$stem-$ord%05d.json"
+    def stagedName(ord: Int): String = f"$staged$ord%05d.json"
+  }
+  private val Continuous = Namespace("CONTINUOUS", "channel", "channels.json",
+    "staged-manifest-", "numValues", ".ts.bin", sampled = true)
+  private val Spikes = Namespace("UNIT", "unit-channel", "channels_unit.json",
+    "staged-unit-manifest-", "numSpikes", ".spikes.bin", sampled = false)
+
   /** Binary file name for a (file, channel): the reference's
-    * `<channel>.ts.bin` for single-file runs; prefixed with the source
+    * `<channel><suffix>` for single-file runs; prefixed with the source
     * file stem when several files share channel labels (the normal
     * session-split EDF case) so streams never interleave.
     */
-  private def binName(file: String, channel: String, multiFile: Boolean): String = {
+  private def binName(file: String, channel: String, multiFile: Boolean, suffix: String): String = {
     val safe = channel.replaceAll("[^A-Za-z0-9._-]", "_")
-    if (!multiFile) s"$safe.ts.bin"
+    if (!multiFile) s"$safe$suffix"
     else {
       val stem = file.split("/").last.replaceAll("\\.edf$", "").replaceAll("[^A-Za-z0-9._-]", "_")
-      s"${stem}__$safe.ts.bin"
+      s"${stem}__$safe$suffix"
     }
   }
 
@@ -107,12 +147,13 @@ object EdfSink {
     * would map to one name; such groups get a stable ordinal suffix.
     * Uniqueness is asserted before any data is written.
     */
-  private def planNames(keys: Seq[(String, String)], multiFile: Boolean): Map[(String, String), String] = {
-    val names = keys.groupBy(k => binName(k._1, k._2, multiFile)).flatMap {
+  private def planNames(keys: Seq[(String, String)], multiFile: Boolean,
+                        suffix: String): Map[(String, String), String] = {
+    val names = keys.groupBy(k => binName(k._1, k._2, multiFile, suffix)).flatMap {
       case (name, Seq(only)) => Seq(only -> name)
       case (name, clashed) =>
         clashed.sorted.zipWithIndex.map { case (k, i) =>
-          k -> name.replaceAll("\\.ts\\.bin$", f"__c$i%02d.ts.bin")
+          k -> (name.stripSuffix(suffix) + f"__c$i%02d" + suffix)
         }
     }
     require(names.values.toSet.size == names.size,
@@ -125,9 +166,10 @@ object EdfSink {
     * temp file and moves on — both attempts wrote identical content
     * because a (file, channel) group is wholly owned by one partition.
     * An existing destination can ONLY be a racing attempt from this run:
-    * write() pre-deletes every planned destination (and sweeps stale
-    * task-attempt temp dirs) before any task starts, so a re-run into a
-    * non-empty outDir can never silently keep a previous run's bytes.
+    * [[prepareDir]] pre-deletes every planned destination (and
+    * [[recoverDir]] sweeps stale task-attempt temp dirs) before any task
+    * starts, so a re-run into a non-empty outDir can never silently keep
+    * a previous run's bytes.
     */
   private def commit(fs: FileSystem, tmp: Path, dest: Path): Unit = {
     if (!fs.rename(tmp, dest)) {
@@ -136,25 +178,18 @@ object EdfSink {
     }
   }
 
-  /** Stream-append src's bytes onto an open stream, then delete src. */
-  private def copyInto(fs: FileSystem, src: Path, out: java.io.OutputStream): Unit = {
+  /** Stream-append src's bytes onto an open stream (64 KiB buffer). */
+  private def copyFile(fs: FileSystem, src: Path, out: java.io.OutputStream): Unit = {
     val in = fs.open(src)
     try {
       val buf = new Array[Byte](1 << 16)
       var n = in.read(buf)
       while (n >= 0) { if (n > 0) out.write(buf, 0, n); n = in.read(buf) }
     } finally in.close()
-    fs.delete(src, false)
   }
 
-  /** Manifest file name for the i-th output channel — the round-1
-    * contract: channel.json, channel-00001.json, …
-    */
-  private def manifestName(ord: Int): String =
-    if (ord == 0) "channel.json" else f"channel-$ord%05d.json"
-
   /** An existing channel parsed (driver-side, chunk-free) from its
-    * committed manifest file.
+    * committed manifest file. `count` is the namespace's count property.
     */
   private case class ExistingChannel(
       ord: Int,
@@ -165,7 +200,7 @@ object EdfSink {
       start: Long,
       end: Long,
       binaryFiles: Seq[String],
-      numValues: Option[Long],
+      count: Option[Long],
       appendTag: Option[String] = None)
 
   private val descSchema = StructType(Seq(
@@ -175,13 +210,33 @@ object EdfSink {
     StructField("properties", ArrayType(StructType(Seq(
       StructField("key", StringType), StructField("value", StringType)))))))
 
-  /** Parse the destination's committed manifests (ordinal order) WITHOUT
+  /** Crash recovery, before anything reads the directory. A staged
+    * manifest with no committed destination is the surviving original of
+    * a crashed append — restore it (this keeps the ordinal sequence
+    * hole-free, so [[readExisting]] never silently drops channels); with
+    * a committed destination the crashed run had already merged — drop
+    * it. Then sweep orphaned temp state (task-attempt dirs and whole
+    * job-temp dirs both carry the _tmp- prefix).
+    */
+  private def recoverDir(fs: FileSystem, outPath: Path, ns: Namespace): Unit = {
+    fs.mkdirs(outPath)
+    fs.globStatus(new Path(outPath, s"${ns.staged}*.json")).foreach { s =>
+      val ord = s.getPath.getName.stripPrefix(ns.staged).stripSuffix(".json").toInt
+      val dest = new Path(outPath, ns.manifestName(ord))
+      if (!fs.exists(dest)) fs.rename(s.getPath, dest)
+      else fs.delete(s.getPath, false)
+    }
+    fs.globStatus(new Path(outPath, "_tmp-*")).foreach(s => fs.delete(s.getPath, true))
+  }
+
+  /** Parse the namespace's committed manifests (ordinal order) WITHOUT
     * their chunk arrays — driver state stays channel-cardinality however
     * chunk-heavy the history is. Returns Nil when the directory has no
     * prior run.
     */
-  private def readExisting(spark: SparkSession, fs: FileSystem, outPath: Path): Seq[ExistingChannel] = {
-    val paths = Iterator.from(0).map(i => new Path(outPath, manifestName(i)))
+  private def readExisting(spark: SparkSession, fs: FileSystem, outPath: Path,
+                           ns: Namespace): Seq[ExistingChannel] = {
+    val paths = Iterator.from(0).map(i => new Path(outPath, ns.manifestName(i)))
       .takeWhile(fs.exists).toSeq
     if (paths.isEmpty) return Nil
     val rows = spark.read.schema(descSchema).option("multiLine", true)
@@ -200,23 +255,191 @@ object EdfSink {
         .orElse(props.get("binaryFile").map(Seq(_)))
         .getOrElse(Seq.empty)
       ExistingChannel(i, r.getAs[String]("name"), r.getAs[String]("unit"),
-        r.getAs[Double]("rate"), Option(r.getAs[String]("type")).getOrElse("CONTINUOUS"),
+        r.getAs[Double]("rate"), Option(r.getAs[String]("type")).getOrElse(ns.chanType),
         r.getAs[Long]("start"), r.getAs[Long]("end"), bins,
-        props.get("numValues").map(_.toLong),
+        props.get(ns.countKey).map(_.toLong),
         props.get("appendTag"))
     }
   }
 
   /** The reference's fuzzy channel-match rule (base.py:186-200): name
-    * equal after lowercase+trim, same type, rate within 2 %; first
-    * manifest-order match wins.
+    * equal after lowercase+trim, same type, and for sampled channels rate
+    * within 2 %; first manifest-order match wins.
     */
   private def matchExisting(existing: Seq[ExistingChannel], channel: String, rate: Double,
-                            chanType: String): Option[ExistingChannel] =
+                            ns: Namespace): Option[ExistingChannel] =
     existing.find(ex =>
       ex.name.toLowerCase.trim == channel.toLowerCase.trim &&
-        ex.chanType.toLowerCase.trim == chanType.toLowerCase.trim &&
-        math.abs(1.0 - rate / ex.rate) < 0.02)
+        ex.chanType.toLowerCase.trim == ns.chanType.toLowerCase &&
+        (!ns.sampled || math.abs(1.0 - rate / ex.rate) < 0.02))
+
+  /** One run's reconcile against the destination (channel-cardinality,
+    * driver-side): the existing channel each incoming channel continues,
+    * the final binary name of every (file, channel, part), and every
+    * output ordinal.
+    */
+  private case class DirPlan(
+      ns: Namespace,
+      existing: Seq[ExistingChannel],
+      matched: Map[(String, String), ExistingChannel],
+      newKeys: Seq[(String, String)],
+      baseNames: Map[(String, String), String],   // new channels' unsuffixed names
+      names: Map[(String, String, Long), String], // (file, channel, part) -> final binary
+      ords: Map[(String, String), Int]) {
+    def matchedOrds: Seq[Int] = matched.values.map(_.ord).toSeq.sorted
+  }
+
+  /** Plan the incoming channels `(key, rate, parts)`. New channels take
+    * the overwrite naming (`planNames`, plus `-partNNNNN` when a channel
+    * has several parts); matched channels continue as generation files
+    * after the existing binaries, never overwriting them. Ordinals:
+    * existing channels keep theirs, new channels append after in sorted
+    * (file, channel) order — the index order.
+    */
+  private def planDir(ns: Namespace, existing: Seq[ExistingChannel],
+                      incoming: Seq[((String, String), Double, Seq[Long])]): DirPlan = {
+    val sorted = incoming.sortBy(_._1)
+    val keys = sorted.map(_._1)
+    val matched = sorted.flatMap { case (k, rate, _) =>
+      matchExisting(existing, k._2, rate, ns).map(k -> _)
+    }.toMap
+    matched.groupBy(_._2.ord).foreach { case (_, ms) =>
+      require(ms.size == 1,
+        s"append mode: ${ms.size} incoming channels match existing '${ms.head._2.name}' — " +
+          s"append one session per channel at a time: ${ms.keys.toSeq.sorted}")
+    }
+    val newKeys = keys.filterNot(matched.contains)
+    val baseNames = planNames(newKeys, keys.map(_._1).distinct.size > 1, ns.binSuffix)
+    val names: Map[(String, String, Long), String] = sorted.flatMap { case (k, _, ps) =>
+      val parts = ps.sorted
+      def suffixed(base: String, tag: String) = base.stripSuffix(ns.binSuffix) + tag + ns.binSuffix
+      matched.get(k) match {
+        case Some(ex) =>
+          val base = ex.binaryFiles.headOption.getOrElse(binName(k._1, k._2, multiFile = false, ns.binSuffix))
+            .stripSuffix(ns.binSuffix)
+            .replaceAll(if (ns.sampled) "(-g\\d{2})?(-part\\d{5})?$" else "(-g\\d{2})?$", "") + ns.binSuffix
+          val gen = f"-g${ex.binaryFiles.size}%02d"
+          parts.zipWithIndex.map { case (p, i) =>
+            (k._1, k._2, p) -> suffixed(base, if (ns.sampled) f"$gen-part$i%05d" else gen)
+          }
+        case None =>
+          parts.map { p =>
+            (k._1, k._2, p) ->
+              (if (parts.size == 1) baseNames(k) else suffixed(baseNames(k), f"-part$p%05d"))
+          }
+      }
+    }.toMap
+    // part suffixes could in principle collide with a sibling channel's
+    // sanitized name — uniqueness must hold over the FINAL names, and in
+    // append mode new names must also miss every committed binary
+    require(names.values.toSet.size == names.size,
+      s"binary names not unique after part suffixing: ${names.values.toSeq.sorted}")
+    val committed = existing.flatMap(_.binaryFiles).toSet
+    val clash = names.values.toSeq.filter(committed.contains)
+    require(clash.isEmpty, s"append mode: planned binaries collide with committed ones: $clash " +
+      "(an unmatched incoming channel shares a sanitized name with an existing channel — rename it)")
+    val ords = matched.map { case (k, ex) => k -> ex.ord } ++
+      newKeys.zipWithIndex.map { case (k, i) => k -> (existing.size + i) }
+    DirPlan(ns, existing, matched, newKeys, baseNames, names, ords)
+  }
+
+  /** Before the commit job. Stage matched channels' manifests out of the
+    * way (driver rename): an append's commit reads the existing chunk
+    * array from the staged copy while the merged manifest commits to the
+    * now-free destination — immune to task retries re-reading a
+    * half-overwritten file, and recoverable by [[recoverDir]] if this
+    * run dies mid-way. Then pre-clean final destinations so the commit's
+    * renames can never silently lose to a previous run's files.
+    * Overwrite: planned destinations, any other part layout of the same
+    * base names, and this namespace's manifests and index (only its own:
+    * the other namespace in the same outDir is untouched). Append: only
+    * this run's planned NEW files and the NEW ordinals' manifest slots
+    * (stale output from a crashed run).
+    */
+  private def prepareDir(fs: FileSystem, outPath: Path, plan: DirPlan, overwrite: Boolean): Unit = {
+    val ns = plan.ns
+    def delete(name: String): Boolean = fs.delete(new Path(outPath, name), false)
+    def deleteGlob(pattern: String): Unit =
+      fs.globStatus(new Path(outPath, pattern)).foreach(s => fs.delete(s.getPath, false))
+    plan.matchedOrds.foreach { o =>
+      val dest = new Path(outPath, ns.stagedName(o))
+      fs.delete(dest, false)
+      require(fs.rename(new Path(outPath, ns.manifestName(o)), dest),
+        s"failed to stage existing manifest ${ns.manifestName(o)}")
+    }
+    plan.names.values.foreach(delete)
+    if (overwrite) {
+      plan.baseNames.values.foreach { base =>
+        delete(base)
+        if (ns.sampled) deleteGlob(base.stripSuffix(ns.binSuffix) + "-part*" + ns.binSuffix)
+      }
+      delete(ns.manifestName(0)); deleteGlob(s"${ns.stem}-*.json"); delete(ns.index)
+    } else {
+      plan.newKeys.foreach(k => delete(ns.manifestName(plan.ords(k))))
+    }
+  }
+
+  /** One `contiguousChunks` entry, comma-separated from its predecessor. */
+  private def writeChunk(out: java.io.OutputStream, first: Boolean, index: Long, start: Long): Unit = {
+    if (!first) out.write(", ".getBytes(StandardCharsets.UTF_8))
+    out.write(s"""{"index": $index, "start": $start}""".getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** Render one channel manifest to `tmp` and commit it to its ordinal's
+    * destination — the one manifest format of both namespaces.
+    * `chunks` writes the `contiguousChunks` entries (UNIT channels have
+    * none); `extra` properties follow the namespace's count property and
+    * the replay `appendTag` comes last.
+    */
+  private def commitManifest(fs: FileSystem, tmp: Path, outDir: String, ns: Namespace, ord: Int,
+      name: String, start: Long, end: Long, unit: String, rate: Double,
+      binaryFiles: Seq[String], count: Long, extra: Seq[(String, String)],
+      appendTag: Option[String])(chunks: java.io.OutputStream => Unit): Unit = {
+    val out = new BufferedOutputStream(fs.create(tmp, true), 1 << 16)
+    try {
+      out.write(s"""{"name": ${jsonStr(name)}, "start": $start, "end": $end, "unit": ${jsonStr(unit)},
+                   | "rate": $rate, "type": "${ns.chanType}", "group": "default", "lastAnnotation": 0,
+                   | "contiguousChunks": [""".stripMargin.getBytes(StandardCharsets.UTF_8))
+      chunks(out)
+      val props = (Seq(
+        "binaryFile" -> jsonStr(binaryFiles.head),
+        "binaryFiles" -> binaryFiles.map(jsonStr).mkString("[", ", ", "]"),
+        ns.countKey -> jsonStr(count.toString)) ++
+        extra.map { case (k, v) => k -> jsonStr(v) })
+        .map { case (k, v) => s"""{"key": "$k", "value": $v}""" }
+        .mkString(",\n                ")
+      // the appendTag line is indented one space less than its siblings
+      // in the committed format; kept so output bytes stay stable
+      val tag = appendTag.map(t => s""",\n               {"key": "appendTag", "value": ${jsonStr(t)}}""")
+        .getOrElse("")
+      out.write(s"""],\n "properties": [$props$tag]}""".getBytes(StandardCharsets.UTF_8))
+    } finally out.close()
+    commit(fs, tmp, new Path(outDir, ns.manifestName(ord)))
+  }
+
+  /** After the commit job: every rewritten manifest must exist (an
+    * untouched existing channel keeps its old manifest — nothing rewrites
+    * it); then drop the staged copies and stream-concatenate the
+    * namespace's committed manifests into its index — a bounded-buffer
+    * copy, never a parse or a collect. Returns the index path.
+    */
+  private def finishDir(fs: FileSystem, outPath: Path, plan: DirPlan): String = {
+    val ns = plan.ns
+    require(plan.ords.values.forall(o => fs.exists(new Path(outPath, ns.manifestName(o)))),
+      s"${ns.chanType} manifest assembly incomplete")
+    plan.matchedOrds.foreach(o => fs.delete(new Path(outPath, ns.stagedName(o)), false))
+    val idxPath = new Path(outPath, ns.index)
+    val idxOut = new BufferedOutputStream(fs.create(idxPath, true), 1 << 16)
+    try {
+      idxOut.write('['.toInt)
+      (0 until plan.existing.size + plan.newKeys.size).foreach { o =>
+        if (o > 0) idxOut.write(",\n".getBytes(StandardCharsets.UTF_8))
+        copyFile(fs, new Path(outPath, ns.manifestName(o)), idxOut)
+      }
+      idxOut.write(']'.toInt)
+    } finally idxOut.close()
+    idxPath.toString
+  }
 
   /** The record-packed block relation for a raw sample projection
     * `(file, channel, sample_idx, ts_us, value, rate, unit)`:
@@ -294,7 +517,7 @@ object EdfSink {
           val mk = (lastFileStr, lastChanStr)
           var r = routeMemo.get(mk)
           if (r == null) {
-            r = matchExisting(existing, lastChanStr, rate, "CONTINUOUS") match {
+            r = matchExisting(existing, lastChanStr, rate, Continuous) match {
               case Some(ex) =>
                 (exOff.getOrElse(ex.ord, 0L), replayTag.exists(t => ex.appendTag.contains(t)))
               case None => (0L, false)
@@ -514,7 +737,6 @@ object EdfSink {
       name: String,
       unit: String,
       rate: Double,
-      chanType: String,
       binRenames: Seq[(String, String)], // (temp name under jobTmp, final name)
       binaryFiles: Seq[String],          // existing parts first, then new, concat order
       exNumValues: Long,
@@ -568,29 +790,15 @@ object EdfSink {
     val confEntries = EdfFile.captureConfEntries(spark)
     val outPath = new Path(outDir)
     val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    driverFs.mkdirs(outPath)
-    // recover manifests staged by a crashed append: a _prev copy with no
-    // committed destination is the surviving original — restore it; with
-    // a committed destination the crashed run had already merged — drop it
-    driverFs.globStatus(new Path(outPath, "staged-manifest-*.json")).foreach { s =>
-      val ord = s.getPath.getName.stripPrefix("staged-manifest-").stripSuffix(".json").toInt
-      val dest = new Path(outPath, manifestName(ord))
-      if (!driverFs.exists(dest)) driverFs.rename(s.getPath, dest)
-      else driverFs.delete(s.getPath, false)
-    }
-    // sweep orphaned temp state from crashed runs (task-attempt dirs and
-    // whole job-temp dirs both carry the _tmp- prefix)
-    driverFs.globStatus(new Path(outPath, "_tmp-*"))
-      .foreach(s => driverFs.delete(s.getPath, true))
-
+    recoverDir(driverFs, outPath, Continuous)
     val existing: Seq[ExistingChannel] =
-      if (mode == "append") readExisting(spark, driverFs, outPath) else Nil
+      if (mode == "append") readExisting(spark, driverFs, outPath, Continuous) else Nil
     // append offset per existing ordinal: the channel's committed value
     // count (manifest property; fallback = committed binary sizes —
     // channel-cardinality file stats). Used identically by the pack
     // (sample_idx shift) and the assembly (stored-stream positions).
     val exOffsets: Map[Int, Long] = existing.map { ex =>
-      ex.ord -> ex.numValues.getOrElse(
+      ex.ord -> ex.count.getOrElse(
         ex.binaryFiles.map(b => driverFs.getFileStatus(new Path(outPath, b)).getLen / 8).sum)
     }.toMap
     val bExisting = spark.sparkContext.broadcast(existing)
@@ -886,14 +1094,9 @@ object EdfSink {
         var pendStartTs = 0L; var pendEndTs = 0L; var pendN = 0L
         var chunkTmp: Path = null
         var chunkOut: BufferedOutputStream = null
-        def writeChunkEntry(idx: Long, startTs: Long): Unit = {
-          if (nChunks > 0) chunkOut.write(", ".getBytes(StandardCharsets.UTF_8))
-          chunkOut.write(s"""{"index": $idx, "start": $startTs}"""
-            .getBytes(StandardCharsets.UTF_8))
-          nChunks += 1
-        }
         def flushPend(): Unit = if (havePend) {
-          writeChunkEntry(storedPos, pendStartTs)
+          writeChunk(chunkOut, nChunks == 0, storedPos, pendStartTs)
+          nChunks += 1
           storedPos += pendN
           newValues += pendN
           if (pendStartTs < start) start = pendStartTs
@@ -916,7 +1119,7 @@ object EdfSink {
             rate = 0.0; unit = null; parts = Nil
             start = Long.MaxValue; end = Long.MinValue
             nChunks = 0L; newValues = 0L
-            val ex = matchExisting(existing, c, r.getDouble(9), "CONTINUOUS")
+            val ex = matchExisting(existing, c, r.getDouble(9), Continuous)
             prevEnd = ex.map(_.end).getOrElse(Long.MinValue)
             storedPos = ex.map(e => exOff.getOrElse(e.ord, 0L)).getOrElse(0L)
             chunkTmp = new Path(attemptDir, "chunks")
@@ -953,106 +1156,25 @@ object EdfSink {
       }.collect().toSeq.sortBy(d => (d.file, d.channel))
 
     // ---- driver reconcile: channel-cardinality, zero sample I/O ----
-    val keys: Seq[(String, String)] = summaries.map(d => (d.file, d.channel))
-    val byKey: Map[(String, String), Discovered] =
-      summaries.map(d => (d.file, d.channel) -> d).toMap
-    val matched: Map[(String, String), ExistingChannel] = keys.flatMap { k =>
-      matchExisting(existing, k._2, byKey(k).rate, "CONTINUOUS").map(k -> _)
-    }.toMap
-    matched.groupBy(_._2.ord).foreach { case (_, ms) =>
-      require(ms.size == 1,
-        s"append mode: ${ms.size} incoming channels match existing '${ms.head._2.name}' — " +
-          s"append one session per channel at a time: ${ms.keys.toSeq.sorted}")
-    }
-    val newKeys = keys.filterNot(matched.contains)
-    val multiFile = keys.map(_._1).distinct.size > 1
-    val baseNames = planNames(newKeys, multiFile)
-
-    // (file, channel, part) -> final binary name. New channels follow the
-    // overwrite naming; matched channels continue as generation part
-    // files after the existing binaries (never overwriting them).
-    val nameMap: Map[(String, String, Long), String] = keys.flatMap { k =>
-      val parts = byKey(k).parts.map(_._1).sorted
-      matched.get(k) match {
-        case Some(ex) =>
-          val base = ex.binaryFiles.headOption.getOrElse(binName(k._1, k._2, multiFile = false))
-            .replaceAll("(-g\\d{2})?(-part\\d{5})?\\.ts\\.bin$", ".ts.bin")
-          val gen = ex.binaryFiles.size
-          parts.zipWithIndex.map { case (p, i) =>
-            (k._1, k._2, p) -> base.replaceAll("\\.ts\\.bin$", f"-g$gen%02d-part$i%05d.ts.bin")
-          }
-        case None =>
-          val base = baseNames(k)
-          parts.map { p =>
-            (k._1, k._2, p) ->
-              (if (parts.size == 1) base else base.replaceAll("\\.ts\\.bin$", f"-part$p%05d.ts.bin"))
-          }
+    val plan = planDir(Continuous, existing,
+      summaries.map(d => ((d.file, d.channel), d.rate, d.parts.map(_._1))))
+    prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
+    val commitTasks: Seq[CommitTask] = summaries.map { d =>
+      val binRenames = d.parts.sortBy(_._1).map { case (p, tmpN) =>
+        (tmpN, plan.names((d.file, d.channel, p)))
       }
-    }.toMap
-    // part suffixes could in principle collide with a sibling channel's
-    // sanitized name — uniqueness must hold over the FINAL names, and in
-    // append mode new names must also miss every committed binary
-    require(nameMap.values.toSet.size == nameMap.size,
-      s"binary names not unique after part suffixing: ${nameMap.values.toSeq.sorted}")
-    val committedBins = existing.flatMap(_.binaryFiles).toSet
-    val clash = nameMap.values.toSeq.filter(committedBins.contains)
-    require(clash.isEmpty, s"append mode: planned binaries collide with committed ones: $clash " +
-      "(an unmatched incoming channel shares a sanitized name with an existing channel — rename it)")
-
-    // output ordinals: existing channels keep theirs, new channels
-    // append after, in sorted (file, channel) order — channels.json order
-    val newOrdBase = existing.size
-    val keyOrd: Map[(String, String), Int] =
-      matched.map { case (k, ex) => k -> ex.ord } ++
-        newKeys.zipWithIndex.map { case (k, i) => k -> (newOrdBase + i) }
-
-    // stage matched channels' manifests out of the way (driver rename):
-    // the commit tasks read their chunk arrays from the _prev copies
-    // while the merged manifests commit to the now-free destinations —
-    // immune to task retries re-reading a half-overwritten file, and
-    // recoverable (see the _prev sweep above) if this run dies mid-way
-    def prevName(o: Int): String = f"staged-manifest-$o%05d.json"
-    val matchedOrds = matched.values.map(_.ord).toSeq.sorted
-    matchedOrds.foreach { o =>
-      val dest = new Path(outPath, prevName(o))
-      driverFs.delete(dest, false)
-      require(driverFs.rename(new Path(outPath, manifestName(o)), dest),
-        s"failed to stage existing manifest ${manifestName(o)}")
-    }
-    // pre-clean final destinations so the commit job's renames can never
-    // silently lose to a previous run's files. Overwrite: planned
-    // destinations, any other part layout of the same base names, old
-    // manifests. Append: only this run's planned NEW files and the NEW
-    // ordinals' manifest slots (stale output from a crashed run).
-    nameMap.values.foreach(n => driverFs.delete(new Path(outPath, n), false))
-    if (mode == "overwrite") {
-      baseNames.values.foreach { base =>
-        driverFs.delete(new Path(outPath, base), false)
-        driverFs.globStatus(new Path(outPath, base.replaceAll("\\.ts\\.bin$", "-part*.ts.bin")))
-          .foreach(s => driverFs.delete(s.getPath, false))
-      }
-      driverFs.globStatus(new Path(outPath, "channel*.json"))
-        .foreach(s => driverFs.delete(s.getPath, false))
-    } else {
-      newKeys.foreach(k => driverFs.delete(new Path(outPath, manifestName(keyOrd(k))), false))
-    }
-
-    val commitTasks: Seq[CommitTask] = keys.map { k =>
-      val d = byKey(k)
-      val partsSorted = d.parts.sortBy(_._1)
-      val binRenames = partsSorted.map { case (p, tmpN) => (tmpN, nameMap((k._1, k._2, p))) }
       val newBins = binRenames.map(_._2)
-      matched.get(k) match {
+      plan.matched.get((d.file, d.channel)) match {
         case Some(ex) =>
-          CommitTask(ex.ord, ex.name, ex.unit, ex.rate, ex.chanType,
+          CommitTask(ex.ord, ex.name, ex.unit, ex.rate,
             binRenames, ex.binaryFiles ++ newBins,
             exOffsets(ex.ord), Some(ex.start), Some(ex.end), replayTag,
-            Some(prevName(ex.ord)), chunkTmpName(k._1, k._2),
+            Some(Continuous.stagedName(ex.ord)), chunkTmpName(d.file, d.channel),
             d.start, d.end, d.newValues, d.nChunks)
         case None =>
-          CommitTask(keyOrd(k), k._2, d.unit, d.rate, "CONTINUOUS",
+          CommitTask(plan.ords((d.file, d.channel)), d.channel, d.unit, d.rate,
             binRenames, newBins, 0L, None, None, replayTag,
-            None, chunkTmpName(k._1, k._2),
+            None, chunkTmpName(d.file, d.channel),
             d.start, d.end, d.newValues, d.nChunks)
       }
     }
@@ -1072,91 +1194,34 @@ object EdfSink {
           t.binRenames.foreach { case (tmpN, dest) =>
             commit(fs, new Path(jobTmpStr, tmpN), new Path(outDirStr, dest))
           }
-          // manifest: header + existing chunks (from the staged original,
-          // streamed — never materialized) + new chunks + footer; commit
-          // by rename. Header fields were computed at reconcile.
-          val bins = t.binaryFiles.map(jsonStr).mkString("[", ", ", "]")
-          val chStart = math.min(t.newStart, t.exStart.getOrElse(Long.MaxValue))
-          val chEnd = math.max(t.newEnd, t.exEnd.getOrElse(Long.MinValue))
-          val nValues = t.exNumValues + t.newValues
-          val head =
-            s"""{"name": ${jsonStr(t.name)}, "start": $chStart, "end": $chEnd, "unit": ${jsonStr(t.unit)},
-               | "rate": ${t.rate}, "type": "${t.chanType}", "group": "default", "lastAnnotation": 0,
-               | "contiguousChunks": """.stripMargin
-          val tagProp = t.appendTag
-            .map(tag => s""",\n               {"key": "appendTag", "value": ${jsonStr(tag)}}""")
-            .getOrElse("")
-          val foot =
-            s""",
-               | "properties": [{"key": "binaryFile", "value": ${jsonStr(t.binaryFiles.head)}},
-               |                {"key": "binaryFiles", "value": $bins},
-               |                {"key": "numValues", "value": "$nValues"}$tagProp]}""".stripMargin
-          val tmp = new Path(attemptDir, f"manifest-${t.ord}%05d")
-          val out = new BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-          out.write(head.getBytes(StandardCharsets.UTF_8))
-          out.write('['.toInt)
-          var wrote = 0L
-          t.stagedManifest.foreach { sm =>
-            streamExistingChunks(fs, new Path(outDirStr, sm)) { (idx, st) =>
+          // manifest: existing chunks (from the staged original, streamed
+          // — never materialized) then new chunks; header fields were
+          // computed at reconcile
+          commitManifest(fs, new Path(attemptDir, f"manifest-${t.ord}%05d"), outDirStr,
+            Continuous, t.ord, t.name,
+            math.min(t.newStart, t.exStart.getOrElse(Long.MaxValue)),
+            math.max(t.newEnd, t.exEnd.getOrElse(Long.MinValue)),
+            t.unit, t.rate, t.binaryFiles, t.exNumValues + t.newValues, Nil, t.appendTag) { out =>
+            var wrote = 0L
+            t.stagedManifest.foreach { sm =>
+              streamExistingChunks(fs, new Path(outDirStr, sm)) { (idx, st) =>
+                writeChunk(out, wrote == 0, idx, st)
+                wrote += 1
+              }
+            }
+            if (t.nChunksNew > 0) {
               if (wrote > 0) out.write(", ".getBytes(StandardCharsets.UTF_8))
-              out.write(s"""{"index": $idx, "start": $st}""".getBytes(StandardCharsets.UTF_8))
-              wrote += 1
+              // copy WITHOUT deleting: a task retry must find it again
+              copyFile(fs, new Path(jobTmpStr, t.chunkTmp), out)
             }
           }
-          if (t.nChunksNew > 0) {
-            if (wrote > 0) out.write(", ".getBytes(StandardCharsets.UTF_8))
-            // copy WITHOUT deleting: a task retry must find it again
-            val in = fs.open(new Path(jobTmpStr, t.chunkTmp))
-            try {
-              val cbuf = new Array[Byte](1 << 16)
-              var n = in.read(cbuf)
-              while (n >= 0) { if (n > 0) out.write(cbuf, 0, n); n = in.read(cbuf) }
-            } finally in.close()
-          }
-          out.write(']'.toInt)
-          out.write(foot.getBytes(StandardCharsets.UTF_8))
-          out.close()
-          commit(fs, tmp, new Path(outDirStr, manifestName(t.ord)))
         } finally {
           try fs.delete(attemptDir, true) catch { case _: Exception => () }
         }
       }
     }
-
-    // in append mode a matched-but-empty incoming channel can't occur
-    // (discovery only lists channels holding rows), but an UNTOUCHED
-    // existing channel keeps its old manifest — nothing rewrites it.
-    val rewriteOrds: Set[Int] = keys.map(keyOrd).toSet
-    require(rewriteOrds.forall(o => driverFs.exists(new Path(outPath, manifestName(o)))),
-      "manifest assembly incomplete")
-    matchedOrds.foreach(o => driverFs.delete(new Path(outPath, prevName(o)), false))
     driverFs.delete(jobTmp, true)
-
-    // 3. driver-side index: stream-concatenate the committed per-channel
-    // manifests into channels.json — a bounded-buffer copy, never a
-    // parse or a collect
-    val allOrds = (existing.map(_.ord) ++ keys.map(keyOrd)).distinct.sorted
-    val idxPath = new Path(outPath, "channels.json")
-    concatIndex(driverFs, idxPath, allOrds.map(o => new Path(outPath, manifestName(o))))
-    idxPath.toString
-  }
-
-
-  private def concatIndex(fs: FileSystem, idxPath: Path, parts: Seq[Path]): Unit = {
-    val idxOut = new BufferedOutputStream(fs.create(idxPath, true), 1 << 16)
-    try {
-      idxOut.write('['.toInt)
-      parts.zipWithIndex.foreach { case (p, i) =>
-        if (i > 0) idxOut.write(",\n".getBytes(StandardCharsets.UTF_8))
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](1 << 16)
-          var n = in.read(buf)
-          while (n >= 0) { if (n > 0) idxOut.write(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-      }
-      idxOut.write(']'.toInt)
-    } finally idxOut.close()
+    finishDir(driverFs, outPath, plan)
   }
 
   /** A8b sink: UNIT (spike) channel serialization in the reference's
@@ -1179,15 +1244,15 @@ object EdfSink {
     * forward — a latent bug nothing in the reference reads back. We
     * write waveforms in spike-record order.
     *
-    * Scale shape mirrors the sample sink: one shuffle keyed by
-    * (file, channel), each owning task streams records and waveforms to
-    * two temp files (counts are only known at stream end — the header +
-    * record + waveform compose happens at commit, nothing buffers in
-    * memory), and writes the channel's UNIT manifest (type "UNIT",
-    * start/end from first/last spike, reference base.py:253-261).
-    * Manifests land as unit-channel[-NNNNN].json with a
-    * channels_unit.json index, keeping the continuous and spike
-    * namespaces disjoint in one outDir. Returns the index path.
+    * Scale shape: one shuffle keyed by (file, channel); each owning task
+    * streams records and waveforms to two temp files (counts are only
+    * known at stream end — the header + record + waveform compose happens
+    * at commit, nothing buffers in memory) and commits the channel's UNIT
+    * manifest (start/end from first/last spike, reference
+    * base.py:253-261). Directory handling — recovery, append matching
+    * (name only), generation names, ordinals, staging and the
+    * `channels_unit.json` index — is the channel-directory protocol of
+    * the object doc, in its UNIT namespace. Returns the index path.
     */
   def writeSpikes(spikes: DataFrame, outDir: String, mode: String = "overwrite"): String = {
     require(mode == "overwrite" || mode == "append", s"mode must be overwrite|append, got $mode")
@@ -1195,112 +1260,14 @@ object EdfSink {
     val confEntries = EdfFile.captureConfEntries(spark)
     val outPath = new Path(outDir)
     val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    driverFs.mkdirs(outPath)
-
-    // recover UNIT manifests staged by a crashed append (same protocol as
-    // the sample sink): a staged copy with no committed destination is the
-    // surviving original — restore it; with a committed destination the
-    // crashed run already merged — drop it. Keeps the ordinal sequence
-    // hole-free so the takeWhile scan below never silently drops channels.
-    driverFs.globStatus(new Path(outPath, "staged-unit-manifest-*.json")).foreach { s =>
-      val ord = s.getPath.getName.stripPrefix("staged-unit-manifest-").stripSuffix(".json").toInt
-      val dest = new Path(outPath, unitManifestName(ord))
-      if (!driverFs.exists(dest)) driverFs.rename(s.getPath, dest)
-      else driverFs.delete(s.getPath, false)
-    }
-
-    // append mode (the reference's 'ab' open, base.py:258): existing UNIT
-    // channels parsed chunk-free at channel cardinality; match is
-    // name-only after lowercase+trim (UNIT channels carry no meaningful
-    // rate for the 2 % rule). Unlike the sample sink there is no staged
-    // read-back — manifests merge from these driver-side descriptors
-    // plus the stream stats, so rewritten destinations just pre-clean.
-    val existing: Seq[ExistingChannel] =
-      if (mode == "append") {
-        val paths = Iterator.from(0).map(i => new Path(outPath, unitManifestName(i)))
-          .takeWhile(driverFs.exists).toSeq
-        if (paths.isEmpty) Nil
-        else {
-          val rows = spark.read.schema(descSchema).option("multiLine", true)
-            .json(paths.map(_.toString): _*)
-            .withColumn("src", input_file_name()).collect()
-          val byFile = rows.map(r => r.getAs[String]("src").split("/").last -> r).toMap
-          paths.zipWithIndex.map { case (pth, i) =>
-            val r = byFile(pth.getName)
-            val props = Option(r.getAs[Seq[org.apache.spark.sql.Row]]("properties")).getOrElse(Seq.empty)
-              .map(pr => pr.getAs[String]("key") -> pr.getAs[String]("value")).toMap
-            val bins = props.get("binaryFiles")
-              .map(_.stripPrefix("[").stripSuffix("]").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
-              .orElse(props.get("binaryFile").map(Seq(_)))
-              .getOrElse(Seq.empty)
-            ExistingChannel(i, r.getAs[String]("name"), r.getAs[String]("unit"),
-              0.0, "UNIT", r.getAs[Long]("start"), r.getAs[Long]("end"), bins,
-              props.get("numSpikes").map(_.toLong))
-          }
-        }
-      } else Nil
-
+    recoverDir(driverFs, outPath, Spikes)
+    val existing = if (mode == "append") readExisting(spark, driverFs, outPath, Spikes) else Nil
+    // one binary (part 0) per channel per run
     val keys = spikes.select(col("file"), col("channel")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
-    val multiFile = keys.map(_._1).distinct.size > 1
-    val matched: Map[(String, String), ExistingChannel] = keys.flatMap { k =>
-      existing.find(_.name.toLowerCase.trim == k._2.toLowerCase.trim).map(k -> _)
-    }.toMap
-    matched.groupBy(_._2.ord).foreach { case (_, ms) =>
-      require(ms.size == 1,
-        s"append mode: ${ms.size} incoming spike channels match existing '${ms.head._2.name}': " +
-          ms.keys.toSeq.sorted.toString)
-    }
-    val newKeys = keys.filterNot(matched.contains)
-    val names: Map[(String, String), String] =
-      planNames(newKeys, multiFile)
-        .map { case (k, n) => k -> n.replaceAll("\\.ts\\.bin$", ".spikes.bin") } ++
-      matched.map { case (k, ex) =>
-        val base = ex.binaryFiles.headOption.getOrElse("unnamed.spikes.bin")
-          .replaceAll("(-g\\d{2})?\\.spikes\\.bin$", ".spikes.bin")
-        k -> base.replaceAll("\\.spikes\\.bin$", f"-g${ex.binaryFiles.size}%02d.spikes.bin")
-      }
-    val committed = existing.flatMap(_.binaryFiles).toSet
-    val clash = names.values.toSeq.filter(committed.contains)
-    require(clash.isEmpty, s"append mode: planned spike binaries collide with committed: $clash")
-    val newOrdBase = existing.size
-    val ords: Map[(String, String), Int] =
-      matched.map { case (k, ex) => k -> ex.ord } ++
-        newKeys.zipWithIndex.map { case (k, i) => k -> (newOrdBase + i) }
-    // (ord, existing bins, exNumSpikes, exStart, exEnd) for the writer
-    val plans: Map[(String, String), (Seq[String], Long, Long, Long)] = keys.map { k =>
-      matched.get(k) match {
-        case Some(ex) => k -> (ex.binaryFiles, ex.numValues.getOrElse(0L), ex.start, ex.end)
-        case None     => k -> (Seq.empty[String], 0L, Long.MaxValue, Long.MinValue)
-      }
-    }.toMap
-
-    names.values.foreach(n => driverFs.delete(new Path(outPath, n), false))
-    def stagedUnitName(o: Int): String = f"staged-unit-manifest-$o%05d.json"
-    val matchedUnitOrds = matched.values.map(_.ord).toSeq.sorted
-    if (mode == "overwrite")
-      driverFs.globStatus(new Path(outPath, "unit-channel*.json"))
-        .foreach(s => driverFs.delete(s.getPath, false))
-    else {
-      // stage matched manifests out of the way (recoverable, see the
-      // sweep above) instead of pre-deleting: a crash between here and
-      // the executor-side manifest commit must not leave a hole in the
-      // unit-channel-NNNNN.json sequence
-      matchedUnitOrds.foreach { o =>
-        val dest = new Path(outPath, stagedUnitName(o))
-        driverFs.delete(dest, false)
-        require(driverFs.rename(new Path(outPath, unitManifestName(o)), dest),
-          s"failed to stage existing manifest ${unitManifestName(o)}")
-      }
-      // new ordinals can only hold stale output from a crashed run beyond
-      // the contiguous sequence — pre-clean so commit renames can't lose
-      newKeys.foreach(k => driverFs.delete(new Path(outPath, unitManifestName(ords(k))), false))
-    }
-    driverFs.globStatus(new Path(outPath, "_tmp-s*"))
-      .foreach(s => driverFs.delete(s.getPath, true))
-    val bNames = spark.sparkContext.broadcast(names)
-    val bOrds = spark.sparkContext.broadcast(ords)
-    val bPlans = spark.sparkContext.broadcast(plans)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val plan = planDir(Spikes, existing, keys.map(k => (k, 0.0, Seq(0L))))
+    prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
+    val bPlan = spark.sparkContext.broadcast(plan)
     val outDirStr = outPath.toString
 
     spikes
@@ -1339,33 +1306,25 @@ object EdfSink {
           putLong(out, 9L * nSpikes)   // waveform_offset = len(spike record region)
           putLong(out, nSpikes)
           putLong(out, math.max(nSamples, 0L))
-          copyInto(fs, recTmp, out)
-          copyInto(fs, wfTmp, out)
+          copyFile(fs, recTmp, out)
+          copyFile(fs, wfTmp, out)
           out.close()
-          commit(fs, tmp, new Path(outDirStr, bNames.value(key)))
+          val p = bPlan.value
+          val bin = p.names((key._1, key._2, 0L))
+          commit(fs, tmp, new Path(outDirStr, bin))
           // UNIT channel manifest (reference base.py:253-261: channel
           // start/end extend to the spike horizon; append merges the
           // existing descriptor and lists every generation binary)
-          val ord = bOrds.value(key)
-          val (exBins, exSpikes, exStart, exEnd) = bPlans.value(key)
-          require(exBins.isEmpty || firstTs > exEnd,
+          val ex = p.matched.get(key)
+          require(ex.forall(firstTs > _.end),
             s"appended spikes must start after channel ${key._2}'s existing end")
-          val allBins = exBins :+ bNames.value(key)
-          val binsJson = allBins.map(jsonStr).mkString("[", ", ", "]")
-          val chStart = math.min(firstTs, exStart)
-          val chEnd = math.max(lastTs, exEnd)
-          val manifest =
-            s"""{"name": ${jsonStr(key._2)}, "start": $chStart, "end": $chEnd, "unit": "uV",
-               | "rate": 0.0, "type": "UNIT", "group": "default", "lastAnnotation": 0,
-               | "contiguousChunks": [],
-               | "properties": [{"key": "binaryFile", "value": ${jsonStr(allBins.head)}},
-               |                {"key": "binaryFiles", "value": $binsJson},
-               |                {"key": "numSpikes", "value": "${exSpikes + nSpikes}"},
-               |                {"key": "numSamples", "value": "${math.max(nSamples, 0L)}"}]}""".stripMargin
-          val mTmp = new Path(attemptDir, "manifest")
-          val mOut = fs.create(mTmp, true)
-          try mOut.write(manifest.getBytes(StandardCharsets.UTF_8)) finally mOut.close()
-          commit(fs, mTmp, new Path(outDirStr, unitManifestName(ord)))
+          commitManifest(fs, new Path(attemptDir, "manifest"), outDirStr, Spikes, p.ords(key),
+            ex.fold(key._2)(_.name),
+            ex.fold(firstTs)(e => math.min(firstTs, e.start)),
+            ex.fold(lastTs)(e => math.max(lastTs, e.end)),
+            "uV", 0.0, ex.fold(Seq.empty[String])(_.binaryFiles) :+ bin,
+            ex.flatMap(_.count).getOrElse(0L) + nSpikes,
+            Seq("numSamples" -> math.max(nSamples, 0L).toString), None)(_ => ())
           key = null
         }
         try {
@@ -1407,17 +1366,6 @@ object EdfSink {
         }
       }
 
-    require(ords.values.forall(o => driverFs.exists(new Path(outPath, unitManifestName(o)))),
-      "unit manifest assembly incomplete")
-    matchedUnitOrds.foreach(o => driverFs.delete(new Path(outPath, stagedUnitName(o)), false))
-
-    val idxPath = new Path(outPath, "channels_unit.json")
-    val total = newOrdBase + newKeys.size
-    concatIndex(driverFs, idxPath,
-      (0 until total).map(o => new Path(outPath, unitManifestName(o))))
-    idxPath.toString
+    finishDir(driverFs, outPath, plan)
   }
-
-  private def unitManifestName(o: Int): String =
-    if (o == 0) "unit-channel.json" else f"unit-channel-$o%05d.json"
 }

@@ -538,6 +538,61 @@ class EdfSinkSpec extends AnyFunSuite {
       .forall(!_.getName.startsWith("staged-unit-manifest-")), "no staged leftovers")
   }
 
+  test("overwrite replaces only its own namespace: sample and spike manifests share an outDir") {
+    import spark.implicits._
+    val spikes = Seq(("rec.edf", "unit1", 1000L, 0, Seq(1.0, 2.0)),
+                     ("rec.edf", "unit2", 1500L, 1, Seq(3.0, 4.0)))
+      .toDF("file", "channel", "ts_us", "unit_id", "waveform")
+    val tmp = Files.createTempDirectory("edfnsedf")
+    val s1 = s"$tmp/s1.edf"
+    makeEdfC(s1, "00.00.00", Seq("C3", "C4"))
+    def files(outDir: String, keep: String => Boolean): Map[String, String] =
+      new java.io.File(outDir).listFiles().map(_.getName).filter(keep)
+        .map(n => n -> new String(Files.readAllBytes(Paths.get(s"$outDir/$n")))).toMap
+    val unitFiles = (n: String) => n == "channels_unit.json" || n.startsWith("unit-channel")
+    val sampleFiles = (n: String) => n == "channels.json" || n.matches("channel(-\\d{5})?\\.json")
+
+    // spikes first, then a sample overwrite: the UNIT index and manifests survive
+    val d1 = Files.createTempDirectory("edfns1").toString
+    EdfSink.writeSpikes(spikes, d1)
+    val unitBefore = files(d1, unitFiles)
+    assert(unitBefore.keySet == Set("channels_unit.json", "unit-channel.json", "unit-channel-00001.json"))
+    EdfSink.write(EdfFile.read(spark, Seq(s1)), d1)
+    assert(files(d1, unitFiles) == unitBefore, "sample overwrite left the UNIT namespace intact")
+    assert(files(d1, sampleFiles).keySet == Set("channels.json", "channel.json", "channel-00001.json"))
+
+    // samples first, then a spike overwrite: the CONTINUOUS index and manifests survive
+    val d2 = Files.createTempDirectory("edfns2").toString
+    EdfSink.write(EdfFile.read(spark, Seq(s1)), d2)
+    val sampleBefore = files(d2, sampleFiles)
+    assert(sampleBefore.keySet == Set("channels.json", "channel.json", "channel-00001.json"))
+    EdfSink.writeSpikes(spikes, d2)
+    assert(files(d2, sampleFiles) == sampleBefore, "spike overwrite left the CONTINUOUS namespace intact")
+    assert(files(d2, unitFiles).keySet == unitBefore.keySet)
+  }
+
+  test("spike append matches UNIT channels by trimmed, lowercased name only") {
+    import spark.implicits._
+    val s1 = Seq(("rec.edf", "unit1", 1000L, 0, Seq(1.0, 2.0)),
+                 ("rec.edf", "unit1", 2000L, 1, Seq(3.0, 4.0)))
+      .toDF("file", "channel", "ts_us", "unit_id", "waveform")
+    // UNIT channels carry rate 0.0: a 2 % rate rule would compare NaN and
+    // create a second channel instead of merging
+    val s2 = Seq(("rec2.edf", " Unit1", 9000L, 2, Seq(5.0, 6.0)))
+      .toDF("file", "channel", "ts_us", "unit_id", "waveform")
+    val outDir = Files.createTempDirectory("edfspikematch").toString
+    EdfSink.writeSpikes(s1, outDir)
+    val idx = EdfSink.writeSpikes(s2, outDir, mode = "append")
+
+    val all = new String(Files.readAllBytes(Paths.get(idx)))
+    assert("\"name\"".r.findAllIn(all).size == 1, s"one merged channel: $all")
+    assert(all.contains("\"name\": \"unit1\""), s"the existing channel keeps its name: $all")
+    assert(all.contains("\"numSpikes\", \"value\": \"3\""), s"2 + 1 spikes: $all")
+    assert(all.contains("unit1.spikes.bin") && all.contains("unit1-g01.spikes.bin"))
+    assert(Files.size(Paths.get(s"$outDir/unit1-g01.spikes.bin")) == 24 + 9 * 1 + 2 * 8)
+    assert(!Files.exists(Paths.get(s"$outDir/unit-channel-00001.json")), "no second UNIT channel")
+  }
+
   test("spike unit_id outside uint8 range fails loudly instead of truncating") {
     import spark.implicits._
     val bad = Seq(("rec.edf", "unit1", 1000L, 256, Seq(1.0, 2.0)))
