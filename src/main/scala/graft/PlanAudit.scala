@@ -503,7 +503,7 @@ object PlanAudit {
     // EDF DSv2 scan: channel + time predicates must reach the source
     // (per-signal ranged reads + record-window partition pruning)
     val edfPath = java.nio.file.Files.createTempDirectory("planaudit-edf").resolve("audit.edf").toString
-    EdfScaleProbe.generate(edfPath, nSig = 2, samplesPerRec = 256, nRec = 16, gapEveryRecs = 0)
+    writeAuditEdf(edfPath)
     val edfDf = spark.read.format("edf").load(edfPath)
       .filter(org.apache.spark.sql.functions.col("channel") === "ch000" &&
         org.apache.spark.sql.functions.col("ts_us") < Long.MaxValue / 2)
@@ -603,5 +603,25 @@ object PlanAudit {
     val total = checks.size + edfChecks.size + libChecks.size
     println(s"[audit] ${total - failed}/$total plan checks pass")
     spark.stop()
+  }
+
+  /** The EDF pushdown check's input: EDF+C, signals "ch000" and "ch001",
+    * 16 records of 1 s at 256 samples each, every sample digital 0.
+    */
+  private def writeAuditEdf(path: String): Unit = {
+    val (ns, samples, records) = (2, 256, 16)
+    val out = new java.io.ByteArrayOutputStream()
+    def field(v: String, width: Int): Unit =
+      out.write(v.padTo(width, ' ').getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    def perSignal(v: Int => String, width: Int): Unit = (0 until ns).foreach(s => field(v(s), width))
+    field("0", 8); field("audit", 80); field("audit", 80); field("01.01.24", 8); field("00.00.00", 8)
+    field((256 + ns * 256).toString, 8); field("EDF+C", 44); field(records.toString, 8)
+    field("1", 8); field(ns.toString, 4)
+    perSignal(s => f"ch$s%03d", 16); perSignal(_ => "", 80); perSignal(_ => "uV", 8)
+    perSignal(_ => "-3276.8", 8); perSignal(_ => "3276.7", 8)
+    perSignal(_ => "-32768", 8); perSignal(_ => "32767", 8)
+    perSignal(_ => "", 80); perSignal(_ => samples.toString, 8); perSignal(_ => "", 32)
+    out.write(new Array[Byte](ns * samples * 2 * records))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), out.toByteArray): Unit
   }
 }

@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.sources.v2.{EdfInputPartition, EdfPushdown, EdfSplitPlanner}
 
 /** Distributed EDF / EDF+C / EDF+D reader (SURVEY.md §2 A1/A2).
   *
@@ -24,16 +26,6 @@ import org.apache.spark.sql.types._
   */
 object EdfFile {
 
-  /** Split sizing with a bytes-per-core cap (Spark's
-    * FilePartition.maxSplitBytes shape): min(target, max(1 MiB,
-    * dataBytes/parallelism)). Shared by the RDD reader and the DSv2
-    * split planner.
-    */
-  private[sources] def effectiveSplitBytes(target: Long, dataBytes: Long,
-                                           parallelism: Int): Long =
-    math.min(math.max(1L, target),
-      math.max(1L << 20, dataBytes / math.max(1, parallelism)))
-
   /** Per-signal header (reference edf.py:46-55). */
   final case class EdfSignal(
       label: String, transducer: String, physDim: String,
@@ -45,7 +37,11 @@ object EdfFile {
     def offset: Double = physMax / bitValue - digMax
   }
 
-  /** File header (reference edf.py:36-55). */
+  /** File header (reference edf.py:36-55), plus the record arithmetic
+    * every reader shares: where each signal sits inside a record, which
+    * signal carries the TAL, how long a record lasts, and the EDF+D
+    * onset a record's TAL names.
+    */
   final case class EdfHeader(
       version: String, patientId: String, recordId: String,
       startDate: String, startTime: String, headerBytes: Int,
@@ -55,6 +51,18 @@ object EdfFile {
 
     /** Bytes per data record (sum over signals of 2·nrSamples). */
     lazy val recordBytes: Long = signals.map(_.nrSamples.toLong * 2).sum
+
+    /** Byte offset of each signal's slice inside a record (records are
+      * interleaved by signal); one trailing entry holds `recordBytes`.
+      */
+    lazy val signalOffsets: IndexedSeq[Long] =
+      signals.scanLeft(0L)((acc, s) => acc + s.nrSamples * 2L).toIndexedSeq
+
+    /** Position of the "EDF Annotations" signal, or -1 when there is none. */
+    lazy val annotationIndex: Int = signals.indexWhere(_.isAnnotation)
+
+    /** Record duration in whole µs. */
+    lazy val recordUs: Long = (duration * 1e6).toLong
 
     /** Start datetime in µs since epoch, UTC (reference edf.py:99-103:
       * yy < 85 → 20yy else 19yy). Parsed on first use, so a malformed
@@ -69,15 +77,45 @@ object EdfFile {
     }
 
     def sampleRate(sigIdx: Int): Double = signals(sigIdx).nrSamples / duration
+
+    /** Absolute onset (µs) of EDF+D record `rec` of `path`: its TAL, the
+      * annotation slice starting at `off` in `buf`, opens with the
+      * record's offset from the file start (`+onset<DC4><DC4>`). A
+      * malformed onset fails naming the file and the record.
+      */
+    def talOnsetUs(buf: Array[Byte], off: Int, path: String, rec: Long): Long = {
+      val tal = new String(buf, off, signals(annotationIndex).nrSamples * 2, StandardCharsets.US_ASCII)
+      val head = tal.split("\u0014\u0014", 2).head
+      try startUs + (head.toDouble * 1e6).toLong
+      catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$path: record $rec: EDF+D TAL onset is not a number: '${head.filter(_ >= ' ').take(40)}'")
+      }
+    }
   }
 
   private def str(b: Array[Byte], off: Int, len: Int): String =
     new String(b, off, len, StandardCharsets.US_ASCII).trim
 
-  /** Parse the fixed + signal headers from the first bytes of a file. */
-  def parseHeader(bytes: Array[Byte]): EdfHeader = {
-    val ns = str(bytes, 252, 4).toInt
-    require(bytes.length >= 256 + ns * 256, s"need ${256 + ns * 256} header bytes, got ${bytes.length}")
+  /** A numeric header field, or an error naming the file and the field. */
+  private def num[T](path: String, field: String, raw: String)(parse: String => T): T =
+    try parse(raw)
+    catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"$path: EDF header field '$field' is not a number: '$raw'")
+    }
+
+  /** The signal count from the fixed 256-byte header. */
+  private def signalCount(path: String, fixed: Array[Byte]): Int = {
+    val ns = num(path, "number of signals", str(fixed, 252, 4))(_.toInt)
+    require(ns >= 0, s"$path: EDF header field 'number of signals' is negative: $ns")
+    ns
+  }
+
+  /** Parse the fixed + signal headers (`256 + ns·256` bytes) of `path`. */
+  private def parseHeader(path: String, bytes: Array[Byte]): EdfHeader = {
+    val ns = signalCount(path, bytes)
     def sigField(field: Int, width: Int, s: Int): String = {
       // signal headers are stored column-major: all labels, all transducers, ...
       val base = 256 + (field match {
@@ -93,34 +131,54 @@ object EdfFile {
       })
       str(bytes, base + s * width, width)
     }
+    def sigNum[T](field: Int, name: String, s: Int)(parse: String => T): T =
+      num(path, s"$name of signal $s", sigField(field, 8, s))(parse)
     val signals = (0 until ns).map { s =>
-      EdfSignal(
+      val sig = EdfSignal(
         label = sigField(0, 16, s), transducer = sigField(1, 80, s),
         physDim = sigField(2, 8, s),
-        physMin = sigField(3, 8, s).toDouble, physMax = sigField(4, 8, s).toDouble,
-        digMin = sigField(5, 8, s).toDouble, digMax = sigField(6, 8, s).toDouble,
-        prefiltering = sigField(7, 80, s), nrSamples = sigField(8, 8, s).toInt)
+        physMin = sigNum(3, "physical minimum", s)(_.toDouble),
+        physMax = sigNum(4, "physical maximum", s)(_.toDouble),
+        digMin = sigNum(5, "digital minimum", s)(_.toDouble),
+        digMax = sigNum(6, "digital maximum", s)(_.toDouble),
+        prefiltering = sigField(7, 80, s),
+        nrSamples = sigNum(8, "number of samples", s)(_.toInt))
+      require(sig.isAnnotation || sig.digMin != sig.digMax,
+        s"$path: EDF header fields 'digital minimum' and 'digital maximum' of signal $s " +
+          s"('${sig.label}') are both ${sig.digMin}; calibration would divide by zero")
+      sig
     }
     EdfHeader(
       version = str(bytes, 0, 8), patientId = str(bytes, 8, 80), recordId = str(bytes, 88, 80),
       startDate = str(bytes, 168, 8), startTime = str(bytes, 176, 8),
-      headerBytes = str(bytes, 184, 8).toInt, reserved = str(bytes, 192, 44),
-      nbDataRec = str(bytes, 236, 8).toInt, duration = str(bytes, 244, 8).toDouble,
+      headerBytes = num(path, "number of bytes in header", str(bytes, 184, 8))(_.toInt),
+      reserved = str(bytes, 192, 44),
+      nbDataRec = num(path, "number of data records", str(bytes, 236, 8))(_.toInt),
+      duration = num(path, "duration of a data record", str(bytes, 244, 8))(_.toDouble),
       signals = signals)
   }
 
-  /** Read a file's header via the Hadoop FS API (driver-side, tiny read). */
+  /** Read a file's header via the Hadoop FS API (driver-side, tiny read).
+    * A hostile header fails with an `IllegalArgumentException` naming the
+    * file and the field: a file shorter than its header, a count or a
+    * number that does not parse, a negative signal count, or a data
+    * signal whose digital range is empty.
+    */
   def readHeader(path: String, conf: Configuration = new Configuration()): EdfHeader = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     try {
-      val fixed = new Array[Byte](256)
-      in.readFully(0, fixed)
-      val ns = str(fixed, 252, 4).toInt
-      val all = new Array[Byte](256 + ns * 256)
-      in.readFully(0, all)
-      parseHeader(all)
+      def head(n: Int): Array[Byte] = {
+        val b = new Array[Byte](n)
+        try in.readFully(0, b)
+        catch {
+          case e: java.io.EOFException =>
+            throw new IllegalArgumentException(s"$path: truncated EDF header, the file is shorter than $n bytes", e)
+        }
+        b
+      }
+      parseHeader(path, head(256 + signalCount(path, head(256)) * 256))
     } finally in.close()
   }
 
@@ -147,15 +205,13 @@ object EdfFile {
     } finally pool.shutdownNow(): Unit
   }
 
-  /** One planned unit of parallel work: a contiguous record range. */
-  final case class EdfSplit(path: String, recordLo: Int, recordHi: Int)
-
   /** Open a stream for SUB-CHUNK positioned reads (per-signal slices,
     * TAL peeks). Two measured over-transfer sources die here:
     * `ChecksumFileSystem`'s input checker moves whole checksum chunks
     * (4 KiB) per seek even when no `.crc` sidecar exists — for sub-KB
-    * reads that is an 8x byte inflation (EdfScaleProbe) — so local-FS
-    * reads go through the RAW filesystem; and the plain buffered path
+    * reads that is an 8x byte inflation (measured by a since-deleted
+    * probe; tools/edf_scale_r1*.json) — so local-FS reads go through
+    * the RAW filesystem; and the plain buffered path
     * gets a stream buffer no larger than the smallest read we will
     * issue, which makes `BufferedInputStream` copy straight into the
     * target (len >= buffer bypasses the fill) while larger sequential
@@ -211,7 +267,7 @@ object EdfFile {
 
   /** A2: header-only channel metadata DataFrame (one row per signal). */
   def channels(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val rows = readHeaders(paths).flatMap { case (path, h) =>
+    val rows = readHeaders(paths, spark.sparkContext.hadoopConfiguration).flatMap { case (path, h) =>
       h.signals.zipWithIndex.filterNot(_._1.isAnnotation).map { case (s, i) =>
         Row(path, i, s.label, s.physDim, h.sampleRate(i), s.nrSamples.toLong, h.nbDataRec.toLong,
           s.physMin, s.physMax, s.digMin, s.digMax, h.isDiscontiguous, h.startUs)
@@ -242,64 +298,43 @@ object EdfFile {
     * (The reference's linspace step of (n-1)/(n·rate) at
     * base.py:357-372 is an off-by-one artifact of its chunk helper; we use
     * the EDF-specified uniform sampling grid.)
+    *
+    * Splits come from the DSv2 scan's planner with nothing pushed, so
+    * this reader and `format("edf")` plan the same (file, record-range)
+    * partitions; each carries its file's header. This reader keeps its
+    * own per-sample decode and TAL parse: it is the reference the DSv2
+    * reader's row parity is checked against.
     */
-  def read(spark: SparkSession, paths: Seq[String], targetSplitBytes: Long = 128L << 20): DataFrame = {
-    val headers: Map[String, EdfHeader] = readHeaders(paths).toMap
-    // Spark FilePartition-style sizing: a file set smaller than
-    // cores x target must still fan out, or a 64 MiB file parses on ONE
-    // core while 31 idle (measured: the whole pipeline serialized behind
-    // that single map task). Split size = min(target, max(1 MiB,
-    // totalBytes/parallelism)) — big files keep 128 MiB splits, small
-    // ones split down to per-core work, never below 1 MiB (seek-cost
-    // floor, same idea as spark.sql.files.openCostInBytes).
-    val totalBytes = headers.valuesIterator.map(h => h.nbDataRec.toLong * h.recordBytes).sum
-    val effSplitBytes = effectiveSplitBytes(targetSplitBytes, totalBytes,
-      spark.sparkContext.defaultParallelism)
-    val splits = paths.flatMap { p =>
-      val h = headers(p)
-      val recsPerSplit = math.max(1, (effSplitBytes / math.max(1L, h.recordBytes)).toInt)
-      (0 until h.nbDataRec by recsPerSplit).map { lo =>
-        EdfSplit(p, lo, math.min(h.nbDataRec, lo + recsPerSplit))
-      }
-    }
-    val bHeaders = spark.sparkContext.broadcast(headers)
-    val confEntries = captureConfEntries(spark)
-    val rdd = spark.sparkContext.parallelize(splits, math.max(1, splits.size)).flatMap { split =>
-      val h = bHeaders.value(split.path)
-      readSplit(split, h, confEntries)
-    }
-    spark.createDataFrame(rdd, sampleSchema)
-  }
+  def read(spark: SparkSession, paths: Seq[String], targetSplitBytes: Long = 128L << 20): DataFrame =
+    spark.createDataFrame(planned(spark, paths, targetSplitBytes)(readSplit), sampleSchema)
 
   /** Annotation (TAL) extraction: (onset, duration, text) per record. */
-  def annotations(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val headers: Map[String, EdfHeader] = readHeaders(paths).toMap
-    val splits = paths.flatMap { p =>
-      val h = headers(p)
-      (0 until h.nbDataRec by 4096).map(lo => EdfSplit(p, lo, math.min(h.nbDataRec, lo + 4096)))
-    }
-    val bHeaders = spark.sparkContext.broadcast(headers)
+  def annotations(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.createDataFrame(planned(spark, paths, 128L << 20)(readAnnotations), annotationSchema)
+
+  /** One task per planned split, each opening its file through the
+    * session's Hadoop conf.
+    */
+  private def planned(spark: SparkSession, paths: Seq[String], targetSplitBytes: Long)(
+      rows: (EdfInputPartition, org.apache.hadoop.fs.FSDataInputStream) => Iterator[Row]): RDD[Row] = {
+    val splits = EdfSplitPlanner.planScan(spark, paths, EdfPushdown(), targetSplitBytes)
     val confEntries = captureConfEntries(spark)
-    val rdd = spark.sparkContext.parallelize(splits, math.max(1, splits.size)).flatMap { split =>
-      val h = bHeaders.value(split.path)
-      readAnnotations(split, h, confEntries)
+    spark.sparkContext.parallelize(splits, math.max(1, splits.size)).flatMap { split =>
+      val p = new Path(split.path)
+      val in = p.getFileSystem(confFromEntries(confEntries)).open(p)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+      rows(split, in)
     }
-    spark.createDataFrame(rdd, annotationSchema)
   }
 
   /** Executor-side: parse one record range into sample rows (lazy iterator). */
-  private def readSplit(split: EdfSplit, h: EdfHeader,
-                        confEntries: Seq[(String, String)]): Iterator[Row] = {
+  private def readSplit(split: EdfInputPartition, in: org.apache.hadoop.fs.FSDataInputStream): Iterator[Row] = {
+    val h = split.header
     val recBytes = h.recordBytes
-    val sigOffsets = h.signals.scanLeft(0L)((acc, s) => acc + s.nrSamples * 2L)
-    val annIdx = h.signals.indexWhere(_.isAnnotation)
-    val durUs = (h.duration * 1e6).toLong
+    val sigOffsets = h.signalOffsets
+    val annIdx = h.annotationIndex
+    val durUs = h.recordUs
     val startUs = h.startUs
-
-    val p = new Path(split.path)
-    val fs = p.getFileSystem(confFromEntries(confEntries))
-    val in = fs.open(p)
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
     val buf = new Array[Byte](recBytes.toInt)
 
     (split.recordLo until split.recordHi).iterator.flatMap { rec =>
@@ -333,17 +368,13 @@ object EdfFile {
   }
 
   /** Executor-side TAL parsing for one record range. */
-  private def readAnnotations(split: EdfSplit, h: EdfHeader,
-                              confEntries: Seq[(String, String)]): Iterator[Row] = {
-    val annIdx = h.signals.indexWhere(_.isAnnotation)
+  private def readAnnotations(split: EdfInputPartition,
+                              in: org.apache.hadoop.fs.FSDataInputStream): Iterator[Row] = {
+    val h = split.header
+    val annIdx = h.annotationIndex
     if (annIdx < 0) return Iterator.empty
     val recBytes = h.recordBytes
-    val sigOffsets = h.signals.scanLeft(0L)((acc, s) => acc + s.nrSamples * 2L)
-    val p = new Path(split.path)
-    val fs = p.getFileSystem(confFromEntries(confEntries))
-    val in = fs.open(p)
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-    val off = sigOffsets(annIdx).toInt
+    val off = h.signalOffsets(annIdx).toInt
     val len = h.signals(annIdx).nrSamples * 2
     val buf = new Array[Byte](recBytes.toInt)
 

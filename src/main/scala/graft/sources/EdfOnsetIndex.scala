@@ -12,15 +12,26 @@ import graft.sources.EdfFile.EdfHeader
   * only prune record READS — the DSv2 reader seek-reads the TAL slice
   * first and skips out-of-range records, but every planned partition
   * still opens the file. This sidecar materializes the onsets once into
-  * a tiny JSON file next to the EDF (`<file>.edf.onsets.json`, ~10
-  * bytes/record vs the record's KBs of samples), letting
-  * `planInputPartitions` drop whole EDF+D splits at PLANNING time —
-  * the discontiguous counterpart of the contiguous-file window
-  * arithmetic in [[graft.sources.v2.EdfPushdown.recordWindow]].
+  * a small file next to the EDF (`<file>.edf.onsets.json`, 8 bytes per
+  * record vs the record's KBs of samples), letting the scan's split
+  * planner drop whole EDF+D splits at PLANNING time — the discontiguous
+  * counterpart of the contiguous-file window arithmetic in
+  * [[graft.sources.v2.EdfPushdown.recordWindow]].
   *
-  * Staleness safety: the sidecar records `nbDataRec`; a mismatch with
-  * the file's header (file rewritten, sidecar orphaned) makes `read`
-  * return None and planning falls back to the conservative full plan.
+  * One format (the name keeps its historical `.json` suffix): an 8-byte
+  * magic, the int64 record count, then one int64 onset (µs) per record,
+  * all big-endian. Fixed-width records are the point — planning
+  * BINARY-SEARCHES the query window with O(log n) positioned 8-byte
+  * reads instead of parsing the whole sidecar: a 100 GB EDF+D's
+  * ~10⁷-record index costs ~25 probes per plan, not a ~100 MB driver
+  * read (the r10 probe measured 4.7 MB of plan-time sidecar bytes at
+  * just 0.5 GB of EDF+D).
+  *
+  * Staleness safety: a sidecar counts only when its 16-byte head holds
+  * the magic and the header's `nbDataRec`, and its length covers that
+  * many onsets. Anything else — a rewritten EDF, an orphaned or
+  * truncated sidecar, an older JSON sidecar — reads as absent: planning
+  * falls back to the conservative full plan, and [[ensure]] rewrites it.
   * Pruning remains conservative with the sidecar too — a boundary
   * record is kept and Spark's residual filter trims its rows.
   */
@@ -28,45 +39,44 @@ object EdfOnsetIndex {
 
   def sidecarPath(edfPath: String): String = edfPath + ".onsets.json"
 
-  /** v2 sidecar layout (fixed-width, range-searchable): 8-byte magic +
-    * int64 nbDataRec + int64 onset per record (big-endian). Fixed-width
-    * records are the point — planning BINARY-SEARCHES the query window
-    * with O(log n) positioned 8-byte reads instead of parsing the whole
-    * sidecar: a 100 GB EDF+D's ~10⁷-record index costs ~25 probes per
-    * plan, not a ~100 MB driver read (the r10 probe measured 4.7 MB of
-    * plan-time sidecar bytes at just 0.5 GB of EDF+D). The legacy JSON
-    * layout is still READ (fleets with landed v1 sidecars plan
-    * correctly, paying the old full parse) but no longer written.
-    */
   private val MAGIC: Array[Byte] = "GFONIDX1".getBytes(StandardCharsets.US_ASCII)
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** True when a sidecar's first 16 bytes and its length describe the
+    * records of `h`.
+    */
+  private def headMatches(head: Array[Byte], fileLen: Long, h: EdfHeader): Boolean = {
+    val n = java.nio.ByteBuffer.wrap(head, 8, 8).getLong
+    java.util.Arrays.equals(java.util.Arrays.copyOf(head, 8), MAGIC) &&
+      n == h.nbDataRec.toLong && fileLen >= 16L + 8L * n
+  }
 
   /** Scan every record's TAL onset (annotation-slice seek-reads only —
     * sample bytes are never transferred: len(TAL) of the record's KBs)
     * and write the sidecar. One sequential pass, run once per file at
     * land time; at fleet scale run it per-file in tasks (it needs only
-    * the Hadoop conf, no Spark session).
+    * the Hadoop conf, no Spark session). A malformed onset fails naming
+    * the file and the record.
     */
   def write(path: String, conf: Configuration = new Configuration()): String = {
     val h = EdfFile.readHeader(path, conf)
     require(h.isDiscontiguous, s"$path is contiguous — record onsets are header arithmetic, no sidecar needed")
-    val annIdx = h.signals.indexWhere(_.isAnnotation)
+    val annIdx = h.annotationIndex
     require(annIdx >= 0, s"$path has no annotation signal to carry TAL onsets")
-    val sigOffsets = h.signals.scanLeft(0L)((acc, s) => acc + s.nrSamples * 2L)
-    val annOff = sigOffsets(annIdx)
+    val annOff = h.signalOffsets(annIdx)
     val len = h.signals(annIdx).nrSamples * 2
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     // sub-chunk positioned reads: without openSeekable the checksum
     // layer + 4 KiB buffer would transfer ~the whole file for KB-scale
-    // records (measured by EdfScaleProbe)
+    // records (measured by a since-deleted probe; tools/edf_scale_r1*.json)
     val in = EdfFile.openSeekable(fs, p, len)
     val onsets = try {
       val buf = new Array[Byte](len)
       (0 until h.nbDataRec).map { rec =>
         in.readFully(h.headerBytes + rec.toLong * h.recordBytes + annOff, buf)
-        val tal = new String(buf, 0, len, StandardCharsets.US_ASCII)
-        val head = tal.split("\u0014\u0014", 2).head
-        h.startUs + (head.toDouble * 1e6).toLong
+        h.talOnsetUs(buf, 0, path, rec)
       }
     } finally in.close()
     // the binary-search read path requires the monotonicity EDF+D
@@ -103,14 +113,13 @@ object EdfOnsetIndex {
 
   /** The record range `[lo, hi)` a `[tsLo, tsHi]` window keeps — a
     * record survives when `[onset, onset + spanUs)` intersects the
-    * window (onsets are monotonic, so the kept set is one run). v2
-    * sidecars answer with O(log n) probes over PAGE-granular positioned
+    * window (onsets are monotonic, so the kept set is one run). The
+    * sidecar answers with O(log n) probes over PAGE-granular positioned
     * reads (2 KiB pages, cached for the call — the two boundary searches
     * share pages, and each filesystem read transfers one page instead of
     * paying the KiB-scale floor per 8-byte value); answers memoize
-    * across plan invocations per (path, mtime, window). Legacy JSON
-    * sidecars fall back to the full parse. None = no/stale/unreadable
-    * sidecar — callers plan unpruned.
+    * across plan invocations per (path, mtime, window). None =
+    * no/stale/unreadable sidecar — callers plan unpruned.
     */
   def keptRange(path: String, h: EdfHeader, tsLo: Long, tsHi: Long, spanUs: Long,
                 conf: Configuration = new Configuration()): Option[(Int, Int)] = {
@@ -120,7 +129,7 @@ object EdfOnsetIndex {
       if (!fs.exists(p)) return None
       val st = fs.getFileStatus(p)
       val fileLen = st.getLen
-      if (fileLen < 16) return legacyRange(path, h, tsLo, tsHi, spanUs, conf)
+      if (fileLen < 16) return None
       // nbDataRec is in the key: an EDF rewritten under an untouched
       // sidecar must miss the memo and re-hit the staleness check below
       val memoKey = (p.toString, st.getModificationTime, fileLen,
@@ -151,10 +160,7 @@ object EdfOnsetIndex {
           val pg = (off / PageBytes).toInt
           java.nio.ByteBuffer.wrap(page(pg), (off - pg.toLong * PageBytes).toInt, 8).getLong
         }
-        if (!java.util.Arrays.equals(java.util.Arrays.copyOf(page(0), 8), MAGIC))
-          return legacyRange(path, h, tsLo, tsHi, spanUs, conf)
-        val n = at(8L)
-        if (n != h.nbDataRec.toLong || fileLen < 16L + 8L * n) return None
+        if (!headMatches(page(0), fileLen, h)) return None
         def onset(i: Int): Long = at(16L + 8L * i)
         val nRec = h.nbDataRec
         val lo =
@@ -246,55 +252,41 @@ object EdfOnsetIndex {
       }
   }
 
-  /** Range bounds off a legacy (v1 JSON) sidecar — full parse + linear
-    * scan, correctness-identical to v2's search on monotonic onsets.
-    */
-  private def legacyRange(path: String, h: EdfHeader, tsLo: Long, tsHi: Long,
-                          spanUs: Long, conf: Configuration): Option[(Int, Int)] =
-    read(path, h, conf).map { onsets =>
-      val lo =
-        if (tsLo == Long.MinValue) 0
-        else {
-          val i = onsets.indexWhere(_ + spanUs > tsLo)
-          if (i < 0) onsets.length else i
-        }
-      val hi =
-        if (tsHi == Long.MaxValue) onsets.length
-        else {
-          val i = onsets.lastIndexWhere(_ <= tsHi)
-          math.max(i + 1, lo)
-        }
-      (lo, hi)
-    }
-
   /** True when `path` is an EDF+D file that needs (and can get) a
     * sidecar it doesn't have yet: discontiguous, TAL-bearing, and no
-    * fresh sidecar present.
+    * readable sidecar whose head matches the header.
     */
   def needed(path: String, conf: Configuration): Boolean = {
     val h = EdfFile.readHeader(path, conf)
-    h.isDiscontiguous && h.signals.exists(_.isAnnotation) && read(path, h, conf).isEmpty
+    h.isDiscontiguous && h.annotationIndex >= 0 && {
+      val p = new Path(sidecarPath(path))
+      val fs = p.getFileSystem(conf)
+      val fileLen = if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
+      fileLen < 16 || {
+        val head = new Array[Byte](16)
+        try {
+          val in = fs.open(p)
+          try in.readFully(0, head) finally in.close()
+          !headMatches(head, fileLen, h)
+        } catch { case _: java.io.IOException => true } // e.g. a checksum mismatch
+      }
+    }
   }
 
   /** Land-time indexing for a batch of landed files: ensure every EDF+D
     * member has a fresh sidecar (no-op for contiguous files and
     * already-indexed ones). Runs per-file in executor tasks — the
-    * driver never touches record bytes — and is BEST-EFFORT: a file
-    * that can't be indexed (corrupt header, read-only directory) is
-    * skipped, since planning without a sidecar is merely unpruned,
-    * never wrong.
+    * driver never touches record bytes — through the session's Hadoop
+    * conf. Task count tracks the cluster (`defaultParallelism`), not a
+    * fixed constant, so a 1000-executor fleet indexes a landing burst at
+    * fleet width. It is BEST-EFFORT: a file that can't be indexed
+    * (corrupt header, read-only directory) plans unpruned, never wrong,
+    * and its task logs a WARN naming the file and the cause.
     */
   def ensure(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): Unit =
-    ensure(spark.sparkContext, EdfFile.captureConfEntries(spark), files)
-
-  /** Same, for callers that already hold captured conf entries (the
-    * streaming micro-batch planner). Task count tracks the cluster
-    * (`defaultParallelism`), not a fixed constant, so a 1000-executor
-    * fleet indexes a landing burst at fleet width.
-    */
-  def ensure(sc: org.apache.spark.SparkContext, entries: Seq[(String, String)],
-             files: Seq[String]): Unit =
     if (files.nonEmpty) {
+      val sc = spark.sparkContext
+      val entries = EdfFile.captureConfEntries(spark)
       // tag the job so the UI (and tests) can attribute the indexing
       // work to this path rather than whatever query triggered it
       val prev = sc.getLocalProperty("spark.job.description")
@@ -303,38 +295,11 @@ object EdfOnsetIndex {
         .foreach { f =>
           val conf = EdfFile.confFromEntries(entries)
           try if (needed(f, conf)) { write(f, conf); () }
-          catch { case _: Exception => () }
+          catch {
+            case e: Exception =>
+              log.warn(s"EDF onset sidecar not written for $f (the file plans unpruned): $e")
+          }
         }
       finally sc.setJobDescription(prev)
     }
-
-  /** Absolute record onsets (µs) from the sidecar, or None when it is
-    * missing, unreadable, or stale (record count differs from the
-    * header) — callers fall back to unpruned planning.
-    */
-  def read(path: String, h: EdfHeader, conf: Configuration = new Configuration()): Option[Array[Long]] = {
-    val p = new Path(sidecarPath(path))
-    try {
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val bytes = try {
-        val size = fs.getFileStatus(p).getLen.toInt
-        val b = new Array[Byte](size); in.readFully(0, b); b
-      } finally in.close()
-      if (bytes.length >= 16 &&
-          java.util.Arrays.equals(java.util.Arrays.copyOf(bytes, 8), MAGIC)) {
-        val bb = java.nio.ByteBuffer.wrap(bytes, 8, bytes.length - 8)
-        val n = bb.getLong
-        return if (n != h.nbDataRec.toLong || bytes.length < 16L + 8L * n) None
-        else Some(Array.fill(h.nbDataRec)(bb.getLong))
-      }
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, StandardCharsets.UTF_8))
-      val n = node.get("nbDataRec").asInt(-1)
-      val arr = node.get("onsetsUs")
-      if (n != h.nbDataRec || arr == null || !arr.isArray || arr.size != h.nbDataRec) None
-      else Some(Array.tabulate(arr.size)(arr.get(_).asLong))
-    } catch { case _: Exception => None }
-  }
 }

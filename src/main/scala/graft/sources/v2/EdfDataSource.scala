@@ -2,6 +2,7 @@ package graft.sources.v2
 
 import java.util
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -17,9 +18,11 @@ import graft.sources.EdfFile.EdfHeader
 /** DataSource V2 registration of the EDF reader: `spark.read.format("edf")
   * .load(path)` (SURVEY.md §2 A1 as a first-class source).
   *
-  * Scan planning mirrors EdfFile.read — header-only driver work, (file,
-  * record-range) input partitions — plus V2 column pruning AND filter
-  * pushdown:
+  * Scan planning is header-only driver work: [[EdfSplitPlanner]] reads
+  * each file's header once, through the session's Hadoop conf, and plans
+  * (file, record-range) input partitions that carry that header, so
+  * readers never re-read it. `EdfFile.read` plans through the same
+  * planner. On top come V2 column pruning AND filter pushdown:
   *
   *  - when the `value` column is NOT requested the partition reader
   *    synthesizes rows from header arithmetic alone, never touching
@@ -117,7 +120,8 @@ final case class EdfPushdown(
     * `[startUs + r·dur, startUs + (r+1)·dur)`); conservative by design —
     * a boundary record is kept and Spark's re-filter trims it.
     */
-  def recordWindow(h: EdfHeader, durUs: Long): (Int, Int) = {
+  def recordWindow(h: EdfHeader): (Int, Int) = {
+    val durUs = h.recordUs
     var lo = math.max(0L, recLo)
     var hi = math.min(h.nbDataRec.toLong, if (recHi == Long.MaxValue) Long.MaxValue else recHi + 1)
     if (!h.isDiscontiguous && durUs > 0) {
@@ -228,95 +232,100 @@ final class EdfScan(paths: Seq[String], required: StructType, pushdown: EdfPushd
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
     new EdfMicroBatchStream(paths, required.fieldNames,
-      EdfFile.captureConfEntries(org.apache.spark.sql.SparkSession.active),
+      EdfFile.captureConfEntries(SparkSession.active),
       pushdown, targetSplitBytes, maxFilesPerTrigger)
   override def description(): String =
     s"EdfScan(paths=${paths.size}, columns=[${required.fieldNames.mkString(",")}], " +
       s"PushedFilters: [${pushed.mkString(", ")}])"
 
   override def planInputPartitions(): Array[InputPartition] =
-    EdfSplitPlanner.planScan(paths, pushdown, targetSplitBytes).toArray
+    EdfSplitPlanner.planScan(SparkSession.active, paths, pushdown, targetSplitBytes).toArray
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val entries = org.apache.spark.sql.SparkSession.active match {
-      case s => EdfFile.captureConfEntries(s)
-    }
-    new EdfReaderFactory(required.fieldNames, entries, pushdown)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new EdfReaderFactory(required.fieldNames, EdfFile.captureConfEntries(SparkSession.active), pushdown)
 }
 
-final case class EdfInputPartition(path: String, recordLo: Int, recordHi: Int) extends InputPartition
-
-/** Shared split planning for the batch scan and the micro-batch stream:
-  * header-window pruning (contiguous files), then — for EDF+D files with
-  * time bounds pushed — onset-sidecar pruning: records whose
-  * `[onset, onset + duration)` span misses the pushed `[tsLo, tsHi]`
-  * window are dropped at PLANNING time, and splits are planned over the
-  * surviving record runs only (without the sidecar every EDF+D split is
-  * planned and the reader's TAL seek-skip does the pruning per record).
+/** Records `[recordLo, recordHi)` of `path`, with the header the planner
+  * read, so executors never reopen the file for it.
   */
-private[v2] object EdfSplitPlanner {
+final case class EdfInputPartition(path: String, recordLo: Int, recordHi: Int, header: EdfHeader)
+    extends InputPartition
+
+/** The one EDF split planner, shared by the batch scan, the micro-batch
+  * stream and `EdfFile.read`: header-window pruning (contiguous files),
+  * then — for EDF+D files with time bounds pushed — onset-sidecar
+  * pruning: records whose `[onset, onset + duration)` span misses the
+  * pushed `[tsLo, tsHi]` window are dropped at PLANNING time, and splits
+  * are planned over the surviving record runs only (without the sidecar
+  * every EDF+D split is planned and the reader's TAL seek-skip does the
+  * pruning per record). Headers and sidecars are read through the
+  * session's Hadoop conf, so a filesystem registered only there plans
+  * like any other.
+  */
+private[sources] object EdfSplitPlanner {
+
+  /** Split sizing with a bytes-per-core cap (Spark's
+    * FilePartition.maxSplitBytes shape): min(target, max(1 MiB,
+    * dataBytes/parallelism)). A file set smaller than cores x target
+    * must still fan out, or a 64 MiB file parses on ONE core while the
+    * rest idle (measured: the whole pipeline serialized behind that
+    * single map task); 1 MiB is the seek-cost floor, the idea of
+    * spark.sql.files.openCostInBytes.
+    */
+  private def effectiveSplitBytes(target: Long, dataBytes: Long, parallelism: Int): Long =
+    math.min(math.max(1L, target),
+      math.max(1L << 20, dataBytes / math.max(1, parallelism)))
+
   /** Plan a whole SCAN's splits with the bytes-per-core cap sized on the
     * scan's TOTAL kept bytes — not per file. Per-file sizing over-splits
     * a many-small-file scan (1000 x 64 MiB files would each fan out to
     * parallelism splits when the file count alone saturates the cores);
     * the single-small-file case still fans out because the total IS that
-    * file. Headers are read once per path here and reused by splitsFor.
+    * file. Each path's header is read once, here.
     */
-  def planScan(paths: Seq[String], pushdown: EdfPushdown,
-               targetSplitBytes: Long): Seq[InputPartition] = {
+  def planScan(spark: SparkSession, paths: Seq[String], pushdown: EdfPushdown,
+               targetSplitBytes: Long): Seq[EdfInputPartition] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     // headers fetched through a driver-side thread pool: planning a
     // 100k-file lake must not serialize 100k tiny round-trips (r15
     // verdict #4); pruning semantics are unchanged — same headers,
     // same order
-    val metas = EdfFile.readHeaders(paths).map { case (p, h) =>
-      val (winLo, winHi) = pushdown.recordWindow(h, (h.duration * 1e6).toLong)
+    val metas = EdfFile.readHeaders(paths, conf).map { case (p, h) =>
+      val (winLo, winHi) = pushdown.recordWindow(h)
       (p, h, winLo, winHi)
     }
-    val parallelism = scala.util.Try(
-      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism).getOrElse(1)
     val totalKept = metas.map { case (_, h, lo, hi) =>
       math.max(0L, (hi - lo).toLong) * math.max(1L, h.recordBytes)
     }.sum
-    val eff = EdfFile.effectiveSplitBytes(targetSplitBytes, totalKept, parallelism)
-    metas.flatMap { case (p, h, lo, hi) => splitsFor(p, pushdown, eff, Some((h, lo, hi))) }
-  }
-
-  def splitsFor(path: String, pushdown: EdfPushdown, targetSplitBytes: Long,
-                meta: Option[(graft.sources.EdfFile.EdfHeader, Int, Int)] = None): Seq[InputPartition] = {
-    val (h, winLo, winHi) = meta.getOrElse {
-      val hdr = EdfFile.readHeader(path)
-      val (lo, hi) = pushdown.recordWindow(hdr, (hdr.duration * 1e6).toLong)
-      (hdr, lo, hi)
-    }
-    val durUs = (h.duration * 1e6).toLong
-    val recsPerSplit = math.max(1,
-      (math.max(1L, targetSplitBytes) / math.max(1L, h.recordBytes)).toInt)
+    val eff = effectiveSplitBytes(targetSplitBytes, totalKept, spark.sparkContext.defaultParallelism)
     val hasTsBounds = pushdown.tsLo != Long.MinValue || pushdown.tsHi != Long.MaxValue
-    val keep: Int => Boolean =
-      if (h.isDiscontiguous && hasTsBounds)
-        // monotonic onsets make the kept set one contiguous run — the
-        // sidecar answers it with O(log n) positioned reads, so planning
-        // bytes stay ~constant however chunk-heavy the file's history is
-        graft.sources.EdfOnsetIndex.keptRange(path, h,
-            pushdown.tsLo, pushdown.tsHi, math.max(1L, durUs)) match {
-          case Some((klo, khi)) => rec => rec >= klo && rec < khi
-          case None => _ => true
+    metas.flatMap { case (path, h, winLo, winHi) =>
+      val recsPerSplit = math.max(1, (eff / math.max(1L, h.recordBytes)).toInt)
+      val keep: Int => Boolean =
+        if (h.isDiscontiguous && hasTsBounds)
+          // monotonic onsets make the kept set one contiguous run — the
+          // sidecar answers it with O(log n) positioned reads, so planning
+          // bytes stay ~constant however chunk-heavy the file's history is
+          graft.sources.EdfOnsetIndex.keptRange(path, h,
+              pushdown.tsLo, pushdown.tsHi, math.max(1L, h.recordUs), conf) match {
+            case Some((klo, khi)) => rec => rec >= klo && rec < khi
+            case None => _ => true
+          }
+        else _ => true
+      // runs of kept records, each chunked at the split size
+      val splits = Seq.newBuilder[EdfInputPartition]
+      var lo = winLo
+      while (lo < winHi) {
+        if (!keep(lo)) lo += 1
+        else {
+          var hi = lo + 1
+          while (hi < winHi && hi - lo < recsPerSplit && keep(hi)) hi += 1
+          splits += EdfInputPartition(path, lo, hi, h)
+          lo = hi
         }
-      else _ => true
-    // runs of kept records, each chunked at the split size
-    val splits = Seq.newBuilder[InputPartition]
-    var lo = winLo
-    while (lo < winHi) {
-      if (!keep(lo)) lo += 1
-      else {
-        var hi = lo + 1
-        while (hi < winHi && hi - lo < recsPerSplit && keep(hi)) hi += 1
-        splits += EdfInputPartition(path, lo, hi)
-        lo = hi
       }
+      splits.result()
     }
-    splits.result()
   }
 }
 
@@ -438,42 +447,15 @@ final class EdfMicroBatchStream(roots: Seq[String], fields: Array[String],
     val fresh = end.asInstanceOf[EdfStreamOffset].files.filterNot(seen)
     // land-time indexing: newly-landed EDF+D files get their onset
     // sidecar written before planning (best-effort — an unindexable file
-    // just plans unpruned), so this batch AND every later read prune at
-    // planning time. The TAL seek-reads run as EXECUTOR tasks
-    // (EdfOnsetIndex.ensure — the driver never touches record bytes);
-    // batch size is bounded by maxFilesPerTrigger. If no session is
-    // active on the planning thread (custom execution pools), fall back
-    // to the driver-side loop rather than silently skipping: unindexed
-    // EDF+D files would plan unpruned FOREVER, a permanent regression
-    // worse than one bounded batch of driver I/O.
-    if (fresh.nonEmpty) {
-      // best-effort stays the semantic (an unindexable file plans
-      // unpruned, correctly) — but a PERMANENTLY failing sidecar write
-      // must be visible, so every swallowed exception logs at WARN with
-      // the path it affects instead of vanishing.
-      val log = org.slf4j.LoggerFactory.getLogger(getClass)
-      try org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(s) =>
-          graft.sources.EdfOnsetIndex.ensure(s.sparkContext, confEntries, fresh)
-        case None =>
-          val conf = EdfFile.confFromEntries(confEntries)
-          fresh.foreach { f =>
-            try if (graft.sources.EdfOnsetIndex.needed(f, conf)) {
-              graft.sources.EdfOnsetIndex.write(f, conf); ()
-            } catch {
-              case e: Exception =>
-                log.warn(s"EDF onset sidecar write failed for $f " +
-                  s"(file will plan unpruned): ${e.getMessage}")
-            }
-          }
-      } catch {
-        case e: Exception =>
-          log.warn(s"EDF onset sidecar indexing failed for batch of " +
-            s"${fresh.length} file(s), e.g. ${fresh.head} " +
-            s"(batch plans unpruned): ${e.getMessage}")
-      }
-    }
-    EdfSplitPlanner.planScan(fresh, pushdown, targetSplitBytes).toArray
+    // plans unpruned, and its task logs a WARN naming it), so this batch
+    // AND every later read prune at planning time. The TAL seek-reads
+    // run as EXECUTOR tasks (the driver never touches record bytes);
+    // batch size is bounded by maxFilesPerTrigger. Spark runs a stream's
+    // planning inside its session (`StreamExecution.runStream`), so the
+    // active session is always there.
+    val spark = SparkSession.active
+    graft.sources.EdfOnsetIndex.ensure(spark, fresh)
+    EdfSplitPlanner.planScan(spark, fresh, pushdown, targetSplitBytes).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -504,11 +486,11 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   import EdfPartitionReader._
 
   private val needsValue = fields.contains("value")
-  private val h: EdfHeader = EdfFile.readHeader(part.path)
+  private val h: EdfHeader = part.header
   private val recBytes = h.recordBytes
-  private val sigOffsets = h.signals.scanLeft(0L)((acc, s) => acc + s.nrSamples * 2L)
-  private val annIdx = h.signals.indexWhere(_.isAnnotation)
-  private val durUs = (h.duration * 1e6).toLong
+  private val sigOffsets = h.signalOffsets
+  private val annIdx = h.annotationIndex
+  private val durUs = h.recordUs
   private val dataSignals = h.signals.zipWithIndex.filterNot(_._1.isAnnotation)
   private val selected = dataSignals.filter { case (s, i) => pushdown.keepSignal(s.label, i) }
   private val sliced = selected.size < dataSignals.size
@@ -600,12 +582,6 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   private var sampleIdx = 0
   private var recStartUs = 0L
 
-  private def parseTal(bytes: Array[Byte], off: Int): Long = {
-    val len = h.signals(annIdx).nrSamples * 2
-    val tal = new String(bytes, off, len, java.nio.charset.StandardCharsets.US_ASCII)
-    h.startUs + (tal.split("\u0014\u0014", 2).head.toDouble * 1e6).toLong
-  }
-
   private def readRecordData(recBase: Long): Unit =
     if (!sliced) {
       if (needsValue) in.readFully(recBase, buf)
@@ -621,7 +597,7 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
       val recBase = h.headerBytes + rec * recBytes
       if (talBuf != null) {
         in.readFully(recBase + sigOffsets(annIdx), talBuf)
-        recStartUs = parseTal(talBuf, 0)
+        recStartUs = h.talOnsetUs(talBuf, 0, part.path, rec)
         // conservative span check: a record whose [onset, onset + dur]
         // misses the pushed bounds is skipped entirely
         if (!hasTsBounds ||
@@ -634,7 +610,7 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
           if (needsValue || h.isDiscontiguous) in.readFully(recBase, buf)
         } else readRecordData(recBase)
         recStartUs =
-          if (h.isDiscontiguous && annIdx >= 0) parseTal(buf, sigOffsets(annIdx).toInt)
+          if (h.isDiscontiguous && annIdx >= 0) h.talOnsetUs(buf, sigOffsets(annIdx).toInt, part.path, rec)
           else h.startUs + rec.toLong * durUs
         found = true
       }

@@ -171,13 +171,39 @@ class EdfDataSourceSpec extends AnyFunSuite {
       "tsHi inclusive: record 1's onset == bound is kept")
     // a record whose span overlaps tsLo but whose onset precedes it is kept
     assert(kept(25500000L, 26500000L) == Some((2, 3)), "span-overlap at tsLo")
-    // legacy JSON sidecar answers the same bounds through the full parse
+    // a JSON sidecar (the retired format) reads as absent: the scan
+    // plans unpruned until ensure rewrites it in the one binary format
     java.nio.file.Files.write(java.nio.file.Paths.get(graft.sources.EdfOnsetIndex.sidecarPath(path)),
       s"""{"nbDataRec": 5, "onsetsUs": [${Seq(0L, 10L, 25L, 40L, 41L)
         .map(s => h.startUs + s * 1000000L).mkString(", ")}]}""".getBytes)
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$tmp/.disc.edf.onsets.json.crc"))
-    assert(kept(9000000L, 12000000L) == Some((1, 2)), "legacy JSON path agrees")
+    assert(kept(9000000L, 12000000L).isEmpty, "a JSON sidecar is no sidecar")
+    def planned = spark.read.format("edf")
+      .option("targetSplitBytes", h.recordBytes.toString).load(path)
+      .filter(col("ts_us") >= h.startUs + 9000000L && col("ts_us") < h.startUs + 12000000L)
+      .rdd.getNumPartitions
+    assert(planned == 5, "JSON sidecar: every record planned")
+    graft.sources.EdfOnsetIndex.ensure(spark, Seq(path))
+    assert(kept(9000000L, 12000000L) == Some((1, 2)), "ensure rewrote the sidecar")
+    assert(planned == 1, "the rewritten sidecar prunes at plan time")
+  }
+
+  test("a malformed EDF+D TAL onset fails with the file and the record") {
+    val tmp = java.nio.file.Files.createTempDirectory("edfdbadtal")
+    val path = s"$tmp/disc.edf"
+    makeEdfD(path, Seq(0.0, 10.0, 25.0))
+    // header 768 B, records of 8 sample bytes + a 32-byte TAL: record 1's
+    // TAL "+10.0" starts at 768 + 40 + 8; its "1" becomes "x"
+    val raf = new java.io.RandomAccessFile(path, "rw")
+    try { raf.seek(768 + 40 + 8 + 1); raf.write('x') } finally raf.close()
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    val expected = s"$path: record 1: EDF+D TAL onset is not a number: '+x0.0'"
+    val scan = intercept[Exception](spark.read.format("edf").load(path).collect())
+    assert(messages(scan).contains(expected), messages(scan))
+    val index = intercept[IllegalArgumentException](graft.sources.EdfOnsetIndex.write(path))
+    assert(index.getMessage == expected)
   }
 
   test("keptRange memoizes per (path, mtime, length, window) across plan invocations") {
@@ -279,6 +305,26 @@ class EdfDataSourceSpec extends AnyFunSuite {
     assert(e.getMessage != null, s"whole-record read fails on truncated file: $e")
   }
 
+  test("planning and reading use the session's Hadoop conf: a scheme registered only there") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftsession.impl", classOf[SessionOnlyLocalFs].getName)
+    conf.set("fs.graftsession.impl.disable.cache", "true")
+    try {
+      val tmp = java.nio.file.Files.createTempDirectory("edfscheme")
+      EdfDFixtures.makeEdfC(s"$tmp/c.edf", "00.00.00", Seq("C3", "C4"))
+      val path = s"graftsession://$tmp/c.edf"
+      assert(spark.read.format("edf").load(path).count() == 2L * 3 * 4)
+      assert(EdfFile.read(spark, Seq(path)).count() == 2L * 3 * 4)
+      assert(EdfFile.channels(spark, Seq(path)).count() == 2L)
+      val manifest = EdfPipeline.process(spark, Seq(path), s"graftsession://$tmp/out")
+      assert(manifest.startsWith("graftsession:"), manifest)
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/out/channels.json")))
+    } finally {
+      conf.unset("fs.graftsession.impl")
+      conf.unset("fs.graftsession.impl.disable.cache")
+    }
+  }
+
   // ---- row parity with the RDD reference reader (EdfFile.read) on
   // in-repo fixtures: every DSv2 reader path, compared as row multisets
 
@@ -362,4 +408,12 @@ class EdfDataSourceSpec extends AnyFunSuite {
     assert(bounded.queryExecution.executedPlan.toString.contains("GreaterThanOrEqual(ts_us"))
     assertParity(bounded, ref.filter(inWindow), minRows = 12)
   }
+}
+
+/** The local filesystem under a scheme that only a session's Hadoop conf
+  * knows about (`fs.graftsession.impl`).
+  */
+class SessionOnlyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
+  override def getScheme: String = "graftsession"
 }

@@ -69,6 +69,7 @@ class EdfFileSpec extends AnyFunSuite {
     // force tiny splits: each record is its own split
     val h = EdfFile.readHeader(sinEdf)
     val df = EdfFile.read(spark, Seq(sinEdf), targetSplitBytes = h.recordBytes)
+    assert(df.rdd.getNumPartitions == h.nbDataRec, "one split per record, as the DSv2 scan plans")
     assert(df.count() == 2L * 12000L)
     val dup = df.groupBy(col("channel_idx"), col("sample_idx")).count().filter(col("count") > 1).count()
     assert(dup == 0L, "no sample read twice across splits")
@@ -94,6 +95,36 @@ class EdfFileSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[Long]("ts_us")).toSeq == expected)
     // gap between record 0 end and record 1 start is 9.25s, not 0.25s
     assert(rows(4).getAs[Long]("ts_us") - rows(3).getAs[Long]("ts_us") == 9250000L)
+  }
+
+  test("hostile headers fail with the file and the field named") {
+    val tmp = java.nio.file.Files.createTempDirectory("edfhostile")
+    // one data signal: the signal count sits at byte 252, the record
+    // duration at 244, and signal 0's digital min/max at 376/384
+    def variant(name: String)(patch: Array[Byte] => Array[Byte]): String = {
+      val p = s"$tmp/$name.edf"
+      EdfDFixtures.makeEdfC(p, "00.00.00", Seq("C3"))
+      val path = java.nio.file.Paths.get(p)
+      java.nio.file.Files.write(path, patch(java.nio.file.Files.readAllBytes(path)))
+      p
+    }
+    def put(b: Array[Byte], off: Int, width: Int, v: String): Array[Byte] = {
+      System.arraycopy(v.padTo(width, ' ').getBytes("US-ASCII"), 0, b, off, width); b
+    }
+    val cases = Seq(
+      variant("short")(_.take(100)) -> "truncated EDF header",
+      variant("nsalpha")(put(_, 252, 4, "ab")) -> "'number of signals' is not a number: 'ab'",
+      variant("nsneg")(put(_, 252, 4, "-1")) -> "'number of signals' is negative: -1",
+      variant("duration")(put(_, 244, 8, "x.5")) -> "'duration of a data record' is not a number: 'x.5'",
+      variant("digrange")(b => put(put(b, 376, 8, "7"), 384, 8, "7")) ->
+        "'digital minimum' and 'digital maximum' of signal 0 ('C3') are both 7.0")
+    cases.foreach { case (p, field) =>
+      val e = intercept[IllegalArgumentException](EdfFile.readHeader(p))
+      assert(e.getMessage.contains(p) && e.getMessage.contains(field), e.getMessage)
+    }
+    // the scan's planner surfaces the same error
+    val e = intercept[IllegalArgumentException](EdfFile.read(spark, Seq(cases(3)._1)))
+    assert(e.getMessage.contains(cases(3)._2), e.getMessage)
   }
 
   test("annotations() extracts TAL onsets") {

@@ -27,9 +27,13 @@ if [ -z "$audit" ] || [ "$a_pass" != "$a_total" ]; then
   exit 1
 fi
 
+# the tree the runs saw: HEAD, plus a marker when it was not committed
+tree=$(git rev-parse --short HEAD)
+git diff --quiet HEAD || tree="$tree + uncommitted changes"
+
 stamp="- \`sbt test\`: **$n_pass ScalaTests**, 0 failures.
 - \`graft.PlanAudit\`: **$audit plan checks pass**.
-- Stamped $(date -u +%Y-%m-%dT%H:%MZ) at commit $(git rev-parse --short HEAD) by tools/gen_counts.sh."
+- Stamped $(date -u +%Y-%m-%dT%H:%MZ) at commit $tree by tools/gen_counts.sh."
 
 export stamp
 python3 - <<'EOF'
