@@ -20,7 +20,7 @@ object PlanAudit {
       // !SortMergeJoin assertion — it's SF-dependent); dims must broadcast
       ("q5_volume", p => "BroadcastHashJoin".r.findAllIn(p).size >= 4, "all dims broadcast (>=4 BHJ)"),
       ("ann_topk", _.contains("TakeOrderedAndProject"), "top-k bounded"),
-      ("ann_topk", _.contains("cosinesim"), "native cosine expression in plan"),
+      ("ann_topk", _.contains("Kernels.cosineF"), "native cosine expression in plan"),
       ("ts_gap_chunks", p => "Exchange hashpartitioning".r.findAllIn(p).size <= 2,
         "single channel shuffle (+AQE read)"),
       ("token_count", p => p.contains("WholeStageCodegen") || p.contains("*(1)"), "codegen"),
@@ -35,7 +35,7 @@ object PlanAudit {
       ("sample_stratified", p => !p.contains("Exchange hashpartitioning"),
         "sampling is a narrow map (broadcast rates, no hash shuffle)"),
       ("ts_bandpower", p => !p.contains("Window"), "no window/sort: trig aggregates only"),
-      ("text_repetition", _.contains("shinglehashes"), "native kernel in plan"),
+      ("text_repetition", _.contains("Kernels.shingleHashes"), "native kernel in plan"),
       ("ts_outlier", _.contains("BroadcastHashJoin"), "channel stats broadcast back"),
       // >= 2 occurrences: "partial_graft_topk" contains "graft_topk" as a
       // substring, so a bare contains() would never assert the final mode
@@ -68,7 +68,7 @@ object PlanAudit {
         "benchmark bands broadcast; candidates never cross-product"),
       ("substring_dedup", p => !p.contains("CartesianProduct"),
         "winnow pairing is a fingerprint bucket join, never a cross product"),
-      ("substring_dedup", _.contains("winnowhashes"),
+      ("substring_dedup", _.contains("Kernels.winnowHashes"),
         "native one-pass winnow kernel in plan"),
       ("source_cap", p => !p.contains("Window") && p.contains("partial_graft_topk"),
         "per-source cap is a bounded heap aggregate (map-side partial), no window sort"),
@@ -176,7 +176,7 @@ object PlanAudit {
         "ADC shortlist and exact re-rank are bounded ordered takes, no global sort"),
       // C52: fingerprint bucket join only — no cross product, native
       // winnow kernel feeding it
-      ("containment", p => !p.contains("CartesianProduct") && p.contains("winnowhashes"),
+      ("containment", p => !p.contains("CartesianProduct") && p.contains("Kernels.winnowHashes"),
         "containment pairs via the fingerprint bucket join over the native winnow kernel"),
       // C53: normalization is a pure narrow scan (pii_redact precedent:
       // the driver-boundary orderBy adds a range exchange, never hash)
@@ -309,7 +309,7 @@ object PlanAudit {
       // C71: the join is hash-only on shingle hashes (text never crosses
       // the exchange), final per-doc aggregation map-side combinable
       ("novelty_score", p => !p.contains("CartesianProduct") && !p.contains("Window") &&
-          p.contains("shinglehashes") && p.contains("partial_count"),
+          p.contains("Kernels.shingleHashes") && p.contains("partial_count"),
         "novelty: hash-only reference join, no window/cross product"),
       // B29: pair generation is an equi-join keyed on the order (never a
       // cross product over items), pair counts combine map-side, the
@@ -468,7 +468,7 @@ object PlanAudit {
       // native shingle kernel — never a cross product; both join sides
       // read one repartition (ReuseExchange) or AQE broadcasts the side
       ("jaccard_join_exact", p => !p.contains("CartesianProduct") &&
-          p.contains("shinglehashes") &&
+          p.contains("Kernels.shingleHashes") &&
           (p.contains("ReusedExchange") || p.contains("BroadcastHashJoin")),
         "exact similarity join: prefix bucket join, no cross product, shared exchange"),
       // C76: key computation is a zero-shuffle narrow scan; selection is a

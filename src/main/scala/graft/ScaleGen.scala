@@ -80,7 +80,7 @@ object ScaleGen {
       if (nFiles > 1) {
         // directory-of-parts layout: `<dst>/<t>.parquet/` with nFiles
         // part files. spark.read.parquet treats file and directory
-        // identically, so Bench/RefreshBench/probes need no change.
+        // identically, so Bench and the specs need no change.
         fs.delete(dest, true)
         df.repartition(nFiles).write.mode("overwrite").parquet(dest.toString)
       } else {

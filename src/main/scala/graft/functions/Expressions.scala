@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.DatasetShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -328,7 +329,7 @@ object Kernels {
   }
 
   /** Parse a profile spec (profiles joined by '|', words by ',') into hash
-    * sets. Called once per StopwordHits expression instance at plan time —
+    * sets. Called once per `graft_stopword_hits` call, at analysis —
     * never per row.
     */
   def parseProfiles(spec: String): Array[java.util.HashSet[String]] =
@@ -341,8 +342,8 @@ object Kernels {
   /** Per-profile stopword hit counts in ONE tokenizing pass.
     *
     * `profiles` arrive pre-parsed (the spec is analysis-enforced to be a
-    * string literal, so StopwordHits resolves it once per expression
-    * instance and codegen references the parsed array directly — no
+    * string literal, so `graft_stopword_hits` parses it once and codegen
+    * references the parsed array directly — no
     * per-row spec stringification or cache lookup). Tokenization matches
     * the oracle formulation
     * `filter(split(trim(lower(text)), '\s+'), w -> w IN (...))` exactly —
@@ -622,408 +623,46 @@ object Kernels {
   }
 }
 
-/** D3: cosine similarity of two float vectors as a native expression —
-  * one fused JIT loop per row inside whole-stage codegen (vs ~4 array
-  * materializations for the zip_with/aggregate HOF formulation).
+/** D3: a native kernel call is Spark's own `StaticInvoke` of one
+  * [[Kernels]] method. Interpreted eval finds the method by reflection;
+  * generated code calls `graft.functions.Kernels.<method>(...)` directly,
+  * so whole-stage codegen keeps one JIT loop per row. A null argument
+  * gives null, which also makes the call null-intolerant for filter
+  * inference; no kernel returns null.
   */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    Kernels.cosineF(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.cosineF($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-}
-
-/** D3: polynomial rolling hash of a string (base 31, mod 1e9+7 default). */
-case class RollingHash64(child: Expression, base: Long = 31L, mod: Long = 1000000007L)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.rollingHash(s.asInstanceOf[UTF8String], base, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.rollingHash($c, ${base}L, ${mod}L)")
-
-  override protected def withNewChildInternal(c: Expression): RollingHash64 = copy(child = c)
-}
-
-/** D3: MinHash signature (array<long> of size nPerms) from element hashes. */
-case class MinHashSig(child: Expression, nPerms: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(h: Any): Any =
-    Kernels.minhashSig(h.asInstanceOf[ArrayData], nPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashSig($c, $nPerms)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
-/** D3: distinct k-word-shingle rolling hashes of a text column in one pass. */
-case class ShingleHashes(child: Expression, k: Int, base: Long = 31L, mod: Long = 1000000007L)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.shingleHashes(s.asInstanceOf[UTF8String], k, base, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingleHashes($c, $k, ${base}L, ${mod}L)")
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
-}
-
-/** D3: LSH band hashes (array<long>, band_idx = position) from element hashes. */
-case class MinHashBands(child: Expression, nBands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(h: Any): Any =
-    Kernels.minhashBands(h.asInstanceOf[ArrayData], nBands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashBands($c, $nBands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashBands = copy(child = c)
-}
-
-/** D3: all hyperplane-LSH band bucket values (array<long>, band = position)
-  * of an embedding in ONE fused pass. The plane matrix rides along as a
-  * codegen reference object, not literal plan text — plan size and
-  * generated-method size stay O(1) in plane count, where the HOF
-  * formulation this replaces built nBands·bandBits separate
-  * aggregate(zip_with(...)) expressions (104 at sf10's grown 8×13 config)
-  * that each re-traversed the embedding and together fell out of
-  * whole-stage codegen.
-  */
-case class HyperplaneBands(child: Expression, planes: Seq[Double],
-                           nBands: Int, bandBits: Int)
-    extends UnaryExpression {
-  @transient private lazy val planeArr: Array[Double] = planes.toArray
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(e: Any): Any =
-    Kernels.hyperplaneBands(e.asInstanceOf[ArrayData], planeArr, nBands, bandBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hyperplanes", planeArr, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.hyperplaneBands($c, $ref, $nBands, $bandBits)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): HyperplaneBands = copy(child = c)
-}
-
-/** D3: SimHash pigeonhole block values (array<long>, block_idx = position). */
-case class SimHashBlocks(child: Expression, bits: Int = 48, nBlocks: Int = 4, blockBits: Int = 12)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(h: Any): Any =
-    Kernels.simhashBlocks(h.asInstanceOf[ArrayData], bits, nBlocks, blockBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhashBlocks($c, $bits, $nBlocks, $blockBits)")
-
-  override protected def withNewChildInternal(c: Expression): SimHashBlocks = copy(child = c)
-}
-
-/** D3: per-profile stopword hit counts (array<long>) in one pass.
-  *
-  * The spec child is analysis-enforced to be a string literal
-  * (GraftExtensions.litStr), so the profile hash sets are resolved ONCE
-  * per expression instance here; codegen embeds the parsed array as a
-  * plan reference object — rows never stringify the spec or look up a
-  * cache.
-  */
-case class StopwordHits(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val profiles: Array[java.util.HashSet[String]] = right match {
-    case Literal(s: UTF8String, StringType) if s != null => Kernels.parseProfiles(s.toString)
-    case other => throw new IllegalStateException(
-      s"StopwordHits spec must be a string literal (enforced at analysis), got $other")
-  }
-
-  override protected def nullSafeEval(text: Any, spec: Any): Any =
-    Kernels.stopwordHits(text.asInstanceOf[UTF8String], profiles)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("stopwordProfiles", profiles, "java.util.HashSet[]")
-    defineCodeGen(ctx, ev, (t, _) => s"graft.functions.Kernels.stopwordHits($t, $ref)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StopwordHits =
-    copy(left = l, right = r)
-}
-
-/** D3 / C34: winnowing substring fingerprints — distinct sliding-window
-  * minima of the length-`l` codepoint rolling hash (base 257, mod 2⁶¹−1),
-  * sorted ascending. One O(n) pass per row; the guarantee (any exact
-  * codepoint match of length ≥ l+w−1 between two strings shares ≥ 1
-  * fingerprint, density ≈ 2/(w+1)) is what makes exact-substring dedup
-  * a bucket join instead of a suffix-array build.
-  */
-case class WinnowHashes(child: Expression, l: Int, w: Int) extends UnaryExpression {
-  require(l >= 1 && w >= 1, s"graft_winnow needs l >= 1 and w >= 1, got l=$l w=$w")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.winnowHashes(s.asInstanceOf[UTF8String], l, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnowHashes($c, $l, $w)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowHashes = copy(child = c)
-}
-
-/** D3 / C53: Unicode NFC normalization — Spark has no built-in
-  * normalizer (SPARK's `lower`/`trim` are not canonical-equivalence
-  * aware), so this wraps the JDK's UAX #15 implementation as a
-  * codegen'd unary expression. Null-intolerant, zero-allocation on
-  * already-NFC input (the quick-check fast path).
-  */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.nfc(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.nfc($c)")
-
-  override protected def withNewChildInternal(c: Expression): NfcNormalize = copy(child = c)
-}
-
-/** D3 / C59: one-pass codepoint Shannon entropy —
-  * struct<n: long, k: long, h: double> (count, distinct, nats).
-  */
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("k", LongType, nullable = false),
-    StructField("h", DoubleType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.charEntropy(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charEntropy($c)")
-
-  override protected def withNewChildInternal(c: Expression): CharEntropy = copy(child = c)
-}
-
-/** D3 / C40: one-pass first-occurrence segment filter (normalized on
-  * trim+lower, original text preserved) — O(L) per document where the
-  * HOF array_position formulation is O(L²).
-  */
-case class KeepFirstSegs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(a: Any): Any =
-    Kernels.keepFirstSegs(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.keepFirstSegs($c)")
-
-  override protected def withNewChildInternal(c: Expression): KeepFirstSegs = copy(child = c)
-}
-
-/** D3 / C43: native PQ encoder — array<struct<c: code, d: dist²>> per
-  * subspace. The codebook rides the expression as one flattened double[]
-  * (a codegen reference object, not unrolled expression nodes — the
-  * centArrCol literal-size argument), so the generated code is O(1) in
-  * codebook size and the per-row work is one tight JIT loop.
-  */
-case class PqEncodeExpr(child: Expression, cb: Array[Double], m: Int, ksub: Int, sub: Int)
-    extends UnaryExpression {
-  require(cb.length == m * ksub * sub, s"pq codebook: ${cb.length} != $m*$ksub*$sub")
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("c", LongType, nullable = false),
-      StructField("d", DoubleType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.pqEncode(v.asInstanceOf[ArrayData], cb, m, ksub, sub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqcb", cb, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.pqEncode($c, $cbRef, $m, $ksub, $sub)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): PqEncodeExpr = copy(child = c)
-}
-
-/** D3 / C7: native nearest-centroid assignment (returns the codebook
-  * POSITION; the caller maps position → cell id). Centroids ride as one
-  * flattened float[] reference object — O(1) in codebook size for plan
-  * and generated code, one JIT loop per row.
-  */
-case class NearestCentroidExpr(child: Expression, cents: Array[Float], k: Int, dims: Int)
-    extends UnaryExpression {
-  require(cents.length == k * dims, s"centroids: ${cents.length} != $k*$dims")
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.nearestCentroid(v.asInstanceOf[ArrayData], cents, k, dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "float[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.nearestCentroid($c, $ref, $k, $dims)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): NearestCentroidExpr = copy(child = c)
-}
-
-/** D3 / C45: native JL random projection — the r·d fold as one tight
-  * JIT loop (the interpreted transform/aggregate HOF twin pays ~1000
-  * interpreted steps per row at r=16, d=64). No reference object at
-  * all: the matrix derives from two integer constants inside the loop.
-  */
-case class RandProjExpr(child: Expression, r: Int) extends UnaryExpression {
-  require(r > 0 && r <= 4096, s"graft_randproj target dim must be in (0, 4096], got $r")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.randProj(v.asInstanceOf[ArrayData], r)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.randProj($c, $r)")
-
-  override protected def withNewChildInternal(c: Expression): RandProjExpr = copy(child = c)
-}
-
-/** D3 / C38: one-pass DSIR feature buckets (unigram then bigram hashes
-  * mod b) — replaces the split/slice/zip_with/concat_ws/transform HOF
-  * chain with a single string scan.
-  */
-case class DsirFeats(child: Expression, b: Long) extends UnaryExpression {
-  require(b > 0, s"graft_dsir_feats needs b > 0, got $b")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.dsirFeatBuckets(s.asInstanceOf[UTF8String], b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.dsirFeatBuckets($c, ${b}L)")
-
-  override protected def withNewChildInternal(c: Expression): DsirFeats = copy(child = c)
-}
-
-/** D3 / C38: fused featurize-and-score — struct<n_feats, score> per
-  * document, with the bucket→weight table as a bucket-indexed double[]
-  * reference object (unseen fallback pre-filled).
-  */
-case class DsirScoreExpr(child: Expression, w: Array[Double], b: Long)
-    extends UnaryExpression {
-  require(w.length == b, s"dsir score table: ${w.length} != $b")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_feats", LongType, nullable = false),
-    StructField("score", DoubleType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.dsirScore(s.asInstanceOf[UTF8String], w, b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dsirw", w, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.dsirScore($c, $ref, ${b}L)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): DsirScoreExpr = copy(child = c)
-}
-
-/** D3 / C43b: native ADC distance over PQ codes (left = query vector,
-  * right = array<long> codes), codebook as a codegen reference object.
-  */
-case class PqAdcExpr(left: Expression, right: Expression,
-                     cb: Array[Double], m: Int, ksub: Int, sub: Int)
-    extends BinaryExpression {
-  require(cb.length == m * ksub * sub, s"pq codebook: ${cb.length} != $m*$ksub*$sub")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(q: Any, codes: Any): Any =
-    Kernels.pqAdc(q.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], cb, m, ksub, sub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqcb", cb, "double[]")
-    defineCodeGen(ctx, ev, (q, c) => s"graft.functions.Kernels.pqAdc($q, $c, $cbRef, $m, $ksub, $sub)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcExpr =
-    copy(left = l, right = r)
-}
-
-/** D3: order-preserving double→long bits (monotone bucketing basis). */
-case class SortableBits(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.sortableBits(v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.sortableBits($c)")
-
-  override protected def withNewChildInternal(c: Expression): SortableBits = copy(child = c)
-}
-
-/** D3: SimHash (default 48 bits) from element hashes. */
-case class SimHash64(child: Expression, bits: Int = 48)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(h: Any): Any =
-    Kernels.simhash(h.asInstanceOf[ArrayData], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash($c, $bits)")
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
+object KernelCall {
+  val LongArray: DataType = ArrayType(LongType, containsNull = false)
+
+  /** `Kernels.<method>(args)`: an Expression or Column argument passes as
+    * is, an array as one constant table, any other value as a literal. A
+    * constant table (planes, codebook, centroids, weights, parsed
+    * profiles) is a `Literal` of ObjectType, which codegen emits as one
+    * reference object, so plan and generated code stay O(1) in its size.
+    */
+  def apply(method: String, dataType: DataType, args: Any*): Expression =
+    StaticInvoke(Kernels.getClass, dataType, method, args.map {
+      case e: Expression => e
+      case c: Column => DatasetShim.expression(c)
+      case a: Array[_] => Literal(a, ObjectType(a.getClass))
+      case v => Literal(v)
+    }, propagateNull = true, returnNullable = false)
+
+  def column(method: String, dataType: DataType, args: Any*): Column =
+    DatasetShim.column(apply(method, dataType, args: _*))
 }
 
 /** Registers the native expressions into the session's function registry
   * (use via `GraftSession` / `SparkSession.builder().withExtensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import KernelCall.LongArray
+
   private def litInt(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
   }
 
-  // non-literal specs would be parsed per row AND interned forever into
-  // the executor-wide profile cache — misuse must fail analysis
-  private def litStr(e: Expression, what: String): Expression = e match {
-    case l @ Literal(_: org.apache.spark.unsafe.types.UTF8String, StringType) => l
-    case other => throw new IllegalArgumentException(s"$what must be a string literal, got $other")
-  }
-
+  // a profiles spec must be a literal: it is parsed once, at analysis
   private def litString(e: Expression, what: String): String = e match {
     case Literal(s: org.apache.spark.unsafe.types.UTF8String, StringType) => s.toString
     case other => throw new IllegalArgumentException(s"$what must be a string literal, got $other")
@@ -1036,27 +675,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (es: Seq[Expression]) => CosineSim(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash64].getName, "graft_rolling_hash"),
-      (es: Seq[Expression]) => RollingHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (es: Seq[Expression]) => MinHashSig(es(0), litInt(es(1), "nPerms"))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (es: Seq[Expression]) => SimHash64(es(0), litInt(es(1), "bits"))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (es: Seq[Expression]) => ShingleHashes(es(0), litInt(es(1), "k"))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "graft_minhash_bands"),
-      (es: Seq[Expression]) => MinHashBands(es(0), litInt(es(1), "nBands"), litInt(es(2), "rowsPerBand"))))
-    ext.injectFunction((FunctionIdentifier("graft_stopword_hits"),
-      new ExpressionInfo(classOf[StopwordHits].getName, "graft_stopword_hits"),
-      (es: Seq[Expression]) => StopwordHits(es(0), litStr(es(1), "profiles spec"))))
+    // row kernels: each SQL name is one Kernels method (KernelCall)
+    def kernel(name: String)(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions.Kernels", name), build))
+    kernel("graft_cosine")(es => KernelCall("cosineF", DoubleType, es(0), es(1)))
+    kernel("graft_rolling_hash")(es => KernelCall("rollingHash", LongType, es.head, 31L, 1000000007L))
+    kernel("graft_minhash_sig")(es =>
+      KernelCall("minhashSig", LongArray, es(0), litInt(es(1), "nPerms")))
+    kernel("graft_simhash")(es => KernelCall("simhash", LongType, es(0), litInt(es(1), "bits")))
+    kernel("graft_shingle_hashes")(es =>
+      KernelCall("shingleHashes", LongArray, es(0), litInt(es(1), "k"), 31L, 1000000007L))
+    kernel("graft_minhash_bands")(es => KernelCall("minhashBands", LongArray, es(0),
+      litInt(es(1), "nBands"), litInt(es(2), "rowsPerBand")))
+    kernel("graft_stopword_hits")(es => KernelCall("stopwordHits", LongArray, es(0),
+      Kernels.parseProfiles(litString(es(1), "profiles spec"))))
+    kernel("graft_winnow") { es =>
+      val (l, w) = (litInt(es(1), "l"), litInt(es(2), "w"))
+      require(l >= 1 && w >= 1, s"graft_winnow needs l >= 1 and w >= 1, got l=$l w=$w")
+      KernelCall("winnowHashes", LongArray, es(0), l, w)
+    }
+    kernel("graft_nfc")(es => KernelCall("nfc", StringType, es.head))
+    kernel("graft_char_entropy")(es => KernelCall("charEntropy", StructType(Seq(
+      StructField("n", LongType, nullable = false),
+      StructField("k", LongType, nullable = false),
+      StructField("h", DoubleType, nullable = false))), es.head))
+    kernel("graft_sortable_bits")(es => KernelCall("sortableBits", LongType, es.head))
+    kernel("graft_keep_first")(es =>
+      KernelCall("keepFirstSegs", ArrayType(StringType, containsNull = false), es.head))
+    kernel("graft_dsir_feats") { es =>
+      val b = litLong(es(1), "b")
+      require(b > 0, s"graft_dsir_feats needs b > 0, got $b")
+      KernelCall("dsirFeatBuckets", LongArray, es(0), b)
+    }
+    kernel("graft_simhash_blocks")(es => KernelCall("simhashBlocks", LongArray, es(0),
+      litInt(es(1), "bits"), litInt(es(2), "nBlocks"), litInt(es(3), "blockBits")))
     ext.injectFunction((FunctionIdentifier("graft_topk"),
       new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk"),
       (es: Seq[Expression]) => TopKAgg(es(0), litInt(es(1), "k"))))
@@ -1069,27 +722,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_moments"),
       new ExpressionInfo(classOf[MomentsAgg].getName, "graft_moments"),
       (es: Seq[Expression]) => MomentsAgg(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowHashes].getName, "graft_winnow"),
-      (es: Seq[Expression]) => WinnowHashes(es(0), litInt(es(1), "l"), litInt(es(2), "w"))))
-    ext.injectFunction((FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_char_entropy"),
-      (es: Seq[Expression]) => CharEntropy(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_sortable_bits"),
-      new ExpressionInfo(classOf[SortableBits].getName, "graft_sortable_bits"),
-      (es: Seq[Expression]) => SortableBits(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_keep_first"),
-      new ExpressionInfo(classOf[KeepFirstSegs].getName, "graft_keep_first"),
-      (es: Seq[Expression]) => KeepFirstSegs(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_dsir_feats"),
-      new ExpressionInfo(classOf[DsirFeats].getName, "graft_dsir_feats"),
-      (es: Seq[Expression]) => DsirFeats(es(0), litLong(es(1), "b"))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash_blocks"),
-      new ExpressionInfo(classOf[SimHashBlocks].getName, "graft_simhash_blocks"),
-      (es: Seq[Expression]) => SimHashBlocks(es(0), litInt(es(1), "bits"), litInt(es(2), "nBlocks"), litInt(es(3), "blockBits"))))
     // Spark's bloom sketch pair (BloomFilterAggregate builds the filter,
     // BloomFilterMightContain probes it, both codegen-backed) exists only
     // for the engine's internal runtime-filter rewrite — neither is in

@@ -22,7 +22,7 @@ object Dedup {
   private val P = 1000000007L
 
   /** array<long> of distinct shingle hashes (k word shingles), via the
-    * single-pass ShingleHashes kernel (bit-identical to
+    * single-pass Kernels.shingleHashes kernel (bit-identical to
     * `array_distinct(transform(<shingles>, s -> rollingHash(s)))` — the
     * expression-tree form re-ran the tokenizing split per shingle element).
     */
@@ -30,7 +30,7 @@ object Dedup {
 
   /** MinHash signature: sig[j] = min over shingle hashes x of
     * ((a_j·x) mod P + b_j) mod P with a_j = (2j+1)·777767 mod P,
-    * b_j = (31j+7)·999999937 mod P — the native MinHashSig expression
+    * b_j = (31j+7)·999999937 mod P — the native Kernels.minhashSig kernel
     * (one fused loop; same values as the HOF/oracle formulation).
     */
   private def minhashSigExpr(nPerms: Int): String =

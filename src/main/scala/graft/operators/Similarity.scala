@@ -3,7 +3,8 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.roundHalfUp
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.functions.{KernelCall, roundHalfUp}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2 C5-C7).
   *
@@ -14,7 +15,7 @@ import graft.functions.roundHalfUp
   */
 object Similarity {
 
-  /** Cosine similarity via the native CosineSim expression (one fused
+  /** Cosine similarity via the native `Kernels.cosineF` kernel (one fused
     * JIT loop per row; sequential double fold — bit-identical to the
     * zip_with/aggregate HOF formulation and the DuckDB oracle).
     */
@@ -195,7 +196,7 @@ object Similarity {
     * tools/lsh_recall_r11.json). Bands are independent per-band
     * bucket values — NOT bits of one packed long — so the plane count
     * nBands·bandBits has no 62-bit ceiling. All band values come from
-    * ONE native single-pass expression (HyperplaneBands) whose plane
+    * ONE native single-pass kernel (Kernels.hyperplaneBands) whose plane
     * matrix is a codegen reference object: projection cost is linear in
     * planes, and end-to-end cost tracks the candidate-pair volume the
     * added bands surface. Measured at sf10 (200k vectors, 13-bit bands;
@@ -256,17 +257,15 @@ object Similarity {
       p.map(_.toDouble).padTo(dims, 0.0)
     }
     // ALL band bucket values in one native single-pass kernel
-    // (HyperplaneBands): band b's value = the sign bits of its own bbEff
-    // planes — an independent long per band (no packed-signature bit
+    // (Kernels.hyperplaneBands): band b's value = the sign bits of its
+    // own bbEff planes — an independent long per band (no packed-signature bit
     // ceiling). The plane matrix is a codegen reference object, so plan
     // size and generated code stay O(1) in plane count; the HOF
     // formulation this replaces built np separate aggregate(zip_with)
     // expressions that fell out of whole-stage codegen at sf10's grown
     // 8-band config and cost 5.65x wall for 2x bands (lsh_recall_r11).
-    val bandsCol = org.apache.spark.sql.graft.DatasetShim.column(
-      graft.functions.HyperplaneBands(
-        org.apache.spark.sql.graft.DatasetShim.expression(col("embedding")),
-        planesFlat, nBands, bbEff))
+    val bandsCol = KernelCall.column("hyperplaneBands", KernelCall.LongArray,
+      col("embedding"), planesFlat.toArray, nBands, bbEff)
     t.embeddings
       .select(col("vec_id"), posexplode(bandsCol).as(Seq("band", "bval")))
   }
@@ -311,7 +310,7 @@ object Similarity {
     * a row whose cosines are ALL NaN (zero-norm/NaN vector) still gets
     * a deterministic cell (position 0).
     *
-    * Runs through the native NearestCentroidExpr kernel (one JIT loop
+    * Runs through the native `Kernels.nearestCentroid` kernel (one JIT loop
     * per row; the interpreted aggregate() fold was the dominant cost of
     * sf10 semdedup — 200k rows × 196 cells = 39M cosine folds);
     * [[nearestCellColHof]] is the parity twin.
@@ -321,10 +320,8 @@ object Similarity {
     val dims = centRows.head._2.size
     val flat = new Array[Float](centRows.length * dims)
     for (c <- centRows.indices; j <- 0 until dims) flat(c * dims + j) = centRows(c)._2(j)
-    val pos = org.apache.spark.sql.graft.DatasetShim.column(
-      graft.functions.NearestCentroidExpr(
-        org.apache.spark.sql.graft.DatasetShim.expression(col(vecCol)),
-        flat, centRows.length, dims))
+    require(flat.length == centRows.length * dims, s"centroids: ${flat.length} != ${centRows.length}*$dims")
+    val pos = KernelCall.column("nearestCentroid", IntegerType, col(vecCol), flat, centRows.length, dims)
     element_at(cellIds, pos + lit(1))
   }
 
@@ -801,6 +798,7 @@ object Similarity {
     val flat = new Array[Double](m * ksub * sub)
     for (s <- 0 until m; c <- 0 until ksub; j <- 0 until sub)
       flat((s * ksub + c) * sub + j) = cbs(s)(c)(j)
+    require(flat.length == m * ksub * sub, s"pq codebook: ${flat.length} != $m*$ksub*$sub")
     flat
   }
 
@@ -811,10 +809,18 @@ object Similarity {
     */
   private def pqEncCol(vecCol: Column, cbs: Array[Seq[Seq[Double]]],
                        m: Int, ksub: Int, sub: Int): Column =
-    org.apache.spark.sql.graft.DatasetShim.column(
-      graft.functions.PqEncodeExpr(
-        org.apache.spark.sql.graft.DatasetShim.expression(vecCol),
-        pqFlat(cbs, m, ksub, sub), m, ksub, sub))
+    KernelCall.column("pqEncode", ArrayType(
+      StructType(Seq(StructField("c", LongType, nullable = false),
+        StructField("d", DoubleType, nullable = false))), containsNull = false),
+      vecCol, pqFlat(cbs, m, ksub, sub), m, ksub, sub)
+
+  /** Native ADC distance of `q_embedding` to the PQ `codes` column
+    * (bit-identical to the HOF twin: subspaces ascending, each
+    * dist²(q_sub, codebook[own code])).
+    */
+  private def pqAdcCol(cbs: Array[Seq[Seq[Double]]], m: Int, ksub: Int, sub: Int): Column =
+    KernelCall.column("pqAdc", DoubleType, col("q_embedding"), col("codes"),
+      pqFlat(cbs, m, ksub, sub), m, ksub, sub)
 
   /** C42: product quantization encoding (Jégou et al. TPAMI 2011) — the
     * compression step past C39's scalar quantization: split each vector
@@ -927,7 +933,6 @@ object Similarity {
                m: Int = 4, ksub: Int = 16, k: Int = 10): DataFrame = {
     val spark = t.embeddings.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graft.DatasetShim
     val centRows = t.embeddings.orderBy(col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cell_id"), col("embedding").as("cent"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -940,10 +945,7 @@ object Similarity {
       .select(col("cell_id"))
     val assigned = assignCells(
       t.embeddings.select(col("vec_id"), col("embedding")), "vec_id", "embedding", centRows)
-    val adist = DatasetShim.column(graft.functions.PqAdcExpr(
-      DatasetShim.expression(col("q_embedding")),
-      DatasetShim.expression(col("codes")),
-      pqFlat(cbs, m, ksub, sub), m, ksub, sub))
+    val adist = pqAdcCol(cbs, m, ksub, sub)
     assigned.join(broadcast(qCells), Seq("cell_id"))
       .filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
@@ -959,13 +961,7 @@ object Similarity {
     val (cbs, sub) = pqCodebooks(t, m, ksub)
     val q = t.embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_embedding"))
-    // ADC via the native kernel: fold over subspaces ascending —
-    // dist²(q_sub, codebook[own code]), bit-identical to the HOF twin
-    import org.apache.spark.sql.graft.DatasetShim
-    val adist = DatasetShim.column(graft.functions.PqAdcExpr(
-      DatasetShim.expression(col("q_embedding")),
-      DatasetShim.expression(col("codes")),
-      pqFlat(cbs, m, ksub, sub), m, ksub, sub))
+    val adist = pqAdcCol(cbs, m, ksub, sub)
     t.embeddings.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
       .withColumn("codes",
@@ -994,11 +990,7 @@ object Similarity {
     val (cbs, sub) = pqCodebooks(t, m, ksub)
     val q = t.embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_embedding"))
-    import org.apache.spark.sql.graft.DatasetShim
-    val adist = DatasetShim.column(graft.functions.PqAdcExpr(
-      DatasetShim.expression(col("q_embedding")),
-      DatasetShim.expression(col("codes")),
-      pqFlat(cbs, m, ksub, sub), m, ksub, sub))
+    val adist = pqAdcCol(cbs, m, ksub, sub)
     val short = t.embeddings.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
       .withColumn("codes",
@@ -1038,11 +1030,10 @@ object Similarity {
     */
   def embedProject(t: Tables, r: Int = 16): DataFrame = {
     require(r > 0 && r <= 4096, s"embedProject target dim must be in (0, 4096], got $r")
-    import org.apache.spark.sql.graft.DatasetShim
     // native single-pass kernel (one JIT loop for the r·d fold);
     // [[embedProjectProjHof]] is the independent parity reference
-    val proj = DatasetShim.column(graft.functions.RandProjExpr(
-      DatasetShim.expression(col("embedding")), r))
+    val proj = KernelCall.column("randProj", ArrayType(DoubleType, containsNull = false),
+      col("embedding"), r)
     projectOutput(t.embeddings.withColumn("proj", proj))
   }
 

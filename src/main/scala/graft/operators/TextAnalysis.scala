@@ -4,7 +4,8 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.roundHalfUp
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.functions.{KernelCall, roundHalfUp}
 
 /** Text-analysis operators for LLM training-data pipelines
   * (SURVEY.md §2 C8-C11) over the `documents` table.
@@ -246,7 +247,7 @@ object TextAnalysis {
 
   /** C13: repetition ratio — fraction of duplicate word k-grams per
     * document (the Gopher-style repetition quality signal). Distinct
-    * k-gram counts reuse the single-pass ShingleHashes kernel (the same
+    * k-gram counts reuse the single-pass Kernels.shingleHashes kernel (the same
     * hash as the dedup pipeline), so the whole operator is one narrow
     * codegen'd pass; ratio = 1 − distinct/total.
     */
@@ -1712,11 +1713,17 @@ object TextAnalysis {
     * HOF/oracle). The struct is shared by score and n_feats projections,
     * so codegen's subexpression elimination evaluates it once per row.
     */
-  private def dsirScored(m: DsirModel): Column =
-    org.apache.spark.sql.graft.DatasetShim.column(
-      graft.functions.DsirScoreExpr(
-        org.apache.spark.sql.graft.DatasetShim.expression(col("text")),
-        dsirTable(m), m.b.toLong))
+  private def dsirScored(m: DsirModel): Column = dsirScoreKernel(dsirTable(m), m.b.toLong)
+
+  /** struct<n_feats, score> of `text` against the bucket-indexed weight
+    * table `w` (one constant table for the kernel).
+    */
+  private def dsirScoreKernel(w: Array[Double], b: Long): Column = {
+    require(w.length == b, s"dsir score table: ${w.length} != $b")
+    KernelCall.column("dsirScore", StructType(Seq(
+      StructField("n_feats", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false))), col("text"), w, b)
+  }
 
   private[graft] def dsirScoreCol(m: DsirModel): Column =
     dsirScored(m).getField("score")
@@ -1797,10 +1804,7 @@ object TextAnalysis {
     val n = t.documents.count().toDouble
     val y = expr(labelExpr).cast("double")
     for (_ <- 0 until iters) {
-      val z = org.apache.spark.sql.graft.DatasetShim.column(
-        graft.functions.DsirScoreExpr(
-          org.apache.spark.sql.graft.DatasetShim.expression(col("text")), w, b.toLong))
-        .getField("score") + lit(bias)
+      val z = dsirScoreKernel(w, b.toLong).getField("score") + lit(bias)
       val resid = (lit(1.0) / (lit(1.0) + exp(-z)) - y).as("resid")
       val scored = t.documents.select(dsirFeats(b).as("feats"), resid)
       // ONE corpus pass per iteration: a sentinel bucket −1 appended to
@@ -1834,10 +1838,7 @@ object TextAnalysis {
   def qualityClassifier(t: Tables, labelExpr: String = "lang = 'en'",
                         b: Int = 1024, iters: Int = 8, lr: Double = 0.5): DataFrame = {
     val (w, bias) = classifierTrain(t, labelExpr, b, iters, lr)
-    val z = org.apache.spark.sql.graft.DatasetShim.column(
-      graft.functions.DsirScoreExpr(
-        org.apache.spark.sql.graft.DatasetShim.expression(col("text")), w, b.toLong))
-      .getField("score") + lit(bias)
+    val z = dsirScoreKernel(w, b.toLong).getField("score") + lit(bias)
     t.documents.select(col("doc_id"), expr(labelExpr).cast("long").as("label"),
       roundHalfUp(z, 4).as("logit"), (z >= 0).as("keep"))
   }
@@ -1854,9 +1855,7 @@ object TextAnalysis {
     */
   def classifierScore(t: Tables, b: Int = 1024): DataFrame = {
     val w = Array.tabulate(b)(bk => ((bk.toLong * 2654435761L) % 1000L - 500L).toDouble / 1000.0)
-    val s = org.apache.spark.sql.graft.DatasetShim.column(
-      graft.functions.DsirScoreExpr(
-        org.apache.spark.sql.graft.DatasetShim.expression(col("text")), w, b.toLong))
+    val s = dsirScoreKernel(w, b.toLong)
     t.documents.select(col("doc_id"),
       s.getField("n_feats").as("n_feats"),
       roundHalfUp(s.getField("score"), 4).as("logit"),

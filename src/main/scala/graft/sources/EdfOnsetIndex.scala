@@ -59,8 +59,10 @@ object EdfOnsetIndex {
     * the Hadoop conf, no Spark session). A malformed onset fails naming
     * the file and the record.
     */
-  def write(path: String, conf: Configuration = new Configuration()): String = {
-    val h = EdfFile.readHeader(path, conf)
+  def write(path: String, conf: Configuration = new Configuration()): String =
+    write(path, EdfFile.readHeader(path, conf), conf)
+
+  private def write(path: String, h: EdfHeader, conf: Configuration): String = {
     require(h.isDiscontiguous, s"$path is contiguous — record onsets are header arithmetic, no sidecar needed")
     val annIdx = h.annotationIndex
     require(annIdx >= 0, s"$path has no annotation signal to carry TAL onsets")
@@ -252,54 +254,64 @@ object EdfOnsetIndex {
       }
   }
 
-  /** True when `path` is an EDF+D file that needs (and can get) a
-    * sidecar it doesn't have yet: discontiguous, TAL-bearing, and no
-    * readable sidecar whose head matches the header.
+  /** True when `path` (header `h`) has no readable sidecar whose head
+    * matches the header.
     */
-  def needed(path: String, conf: Configuration): Boolean = {
-    val h = EdfFile.readHeader(path, conf)
-    h.isDiscontiguous && h.annotationIndex >= 0 && {
-      val p = new Path(sidecarPath(path))
-      val fs = p.getFileSystem(conf)
-      val fileLen = if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
-      fileLen < 16 || {
-        val head = new Array[Byte](16)
-        try {
-          val in = fs.open(p)
-          try in.readFully(0, head) finally in.close()
-          !headMatches(head, fileLen, h)
-        } catch { case _: java.io.IOException => true } // e.g. a checksum mismatch
-      }
+  private def needed(path: String, h: EdfHeader, conf: Configuration): Boolean = {
+    val p = new Path(sidecarPath(path))
+    val fs = p.getFileSystem(conf)
+    val fileLen = if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
+    fileLen < 16 || {
+      val head = new Array[Byte](16)
+      try {
+        val in = fs.open(p)
+        try in.readFully(0, head) finally in.close()
+        !headMatches(head, fileLen, h)
+      } catch { case _: java.io.IOException => true } // e.g. a checksum mismatch
     }
   }
 
   /** Land-time indexing for a batch of landed files: ensure every EDF+D
     * member has a fresh sidecar (no-op for contiguous files and
-    * already-indexed ones). Runs per-file in executor tasks — the
-    * driver never touches record bytes — through the session's Hadoop
-    * conf. Task count tracks the cluster (`defaultParallelism`), not a
+    * already-indexed ones). The driver reads the headers through the
+    * session's Hadoop conf and launches a job only for the indexable
+    * EDF+D files, each task handed its file's header; the TAL reads run
+    * per file in those executor tasks — the driver never touches record
+    * bytes. Task count tracks the cluster (`defaultParallelism`), not a
     * fixed constant, so a 1000-executor fleet indexes a landing burst at
     * fleet width. It is BEST-EFFORT: a file that can't be indexed
-    * (corrupt header, read-only directory) plans unpruned, never wrong,
-    * and its task logs a WARN naming the file and the cause.
+    * (unreadable header, corrupt TAL, read-only directory) plans
+    * unpruned, never wrong, and a WARN names the file and the cause.
     */
-  def ensure(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): Unit =
-    if (files.nonEmpty) {
-      val sc = spark.sparkContext
+  def ensure(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): Unit = {
+    val sc = spark.sparkContext
+    val conf = sc.hadoopConfiguration
+    val headers =
+      try EdfFile.readHeaders(files, conf)
+      catch { case _: Exception => // find and name the unreadable ones
+        files.flatMap { f =>
+          try Some(f -> EdfFile.readHeader(f, conf))
+          catch { case e: Exception => warn(f, e); None }
+        }
+      }
+    // only EDF+D files with a TAL signal carry onsets to index
+    val targets = headers.filter { case (_, h) => h.isDiscontiguous && h.annotationIndex >= 0 }
+    if (targets.nonEmpty) {
       val entries = EdfFile.captureConfEntries(spark)
       // tag the job so the UI (and tests) can attribute the indexing
       // work to this path rather than whatever query triggered it
       val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"EdfOnsetIndex.ensure: land-time sidecar indexing of ${files.size} file(s)")
-      try sc.parallelize(files, math.max(1, math.min(files.size, sc.defaultParallelism)))
-        .foreach { f =>
+      sc.setJobDescription(s"EdfOnsetIndex.ensure: land-time sidecar indexing of ${targets.size} file(s)")
+      try sc.parallelize(targets, math.max(1, math.min(targets.size, sc.defaultParallelism)))
+        .foreach { case (f, h) =>
           val conf = EdfFile.confFromEntries(entries)
-          try if (needed(f, conf)) { write(f, conf); () }
-          catch {
-            case e: Exception =>
-              log.warn(s"EDF onset sidecar not written for $f (the file plans unpruned): $e")
-          }
+          try if (needed(f, h, conf)) { write(f, h, conf); () }
+          catch { case e: Exception => warn(f, e) }
         }
       finally sc.setJobDescription(prev)
     }
+  }
+
+  private def warn(path: String, e: Exception): Unit =
+    log.warn(s"EDF onset sidecar not written for $path (the file plans unpruned): $e")
 }

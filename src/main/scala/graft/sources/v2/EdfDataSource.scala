@@ -384,6 +384,10 @@ final class EdfMicroBatchStream(roots: Seq[String], fields: Array[String],
     targetSplitBytes: Long, maxFilesPerTrigger: Int = 0)
     extends streaming.MicroBatchStream with streaming.SupportsTriggerAvailableNow {
 
+  /** Landed files, each named under its root as the root was given
+    * (scheme and authority included), so a streamed file's `file` column
+    * and the path it is read through match a batch read of that name.
+    */
   private def discover(): Seq[String] = {
     val conf = EdfFile.confFromEntries(confEntries)
     roots.flatMap { r =>
@@ -396,8 +400,8 @@ final class EdfMicroBatchStream(roots: Seq[String], fields: Array[String],
             val n = s.getPath.getName
             !n.startsWith(".") && !n.startsWith("_") && n.toLowerCase.endsWith(".edf")
           })
-          .map(_.getPath.toUri.getPath)
-      else Seq(fs.getFileStatus(p).getPath.toUri.getPath)
+          .map(st => s"${r.stripSuffix("/")}/${st.getPath.getName}")
+      else Seq(r)
     }.distinct.sorted
   }
 
@@ -439,7 +443,24 @@ final class EdfMicroBatchStream(roots: Seq[String], fields: Array[String],
 
   override def reportLatestOffset(): streaming.Offset = EdfStreamOffset(visible())
 
-  override def deserializeOffset(json: String): streaming.Offset = EdfStreamOffset.fromJson(json)
+  /** Offsets checkpointed before file names kept their root's scheme
+    * hold bare absolute paths (`/dir/x.edf`). Each such entry is renamed
+    * under the root it was listed from, as [[discover]] names it, so a
+    * restarted stream still recognises the files it already ingested.
+    */
+  override def deserializeOffset(json: String): streaming.Offset = {
+    val conf = EdfFile.confFromEntries(confEntries)
+    val rootPaths = roots.map { r =>
+      val p = new Path(r)
+      (r.stripSuffix("/"), p.getFileSystem(conf).makeQualified(p).toUri.getPath.stripSuffix("/"))
+    }
+    EdfStreamOffset(EdfStreamOffset.fromJson(json).files.map { f =>
+      if (new Path(f).toUri.getScheme != null) f
+      else rootPaths.collectFirst {
+        case (r, rp) if f == rp || f.startsWith(rp + "/") => r + f.drop(rp.length)
+      }.getOrElse(f)
+    })
+  }
 
   override def planInputPartitions(start: streaming.Offset,
                                    end: streaming.Offset): Array[InputPartition] = {

@@ -319,10 +319,37 @@ class EdfDataSourceSpec extends AnyFunSuite {
       val manifest = EdfPipeline.process(spark, Seq(path), s"graftsession://$tmp/out")
       assert(manifest.startsWith("graftsession:"), manifest)
       assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/out/channels.json")))
+      // a stream over the directory reads the file through the same
+      // scheme and names it as the batch read does
+      val streamed = scala.collection.mutable.ArrayBuffer.empty[String]
+      spark.readStream.format("edf").load(s"graftsession://$tmp")
+        .select(col("file")).distinct()
+        .writeStream.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          streamed.synchronized(streamed ++= df.collect().map(_.getString(0))): Unit
+        }
+        .start().awaitTermination()
+      val batch = spark.read.format("edf").load(path).select(col("file")).distinct().collect()
+      assert(streamed.toSeq == batch.map(_.getString(0)).toSeq)
     } finally {
       conf.unset("fs.graftsession.impl")
       conf.unset("fs.graftsession.impl.disable.cache")
     }
+  }
+
+  test("a stream restarted on a checkpoint of bare paths does not re-admit its files") {
+    val tmp = java.nio.file.Files.createTempDirectory("edflegacyoffset")
+    EdfDFixtures.makeEdfC(s"$tmp/a.edf", "00.00.00", Seq("C3"))
+    EdfDFixtures.makeEdfC(s"$tmp/b.edf", "01.00.00", Seq("C3"))
+    val stream = new graft.sources.v2.EdfMicroBatchStream(Seq(s"file://$tmp/"), Array("file"),
+      EdfFile.captureConfEntries(spark), graft.sources.v2.EdfPushdown(), 1L << 20)
+    // the offset form checkpointed before streams named files under their root
+    val legacy = stream.deserializeOffset(s"""["$tmp/a.edf"]""")
+    val next = stream.latestOffset(legacy,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+      .asInstanceOf[graft.sources.v2.EdfStreamOffset]
+    assert(next.files == Seq(s"file://$tmp/a.edf", s"file://$tmp/b.edf"))
   }
 
   // ---- row parity with the RDD reference reader (EdfFile.read) on

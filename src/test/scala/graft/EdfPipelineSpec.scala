@@ -44,6 +44,29 @@ class EdfPipelineSpec extends AnyFunSuite {
     assert(sliced.count() == 4, "middle record only, row-exact")
   }
 
+  test("process() runs the sidecar indexing job for EDF+D input only") {
+    val tmp = Files.createTempDirectory("edfpipeidx")
+    EdfDFixtures.makeEdfC(s"$tmp/c.edf", "00.00.00", Seq("C3", "C4"))
+    EdfDFixtures.makeEdfD(s"$tmp/d.edf", Seq(0.0, 10.0, 25.0))
+    def indexingJobs(file: String): Seq[String] = {
+      val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          descs.add(String.valueOf(Option(js.properties)
+            .map(_.getProperty("spark.job.description")).orNull)): Unit
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        EdfPipeline.process(spark, Seq(file), Files.createTempDirectory("edfpipeidxout").toString)
+        Thread.sleep(1500) // listener bus is async; drain before asserting
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(!descs.isEmpty, "the listener saw the pipeline's jobs")
+      descs.toArray(Array.empty[String]).toSeq.filter(_.startsWith("EdfOnsetIndex.ensure"))
+    }
+    assert(indexingJobs(s"$tmp/c.edf").isEmpty, "EDF+C input has no onsets to index")
+    assert(indexingJobs(s"$tmp/d.edf").size == 1, "EDF+D input is indexed in one job")
+  }
+
   test("process() over EDF+C then an appended EDF+D writes the bytes of the RDD reader path") {
     // the DSv2 reader feeding the sink's pack must be invisible in the
     // output: every binary, manifest and channels.json byte equals

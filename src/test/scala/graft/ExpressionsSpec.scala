@@ -201,4 +201,68 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(got.getSeq[Long](1) == Seq(rh("x") % 1024, rh("y") % 1024, rh("x y") % 1024),
       s"dsir_feats: ${got.getSeq[Long](1)}")
   }
+
+  test("every row kernel gives equal rows generated and interpreted, and null for null") {
+    import spark.implicits._
+    import graft.functions.KernelCall
+    import org.apache.spark.sql.types._
+    // one SQL call per registered row kernel; the registry check below
+    // makes a newly registered kernel fail here until it is listed
+    val sqlCalls = Map(
+      "graft_cosine" -> "graft_cosine(a, b)",
+      "graft_rolling_hash" -> "graft_rolling_hash(s)",
+      "graft_minhash_sig" -> "graft_minhash_sig(hs, 4)",
+      "graft_simhash" -> "graft_simhash(hs, 48)",
+      "graft_shingle_hashes" -> "graft_shingle_hashes(s, 2)",
+      "graft_minhash_bands" -> "graft_minhash_bands(hs, 2, 2)",
+      "graft_stopword_hits" -> "graft_stopword_hits(s, 'the,a|fox')",
+      "graft_winnow" -> "graft_winnow(s, 3, 2)",
+      "graft_nfc" -> "graft_nfc(s)",
+      "graft_char_entropy" -> "graft_char_entropy(s)",
+      "graft_sortable_bits" -> "graft_sortable_bits(d)",
+      "graft_keep_first" -> "graft_keep_first(segs)",
+      "graft_dsir_feats" -> "graft_dsir_feats(s, 64)",
+      "graft_simhash_blocks" -> "graft_simhash_blocks(hs, 48, 4, 12)")
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(f => f.name.startsWith("graft_") && f.className == "graft.functions.Kernels")
+      .map(_.name).toSet
+    assert(registered == sqlCalls.keySet, s"registered row kernels: $registered")
+    // the operator-only kernels, with small constant tables
+    val codeDist = StructType(Seq(StructField("c", LongType, nullable = false),
+      StructField("d", DoubleType, nullable = false)))
+    val opCalls = Seq(
+      KernelCall.column("hyperplaneBands", KernelCall.LongArray, col("a"),
+        Array(1.0, -1.0, 0.5, 0.0, 1.0, -2.0), 2, 1),
+      KernelCall.column("nearestCentroid", IntegerType, col("a"),
+        Array(1.0f, 0.0f, 0.0f, 0.0f, 1.0f, 1.0f), 2, 3),
+      KernelCall.column("pqEncode", ArrayType(codeDist, containsNull = false), col("a"),
+        Array(0.0, 0.0, 0.0, 1.0, 2.0, 3.0), 1, 2, 3),
+      KernelCall.column("pqAdc", DoubleType, col("a"), col("hs"),
+        Array(0.0, 0.0, 0.0, 1.0, 2.0, 3.0), 1, 2, 3),
+      KernelCall.column("randProj", ArrayType(DoubleType, containsNull = false), col("a"), 4),
+      KernelCall.column("dsirScore", StructType(Seq(StructField("n_feats", LongType, nullable = false),
+        StructField("score", DoubleType, nullable = false))), col("s"), Array.tabulate(64)(_ * 0.5), 64L))
+    // a shuffle keeps the projection off the driver-side LocalRelation
+    // folding, which would evaluate it interpreted in both runs
+    val df = Seq(
+      (0, Some(Array(1.0f, 2.0f, 3.0f)), Some(Array(3.0f, 2.0f, 1.0f)), Some("The quick  fox, the fox\u00e9"),
+        Some(Array(1L, 0L, 77777L, 9341L)), Some(-2.5), Some(Array("a ", "A", "b"))),
+      (1, None, None, None, None, None, None))
+      .toDF("id", "a", "b", "s", "hs", "d", "segs").repartition(2)
+    val cols = sqlCalls.values.toSeq.sorted.map(expr) ++ opCalls
+    def run(conf: (String, String)*): Seq[org.apache.spark.sql.Row] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try df.select(col("id") +: cols: _*).orderBy(col("id")).collect().toSeq
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val generated = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(generated == interpreted)
+    val Seq(values, nulls) = generated
+    (1 to cols.size).foreach { i =>
+      assert(!values.isNullAt(i), s"column $i: a value in gives a value out")
+      assert(nulls.isNullAt(i), s"column $i: null in gives null out")
+    }
+  }
 }

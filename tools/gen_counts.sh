@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
-# Stamp the ScalaTest / PlanAudit counts quoted in SURVEY.md and
-# README.md from LIVE runs. Hand-written counts drifted four rounds in
-# a row; this script is now the only way those numbers get into the
-# docs. It refuses to stamp anything if a test fails.
+# Stamp the ScalaTest / PlanAudit counts and the src/main Scala line
+# count quoted in SURVEY.md and README.md from LIVE runs. Hand-written
+# counts drifted four rounds in a row; this script is now the only way
+# those numbers get into the docs. It refuses to stamp anything if a test fails.
 #
 # Usage: tools/gen_counts.sh
 set -euo pipefail
@@ -27,12 +27,16 @@ if [ -z "$audit" ] || [ "$a_pass" != "$a_total" ]; then
   exit 1
 fi
 
+# lines of Scala in src/main, as the tree stands (committed or not)
+n_lines=$(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)
+
 # the tree the runs saw: HEAD, plus a marker when it was not committed
 tree=$(git rev-parse --short HEAD)
 git diff --quiet HEAD || tree="$tree + uncommitted changes"
 
 stamp="- \`sbt test\`: **$n_pass ScalaTests**, 0 failures.
 - \`graft.PlanAudit\`: **$audit plan checks pass**.
+- \`src/main\`: **$n_lines lines of Scala**.
 - Stamped $(date -u +%Y-%m-%dT%H:%MZ) at commit $tree by tools/gen_counts.sh."
 
 export stamp
@@ -48,4 +52,4 @@ for f in ('SURVEY.md', 'README.md'):
     open(f, 'w').write(new)
     print(f'[counts] stamped {f}')
 EOF
-echo "[counts] $n_pass ScalaTests / PlanAudit $audit" >&2
+echo "[counts] $n_pass ScalaTests / PlanAudit $audit / $n_lines src/main Scala lines" >&2
