@@ -28,14 +28,7 @@ object EdfPipeline {
     // process time), so later time-bounded reads prune at PLANNING without
     // any operator remembering to index first
     graft.sources.EdfOnsetIndex.ensure(spark, files)
-    // DSv2 source, not EdfFile.read: identical rows (asserted in
-    // EdfDataSourceSpec), but the v2 reader emits InternalRows straight
-    // into the sink's pack loop — the RDD[Row] path paid a per-sample
-    // GenericRow boxing + Catalyst conversion the r16 packed sink made
-    // the dominant remaining cost
-    // varargs load collapses a one-element list to the single-path form
-    val samples = spark.read.format("edf").load(files: _*)
-    EdfSink.write(samples, outDir, mode = mode)
+    EdfSink.write(EdfFile.read(spark, files), outDir, mode = mode)
   }
 
   /** The reference task loop, LIVE (A13b + A14b composed): watch

@@ -1669,7 +1669,18 @@ object TextAnalysis {
     * plans as a literal map Column — batch and streaming scoring are
     * the same zero-shuffle narrow projection.
     */
-  case class DsirModel(b: Int, weights: Map[Long, Double], wUnseen: Double)
+  case class DsirModel(b: Int, weights: Map[Long, Double], wUnseen: Double) {
+    /** Bucket-indexed weight table (unseen fallback pre-filled) for the
+      * fused scoring kernel, built once per model: every scoring
+      * projection of the model passes this one array, so its kernel
+      * calls compare equal.
+      */
+    private[TextAnalysis] lazy val table: Array[Double] = {
+      val w = Array.fill(b)(wUnseen)
+      weights.foreach { case (bk, v) => w(bk.toInt) = v }
+      w
+    }
+  }
 
   /** The C38 stats pass alone: fit the bucket→weight model from one
     * B-bounded aggregate scan (map-side combinable, ≤ b-row collect).
@@ -1695,25 +1706,12 @@ object TextAnalysis {
     DsirModel(b, w, math.log(alpha / denomT) - math.log(alpha / denomA))
   }
 
-  /** Raw (unrounded) logw of `col("text")` under a fitted model — the
-    * shared scoring projection of the batch operator and the C38c
-    * streaming gate. Pure narrow expression: no shuffle, no state.
-    */
-  /** Bucket-indexed weight table (unseen fallback pre-filled) for the
-    * fused scoring kernel.
-    */
-  private def dsirTable(m: DsirModel): Array[Double] = {
-    val w = Array.fill(m.b)(m.wUnseen)
-    m.weights.foreach { case (bk, v) => w(bk.toInt) = v }
-    w
-  }
-
   /** Fused featurize-and-score through the native kernel — one string
     * scan per document, fold in feature order (bit-identical to the
     * HOF/oracle). The struct is shared by score and n_feats projections,
     * so codegen's subexpression elimination evaluates it once per row.
     */
-  private def dsirScored(m: DsirModel): Column = dsirScoreKernel(dsirTable(m), m.b.toLong)
+  private def dsirScored(m: DsirModel): Column = dsirScoreKernel(m.table, m.b.toLong)
 
   /** struct<n_feats, score> of `text` against the bucket-indexed weight
     * table `w` (one constant table for the kernel).

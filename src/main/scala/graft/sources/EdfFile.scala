@@ -4,12 +4,12 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.sources.v2.{EdfInputPartition, EdfPushdown, EdfSplitPlanner}
 
-/** Distributed EDF / EDF+C / EDF+D reader (SURVEY.md §2 A1/A2).
+/** EDF / EDF+C / EDF+D files (SURVEY.md §2 A1/A2): header parse, channel
+  * metadata, the sample read and TAL annotations.
   *
   * File layout (reference: processor/edf_processor/edf.py:34-76): a 256-byte
   * fixed header, ns·256 bytes of per-signal headers, then `nbDataRec`
@@ -22,7 +22,8 @@ import graft.sources.v2.{EdfInputPartition, EdfPushdown, EdfSplitPlanner}
   * `targetSplitBytes` and executed in parallel — a 100 GB EDF file becomes
   * ~800 independent splits, and because every record is self-describing
   * (EDF+D timestamps live inside the record's own TAL), splits need no
-  * cross-talk. Rows stream out of an iterator (no per-split buffering).
+  * cross-talk. Samples are decoded in one place, the `format("edf")`
+  * scan's partition reader; [[read]] is that scan.
   */
 object EdfFile {
 
@@ -290,7 +291,10 @@ object EdfFile {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 
-  /** A1: read EDF files into a long sample DataFrame.
+  /** A1: read EDF files into a long sample DataFrame: the `format("edf")`
+    * scan, with `targetSplitBytes` as its split size. Lazy, like any
+    * DataFrame read: header planning runs when an action (or `.rdd`)
+    * plans the scan.
     *
     * Sample timestamps follow the EDF contract: record start (header start
     * + record_idx·duration for EDF+C, or the record's TAL offset for
@@ -298,73 +302,24 @@ object EdfFile {
     * (The reference's linspace step of (n-1)/(n·rate) at
     * base.py:357-372 is an off-by-one artifact of its chunk helper; we use
     * the EDF-specified uniform sampling grid.)
-    *
-    * Splits come from the DSv2 scan's planner with nothing pushed, so
-    * this reader and `format("edf")` plan the same (file, record-range)
-    * partitions; each carries its file's header. This reader keeps its
-    * own per-sample decode and TAL parse: it is the reference the DSv2
-    * reader's row parity is checked against.
     */
   def read(spark: SparkSession, paths: Seq[String], targetSplitBytes: Long = 128L << 20): DataFrame =
-    spark.createDataFrame(planned(spark, paths, targetSplitBytes)(readSplit), sampleSchema)
+    spark.read.format("edf").option("targetSplitBytes", targetSplitBytes.toString).load(paths: _*)
 
-  /** Annotation (TAL) extraction: (onset, duration, text) per record. */
-  def annotations(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.createDataFrame(planned(spark, paths, 128L << 20)(readAnnotations), annotationSchema)
-
-  /** One task per planned split, each opening its file through the
-    * session's Hadoop conf.
+  /** Annotation (TAL) extraction: (onset, duration, text) per record, one
+    * task per split of the scan's planner, each opening its file through
+    * the session's Hadoop conf.
     */
-  private def planned(spark: SparkSession, paths: Seq[String], targetSplitBytes: Long)(
-      rows: (EdfInputPartition, org.apache.hadoop.fs.FSDataInputStream) => Iterator[Row]): RDD[Row] = {
-    val splits = EdfSplitPlanner.planScan(spark, paths, EdfPushdown(), targetSplitBytes)
+  def annotations(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val splits = EdfSplitPlanner.planScan(spark, paths, EdfPushdown(), 128L << 20)
     val confEntries = captureConfEntries(spark)
-    spark.sparkContext.parallelize(splits, math.max(1, splits.size)).flatMap { split =>
+    val rows = spark.sparkContext.parallelize(splits, math.max(1, splits.size)).flatMap { split =>
       val p = new Path(split.path)
       val in = p.getFileSystem(confFromEntries(confEntries)).open(p)
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-      rows(split, in)
+      readAnnotations(split, in)
     }
-  }
-
-  /** Executor-side: parse one record range into sample rows (lazy iterator). */
-  private def readSplit(split: EdfInputPartition, in: org.apache.hadoop.fs.FSDataInputStream): Iterator[Row] = {
-    val h = split.header
-    val recBytes = h.recordBytes
-    val sigOffsets = h.signalOffsets
-    val annIdx = h.annotationIndex
-    val durUs = h.recordUs
-    val startUs = h.startUs
-    val buf = new Array[Byte](recBytes.toInt)
-
-    (split.recordLo until split.recordHi).iterator.flatMap { rec =>
-      in.readFully(h.headerBytes + rec * recBytes, buf)
-      // EDF+D: record start offset lives in this record's TAL prefix
-      val recStartUs: Long =
-        if (h.isDiscontiguous && annIdx >= 0) {
-          val off = sigOffsets(annIdx).toInt
-          val len = h.signals(annIdx).nrSamples * 2
-          val tal = new String(buf, off, len, StandardCharsets.US_ASCII)
-          val head = tal.split("\u0014\u0014", 2).head
-          startUs + (head.toDouble * 1e6).toLong
-        } else startUs + rec.toLong * durUs
-
-      h.signals.zipWithIndex.iterator.filterNot(_._1.isAnnotation).flatMap { case (sig, sIdx) =>
-        val base = sigOffsets(sIdx).toInt
-        val n = sig.nrSamples
-        val bit = sig.bitValue
-        val off = sig.offset
-        val rate = h.sampleRate(sIdx)
-        (0 until n).iterator.map { i =>
-          val lo = buf(base + 2 * i) & 0xff
-          val hi = buf(base + 2 * i + 1)               // sign-extends: int16 LE
-          val digital = (hi << 8) | lo
-          val ts = recStartUs + i.toLong * durUs / n
-          Row(split.path, sIdx, sig.label, sig.physDim, rate,
-            rec.toLong, rec.toLong * n + i, ts, bit * (off + digital.toDouble))
-        }
-      }
-    }
+    spark.createDataFrame(rows, annotationSchema)
   }
 
   /** Executor-side TAL parsing for one record range. */

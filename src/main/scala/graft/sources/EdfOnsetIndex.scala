@@ -255,37 +255,31 @@ object EdfOnsetIndex {
   }
 
   /** True when `path` (header `h`) has no readable sidecar whose head
-    * matches the header.
+    * matches the header: one stat and one 16-byte read.
     */
-  private def needed(path: String, h: EdfHeader, conf: Configuration): Boolean = {
-    val p = new Path(sidecarPath(path))
-    val fs = p.getFileSystem(conf)
-    val fileLen = if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
-    fileLen < 16 || {
-      val head = new Array[Byte](16)
-      try {
+  private def needed(path: String, h: EdfHeader, conf: Configuration): Boolean =
+    try {
+      val p = new Path(sidecarPath(path))
+      val fs = p.getFileSystem(conf)
+      val fileLen = if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
+      fileLen < 16 || {
+        val head = new Array[Byte](16)
         val in = fs.open(p)
         try in.readFully(0, head) finally in.close()
         !headMatches(head, fileLen, h)
-      } catch { case _: java.io.IOException => true } // e.g. a checksum mismatch
-    }
-  }
+      }
+    } catch { case _: java.io.IOException => true } // e.g. a checksum mismatch
 
   /** Land-time indexing for a batch of landed files: ensure every EDF+D
     * member has a fresh sidecar (no-op for contiguous files and
     * already-indexed ones). The driver reads the headers through the
-    * session's Hadoop conf and launches a job only for the indexable
-    * EDF+D files, each task handed its file's header; the TAL reads run
-    * per file in those executor tasks — the driver never touches record
-    * bytes. Task count tracks the cluster (`defaultParallelism`), not a
-    * fixed constant, so a 1000-executor fleet indexes a landing burst at
-    * fleet width. It is BEST-EFFORT: a file that can't be indexed
-    * (unreadable header, corrupt TAL, read-only directory) plans
-    * unpruned, never wrong, and a WARN names the file and the cause.
+    * session's Hadoop conf, and hands them to [[indexStale]]. It is
+    * BEST-EFFORT: a file that can't be indexed (unreadable header,
+    * corrupt TAL, read-only directory) plans unpruned, never wrong, and
+    * a WARN names the file and the cause.
     */
   def ensure(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): Unit = {
-    val sc = spark.sparkContext
-    val conf = sc.hadoopConfiguration
+    val conf = spark.sparkContext.hadoopConfiguration
     val headers =
       try EdfFile.readHeaders(files, conf)
       catch { case _: Exception => // find and name the unreadable ones
@@ -294,8 +288,25 @@ object EdfOnsetIndex {
           catch { case e: Exception => warn(f, e); None }
         }
       }
+    indexStale(spark, headers)
+  }
+
+  /** [[ensure]] over `(path, header)` pairs the caller already read. The
+    * driver picks the indexable EDF+D files whose sidecar is missing or
+    * stale, and launches a job only when there are any, each task handed
+    * its file's header; the TAL reads run per file in those executor
+    * tasks — the driver never touches record bytes. Task count tracks
+    * the cluster (`defaultParallelism`), not a fixed constant, so a
+    * 1000-executor fleet indexes a landing burst at fleet width.
+    */
+  private[sources] def indexStale(spark: org.apache.spark.sql.SparkSession,
+                                  headers: Seq[(String, EdfHeader)]): Unit = {
+    val sc = spark.sparkContext
+    val conf = sc.hadoopConfiguration
     // only EDF+D files with a TAL signal carry onsets to index
-    val targets = headers.filter { case (_, h) => h.isDiscontiguous && h.annotationIndex >= 0 }
+    val targets = headers.filter { case (f, h) =>
+      h.isDiscontiguous && h.annotationIndex >= 0 && needed(f, h, conf)
+    }
     if (targets.nonEmpty) {
       val entries = EdfFile.captureConfEntries(spark)
       // tag the job so the UI (and tests) can attribute the indexing
@@ -304,8 +315,7 @@ object EdfOnsetIndex {
       sc.setJobDescription(s"EdfOnsetIndex.ensure: land-time sidecar indexing of ${targets.size} file(s)")
       try sc.parallelize(targets, math.max(1, math.min(targets.size, sc.defaultParallelism)))
         .foreach { case (f, h) =>
-          val conf = EdfFile.confFromEntries(entries)
-          try if (needed(f, h, conf)) { write(f, h, conf); () }
+          try { write(f, h, EdfFile.confFromEntries(entries)); () }
           catch { case e: Exception => warn(f, e) }
         }
       finally sc.setJobDescription(prev)

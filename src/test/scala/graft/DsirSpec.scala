@@ -206,4 +206,18 @@ class DsirSpec extends AnyFunSuite {
         s"score diverges (must be bit-identical) for doc ${r.getLong(0)}")
     }
   }
+
+  test("dsir_weights' n_feats and logw share one dsirScore kernel table") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    val t = docs(Seq((1L, "a b", "en"), (2L, "a c", "de")))
+    val plan = TextAnalysis.dsirWeights(t).queryExecution.executedPlan
+    val tables = plan.collect { case p => p.expressions }.flatten.flatMap(_.collect {
+      case s: StaticInvoke if s.functionName == "dsirScore" =>
+        s.arguments.collect { case Literal(w: Array[Double], _) => w }
+    }.flatten)
+    assert(tables.size == 2, s"one kernel call per projection: $plan")
+    // one array, so the two calls are equal and subexpression elimination shares them
+    assert(tables.forall(_ eq tables.head), s"${tables.size} calls, distinct tables")
+  }
 }

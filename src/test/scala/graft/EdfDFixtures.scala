@@ -1,6 +1,12 @@
 package graft
 
-/** Shared synthetic EDF builders for specs. */
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import graft.sources.EdfFile
+
+/** Shared synthetic EDF builders for specs, and the closed-form
+  * `EdfFile.sampleSchema` rows of the files they write.
+  */
 object EdfDFixtures {
 
   private def pad(s: String, n: Int): Array[Byte] = {
@@ -16,10 +22,13 @@ object EdfDFixtures {
     * holds `nr(s)` samples per record, physical range ±100 uV over the
     * full int16 digital range, and sample i of record r is the digital
     * value `digital(r, s, i)`. `annNr` > 0 appends an "EDF Annotations"
-    * signal of `annNr` samples whose TAL carries the record's onset.
+    * signal of `annNr` samples whose TAL carries the record's onset, then
+    * the record's `talEntry` (onset s, duration s, text), if it has one.
     */
   private def write(path: String, startTime: String, reserved: String, labels: Seq[String],
-                    nr: Seq[Int], onsets: Seq[Double], annNr: Int)(digital: (Int, Int, Int) => Int): Unit = {
+                    nr: Seq[Int], onsets: Seq[Double], annNr: Int,
+                    talEntry: Int => Option[(Double, Double, String)] = _ => None)(
+                    digital: (Int, Int, Int) => Int): Unit = {
     require(nr.size == labels.size, "one samples-per-record entry per label")
     val out = new java.io.ByteArrayOutputStream()
     val ann = annNr > 0
@@ -49,9 +58,15 @@ object EdfDFixtures {
         (0 until nr(s)).foreach(i => writeInt16(out, digital(r, s, i)))
       }
       if (ann) {
-        // TAL terminator 0x14 0x14 0x00, spelled as bytes (never raw literals)
-        val tal = ("+" + onset).getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
-          Array[Byte](0x14, 0x14, 0x00)
+        // TAL separators spelled as bytes (never raw literals): 0x15 before
+        // a duration, 0x14 after the timing and each text, 0x00 at the end
+        def ascii(v: Any) = v.toString.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+        val tal = ascii("+" + onset) ++ Array[Byte](0x14, 0x14, 0x00) ++
+          talEntry(r).fold(Array.empty[Byte]) { case (on, dur, text) =>
+            ascii("+" + on) ++ Array[Byte](0x15) ++ ascii(dur) ++ Array[Byte](0x14) ++
+              ascii(text) ++ Array[Byte](0x14, 0x00)
+          }
+        require(tal.length <= annNr * 2, s"record $r: a ${tal.length}-byte TAL overflows ${annNr * 2} bytes")
         out.write(tal ++ Array.fill(annNr * 2 - tal.length)(0.toByte))
       }
     }
@@ -59,8 +74,35 @@ object EdfDFixtures {
     try f.write(out.toByteArray) finally f.close()
   }
 
+  /** The `EdfFile.sampleSchema` rows of a file [[write]] wrote on
+    * 01.01.20 at `startTime`, in closed form: one row per sample, the
+    * record of onset o starting at the header start + o (whole µs),
+    * sample i of an n-sample record at `i * 1_000_000 / n` µs after it
+    * (integer division), and the value calibrated in the reference's
+    * order (edf.py:14-18), so doubles compare exactly.
+    */
+  private def rows(path: String, startTime: String, labels: Seq[String], nr: Seq[Int],
+                   onsets: Seq[Double])(digital: (Int, Int, Int) => Int): Seq[Row] = {
+    val Array(hh, mm, ss) = startTime.split('.').map(_.toInt)
+    val startUs = java.time.LocalDateTime.of(2020, 1, 1, hh, mm, ss)
+      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+    val bit = 200.0 / 65535.0          // (physMax - physMin) / (digMax - digMin)
+    val off = 100.0 / bit - 32767.0    // physMax / bit - digMax
+    for {
+      (onset, r) <- onsets.zipWithIndex
+      s <- labels.indices
+      n = nr(s)
+      i <- 0 until n
+    } yield new GenericRowWithSchema(Array(path, s, labels(s), "uV", n.toDouble, r.toLong,
+      r.toLong * n + i, startUs + math.round(onset * 1e6) + i * 1000000L / n,
+      bit * (off + digital(r, s, i))), EdfFile.sampleSchema)
+  }
+
   private def perLabel(labels: Seq[String], samplesPerRecord: Seq[Int]): Seq[Int] =
     if (samplesPerRecord.isEmpty) labels.map(_ => 4) else samplesPerRecord
+
+  /** Digital value of sample i of record r in signal s (n of s per record). */
+  private def ramp(nr: Seq[Int])(r: Int, s: Int, i: Int): Int = r * nr(s) + i + s * 100
 
   /** Contiguous EDF: `labels` signals, nRecords records of 1 s, signal s
     * holding `samplesPerRecord(s)` samples per record (4 each when empty,
@@ -70,21 +112,34 @@ object EdfDFixtures {
   def makeEdfC(path: String, startTime: String, labels: Seq[String],
                nRecords: Int = 3, samplesPerRecord: Seq[Int] = Nil): Unit = {
     val nr = perLabel(labels, samplesPerRecord)
-    write(path, startTime, "", labels, nr, (0 until nRecords).map(_.toDouble), annNr = 0) {
-      (r, s, i) => r * nr(s) + i + s * 100
-    }
+    write(path, startTime, "", labels, nr, (0 until nRecords).map(_.toDouble), annNr = 0)(ramp(nr))
+  }
+
+  /** The closed-form rows of the file [[makeEdfC]] writes with these arguments. */
+  def edfCRows(path: String, startTime: String, labels: Seq[String],
+               nRecords: Int = 3, samplesPerRecord: Seq[Int] = Nil): Seq[Row] = {
+    val nr = perLabel(labels, samplesPerRecord)
+    rows(path, startTime, labels, nr, (0 until nRecords).map(_.toDouble))(ramp(nr))
   }
 
   /** EDF+D: `labels` data signals (4 samples per record each when
     * `samplesPerRecord` is empty) plus the annotation signal, one 1 s
-    * record per TAL onset, digital values as in [[makeEdfC]].
+    * record per TAL onset, digital values as in [[makeEdfC]]. Record r's
+    * TAL carries `talEntry(r)` (onset s, duration s, text) after its
+    * onset, when that is defined.
     */
   def makeEdfD(path: String, onsets: Seq[Double], labels: Seq[String] = Seq("sig1"),
-               samplesPerRecord: Seq[Int] = Nil): Unit = {
+               samplesPerRecord: Seq[Int] = Nil,
+               talEntry: Int => Option[(Double, Double, String)] = _ => None): Unit = {
     val nr = perLabel(labels, samplesPerRecord)
-    write(path, "00.00.00", "EDF+D", labels, nr, onsets, annNr = 16) {
-      (r, s, i) => r * nr(s) + i + s * 100
-    }
+    write(path, "00.00.00", "EDF+D", labels, nr, onsets, annNr = 16, talEntry)(ramp(nr))
+  }
+
+  /** The closed-form rows of the file [[makeEdfD]] writes with these arguments. */
+  def edfDRows(path: String, onsets: Seq[Double], labels: Seq[String] = Seq("sig1"),
+               samplesPerRecord: Seq[Int] = Nil): Seq[Row] = {
+    val nr = perLabel(labels, samplesPerRecord)
+    rows(path, "00.00.00", labels, nr, onsets)(ramp(nr))
   }
 
   private lazy val referenceDir: String =
@@ -113,11 +168,15 @@ object EdfDFixtures {
     */
   lazy val sinWaveEdf: String = {
     val path = s"$referenceDir/sin_wave.edf"
-    val hz = Seq(20, 50)
-    write(path, "00.00.00", "", Seq("Sin 20Hz", "Sin 50Hz"), Seq(800, 800),
-      (0 until 15).map(_.toDouble), annNr = 0) {
-      (r, s, i) => math.round(32767 * math.sin(2 * math.Pi * hz(s) * (r * 800 + i) / 800.0)).toInt
-    }
+    write(path, "00.00.00", "", sinLabels, Seq(800, 800), sinOnsets, annNr = 0)(sine)
     path
   }
+
+  /** The closed-form rows of [[sinWaveEdf]]. */
+  def sinWaveRows: Seq[Row] = rows(sinWaveEdf, "00.00.00", sinLabels, Seq(800, 800), sinOnsets)(sine)
+
+  private val sinLabels = Seq("Sin 20Hz", "Sin 50Hz")
+  private val sinOnsets = (0 until 15).map(_.toDouble)
+  private def sine(r: Int, s: Int, i: Int): Int =
+    math.round(32767 * math.sin(2 * math.Pi * Seq(20, 50)(s) * (r * 800 + i) / 800.0)).toInt
 }

@@ -15,14 +15,8 @@ class EdfDataSourceSpec extends AnyFunSuite {
 
   val sinEdf = EdfDFixtures.sinWaveEdf
 
-  test("format(\"edf\") reads the same rows as EdfFile.read") {
-    val v2 = spark.read.format("edf").load(sinEdf)
-    assert(v2.count() == 2L * 12000L)
-    val a = v2.orderBy(col("channel_idx"), col("sample_idx"))
-      .select(col("channel"), col("ts_us"), col("value")).limit(100).collect()
-    val b = EdfFile.read(spark, Seq(sinEdf)).orderBy(col("channel_idx"), col("sample_idx"))
-      .select(col("channel"), col("ts_us"), col("value")).limit(100).collect()
-    assert(a.toSeq == b.toSeq)
+  test("format(\"edf\") reads sin_wave.edf as its closed-form rows") {
+    assertRows(spark.read.format("edf").load(sinEdf), EdfDFixtures.sinWaveRows, minRows = 2 * 12000)
   }
 
   test("multi-path load survives commas in file names (JSON paths option)") {
@@ -352,41 +346,46 @@ class EdfDataSourceSpec extends AnyFunSuite {
     assert(next.files == Seq(s"file://$tmp/a.edf", s"file://$tmp/b.edf"))
   }
 
-  // ---- row parity with the RDD reference reader (EdfFile.read) on
-  // in-repo fixtures: every DSv2 reader path, compared as row multisets
+  // ---- row parity with the fixtures' closed-form rows: every DSv2
+  // reader path, compared as row multisets
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
 
-  private def assertParity(v2: org.apache.spark.sql.DataFrame,
-                           ref: org.apache.spark.sql.DataFrame, minRows: Int): Unit = {
-    assert(v2.schema.fieldNames.toSeq == ref.schema.fieldNames.toSeq)
-    val (a, b) = (rowsOf(v2), rowsOf(ref))
+  /** `got` holds exactly `expected` (full sample-schema rows) projected
+    * onto its columns.
+    */
+  private def assertRows(got: org.apache.spark.sql.DataFrame,
+                         expected: Seq[org.apache.spark.sql.Row], minRows: Int): Unit = {
+    val idx = got.schema.fieldNames.toSeq.map(EdfFile.sampleSchema.fieldIndex)
+    val (a, b) = (rowsOf(got), expected.map(r => idx.map(r.get)).sortBy(_.mkString("\u0000")))
     assert(a.size >= minRows, s"fixture yields rows: ${a.size}")
     assert(a.distinct.size == a.size, "no row repeats (a reused row escaping uncopied would)")
     assert(a == b)
   }
 
-  /** EDF+C whose records mix two rates (4 and 8 samples per 1 s record),
-    * read one record per split so split boundaries are exercised too.
+  /** EDF+C whose records mix rates (4, 12 and 4 samples per 1 s record;
+    * 12 does not divide 1 000 000 µs, so the integer-µs step shows), read
+    * one record per split so split boundaries are exercised too.
     */
-  private lazy val mixedRate: (String, Long) = {
+  private lazy val mixedRate: (String, Long, Seq[org.apache.spark.sql.Row]) = {
     val tmp = java.nio.file.Files.createTempDirectory("edfparity")
     val p = s"$tmp/mixed.edf"
-    EdfDFixtures.makeEdfC(p, "00.00.00", Seq("A1", "B2", "C3"), nRecords = 5,
-      samplesPerRecord = Seq(4, 8, 4))
-    (p, EdfFile.readHeader(p).recordBytes)
+    val (labels, nr) = (Seq("A1", "B2", "C3"), Seq(4, 12, 4))
+    EdfDFixtures.makeEdfC(p, "00.00.00", labels, nRecords = 5, samplesPerRecord = nr)
+    (p, EdfFile.readHeader(p).recordBytes,
+      EdfDFixtures.edfCRows(p, "00.00.00", labels, nRecords = 5, samplesPerRecord = nr))
   }
 
   private def v2Mixed = {
-    val (p, recBytes) = mixedRate
+    val (p, recBytes, _) = mixedRate
     spark.read.format("edf").option("targetSplitBytes", recBytes.toString).load(p)
   }
 
-  test("parity: full schema collected with no projection equals EdfFile.read") {
+  test("parity: full schema collected with no projection") {
     val v2 = v2Mixed
     assert(v2.rdd.getNumPartitions == 5, "one split per record")
-    assertParity(v2, EdfFile.read(spark, Seq(mixedRate._1)), minRows = 5 * 16)
+    assertRows(v2, mixedRate._3, minRows = 5 * 20)
   }
 
   test("parity: user schema in non-schema column order") {
@@ -397,8 +396,7 @@ class EdfDataSourceSpec extends AnyFunSuite {
     val v2 = spark.read.schema(user).format("edf")
       .option("targetSplitBytes", mixedRate._2.toString).load(mixedRate._1)
     assert(v2.schema.fieldNames.toSeq == user.fieldNames.toSeq)
-    assertParity(v2, EdfFile.read(spark, Seq(mixedRate._1)).select(user.fieldNames.map(col).toSeq: _*),
-      minRows = 5 * 16)
+    assertRows(v2, mixedRate._3, minRows = 5 * 20)
   }
 
   test("parity: a projection without value synthesizes rows from the header") {
@@ -406,34 +404,33 @@ class EdfDataSourceSpec extends AnyFunSuite {
     val v2 = v2Mixed.select(cols.map(col): _*)
     val scan = v2.queryExecution.executedPlan.toString
     assert(!scan.contains("value"), s"value pruned from the scan:\n$scan")
-    assertParity(v2, EdfFile.read(spark, Seq(mixedRate._1)).select(cols.map(col): _*), minRows = 5 * 16)
+    assertRows(v2, mixedRate._3, minRows = 5 * 20)
   }
 
   test("parity: channel filters take the sliced read path") {
-    val ref = EdfFile.read(spark, Seq(mixedRate._1))
     // one signal; two adjacent signals (one read run); two separated
     // signals (two read runs)
     Seq(Seq("B2"), Seq("A1", "B2"), Seq("A1", "C3")).foreach { chans =>
       val v2 = v2Mixed.filter(col("channel").isin(chans: _*))
       assert(v2.queryExecution.executedPlan.toString.contains("(channel,"), s"pushed: $chans")
-      assertParity(v2, ref.filter(col("channel").isin(chans: _*)), minRows = 5 * 4)
+      assertRows(v2, mixedRate._3.filter(r => chans.contains(r.getAs[String]("channel"))), minRows = 5 * 4)
     }
   }
 
   test("parity: EDF+D with and without ts_us bounds") {
     val tmp = java.nio.file.Files.createTempDirectory("edfdparity")
     val p = s"$tmp/disc.edf"
-    EdfDFixtures.makeEdfD(p, Seq(0.0, 10.0, 25.0, 40.0), labels = Seq("D1", "D2"),
-      samplesPerRecord = Seq(4, 8))
+    val (onsets, labels, nr) = (Seq(0.0, 10.0, 25.0, 40.0), Seq("D1", "D2"), Seq(4, 8))
+    EdfDFixtures.makeEdfD(p, onsets, labels, samplesPerRecord = nr)
     val h = EdfFile.readHeader(p)
-    val ref = EdfFile.read(spark, Seq(p))
-    assertParity(spark.read.format("edf").load(p), ref, minRows = 4 * 12)
+    val expected = EdfDFixtures.edfDRows(p, onsets, labels, samplesPerRecord = nr)
+    assertRows(spark.read.format("edf").load(p), expected, minRows = 4 * 12)
     // bounds cut inside records 1 and 2: records 0 and 3 are TAL-skipped
     val (lo, hi) = (h.startUs + 10500000L, h.startUs + 25500000L)
-    val inWindow = col("ts_us") >= lo && col("ts_us") < hi
-    val bounded = spark.read.format("edf").load(p).filter(inWindow)
+    val bounded = spark.read.format("edf").load(p).filter(col("ts_us") >= lo && col("ts_us") < hi)
     assert(bounded.queryExecution.executedPlan.toString.contains("GreaterThanOrEqual(ts_us"))
-    assertParity(bounded, ref.filter(inWindow), minRows = 12)
+    assertRows(bounded, expected.filter { r => val t = r.getAs[Long]("ts_us"); t >= lo && t < hi },
+      minRows = 12)
   }
 }
 

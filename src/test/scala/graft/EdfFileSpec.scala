@@ -77,8 +77,9 @@ class EdfFileSpec extends AnyFunSuite {
 
   // --- synthetic EDF+D: 1 data signal (4 samples/record) + annotation signal,
   // digital values record*4 + sample ---
-  private def makeEdfD(path: String, onsets: Seq[Double]): Unit =
-    EdfDFixtures.makeEdfD(path, onsets)
+  private def makeEdfD(path: String, onsets: Seq[Double],
+                       talEntry: Int => Option[(Double, Double, String)] = _ => None): Unit =
+    EdfDFixtures.makeEdfD(path, onsets, talEntry = talEntry)
 
   test("EDF+D: per-record TAL onsets drive discontiguous timestamps") {
     val tmp = java.nio.file.Files.createTempDirectory("edfd").toString
@@ -122,8 +123,8 @@ class EdfFileSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](EdfFile.readHeader(p))
       assert(e.getMessage.contains(p) && e.getMessage.contains(field), e.getMessage)
     }
-    // the scan's planner surfaces the same error
-    val e = intercept[IllegalArgumentException](EdfFile.read(spark, Seq(cases(3)._1)))
+    // the scan's planner surfaces the same error once an action plans it
+    val e = intercept[IllegalArgumentException](EdfFile.read(spark, Seq(cases(3)._1)).count())
     assert(e.getMessage.contains(cases(3)._2), e.getMessage)
   }
 
@@ -134,5 +135,19 @@ class EdfFileSpec extends AnyFunSuite {
     val ann = EdfFile.annotations(spark, Seq(path)).orderBy(col("record_idx")).collect()
     assert(ann.length == 2)
     assert(ann.map(_.getAs[Double]("onset_s")).toSeq == Seq(0.0, 10.0))
+  }
+
+  test("annotations() parses TAL durations and texts") {
+    val tmp = java.nio.file.Files.createTempDirectory("edfd3").toString
+    val path = s"$tmp/disc3.edf"
+    makeEdfD(path, Seq(0.0, 10.0), talEntry = r => Some((r * 10 + 0.5, 1.25, s"spike $r")))
+    val ann = EdfFile.annotations(spark, Seq(path))
+      .orderBy(col("record_idx"), col("onset_s")).collect()
+      .map(r => (r.getAs[Long]("record_idx"), r.getAs[Double]("onset_s"),
+        Option(r.getAs[java.lang.Double]("duration_s")).map(_.doubleValue), Option(r.getAs[String]("text"))))
+    // each record's timekeeping TAL has no duration or text; its extra entry has both
+    assert(ann.toSeq == Seq(
+      (0L, 0.0, None, None), (0L, 0.5, Some(1.25), Some("spike 0")),
+      (1L, 10.0, None, None), (1L, 10.5, Some(1.25), Some("spike 1"))))
   }
 }

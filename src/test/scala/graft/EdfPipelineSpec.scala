@@ -65,27 +65,35 @@ class EdfPipelineSpec extends AnyFunSuite {
     }
     assert(indexingJobs(s"$tmp/c.edf").isEmpty, "EDF+C input has no onsets to index")
     assert(indexingJobs(s"$tmp/d.edf").size == 1, "EDF+D input is indexed in one job")
+    assert(indexingJobs(s"$tmp/d.edf").isEmpty, "a fresh sidecar is checked on the driver: no job")
   }
 
-  test("process() over EDF+C then an appended EDF+D writes the bytes of the RDD reader path") {
+  test("process() + append equal the sink over closed-form rows") {
     // the DSv2 reader feeding the sink's pack must be invisible in the
     // output: every binary, manifest and channels.json byte equals
-    // EdfSink.write over EdfFile.read (the RDD reference path), across
-    // an overwrite then a gap-carrying append with mixed rates. sig2
-    // spans several pack blocks, and its 12-sample record runs do not
-    // divide PackBlock, so blocks fill and are emitted mid-run.
+    // EdfSink.write over the fixtures' closed-form rows (data no decoder
+    // produced), across an overwrite then a gap-carrying append with
+    // mixed rates. sig2 spans several pack blocks, and its 12-sample
+    // record runs do not divide PackBlock, so blocks fill and are
+    // emitted mid-run.
     val tmp = Files.createTempDirectory("edfpipeparity")
     val c = s"$tmp/c.edf"; val d = s"$tmp/d.edf"
-    EdfDFixtures.makeEdfC(c, "00.00.00", Seq("sig1", "sig2"), nRecords = 1200,
-      samplesPerRecord = Seq(4, 12))
+    val (labels, nr) = (Seq("sig1", "sig2"), Seq(4, 12))
+    EdfDFixtures.makeEdfC(c, "00.00.00", labels, nRecords = 1200, samplesPerRecord = nr)
     // 600 records after the EDF+C end, with a 1 h gap after the 300th
     val onsets = (0 until 600).map(i => 1300.0 + i + (if (i >= 300) 3600 else 0))
-    EdfDFixtures.makeEdfD(d, onsets, labels = Seq("sig1", "sig2"), samplesPerRecord = Seq(4, 12))
-    val viaPipeline = s"$tmp/pipeline"; val viaRdd = s"$tmp/rdd"
+    EdfDFixtures.makeEdfD(d, onsets, labels, samplesPerRecord = nr)
+    val viaPipeline = s"$tmp/pipeline"; val viaRows = s"$tmp/rows"
     EdfPipeline.process(spark, Seq(c), viaPipeline)
     EdfPipeline.process(spark, Seq(d), viaPipeline, mode = "append")
-    graft.sources.EdfSink.write(graft.sources.EdfFile.read(spark, Seq(c)), viaRdd)
-    graft.sources.EdfSink.write(graft.sources.EdfFile.read(spark, Seq(d)), viaRdd, mode = "append")
+    def closedForm(rows: Seq[org.apache.spark.sql.Row]) = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, graft.sources.EdfFile.sampleSchema)
+    }
+    graft.sources.EdfSink.write(
+      closedForm(EdfDFixtures.edfCRows(c, "00.00.00", labels, nRecords = 1200, samplesPerRecord = nr)), viaRows)
+    graft.sources.EdfSink.write(
+      closedForm(EdfDFixtures.edfDRows(d, onsets, labels, samplesPerRecord = nr)), viaRows, mode = "append")
 
     def files(dir: String): Map[String, Array[Byte]] = {
       val root = Paths.get(dir)
@@ -96,7 +104,7 @@ class EdfPipelineSpec extends AnyFunSuite {
           .map(f => root.relativize(f).toString -> Files.readAllBytes(f)).toMap
       } finally it.close()
     }
-    val (got, want) = (files(viaPipeline), files(viaRdd))
+    val (got, want) = (files(viaPipeline), files(viaRows))
     assert(got.keySet == want.keySet)
     Seq("channels.json", "channel.json", "channel-00001.json", "sig1.ts.bin",
         "sig1-g01-part00000.ts.bin", "sig2-g01-part00000.ts.bin").foreach { f =>
