@@ -10,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   * the local core count rather than Spark's 200 (on a cluster, set
   * `spark.sql.shuffle.partitions` ≈ 2-3x total cores or rely on AQE
   * coalescing from a high initial value).
+  *
+  * The `file:` scheme is bound to [[graft.sources.NioLocalFileSystem]],
+  * which sets local permissions by syscall instead of forking `chmod`
+  * per create and mkdir. Hadoop caches `FileSystem` instances per scheme
+  * for the life of the JVM, whatever conf asks later, so the binding
+  * holds when a graft session creates the JVM's first `file:` file
+  * system, as the benchmark, the specs and `EdfPipeline.main` do; a JVM
+  * that touched `file:` earlier keeps Hadoop's own class.
   */
 object GraftSession {
   /** `SPARK_GRAFT_MASTER` overrides every caller's master — the lever
@@ -55,6 +63,7 @@ object GraftSession {
       // cardinality from metadata instead of a plan-build-time scan
       .config("spark.sql.cbo.planStats.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
   }
 
   def getOrCreate(): SparkSession = {

@@ -512,9 +512,18 @@ object PlanAudit {
       .collectFirst { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
         b.scan.description() }
       .getOrElse("")
+    // the scan hands batches to a ColumnarToRow boundary, never rows
+    val edfColumnar = edfDf.queryExecution.executedPlan.exists {
+      case c: org.apache.spark.sql.execution.ColumnarToRowExec => c.child.exists {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.supportsColumnar
+        case _ => false
+      }
+      case _ => false
+    }
     val edfChecks: Seq[(String, Boolean, String)] = Seq(
       ("edf_scan", edfScanDesc.contains("EqualTo(channel,"), "channel predicate pushed to EDF scan"),
-      ("edf_scan", edfScanDesc.contains("LessThan(ts_us,"), "time predicate pushed to EDF scan"))
+      ("edf_scan", edfScanDesc.contains("LessThan(ts_us,"), "time predicate pushed to EDF scan"),
+      ("edf_scan", edfColumnar, "EDF scan is columnar, under ColumnarToRow"))
 
     // Library-API sort-freedom: operator methods called DIRECTLY (not
     // through SparkEntry.queries, which adds the oracle-determinism sort

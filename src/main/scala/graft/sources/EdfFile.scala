@@ -144,6 +144,8 @@ object EdfFile {
         digMax = sigNum(6, "digital maximum", s)(_.toDouble),
         prefiltering = sigField(7, 80, s),
         nrSamples = sigNum(8, "number of samples", s)(_.toInt))
+      require(sig.nrSamples >= 0,
+        s"$path: EDF header field 'number of samples of signal $s' is negative: ${sig.nrSamples}")
       require(sig.isAnnotation || sig.digMin != sig.digMax,
         s"$path: EDF header fields 'digital minimum' and 'digital maximum' of signal $s " +
           s"('${sig.label}') are both ${sig.digMin}; calibration would divide by zero")

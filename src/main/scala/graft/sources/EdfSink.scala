@@ -455,11 +455,16 @@ object EdfSink {
     * bins it actually wrote, and the driver reconciles names/ordinals
     * at commit time (channel-cardinality work, zero extra sample I/O).
     *
-    * Consecutive samples almost always share their key (the EDF reader
-    * emits per-(record, channel) runs), so the pack caches the last key
-    * and its open block, and resolves a row with two memcmps + one
-    * floorDiv, falling back to the broadcast match and the open-block
-    * map only on run boundaries.
+    * The pack reads [[packInput]]: the scan's column batches when the
+    * projection sits directly on a columnar scan, else the projection's
+    * rows. Consecutive samples almost always share their key (the EDF
+    * scan emits one batch per (record, channel) run), so the pack caches
+    * the last key and its open block. A row's run check compares the
+    * `file`/`channel` strings by reference first and by bytes only when
+    * the references differ: a constant vector returns the same
+    * `UTF8String` for its whole run, so a batch row costs no memcmp. The
+    * broadcast match and the open-block map are consulted only on run
+    * boundaries.
     */
   private[graft] val PackBlock = 4096
   private[graft] val MaxOpenBins = 256 // bound pack memory on very wide inputs
@@ -480,7 +485,7 @@ object EdfSink {
       replayTag: Option[String],
       maxSamplesPerFile: Long): DataFrame = {
     val spark = projected.sparkSession
-    val packedRdd = projected.queryExecution.toRdd.mapPartitions { it =>
+    val packedRdd = packInput(projected).mapPartitions { it =>
         import org.apache.spark.sql.catalyst.InternalRow
         import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
         import org.apache.spark.unsafe.types.UTF8String
@@ -503,6 +508,8 @@ object EdfSink {
         // once per run, not once per sample
         var lastFile: UTF8String = null
         var lastChan: UTF8String = null
+        var lastFileRef: UTF8String = null
+        var lastChanRef: UTF8String = null
         var lastFileStr: String = null
         var lastChanStr: String = null
         var lastOff = 0L
@@ -511,7 +518,9 @@ object EdfSink {
         var lastKey: (String, String, Long) = null
         var lastBuf: PackBuf = null
         def newRun(f: UTF8String, c: UTF8String, rate: Double): Unit = {
-          // clone: the UTF8Strings point into the scan's reused row buffer
+          // clone: a row's UTF8Strings may point into a reused row buffer;
+          // the references serve only the identity check
+          lastFileRef = f; lastChanRef = c
           lastFile = f.clone(); lastChan = c.clone()
           lastFileStr = lastFile.toString; lastChanStr = lastChan.toString
           val mk = (lastFileStr, lastChanStr)
@@ -570,7 +579,8 @@ object EdfSink {
             while (out.isEmpty && it.hasNext) {
               val r = it.next()
               val f = r.getUTF8String(0); val c = r.getUTF8String(1)
-              if (lastFile == null || !f.equals(lastFile) || !c.equals(lastChan))
+              if (lastFile == null || !((f eq lastFileRef) || f.equals(lastFile)) ||
+                  !((c eq lastChanRef) || c.equals(lastChan)))
                 newRun(f, c, r.getDouble(5))
               if (!lastSkip) {
                 val sampleIdx = r.getLong(2) + lastOff
@@ -620,6 +630,56 @@ object EdfSink {
       }
     org.apache.spark.sql.graft.DatasetShim
       .internalCreateDataFrame(spark, packedRdd, packSchema)
+  }
+
+  /** The raw sample projection the pack reads. */
+  private[graft] def packProjection(samples: DataFrame): DataFrame =
+    samples.select(
+      col("file"), col("channel"), col("sample_idx"), col("ts_us"), col("value"),
+      col("rate"), col("unit"))
+
+  /** The pack's input rows, in `projected`'s column order. When
+    * `projected` executes as a plain-attribute projection (or none) over
+    * a `ColumnarToRow` boundary, the rows are views of the columnar
+    * child's batches, with the vectors reordered to the projection's
+    * columns: no row is copied into an `UnsafeRow`. Any other plan
+    * (shuffled, filtered or `createDataFrame` input) yields its `toRdd`.
+    */
+  private def packInput(projected: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    columnarRoute(projected.queryExecution.executedPlan) match {
+      case Some((child, ords)) =>
+        child.executeColumnar().mapPartitions { batches =>
+          import scala.jdk.CollectionConverters._
+          batches.flatMap { b =>
+            new org.apache.spark.sql.vectorized.ColumnarBatch(ords.map(b.column), b.numRows).rowIterator().asScala
+          }
+        }
+      case None => projected.queryExecution.toRdd
+    }
+
+  /** The columnar child of `plan` and, per output column of `plan`, its
+    * ordinal in that child's output, when `plan` is a `ColumnarToRowExec`
+    * (under `WholeStageCodegenExec` or not) with at most a `ProjectExec`
+    * of plain attributes above it; else None.
+    */
+  private[graft] def columnarRoute(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Option[(org.apache.spark.sql.execution.SparkPlan, Array[Int])] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec, WholeStageCodegenExec}
+    def ordinals(out: Seq[Attribute], child: Seq[Attribute]): Option[Array[Int]] = {
+      val ords = out.map(a => child.indexWhere(_.exprId == a.exprId))
+      if (ords.contains(-1)) None else Some(ords.toArray)
+    }
+    val body = plan match {
+      case w: WholeStageCodegenExec => w.child
+      case p => p
+    }
+    body match {
+      case c: ColumnarToRowExec => ordinals(c.output, c.child.output).map((c.child, _))
+      case ProjectExec(list, c: ColumnarToRowExec) if list.forall(_.isInstanceOf[AttributeReference]) =>
+        ordinals(list.map(_.toAttribute), c.child.output).map((c.child, _))
+      case _ => None
+    }
   }
 
   /** Packed blocks + the exchange: hash repartition on the
@@ -825,10 +885,7 @@ object EdfSink {
     //         entries to a job-temp file, and returns a channel-summary
     //         row; collecting those summaries (channel-cardinality) is
     //         what triggers the job.
-    val projected = samples.select(
-      col("file"), col("channel"), col("sample_idx"), col("ts_us"), col("value"),
-      col("rate"), col("unit"))
-    val dumpDf = packedDump(projected, bExisting, bExOffsets, replayTag, maxSamplesPerFile)
+    val dumpDf = packedDump(packProjection(samples), bExisting, bExOffsets, replayTag, maxSamplesPerFile)
 
     val segRows: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
       dumpDf.queryExecution.toRdd.mapPartitions { it0 =>

@@ -4,13 +4,14 @@ import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.EdfFile
 import graft.sources.EdfFile.EdfHeader
@@ -21,12 +22,16 @@ import graft.sources.EdfFile.EdfHeader
   * Scan planning is header-only driver work: [[EdfSplitPlanner]] reads
   * each file's header once, through the session's Hadoop conf, and plans
   * (file, record-range) input partitions that carry that header, so
-  * readers never re-read it. `EdfFile.read` is this scan. On top come
-  * V2 column pruning AND filter pushdown:
+  * readers never re-read it. `EdfFile.read` is this scan. The scan is
+  * columnar: [[EdfPartitionReader]] hands Spark one `ColumnarBatch` per
+  * (record, signal) run, and Spark inserts `ColumnarToRow` for row
+  * consumers, while `EdfSink`'s pack reads the batches themselves. On
+  * top come V2 column pruning AND filter pushdown:
   *
   *  - when the `value` column is NOT requested the partition reader
-  *    synthesizes rows from header arithmetic alone, never touching
-  *    sample bytes (a count(*) over 100 TB of EDF reads ~KB of headers);
+  *    synthesizes columns from header arithmetic alone, never touching
+  *    sample bytes (a count(*) over 100 TB of EDF+C reads ~KB of headers;
+  *    over EDF+D it reads each record's TAL slice for the onset);
   *  - `channel` / `channel_idx` predicates restrict which signals are
   *    DECODED: the reader seeks to each selected signal's slice inside
   *    the record instead of reading the whole interleaved record (the
@@ -229,6 +234,9 @@ final class EdfScan(paths: Seq[String], required: StructType, pushdown: EdfPushd
     pushed: Array[Filter], targetSplitBytes: Long, maxFilesPerTrigger: Int = 0)
     extends Scan with Batch {
   override def readSchema(): StructType = required
+  // columnar even when planning leaves no partitions, so the plan shape
+  // (ColumnarToRow over the scan) never depends on the data
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
     new EdfMicroBatchStream(paths, required.fieldNames,
@@ -336,12 +344,20 @@ private[sources] object EdfSplitPlanner {
   }
 }
 
+/** The scan is columnar only: every partition is read as
+  * [[EdfPartitionReader]] batches, and Spark inserts `ColumnarToRow`
+  * for row consumers.
+  */
 final class EdfReaderFactory(fields: Array[String],
     confEntries: Seq[(String, String)], pushdown: EdfPushdown) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EdfInputPartition]
-    new EdfPartitionReader(p, fields, confEntries, pushdown)
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new EdfPartitionReader(partition.asInstanceOf[EdfInputPartition], fields, confEntries, pushdown)
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "the edf scan is columnar: supportColumnarReads is true, so Spark reads it through createColumnarReader")
 }
 
 /** Offset for the EDF file stream: the set of files fully ingested so
@@ -495,25 +511,27 @@ final class EdfMicroBatchStream(roots: Seq[String], fields: Array[String],
   override def stop(): Unit = ()
 }
 
-/** Streams one record-range. If `value` is not in the projection, rows are
-  * synthesized from header arithmetic without reading sample bytes. With a
-  * channel keep-set pushed down, only the selected signals' byte slices
-  * are seek-read inside each record (plus the TAL slice for EDF+D) — the
-  * deselected signals' bytes are never transferred. With no keep-set the
-  * whole record reads in one call (fewer seeks beats sliced reads when
-  * every slice is needed anyway).
+/** Reads one record-range as columnar batches, one batch per (record,
+  * signal) run. Columns that are constant over a run (`file`,
+  * `channel_idx`, `channel`, `unit`, `rate`, `record_idx`) are
+  * [[ConstantColumnVector]]s set once per run; `sample_idx`, `ts_us` and
+  * `value` are reused on-heap vectors, each filled by one loop over the
+  * signal's contiguous int16 block. Their capacity is the largest
+  * samples-per-record among the selected signals, a header field the
+  * planner already parsed. A batch is valid until the next `next()`
+  * call.
   *
-  * The per-sample loop does no name matching, boxing or hashing: the
-  * projection is resolved once into one column kind per output field,
-  * each signal's calibration constants and rate are computed once, and
-  * `get()` returns ONE reused row filled with primitive setters. That row
-  * is valid until the next `next()` call — the scan's unsafe projection
-  * copies it before anything downstream buffers rows. Columns that are
-  * constant over a (record, signal) run are written once per run.
+  * Sample bytes are read only when `value` is projected; other columns
+  * come from header arithmetic. With a channel keep-set pushed down, only
+  * the selected signals' byte slices are seek-read inside each record;
+  * with no keep-set the whole record reads in one call (fewer seeks beats
+  * sliced reads when every slice is needed anyway). An EDF+D record's
+  * onset comes from its TAL slice, which is read alone first whenever the
+  * whole record is not read anyway or time bounds were pushed; an
+  * out-of-range record's sample bytes are then never transferred.
   */
 final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
-    confEntries: Seq[(String, String)], pushdown: EdfPushdown) extends PartitionReader[InternalRow] {
-  import EdfPartitionReader._
+    confEntries: Seq[(String, String)], pushdown: EdfPushdown) extends PartitionReader[ColumnarBatch] {
 
   private val needsValue = fields.contains("value")
   private val h: EdfHeader = part.header
@@ -524,7 +542,6 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   private val dataSignals = h.signals.zipWithIndex.filterNot(_._1.isAnnotation)
   private val selected = dataSignals.filter { case (s, i) => pushdown.keepSignal(s.label, i) }
   private val sliced = selected.size < dataSignals.size
-  private val fileUtf = UTF8String.fromString(part.path)
   private val labels = h.signals.map(s => UTF8String.fromString(s.label)).toArray
   private val units = h.signals.map(s => UTF8String.fromString(s.physDim)).toArray
 
@@ -535,22 +552,38 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   private val offset: Array[Double] = h.signals.map(_.offset).toArray
   private val rate: Array[Double] = h.signals.indices.map(h.sampleRate).toArray
 
-  // output columns split by how often they change: once per (record,
-  // signal) run, or per sample
-  private val (runOrds, runKinds) = columns(fields, perSample = false)
-  private val (sampleOrds, sampleKinds) = columns(fields, perSample = true)
-  private val row = new SpecificInternalRow(fields.toSeq.map(f => EdfFile.sampleSchema(f).dataType))
+  // one vector per output field, in projection order
+  private val capacity = math.max(1, selIdx.foldLeft(0)((m, s) => math.max(m, nrSamples(s))))
+  private val vectors: Array[ColumnVector] = fields.map { f =>
+    val t = EdfFile.sampleSchema(f).dataType
+    if (f == "sample_idx" || f == "ts_us" || f == "value") new OnHeapColumnVector(capacity, t)
+    else new ConstantColumnVector(capacity, t)
+  }
+  private val batch = new ColumnarBatch(vectors)
+  private def vector[V <: ColumnVector](f: String): V =
+    fields.indexOf(f) match { case -1 => null.asInstanceOf[V]; case o => vectors(o).asInstanceOf[V] }
+  private val fileVec = vector[ConstantColumnVector]("file")
+  private val channelIdxVec = vector[ConstantColumnVector]("channel_idx")
+  private val channelVec = vector[ConstantColumnVector]("channel")
+  private val unitVec = vector[ConstantColumnVector]("unit")
+  private val rateVec = vector[ConstantColumnVector]("rate")
+  private val recordIdxVec = vector[ConstantColumnVector]("record_idx")
+  private val sampleIdxVec = vector[OnHeapColumnVector]("sample_idx")
+  private val tsUsVec = vector[OnHeapColumnVector]("ts_us")
+  private val valueVec = vector[OnHeapColumnVector]("value")
+  if (fileVec != null) fileVec.setUtf8String(UTF8String.fromString(part.path))
 
-  // whole-record buffer (unpruned path) vs per-run slices
-  private val buf = if (!sliced) new Array[Byte](recBytes.toInt) else null
+  // whole-record buffer (all signals' samples needed) vs per-run slices
+  private val wholeRecord = needsValue && !sliced
+  private val buf = if (wholeRecord) new Array[Byte](recBytes.toInt) else null
   private val hasTsBounds = pushdown.tsLo != Long.MinValue || pushdown.tsHi != Long.MaxValue
-  // EDF+D TAL slice buffer: needed whenever the whole record is NOT read
-  // anyway (sliced path), and also whenever time bounds were pushed --
-  // reading the TAL alone first lets out-of-range records be skipped
-  // without ever transferring their sample bytes (the EDF+D counterpart
-  // of the contiguous record-window pruning done at plan time)
+  // EDF+D TAL slice buffer: read alone whenever the whole record is not
+  // read anyway, and also whenever time bounds were pushed -- reading the
+  // TAL first lets out-of-range records be skipped without transferring
+  // their sample bytes (the EDF+D counterpart of the contiguous
+  // record-window pruning done at plan time)
   private val talBuf =
-    if (h.isDiscontiguous && annIdx >= 0 && (sliced || hasTsBounds))
+    if (h.isDiscontiguous && annIdx >= 0 && (!wholeRecord || hasTsBounds))
       new Array[Byte](h.signals(annIdx).nrSamples * 2)
     else null
   // maximal contiguous runs of selected signals: ONE positioned read per
@@ -608,22 +641,20 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
   }
 
   private var rec = part.recordLo - 1
-  private var sigPos = 0      // index into selIdx
-  private var sampleIdx = 0
+  private var sigPos = selIdx.length // index into selIdx; past the end = next record
   private var recStartUs = 0L
 
-  private def readRecordData(recBase: Long): Unit =
-    if (!sliced) {
-      if (needsValue) in.readFully(recBase, buf)
-    } else if (needsValue) {
-      sigRuns.foreach { case (off, rbuf) => in.readFully(recBase + off, rbuf) }
-    }
+  private def readSamples(recBase: Long): Unit =
+    if (wholeRecord) in.readFully(recBase, buf)
+    else if (needsValue) sigRuns.foreach { case (off, rbuf) => in.readFully(recBase + off, rbuf) }
 
+  /** Move to the next record in range whose samples are wanted; false
+    * once the range is exhausted.
+    */
   private def advanceRecord(): Boolean = {
-    var found = false
-    while (!found) {
+    while (true) {
       rec += 1
-      if (rec >= part.recordHi) { sigPos = selIdx.length; return false }
+      if (rec >= part.recordHi) return false
       val recBase = h.headerBytes + rec * recBytes
       if (talBuf != null) {
         in.readFully(recBase + sigOffsets(annIdx), talBuf)
@@ -632,101 +663,72 @@ final class EdfPartitionReader(part: EdfInputPartition, fields: Array[String],
         // misses the pushed bounds is skipped entirely
         if (!hasTsBounds ||
             (recStartUs <= pushdown.tsHi && recStartUs + durUs >= pushdown.tsLo)) {
-          readRecordData(recBase)
-          found = true
+          readSamples(recBase)
+          return true
         }
       } else {
-        if (!sliced) {
-          if (needsValue || h.isDiscontiguous) in.readFully(recBase, buf)
-        } else readRecordData(recBase)
+        readSamples(recBase)
         recStartUs =
           if (h.isDiscontiguous && annIdx >= 0) h.talOnsetUs(buf, sigOffsets(annIdx).toInt, part.path, rec)
           else h.startUs + rec.toLong * durUs
-        found = true
+        return true
       }
     }
-    sigPos = 0
-    sampleIdx = 0
-    true
+    false
   }
 
   override def next(): Boolean = {
-    if (sigPos >= selIdx.length) return false
-    if (rec < part.recordLo && !advanceRecord()) return false
-    var s = selIdx(sigPos)
-    while (sampleIdx >= nrSamples(s)) {
-      sigPos += 1; sampleIdx = 0
-      if (sigPos >= selIdx.length && !advanceRecord()) return false
-      s = selIdx(sigPos)
-    }
-    val i = sampleIdx
-    if (i == 0) {
-      var c = 0
-      while (c < runOrds.length) {
-        val o = runOrds(c)
-        (runKinds(c): @annotation.switch) match {
-          case FileCol       => row.update(o, fileUtf)
-          case ChannelIdxCol => row.setInt(o, s)
-          case ChannelCol    => row.update(o, labels(s))
-          case UnitCol       => row.update(o, units(s))
-          case RateCol       => row.setDouble(o, rate(s))
-          case RecordIdxCol  => row.setLong(o, rec.toLong)
-        }
-        c += 1
+    if (selIdx.isEmpty) return false
+    var found = false
+    while (!found) {
+      sigPos += 1
+      if (sigPos >= selIdx.length) {
+        if (!advanceRecord()) return false
+        sigPos = 0
       }
+      found = nrSamples(selIdx(sigPos)) > 0
     }
-    val n = nrSamples(s)
-    var c = 0
-    while (c < sampleOrds.length) {
-      val o = sampleOrds(c)
-      (sampleKinds(c): @annotation.switch) match {
-        case SampleIdxCol => row.setLong(o, rec.toLong * n + i)
-        case TsUsCol      => row.setLong(o, recStartUs + i.toLong * durUs / n)
-        case ValueCol =>
-          val bytes = sigBytes(s)
-          val base = sigBase(s)
-          val lo = bytes(base + 2 * i) & 0xff
-          val hi = bytes(base + 2 * i + 1)
-          row.setDouble(o, bitValue(s) * (offset(s) + ((hi << 8) | lo).toDouble))
-      }
-      c += 1
-    }
-    sampleIdx += 1
+    fill(selIdx(sigPos))
     true
   }
 
-  override def get(): InternalRow = row
-  override def close(): Unit = if (opened) { try in.close() catch { case _: Throwable => } }
-}
-
-private[v2] object EdfPartitionReader {
-  // output column kinds; run kinds are constant over a (record, signal) run
-  final val FileCol = 0
-  final val ChannelIdxCol = 1
-  final val ChannelCol = 2
-  final val UnitCol = 3
-  final val RateCol = 4
-  final val RecordIdxCol = 5
-  final val SampleIdxCol = 6
-  final val TsUsCol = 7
-  final val ValueCol = 8
-
-  private def kindOf(field: String): Int = field match {
-    case "file"        => FileCol
-    case "channel_idx" => ChannelIdxCol
-    case "channel"     => ChannelCol
-    case "unit"        => UnitCol
-    case "rate"        => RateCol
-    case "record_idx"  => RecordIdxCol
-    case "sample_idx"  => SampleIdxCol
-    case "ts_us"       => TsUsCol
-    case "value"       => ValueCol
-    case other => throw new IllegalArgumentException(s"edf source has no column '$other'")
+  /** Set the batch to signal `s` of the current record. */
+  private def fill(s: Int): Unit = {
+    val n = nrSamples(s)
+    if (channelIdxVec != null) channelIdxVec.setInt(s)
+    if (channelVec != null) channelVec.setUtf8String(labels(s))
+    if (unitVec != null) unitVec.setUtf8String(units(s))
+    if (rateVec != null) rateVec.setDouble(rate(s))
+    if (recordIdxVec != null) recordIdxVec.setLong(rec.toLong)
+    if (sampleIdxVec != null) {
+      val first = rec.toLong * n
+      var i = 0
+      while (i < n) { sampleIdxVec.putLong(i, first + i); i += 1 }
+    }
+    if (tsUsVec != null) {
+      var i = 0
+      while (i < n) { tsUsVec.putLong(i, recStartUs + i.toLong * durUs / n); i += 1 }
+    }
+    if (valueVec != null) {
+      val bytes = sigBytes(s)
+      val base = sigBase(s)
+      val bv = bitValue(s)
+      val off = offset(s)
+      var i = 0
+      while (i < n) {
+        val lo = bytes(base + 2 * i) & 0xff
+        val hi = bytes(base + 2 * i + 1)
+        valueVec.putDouble(i, bv * (off + ((hi << 8) | lo).toDouble))
+        i += 1
+      }
+    }
+    batch.setNumRows(n)
   }
 
-  /** (output ordinals, kinds) of the per-run or the per-sample columns. */
-  private def columns(fields: Array[String], perSample: Boolean): (Array[Int], Array[Int]) = {
-    val cols = fields.indices.map(o => (o, kindOf(fields(o)))).filter(c => (c._2 >= SampleIdxCol) == perSample)
-    (cols.map(_._1).toArray, cols.map(_._2).toArray)
+  override def get(): ColumnarBatch = batch
+
+  override def close(): Unit = {
+    batch.close()
+    if (opened) { try in.close() catch { case _: Throwable => } }
   }
 }

@@ -432,6 +432,31 @@ class EdfDataSourceSpec extends AnyFunSuite {
     assertRows(bounded, expected.filter { r => val t = r.getAs[Long]("ts_us"); t >= lo && t < hi },
       minRows = 12)
   }
+  test("EDF+D count() reads the header and each record's TAL slice, no sample bytes") {
+    val tmp = java.nio.file.Files.createTempDirectory("edfdcount")
+    val p = s"$tmp/disc.edf"
+    val onsets = (0 until 40).map(_ * 2.0)
+    EdfDFixtures.makeEdfD(p, onsets, Seq("D1", "D2"), samplesPerRecord = Seq(64, 64))
+    val h = EdfFile.readHeader(p)
+    val talBytes = h.signals(h.annotationIndex).nrSamples * 2L
+    @annotation.nowarn("cat=deprecation")
+    def bytesRead(): Long = {
+      import scala.jdk.CollectionConverters._
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala.map(_.getBytesRead).sum
+    }
+    // one header read, as planning does it, measured on its own
+    val b0 = bytesRead()
+    EdfFile.readHeader(p, spark.sparkContext.hadoopConfiguration)
+    val headerRead = bytesRead() - b0
+    val b1 = bytesRead()
+    assert(spark.read.format("edf").load(p).count() == 40L * 128)
+    val countRead = bytesRead() - b1
+    assert(countRead <= headerRead + h.nbDataRec * talBytes,
+      s"count read $countRead bytes; header $headerRead + ${h.nbDataRec} TALs x $talBytes")
+    // executors outside this JVM count their reads in their own statistics
+    if (spark.sparkContext.isLocal)
+      assert(countRead >= headerRead + h.nbDataRec * talBytes, s"every TAL slice read: $countRead")
+  }
 }
 
 /** The local filesystem under a scheme that only a session's Hadoop conf

@@ -101,7 +101,8 @@ class EdfFileSpec extends AnyFunSuite {
   test("hostile headers fail with the file and the field named") {
     val tmp = java.nio.file.Files.createTempDirectory("edfhostile")
     // one data signal: the signal count sits at byte 252, the record
-    // duration at 244, and signal 0's digital min/max at 376/384
+    // duration at 244, signal 0's digital min/max at 376/384 and its
+    // samples per record at 472
     def variant(name: String)(patch: Array[Byte] => Array[Byte]): String = {
       val p = s"$tmp/$name.edf"
       EdfDFixtures.makeEdfC(p, "00.00.00", Seq("C3"))
@@ -118,7 +119,8 @@ class EdfFileSpec extends AnyFunSuite {
       variant("nsneg")(put(_, 252, 4, "-1")) -> "'number of signals' is negative: -1",
       variant("duration")(put(_, 244, 8, "x.5")) -> "'duration of a data record' is not a number: 'x.5'",
       variant("digrange")(b => put(put(b, 376, 8, "7"), 384, 8, "7")) ->
-        "'digital minimum' and 'digital maximum' of signal 0 ('C3') are both 7.0")
+        "'digital minimum' and 'digital maximum' of signal 0 ('C3') are both 7.0",
+      variant("nrneg")(put(_, 472, 8, "-4")) -> "'number of samples of signal 0' is negative: -4")
     cases.foreach { case (p, field) =>
       val e = intercept[IllegalArgumentException](EdfFile.readHeader(p))
       assert(e.getMessage.contains(p) && e.getMessage.contains(field), e.getMessage)

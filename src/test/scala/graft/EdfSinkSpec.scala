@@ -699,4 +699,39 @@ class EdfSinkSpec extends AnyFunSuite {
     assert(bins.forall(n => n.startsWith("night1__") || n.startsWith("night2__")))
     bins.foreach { n => assert(Files.size(Paths.get(s"$outDir/$n")) == 12000L * 8) }
   }
+
+  test("the pack reads a direct EDF scan's column batches and any other input's rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val tmp = Files.createTempDirectory("edfroute")
+    val src = s"$tmp/watch/r.edf"
+    Files.createDirectories(Paths.get(s"$tmp/watch"))
+    makeEdfC(src, "00.00.00", Seq("C3", "C4"))
+    val packCols = Seq("file", "channel", "sample_idx", "ts_us", "value", "rate", "unit")
+    def route(df: DataFrame) = EdfSink.columnarRoute(EdfSink.packProjection(df).queryExecution.executedPlan)
+
+    // a batch read: the columnar child, its vectors mapped to the pack's columns
+    val (child, ords) = route(EdfFile.read(spark, Seq(src))).getOrElse(fail("EdfFile.read must take the batch route"))
+    assert(child.supportsColumnar)
+    assert(ords.map(child.output(_).name).toSeq == packCols)
+
+    // a stream micro-batch: the plan under the sink's write node
+    val q = spark.readStream.format("edf").load(s"$tmp/watch")
+      .writeStream.format("noop").trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$tmp/ckpt").start()
+    q.awaitTermination()
+    val micro = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.children.head
+    assert(micro.collectFirst {
+      case s: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => s }.isDefined, micro.toString)
+    val (microChild, microOrds) = EdfSink.columnarRoute(micro).getOrElse(fail(s"micro-batch plan:\n$micro"))
+    assert(microOrds.map(microChild.output(_).name).toSeq == EdfFile.sampleSchema.fieldNames.toSeq)
+
+    // rows built by createDataFrame, and a filtered scan, keep toRdd
+    val rows = spark.createDataFrame(spark.sparkContext.parallelize(EdfDFixtures.edfCRows(src, "00.00.00",
+      Seq("C3", "C4"))), EdfFile.sampleSchema)
+    assert(route(rows).isEmpty, "createDataFrame input packs its rows")
+    assert(route(EdfFile.read(spark, Seq(src)).filter(col("sample_idx") < 4)).isEmpty,
+      "a filtered scan packs the filter's rows")
+  }
 }
