@@ -532,8 +532,6 @@ object PlanAudit {
     // expensive stage of an otherwise exchange-free plan. The narrow
     // scan-shaped operators must in fact plan with ZERO exchanges.
     val t = Tables(spark, sfDir)
-    def lpaRoundPlan(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      operators.Analytics.lpaLabels(e, 1, materializeAll = false)
     def libPlan(df: org.apache.spark.sql.DataFrame): String = {
       df.collect()
       df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) +
@@ -566,14 +564,16 @@ object PlanAudit {
         "incremental refresh carries no global sort (delta join + semi-joined compute)"),
       ("lib:lpa_round", {
         import org.apache.spark.sql.functions.col
-        // one LPA round with the last round left lazy: the vote count
-        // must combine map-side and the argmax must be a struct-min
-        // partial aggregate, never a window (a fused mode() round was
-        // measured ~20 % slower at sf1 — see Analytics.lpaLabels)
+        // one lazy LPA round (nothing persisted or checkpointed): the
+        // vote count must combine map-side and the argmax must be a
+        // struct-min partial aggregate, never a window (a fused mode()
+        // round was measured ~20 % slower at sf1 — see
+        // Analytics.lpaRound)
         val e = t.lineitem.limit(64)
           .select((col("l_partkey") % 8L).as("a"), (col("l_suppkey") % 8L + 8L).as("b"))
           .distinct()
-        val plan = libPlan(lpaRoundPlan(e))
+        val labels = e.select(col("a").as("node"), col("a").as("lbl")).distinct()
+        val plan = libPlan(operators.Analytics.lpaRound(labels, e))
         plan.contains("partial_min") && !plan.contains("Window")
       }, "LPA round: map-side votes + struct-min pick, window-free (kernel plan)"),
       ("lib:neardup_incremental", {

@@ -770,8 +770,7 @@ object Analytics {
     * does not vote, per the original formulation). Isolated nodes cannot
     * occur (every node comes from an edge).
     */
-  private[graft] def lpaLabels(e: DataFrame, iters: Int,
-                               materializeAll: Boolean = true): DataFrame = {
+  private[graft] def lpaLabels(e: DataFrame, iters: Int): DataFrame = {
     // label rounds localCheckpoint (the starComponents discipline), not
     // persist+count: eager materialization PLUS lineage truncation, so
     // each round plans a flat LogicalRDD instead of the whole join chain
@@ -783,40 +782,38 @@ object Analytics {
     // round's labels⋈edges join exchanges only the node-sized label
     // relation — a checkpointed LogicalRDD would surface
     // UnknownPartitioning and re-exchange the 2|E| edge rows every round.
-    val edgesRaw = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
+    val edges = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("a"))
-    // materializeAll = false (plan-audit hook): edges stay LAZY — the
-    // hook only explains the one-round plan, so a persist would leak an
-    // un-unpersistable cache entry into the audit session (review r17
-    // ADVICE); the round-shape check does not need the cache node
-    val edges = if (materializeAll) edgesRaw.persist() else edgesRaw
+      .persist()
     var labels = edges.select(col("a").as("node")).distinct()
       .withColumn("lbl", col("node"))
       .localCheckpoint()
-    for (i <- 1 to iters) {
-      // NOTE (r18, measured rejection): fusing vote count + argmax into
-      // one `mode() WITHIN GROUP (ORDER BY lbl)` aggregation is
-      // bit-identical (most frequent, smallest label on ties — oracle
-      // verified) and halves the exchanges per round, but benched ~20 %
-      // SLOWER at sf1 (15.1→19.3 s warm) and a wash at sf0.1: mode's
-      // ObjectHashAggregate pays a per-group OpenHashMap build, map
-      // serialization across the exchange, and the 128-key sort-based
-      // fallback — more than the second node-keyed exchange of
-      // partially-combined counts costs. The two-aggregate codegen'd
-      // HashAggregate round stays.
-      val votes = labels.join(edges, col("node") === col("a"))
-        .groupBy(col("b"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-      val next = votes
-        .groupBy(col("b"))
-        .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("w"))
-        .select(col("b").as("node"), col("w").getField("l").as("lbl"))
-      // the last audit-hook round stays lazy so the round shape is
-      // inspectable; declared-query rounds all materialize
-      labels = if (materializeAll || i < iters) next.localCheckpoint() else next
-    }
-    if (materializeAll) edges.unpersist(false)
+    for (_ <- 1 to iters) labels = lpaRound(labels, edges).localCheckpoint()
+    edges.unpersist(false)
     labels
+  }
+
+  /** One synchronous LPA round: `labels (node, lbl)` over the directed
+    * `edges (a, b)` -> every `b`'s new label (node, lbl).
+    */
+  private[graft] def lpaRound(labels: DataFrame, edges: DataFrame): DataFrame = {
+    // NOTE (r18, measured rejection): fusing vote count + argmax into
+    // one `mode() WITHIN GROUP (ORDER BY lbl)` aggregation is
+    // bit-identical (most frequent, smallest label on ties — oracle
+    // verified) and halves the exchanges per round, but benched ~20 %
+    // SLOWER at sf1 (15.1→19.3 s warm) and a wash at sf0.1: mode's
+    // ObjectHashAggregate pays a per-group OpenHashMap build, map
+    // serialization across the exchange, and the 128-key sort-based
+    // fallback — more than the second node-keyed exchange of
+    // partially-combined counts costs. The two-aggregate codegen'd
+    // HashAggregate round stays.
+    val votes = labels.join(edges, col("node") === col("a"))
+      .groupBy(col("b"), col("lbl"))
+      .agg(count(lit(1)).as("c"))
+    votes
+      .groupBy(col("b"))
+      .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("w"))
+      .select(col("b").as("node"), col("w").getField("l").as("lbl"))
   }
 
   /** B11: non-equi range join against a broadcast band table. */

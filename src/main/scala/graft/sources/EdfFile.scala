@@ -164,8 +164,10 @@ object EdfFile {
   /** Read a file's header via the Hadoop FS API (driver-side, tiny read).
     * A hostile header fails with an `IllegalArgumentException` naming the
     * file and the field: a file shorter than its header, a count or a
-    * number that does not parse, a negative signal count, or a data
-    * signal whose digital range is empty.
+    * number that does not parse, a negative signal count, a data signal
+    * whose digital range is empty, or a data record larger than the
+    * file's data bytes (when it claims any record) or than
+    * `Int.MaxValue` bytes.
     */
   def readHeader(path: String, conf: Configuration = new Configuration()): EdfHeader = {
     val p = new Path(path)
@@ -181,7 +183,16 @@ object EdfFile {
         }
         b
       }
-      parseHeader(path, head(256 + signalCount(path, head(256)) * 256))
+      val h = parseHeader(path, head(256 + signalCount(path, head(256)) * 256))
+      // readers size their record buffers from the header before any data
+      // read, so a record larger than the file's data bytes (or than one
+      // array holds) is refused here, before anything allocates it
+      val dataBytes = fs.getFileStatus(p).getLen - h.headerBytes
+      def tooLarge(limit: String) = s"$path: EDF header fields 'number of samples' give " +
+        s"${h.recordBytes} bytes per data record, more than $limit"
+      require(h.recordBytes <= Int.MaxValue, tooLarge(s"${Int.MaxValue}"))
+      require(h.nbDataRec <= 0 || h.recordBytes <= dataBytes, tooLarge(s"the file's $dataBytes data bytes"))
+      h
     } finally in.close()
   }
 

@@ -17,19 +17,15 @@ import org.apache.spark.sql.types._
   * unit, rate, type, group, lastAnnotation, contiguousChunks, properties;
   * reference base.py:47-65).
   *
-  * Scale shape: sample data is hash-partitioned by (channel, part) and
-  * each task streams whole parts to their files (a part never splits
-  * across tasks). Channel MANIFESTS are also assembled distributedly:
-  * each channel's contiguous-chunk array is streamed to its manifest file
-  * by the executor that owns the channel's chunk rows (a gap-heavy 100 TB
-  * corpus can have millions of chunks per channel — they never visit the
-  * driver), and the driver only stream-concatenates the finished
-  * per-channel manifest files into `channels.json` (file-level I/O,
-  * memory O(copy buffer)). The only driver-side plan state is the
-  * (file, channel, part) name index — bounded by channels × parts,
-  * independent of both sample and chunk volume. Single channels larger
-  * than one task should own are range-partitioned on sample_idx into
-  * numbered part files via `maxSamplesPerFile`.
+  * Scale shape: sample data is hash-partitioned by (file, channel) and
+  * one task owns each channel: it streams the channel's samples to its
+  * binary and its contiguous-chunk entries to a chunk file (a gap-heavy
+  * 100 TB corpus can have millions of chunks per channel — they never
+  * visit the driver), and returns one summary row. The driver only
+  * stream-concatenates the finished per-channel manifest files into
+  * `channels.json` (file-level I/O, memory O(copy buffer)). The only
+  * driver-side plan state is the (file, channel) name index — bounded by
+  * channels, independent of both sample and chunk volume.
   *
   * CHANNEL DIRECTORY: `write` (CONTINUOUS channels) and `writeSpikes`
   * (UNIT channels) share one directory protocol, parameterised by a
@@ -81,24 +77,18 @@ object EdfSink {
 
   /** Gap boundary: delta-ts > 2x the sampling period (reference
     * base.py:322-342). Detection is FUSED into the binary dump pass (see
-    * `write` step 1): the dump's shuffle already delivers every
-    * (file, channel, part) stream to one task sorted by sample_idx, so
-    * the task detects boundaries between consecutive rows for free while
-    * streaming values to the binary file, and emits one SEGMENT row per
-    * contiguous run it saw. No second pass over sample volume exists —
-    * the old design's sample-volume lag self-join re-derived ordering
-    * the dump's sort had already established (the probe-measured 5 MiB/s
-    * sink floor).
+    * `write`): the dump's shuffle already delivers every (file, channel)
+    * stream to one task sorted by sample_idx, so the task detects
+    * boundaries between consecutive rows for free while streaming values
+    * to the binary file, and writes one chunk entry per contiguous run it
+    * sees. No second pass over sample volume exists — the old design's
+    * sample-volume lag self-join re-derived ordering the dump's sort had
+    * already established (the probe-measured 5 MiB/s sink floor).
     *
-    * Segment rows are chunk-cardinality, never sample-cardinality (see
-    * [[discSegSchema]]). `gap_before` = false marks a part's FIRST
-    * segment, whose continuity with the previous part is unknown to the
-    * writing task; the manifest assembly (which receives each channel's
-    * segments sorted by start_index) merges such a segment into its
-    * predecessor when the seam shows no gap. Chunk stats (end_ts, n)
-    * come from the rows actually streamed, so filtered/non-dense
-    * sample_idx input yields self-consistent manifests — a missing
-    * index is a chunk boundary only if it leaves a real time gap.
+    * Chunk stats come from the rows actually streamed, so
+    * filtered/non-dense sample_idx input yields self-consistent manifests
+    * — a missing index is a chunk boundary only if it leaves a real time
+    * gap.
     */
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -107,10 +97,8 @@ object EdfSink {
     } + "\""
 
   /** A manifest namespace of the channel directory (see the object doc).
-    * `sampled` channels carry a rate (matched within 2 %) and may split
-    * into `-partNNNNN` files, so their generation files always carry a
-    * part number; spike channels have neither and write one file per
-    * generation.
+    * `sampled` channels carry a rate (matched within 2 %); spike channels
+    * have none. Both write one binary per channel per run.
     */
   private final case class Namespace(
       chanType: String,
@@ -275,32 +263,31 @@ object EdfSink {
 
   /** One run's reconcile against the destination (channel-cardinality,
     * driver-side): the existing channel each incoming channel continues,
-    * the final binary name of every (file, channel, part), and every
-    * output ordinal.
+    * the final binary name of every (file, channel), and every output
+    * ordinal.
     */
   private case class DirPlan(
       ns: Namespace,
       existing: Seq[ExistingChannel],
       matched: Map[(String, String), ExistingChannel],
       newKeys: Seq[(String, String)],
-      baseNames: Map[(String, String), String],   // new channels' unsuffixed names
-      names: Map[(String, String, Long), String], // (file, channel, part) -> final binary
+      names: Map[(String, String), String], // (file, channel) -> final binary
       ords: Map[(String, String), Int]) {
     def matchedOrds: Seq[Int] = matched.values.map(_.ord).toSeq.sorted
   }
 
-  /** Plan the incoming channels `(key, rate, parts)`. New channels take
-    * the overwrite naming (`planNames`, plus `-partNNNNN` when a channel
-    * has several parts); matched channels continue as generation files
-    * after the existing binaries, never overwriting them. Ordinals:
-    * existing channels keep theirs, new channels append after in sorted
-    * (file, channel) order — the index order.
+  /** Plan the incoming channels `(key, rate)`. New channels take the
+    * overwrite naming (`planNames`); matched channels continue as
+    * generation files `<base>-gNN<suffix>` after the existing binaries,
+    * never overwriting them. Ordinals: existing channels keep theirs, new
+    * channels append after in sorted (file, channel) order — the index
+    * order.
     */
   private def planDir(ns: Namespace, existing: Seq[ExistingChannel],
-                      incoming: Seq[((String, String), Double, Seq[Long])]): DirPlan = {
+                      incoming: Seq[((String, String), Double)]): DirPlan = {
     val sorted = incoming.sortBy(_._1)
     val keys = sorted.map(_._1)
-    val matched = sorted.flatMap { case (k, rate, _) =>
+    val matched = sorted.flatMap { case (k, rate) =>
       matchExisting(existing, k._2, rate, ns).map(k -> _)
     }.toMap
     matched.groupBy(_._2.ord).foreach { case (_, ms) =>
@@ -309,38 +296,25 @@ object EdfSink {
           s"append one session per channel at a time: ${ms.keys.toSeq.sorted}")
     }
     val newKeys = keys.filterNot(matched.contains)
-    val baseNames = planNames(newKeys, keys.map(_._1).distinct.size > 1, ns.binSuffix)
-    val names: Map[(String, String, Long), String] = sorted.flatMap { case (k, _, ps) =>
-      val parts = ps.sorted
-      def suffixed(base: String, tag: String) = base.stripSuffix(ns.binSuffix) + tag + ns.binSuffix
-      matched.get(k) match {
-        case Some(ex) =>
-          val base = ex.binaryFiles.headOption.getOrElse(binName(k._1, k._2, multiFile = false, ns.binSuffix))
-            .stripSuffix(ns.binSuffix)
-            .replaceAll(if (ns.sampled) "(-g\\d{2})?(-part\\d{5})?$" else "(-g\\d{2})?$", "") + ns.binSuffix
-          val gen = f"-g${ex.binaryFiles.size}%02d"
-          parts.zipWithIndex.map { case (p, i) =>
-            (k._1, k._2, p) -> suffixed(base, if (ns.sampled) f"$gen-part$i%05d" else gen)
-          }
-        case None =>
-          parts.map { p =>
-            (k._1, k._2, p) ->
-              (if (parts.size == 1) baseNames(k) else suffixed(baseNames(k), f"-part$p%05d"))
-          }
+    val names = planNames(newKeys, keys.map(_._1).distinct.size > 1, ns.binSuffix) ++
+      matched.map { case (k, ex) =>
+        val base = ex.binaryFiles.headOption.getOrElse(binName(k._1, k._2, multiFile = false, ns.binSuffix))
+          .stripSuffix(ns.binSuffix).replaceAll("(-g\\d{2})?$", "")
+        k -> f"$base-g${ex.binaryFiles.size}%02d${ns.binSuffix}"
       }
-    }.toMap
-    // part suffixes could in principle collide with a sibling channel's
-    // sanitized name — uniqueness must hold over the FINAL names, and in
-    // append mode new names must also miss every committed binary
+    // a generation suffix could in principle collide with a sibling
+    // channel's sanitized name — uniqueness must hold over the FINAL
+    // names, and in append mode new names must also miss every committed
+    // binary
     require(names.values.toSet.size == names.size,
-      s"binary names not unique after part suffixing: ${names.values.toSeq.sorted}")
+      s"binary names not unique after generation suffixing: ${names.values.toSeq.sorted}")
     val committed = existing.flatMap(_.binaryFiles).toSet
     val clash = names.values.toSeq.filter(committed.contains)
     require(clash.isEmpty, s"append mode: planned binaries collide with committed ones: $clash " +
       "(an unmatched incoming channel shares a sanitized name with an existing channel — rename it)")
     val ords = matched.map { case (k, ex) => k -> ex.ord } ++
       newKeys.zipWithIndex.map { case (k, i) => k -> (existing.size + i) }
-    DirPlan(ns, existing, matched, newKeys, baseNames, names, ords)
+    DirPlan(ns, existing, matched, newKeys, names, ords)
   }
 
   /** Before the commit job. Stage matched channels' manifests out of the
@@ -350,17 +324,14 @@ object EdfSink {
     * half-overwritten file, and recoverable by [[recoverDir]] if this
     * run dies mid-way. Then pre-clean final destinations so the commit's
     * renames can never silently lose to a previous run's files.
-    * Overwrite: planned destinations, any other part layout of the same
-    * base names, and this namespace's manifests and index (only its own:
-    * the other namespace in the same outDir is untouched). Append: only
-    * this run's planned NEW files and the NEW ordinals' manifest slots
-    * (stale output from a crashed run).
+    * Overwrite: planned destinations, and this namespace's manifests and
+    * index (only its own: the other namespace in the same outDir is
+    * untouched). Append: only this run's planned NEW files and the NEW
+    * ordinals' manifest slots (stale output from a crashed run).
     */
   private def prepareDir(fs: FileSystem, outPath: Path, plan: DirPlan, overwrite: Boolean): Unit = {
     val ns = plan.ns
     def delete(name: String): Boolean = fs.delete(new Path(outPath, name), false)
-    def deleteGlob(pattern: String): Unit =
-      fs.globStatus(new Path(outPath, pattern)).foreach(s => fs.delete(s.getPath, false))
     plan.matchedOrds.foreach { o =>
       val dest = new Path(outPath, ns.stagedName(o))
       fs.delete(dest, false)
@@ -369,11 +340,9 @@ object EdfSink {
     }
     plan.names.values.foreach(delete)
     if (overwrite) {
-      plan.baseNames.values.foreach { base =>
-        delete(base)
-        if (ns.sampled) deleteGlob(base.stripSuffix(ns.binSuffix) + "-part*" + ns.binSuffix)
-      }
-      delete(ns.manifestName(0)); deleteGlob(s"${ns.stem}-*.json"); delete(ns.index)
+      delete(ns.manifestName(0))
+      fs.globStatus(new Path(outPath, s"${ns.stem}-*.json")).foreach(s => fs.delete(s.getPath, false))
+      delete(ns.index)
     } else {
       plan.newKeys.foreach(k => delete(ns.manifestName(plan.ords(k))))
     }
@@ -426,7 +395,7 @@ object EdfSink {
   private def finishDir(fs: FileSystem, outPath: Path, plan: DirPlan): String = {
     val ns = plan.ns
     require(plan.ords.values.forall(o => fs.exists(new Path(outPath, ns.manifestName(o)))),
-      s"${ns.chanType} manifest assembly incomplete")
+      s"${ns.chanType} manifest commit incomplete")
     plan.matchedOrds.foreach(o => fs.delete(new Path(outPath, ns.stagedName(o)), false))
     val idxPath = new Path(outPath, ns.index)
     val idxOut = new BufferedOutputStream(fs.create(idxPath, true), 1 << 16)
@@ -443,16 +412,16 @@ object EdfSink {
 
   /** The record-packed block relation for a raw sample projection
     * `(file, channel, sample_idx, ts_us, value, rate, unit)`:
-    * map-side PACK into per-(file, channel, part) blocks of up to
+    * map-side PACK into per-(file, channel) blocks of up to
     * [[PackBlock]] samples. Routing state (append match -> sample_idx
     * shift, replay-tag skip) is resolved INSIDE the pack loop from the
     * broadcast existing-channel set with a last-run cache, so the sink
     * plans nothing from a separate data scan: the r16 design decoded
-    * every sample TWICE (a plan scan to discover (file, channel, part)
+    * every sample TWICE (a plan scan to discover (file, channel)
     * keys, then the pack) and the plan scan had become the measured
     * ceiling — 4.5 s of the 4 GiB probe's 5.2 s wall (r16 verdict #1).
     * Discovery now rides the pack itself: each reduce task reports the
-    * bins it actually wrote, and the driver reconciles names/ordinals
+    * channels it actually wrote, and the driver reconciles names/ordinals
     * at commit time (channel-cardinality work, zero extra sample I/O).
     *
     * The pack reads [[packInput]]: the scan's column batches when the
@@ -471,7 +440,6 @@ object EdfSink {
   private[graft] val packSchema = StructType(Seq(
     StructField("file", StringType, nullable = false),
     StructField("channel", StringType, nullable = false),
-    StructField("part", LongType, nullable = false),
     StructField("first_idx", LongType, nullable = false),
     StructField("idxs", ArrayType(LongType, containsNull = false), nullable = true),
     StructField("tss", ArrayType(LongType, containsNull = false), nullable = false),
@@ -482,8 +450,7 @@ object EdfSink {
   private def packedBlocks(projected: DataFrame,
       bExisting: org.apache.spark.broadcast.Broadcast[Seq[ExistingChannel]],
       bExOffsets: org.apache.spark.broadcast.Broadcast[Map[Int, Long]],
-      replayTag: Option[String],
-      maxSamplesPerFile: Long): DataFrame = {
+      replayTag: Option[String]): DataFrame = {
     val spark = projected.sparkSession
     val packedRdd = packInput(projected).mapPartitions { it =>
         import org.apache.spark.sql.catalyst.InternalRow
@@ -495,38 +462,34 @@ object EdfSink {
           val value = new Array[Double](PackBlock)
           var n = 0
         }
-        val open = new java.util.HashMap[(String, String, Long), PackBuf]()
+        val open = new java.util.HashMap[(String, String), PackBuf]()
         val existing = bExisting.value
         val exOff = bExOffsets.value
         // per-(file, channel) route memo: (sample_idx shift, replay skip).
         // The append match is the same deterministic matchExisting the
         // driver reconcile re-applies to the discovered keys.
         val routeMemo = new java.util.HashMap[(String, String), (Long, Boolean)]()
-        // run cache: last (file, channel) -> route, last part -> key
-        // tuple, and that key's open block (null until looked up, and
-        // again once the block is emitted) — the open-block map is hashed
-        // once per run, not once per sample
+        // run cache: last (file, channel) -> route, key tuple, and that
+        // key's open block (null until looked up, and again once the
+        // block is emitted) — the open-block map is hashed once per run,
+        // not once per sample
         var lastFile: UTF8String = null
         var lastChan: UTF8String = null
         var lastFileRef: UTF8String = null
         var lastChanRef: UTF8String = null
-        var lastFileStr: String = null
-        var lastChanStr: String = null
         var lastOff = 0L
         var lastSkip = false
-        var lastPart = Long.MinValue
-        var lastKey: (String, String, Long) = null
+        var lastKey: (String, String) = null
         var lastBuf: PackBuf = null
         def newRun(f: UTF8String, c: UTF8String, rate: Double): Unit = {
           // clone: a row's UTF8Strings may point into a reused row buffer;
           // the references serve only the identity check
           lastFileRef = f; lastChanRef = c
           lastFile = f.clone(); lastChan = c.clone()
-          lastFileStr = lastFile.toString; lastChanStr = lastChan.toString
-          val mk = (lastFileStr, lastChanStr)
+          val mk = (lastFile.toString, lastChan.toString)
           var r = routeMemo.get(mk)
           if (r == null) {
-            r = matchExisting(existing, lastChanStr, rate, Continuous) match {
+            r = matchExisting(existing, mk._2, rate, Continuous) match {
               case Some(ex) =>
                 (exOff.getOrElse(ex.ord, 0L), replayTag.exists(t => ex.appendTag.contains(t)))
               case None => (0L, false)
@@ -534,9 +497,9 @@ object EdfSink {
             routeMemo.put(mk, r)
           }
           lastOff = r._1; lastSkip = r._2
-          lastPart = Long.MinValue; lastKey = null; lastBuf = null
+          lastKey = mk; lastBuf = null
         }
-        def emit(key: (String, String, Long), b: PackBuf): InternalRow = {
+        def emit(key: (String, String), b: PackBuf): InternalRow = {
           val n = b.n
           // ascending check; a non-EDF-ordered arrival sorts its block
           var sorted = true; var dense = true
@@ -559,16 +522,15 @@ object EdfSink {
             dense = { var ok = true; var j = 1
               while (ok && j < n) { ok = idxA(j) - idxA(j - 1) == 1; j += 1 }; ok }
           }
-          val row = new GenericInternalRow(9)
+          val row = new GenericInternalRow(8)
           row.update(0, UTF8String.fromString(key._1))
           row.update(1, UTF8String.fromString(key._2))
-          row.setLong(2, key._3)
-          row.setLong(3, idxA(0))
-          row.update(4, if (dense) null else UnsafeArrayData.fromPrimitiveArray(idxA))
-          row.update(5, UnsafeArrayData.fromPrimitiveArray(tsA))
-          row.update(6, UnsafeArrayData.fromPrimitiveArray(valA))
-          row.setDouble(7, b.rate)
-          row.update(8, UTF8String.fromString(b.unit))
+          row.setLong(2, idxA(0))
+          row.update(3, if (dense) null else UnsafeArrayData.fromPrimitiveArray(idxA))
+          row.update(4, UnsafeArrayData.fromPrimitiveArray(tsA))
+          row.update(5, UnsafeArrayData.fromPrimitiveArray(valA))
+          row.setDouble(6, b.rate)
+          row.update(7, UTF8String.fromString(b.unit))
           b.n = 0
           row
         }
@@ -584,18 +546,12 @@ object EdfSink {
                 newRun(f, c, r.getDouble(5))
               if (!lastSkip) {
                 val sampleIdx = r.getLong(2) + lastOff
-                val part = Math.floorDiv(sampleIdx, maxSamplesPerFile)
-                if (part != lastPart || lastKey == null) {
-                  lastPart = part
-                  lastKey = (lastFileStr, lastChanStr, part)
-                  lastBuf = null
-                }
                 if (lastBuf == null) lastBuf = open.get(lastKey)
                 if (lastBuf == null) {
                   if (open.size >= MaxOpenBins) {
                     // flush the fullest open block to bound memory at
                     // (MaxOpenBins x PackBlock x 24 B) on very wide inputs
-                    var maxK: (String, String, Long) = null; var maxN = -1
+                    var maxK: (String, String) = null; var maxN = -1
                     val e = open.entrySet().iterator()
                     while (e.hasNext) {
                       val en = e.next()
@@ -683,8 +639,8 @@ object EdfSink {
   }
 
   /** Packed blocks + the exchange: hash repartition on the
-    * (file, channel, part) bin key and a BLOCK-cardinality sort on
-    * (bin, first_idx). The keys are the raw strings — at block
+    * (file, channel) key and a BLOCK-cardinality sort on
+    * (file, channel, first_idx). The keys are the raw strings — at block
     * cardinality (1 row per 4096 samples) the hash/compare cost of a
     * string key is noise, and it frees the sink from any pre-computed
     * key -> id map (the r16 plan scan this design deleted).
@@ -692,41 +648,19 @@ object EdfSink {
   private def packedDump(projected: DataFrame,
       bExisting: org.apache.spark.broadcast.Broadcast[Seq[ExistingChannel]],
       bExOffsets: org.apache.spark.broadcast.Broadcast[Map[Int, Long]],
-      replayTag: Option[String],
-      maxSamplesPerFile: Long): DataFrame =
-    packedBlocks(projected, bExisting, bExOffsets, replayTag, maxSamplesPerFile)
-      .repartition(col("file"), col("channel"), col("part"))
-      .sortWithinPartitions(col("file"), col("channel"), col("part"), col("first_idx"))
+      replayTag: Option[String]): DataFrame =
+    packedBlocks(projected, bExisting, bExOffsets, replayTag)
+      .repartition(col("file"), col("channel"))
+      .sortWithinPartitions(col("file"), col("channel"), col("first_idx"))
 
-  /** Intermediate rows between the bin-writing reduce and the manifest
-    * assembly: kind 0 = per-bin DISCOVERY (the bin's key, rate/unit, and
-    * the temp binary it committed under the job dir), kind 1 = SEGMENT
-    * (one contiguous run observed while streaming the bin — chunk
-    * cardinality, never sample cardinality). Sorted (file, channel,
-    * kind, start_index) so each channel's assembly sees its discoveries
-    * before its segments.
-    */
-  private val discSegSchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("channel", StringType, nullable = false),
-    StructField("kind", IntegerType, nullable = false),
-    StructField("part", LongType, nullable = false),
-    StructField("start_index", LongType, nullable = false),
-    StructField("start_ts", LongType, nullable = false),
-    StructField("end_ts", LongType, nullable = true),
-    StructField("n", LongType, nullable = true),
-    StructField("gap_before", BooleanType, nullable = false),
-    StructField("rate", DoubleType, nullable = true),
-    StructField("unit", StringType, nullable = true),
-    StructField("tmp_bin", StringType, nullable = true)))
-
-  /** One incoming channel as its assembly task discovered + summarized
-    * it: the reconcile step's whole input (channel-cardinality).
+  /** One incoming channel as its writer task streamed it: the reconcile
+    * step's whole input (channel-cardinality). The task has committed
+    * the channel's binary and chunk entries under the job dir
+    * ([[binTmpName]], [[chunkTmpName]]).
     */
   private case class Discovered(
       file: String, channel: String, rate: Double, unit: String,
-      start: Long, end: Long, newValues: Long, nChunks: Long,
-      parts: Seq[(Long, String)]) // (part, temp binary name under jobTmp)
+      start: Long, end: Long, newValues: Long)
 
   /** Test observability: merge-window spills, counted through a Spark
     * accumulator so executor-JVM spills aggregate back to the driver
@@ -744,8 +678,8 @@ object EdfSink {
     val d = java.security.MessageDigest.getInstance("SHA-1")
     d.digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
   }
-  private def binTmpName(file: String, channel: String, part: Long): String =
-    "bin-" + sha1Hex(file + "\u0000" + channel + "\u0000" + part)
+  private def binTmpName(file: String, channel: String): String =
+    "bin-" + sha1Hex(file + "\u0000" + channel)
   private def chunkTmpName(file: String, channel: String): String =
     "chunks-" + sha1Hex(file + "\u0000" + channel)
 
@@ -788,17 +722,17 @@ object EdfSink {
     } finally in.close()
   }
 
-  /** One output channel's commit work: rename its job-temp binaries to
-    * their final names and compose + commit its manifest. Built by the
-    * driver reconcile, executed by the (channel-cardinality) commit job.
+  /** One output channel's commit work: rename its job-temp binary to its
+    * final name and compose + commit its manifest. Built by the driver
+    * reconcile, executed by the (channel-cardinality) commit job.
     */
   private case class CommitTask(
       ord: Int,
       name: String,
       unit: String,
       rate: Double,
-      binRenames: Seq[(String, String)], // (temp name under jobTmp, final name)
-      binaryFiles: Seq[String],          // existing parts first, then new, concat order
+      binTmp: String,                    // this run's binary, under jobTmp
+      binaryFiles: Seq[String],          // existing binaries, then this run's (last), concat order
       exNumValues: Long,
       exStart: Option[Long],
       exEnd: Option[Long],
@@ -807,8 +741,7 @@ object EdfSink {
       chunkTmp: String,                  // bare new-chunk entries under jobTmp
       newStart: Long,
       newEnd: Long,
-      newValues: Long,
-      nChunksNew: Long)
+      newValues: Long)
 
   /** Write the binary + manifest output for a sample DataFrame
     * (schema = EdfFile.sampleSchema). Returns the manifest path.
@@ -820,28 +753,19 @@ object EdfSink {
     * when it leaves a time gap > 2 sampling periods, exactly the
     * reference's gap rule over the surviving samples.
     *
-    * `maxSamplesPerFile` bounds how much of one channel a single task
-    * owns: channels larger than the bound are range-partitioned on
-    * sample_idx into numbered part files (`<name>-part00001.ts.bin` …),
-    * so a 30 M-sample reference chunk — or a 100 GB channel — writes with
-    * full parallelism instead of through one task. Concatenating the
-    * parts in order reproduces the single-file byte stream.
-    *
     * `mode` is "overwrite" (default; destination pre-cleaned) or
     * "append" (reference append mode, see object doc).
     *
     * Input ORDER tolerance: the packed exchange restores exact
     * per-sample order however the input partitions interleave. Up to
-    * `MaxMergeCursors` (1024) simultaneously overlapping blocks per bin
-    * (~4M samples of interleaving) merge in memory; anything beyond
-    * spills to executor-local sorted runs — arbitrarily disordered
-    * input is always correct, merely slower.
+    * `MaxMergeCursors` (1024) simultaneously overlapping blocks per
+    * channel (~4M samples of interleaving) merge in memory; anything
+    * beyond spills to executor-local sorted runs — arbitrarily
+    * disordered input is always correct, merely slower.
     */
   def write(samples: DataFrame, outDir: String,
-            maxSamplesPerFile: Long = Long.MaxValue,
             mode: String = "overwrite",
             replayTag: Option[String] = None): String = {
-    require(maxSamplesPerFile > 0, s"maxSamplesPerFile must be positive, got $maxSamplesPerFile")
     require(mode == "overwrite" || mode == "append", s"mode must be overwrite|append, got $mode")
     require(replayTag.isEmpty || mode == "append", "replayTag only applies to append mode")
     val spark = samples.sparkSession
@@ -856,7 +780,7 @@ object EdfSink {
     // append offset per existing ordinal: the channel's committed value
     // count (manifest property; fallback = committed binary sizes —
     // channel-cardinality file stats). Used identically by the pack
-    // (sample_idx shift) and the assembly (stored-stream positions).
+    // (sample_idx shift) and the writer (stored-stream positions).
     val exOffsets: Map[Int, Long] = existing.map { ex =>
       ex.ord -> ex.count.getOrElse(
         ex.binaryFiles.map(b => driverFs.getFileStatus(new Path(outPath, b)).getLen / 8).sum)
@@ -871,369 +795,232 @@ object EdfSink {
     val jobTmpStr = jobTmp.toString
 
     // ---- THE job: the sink's ONLY pass over sample volume. ----
-    // map:    pack samples into per-(file, channel, part) blocks, append
+    // map:    pack samples into per-(file, channel) blocks, append
     //         routing (shift/skip) resolved inline from the broadcast
     //         existing set — no separate plan scan (r16 verdict #1).
-    // shuffle hash on the bin key, BLOCK-cardinality sort on first_idx.
-    // reduce: merge-stream each bin's blocks to a temp binary under the
-    //         job dir (exact per-sample order restored by a heap merge
-    //         that degenerates to plain block streaming outside
-    //         adversarially interleaved input) and emit the bin's
-    //         DISCOVERY row + contiguous-run SEGMENT rows.
-    // shuffle (file, channel) — each channel's one assembly task merges
-    //         part-seam segments, streams the channel's new chunk
-    //         entries to a job-temp file, and returns a channel-summary
-    //         row; collecting those summaries (channel-cardinality) is
-    //         what triggers the job.
-    val dumpDf = packedDump(packProjection(samples), bExisting, bExOffsets, replayTag, maxSamplesPerFile)
+    // shuffle hash on (file, channel), BLOCK-cardinality sort on first_idx.
+    // reduce: the one task that owns a channel merge-streams its blocks
+    //         to a temp binary under the job dir (exact per-sample order
+    //         restored by a heap merge that degenerates to plain block
+    //         streaming outside adversarially interleaved input), streams
+    //         its chunk entries to a temp chunk file beside it (never
+    //         holding them in memory), and returns one summary row;
+    //         collecting those summaries (channel-cardinality) is what
+    //         triggers the job.
+    val dumpRows = packedDump(packProjection(samples), bExisting, bExOffsets, replayTag).queryExecution.toRdd
+    val discovered: Seq[Discovered] = dumpRows.mapPartitions { blocks =>
+      import org.apache.spark.unsafe.types.UTF8String
+      val tc = TaskContext.get()
+      // Binary SAMPLE bytes bypass the local ChecksumFileSystem layer
+      // (same rationale as EdfFile.openSeekable, write side): Hadoop's
+      // FSOutputSummer pushes every byte through 512-B checksum chunks
+      // and writes a .crc sidecar — measurable drag at GB/s output
+      // rates, and the read path already handles crc-less binaries.
+      // Cluster filesystems (HDFS, object stores) are not
+      // ChecksumFileSystems and pass through untouched. Manifests keep
+      // the checksummed path (tiny, and append-mode re-READS them
+      // through the checksum layer).
+      val fs = new Path(jobTmpStr).getFileSystem(EdfFile.confFromEntries(confEntries)) match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+        case other => other
+      }
+      val attemptDir = new Path(jobTmpStr,
+        s"attempt-b-${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}")
+      val spillFiles = new scala.collection.mutable.ArrayBuffer[java.io.File]()
+      val existing = bExisting.value
+      val exOff = bExOffsets.value
+      val buf = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
 
-    val segRows: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-      dumpDf.queryExecution.toRdd.mapPartitions { it0 =>
-        val tc = TaskContext.get()
-        // Binary SAMPLE bytes bypass the local ChecksumFileSystem layer
-        // (same rationale as EdfFile.openSeekable, write side): Hadoop's
-        // FSOutputSummer pushes every byte through 512-B checksum chunks
-        // and writes a .crc sidecar — measurable drag at GB/s output
-        // rates, and the read path already handles crc-less binaries.
-        // Cluster filesystems (HDFS, object stores) are not
-        // ChecksumFileSystems and pass through untouched. Manifests keep
-        // the checksummed path (tiny, and append-mode re-READS them
-        // through the checksum layer).
-        val fs = new Path(jobTmpStr).getFileSystem(EdfFile.confFromEntries(confEntries)) match {
-          case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-          case other => other
-        }
-        val attemptDir = new Path(jobTmpStr,
-          s"attempt-b-${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}")
-        val spillFiles = new scala.collection.mutable.ArrayBuffer[java.io.File]()
-        // failure cleanup: the iterator below cannot use try/finally
-        // around consumption (the downstream shuffle writer drives it)
-        tc.addTaskCompletionListener[Unit] { _ =>
-          try fs.delete(attemptDir, true) catch { case _: Exception => () }
-          spillFiles.foreach(f => { f.delete(): Unit })
-        }
-        // a cursor mid-merge: an overlapping in-memory block, or a
-        // spilled sorted run read back from executor-local disk
-        sealed abstract class Cur {
-          def idx: Long; def ts: Long; def v: Double
-          def advance(): Boolean // false once exhausted
-        }
-        final class BlockCur(first: Long, idxA: Array[Long],
-                             tsA: Array[Long], valA: Array[Double]) extends Cur {
-          private var pos = 0
-          def idx: Long = if (idxA == null) first + pos else idxA(pos)
-          def ts: Long = tsA(pos)
-          def v: Double = valA(pos)
-          def advance(): Boolean = { pos += 1; pos < valA.length }
-        }
-        final class SpillCur(f: java.io.File, n: Long) extends Cur {
-          private val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(new java.io.FileInputStream(f), 1 << 16))
-          private var remaining = n
-          private var i = 0L; private var t = 0L; private var x = 0.0
-          load()
-          private def load(): Unit = {
-            i = in.readLong(); t = in.readLong(); x = in.readDouble(); remaining -= 1
-          }
-          def idx: Long = i; def ts: Long = t; def v: Double = x
-          def advance(): Boolean =
-            if (remaining > 0) { load(); true }
-            else { in.close(); f.delete(); false }
-        }
-        new Iterator[org.apache.spark.sql.Row] {
-          private val buf = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
-          private val pending = new scala.collection.mutable.ArrayDeque[org.apache.spark.sql.Row](4)
-          private var curFile: org.apache.spark.unsafe.types.UTF8String = null
-          private var curChan: org.apache.spark.unsafe.types.UTF8String = null
-          private var curPart = 0L
-          private var curFileStr: String = null
-          private var curChanStr: String = null
-          private var gapUs = 0L
-          private var tmp: Path = null
-          private var tmpName: String = null
-          private var out: java.io.OutputStream = null
-          private var segStartIdx = 0L; private var segStartTs = 0L
-          private var segGapBefore = false; private var segN = 0L
-          private var prevTs = 0L
-          private var binFresh = false
-          private var drained = false
+      /** One channel's new output: its samples go to a temp binary,
+        * one `contiguousChunks` entry per contiguous run to a temp
+        * chunk file, both committed under the job dir by `finish`.
+        */
+      final class ChannelOut(val file: UTF8String, val channel: UTF8String, rate: Double, unit: String) {
+        private val fileStr = file.toString
+        private val chanStr = channel.toString
+        private val gapUs = (2e6 / rate).toLong
+        private val ex = matchExisting(existing, chanStr, rate, Continuous)
+        // chunk 'index' is the chunk's position within the STORED value
+        // stream (reference base.py:336-342) — append offset + values
+        // written so far. Identical to sample_idx for dense input;
+        // reference-correct (and within the binary's bounds) for
+        // filtered/non-dense input where sample_idx has holes.
+        private val offset = ex.fold(0L)(e => exOff.getOrElse(e.ord, 0L))
+        // non-overlap invariant (reference base.py:87-95): appended
+        // chunks start strictly after everything already committed,
+        // and each chunk after its predecessor's end
+        private var prevEnd = ex.fold(Long.MinValue)(_.end)
+        private val binTmp = new Path(attemptDir, "bin")
+        private val chunkTmp = new Path(attemptDir, "chunks")
+        private val bin = fs.create(binTmp, true)
+        private val chunks = new BufferedOutputStream(fs.create(chunkTmp, true), 1 << 16)
+        private var start = Long.MaxValue; private var end = Long.MinValue
+        private var n = 0L
+        private var prevTs = 0L
 
-          // one-block lookahead: the sort's output iterator REUSES its
-          // UnsafeRow, so a peeked block materializes its arrays at once
-          private var peeked = false
-          private var nFile: org.apache.spark.unsafe.types.UTF8String = null
-          private var nChan: org.apache.spark.unsafe.types.UTF8String = null
-          private var nPart = 0L; private var nFirst = 0L
-          private var nIdx: Array[Long] = null
-          private var nTs: Array[Long] = null
-          private var nVal: Array[Double] = null
-          private var nRate = 0.0; private var nUnit: String = null
-          private def peek(): Boolean = peeked || {
-            if (it0.hasNext) {
-              val r = it0.next()
-              nFile = r.getUTF8String(0).clone(); nChan = r.getUTF8String(1).clone()
-              nPart = r.getLong(2); nFirst = r.getLong(3)
-              nIdx = if (r.isNullAt(4)) null else r.getArray(4).toLongArray()
-              nTs = r.getArray(5).toLongArray()
-              nVal = r.getArray(6).toDoubleArray()
-              nRate = r.getDouble(7); nUnit = r.getUTF8String(8).toString
-              peeked = true
-            }
-            peeked
+        private def flushBuf(): Unit = if (buf.position() > 0) {
+          bin.write(buf.array(), 0, buf.position()); buf.clear()
+        }
+        private def endChunk(): Unit = { prevEnd = prevTs; if (prevTs > end) end = prevTs }
+        def add(ts: Long, v: Double): Unit = {
+          if (n == 0 || ts - prevTs > gapUs) {
+            if (n > 0) endChunk()
+            require(ts > prevEnd, s"overlapping chunks in channel $chanStr")
+            writeChunk(chunks, n == 0, offset + n, ts)
+            if (ts < start) start = ts
           }
-          private def peekedIsCur: Boolean =
-            curFile != null && nPart == curPart && nFile.equals(curFile) && nChan.equals(curChan)
-          private val heap = new java.util.PriorityQueue[Cur](4,
-            new java.util.Comparator[Cur] {
-              override def compare(a: Cur, b: Cur): Int =
-                java.lang.Long.compare(a.idx, b.idx)
-            })
-
-          private def flushBuf(): Unit = if (buf.position() > 0) {
-            out.write(buf.array(), 0, buf.position()); buf.clear()
-          }
-          private def emitSeg(): Unit = if (segN > 0) {
-            pending.append(org.apache.spark.sql.Row(
-              curFileStr, curChanStr, 1, curPart, segStartIdx, segStartTs, prevTs, segN,
-              segGapBefore, null, null, null))
-            segN = 0
-          }
-          private def closeBin(): Unit = if (out != null) {
-            flushBuf(); out.close(); out = null
-            commit(fs, tmp, new Path(jobTmpStr, tmpName))
-          }
-          private def openBin(): Unit = {
-            curFile = nFile; curChan = nChan; curPart = nPart
-            curFileStr = curFile.toString; curChanStr = curChan.toString
-            gapUs = (2e6 / nRate).toLong
-            tmpName = binTmpName(curFileStr, curChanStr, curPart)
-            tmp = new Path(attemptDir, tmpName)
-            out = fs.create(tmp, true)
-            binFresh = true
-            // the bin's DISCOVERY row: key, rate/unit, temp binary name
-            pending.append(org.apache.spark.sql.Row(
-              curFileStr, curChanStr, 0, curPart, nFirst, 0L, null, null, false,
-              nRate, nUnit, tmpName))
-          }
-          private def consume(idx: Long, ts: Long, v: Double): Unit = {
-            if (binFresh) {
-              segStartIdx = idx; segStartTs = ts; segGapBefore = false
-              binFresh = false
-            } else if (ts - prevTs > gapUs) {
-              emitSeg()
-              segStartIdx = idx; segStartTs = ts; segGapBefore = true
-            }
-            prevTs = ts
-            segN += 1
-            if (buf.remaining() < 8) flushBuf()
-            buf.putDouble(v)
-          }
-          // heap merge for overlapping same-bin blocks: admits every
-          // block whose first_idx precedes the frontier, so the emitted
-          // sample order equals a full per-sample sort's whatever the
-          // cross-partition interleaving. RESUMABLE (one sample per
-          // step-loop iteration): a merge group spanning a gap-heavy bin
-          // hands its segment rows to the consumer as they arise, never
-          // buffering them for the whole group. Memory is bounded by
-          // MaxMergeCursors open blocks (~4M samples); input MORE
-          // disordered than that (e.g. a relation round-robin
-          // repartitioned >1024 ways scatters every bin across all map
-          // partitions) SPILLS: the open cursors merge-drain to one
-          // sorted run on executor-local disk and re-enter the heap as a
-          // single streaming cursor — unbounded disorder degrades to
-          // external-merge I/O instead of failing (review r16 ADVICE).
-          // Each spill absorbs >=MaxMergeCursors-1 block cursors, so a
-          // bin pays at most blocks/(MaxMergeCursors-1) extra read+write
-          // passes of its own bytes.
-          private val MaxMergeCursors = 1024
-          private var merging = false
-          private def spillHeap(): Unit = {
-            spillAcc.add(1L)
-            val f = java.io.File.createTempFile("graft-sink-spill-", ".run")
-            spillFiles += f
-            val sOut = new java.io.DataOutputStream(
-              new java.io.BufferedOutputStream(new java.io.FileOutputStream(f), 1 << 16))
-            var n = 0L
-            while (!heap.isEmpty) {
-              val c = heap.poll()
-              sOut.writeLong(c.idx); sOut.writeLong(c.ts); sOut.writeDouble(c.v); n += 1
-              if (c.advance()) heap.add(c)
-            }
-            sOut.close()
-            heap.add(new SpillCur(f, n))
-          }
-          private def mergeStep(): Unit = {
-            while (pending.isEmpty && !heap.isEmpty) {
-              while (peek() && peekedIsCur && nFirst <= heap.peek().idx) {
-                if (heap.size() >= MaxMergeCursors) spillHeap()
-                heap.add(new BlockCur(nFirst, nIdx, nTs, nVal)); peeked = false
-              }
-              val c = heap.poll()
-              consume(c.idx, c.ts, c.v)
-              if (c.advance()) heap.add(c)
-            }
-            if (heap.isEmpty) merging = false
-          }
-          private def pump(): Unit = {
-            while (pending.isEmpty && (merging || peek())) {
-              if (merging) mergeStep()
-              else {
-                if (!peekedIsCur) { emitSeg(); closeBin(); openBin() }
-                val (first, idxA, tsA, valA) = (nFirst, nIdx, nTs, nVal)
-                peeked = false
-                val n = valA.length
-                val lastIdx = if (idxA == null) first + n - 1 else idxA(n - 1)
-                if (peek() && peekedIsCur && nFirst <= lastIdx) {
-                  heap.add(new BlockCur(first, idxA, tsA, valA))
-                  merging = true
-                } else {
-                  var i = 0
-                  if (idxA == null) {
-                    while (i < n) { consume(first + i, tsA(i), valA(i)); i += 1 }
-                  } else {
-                    while (i < n) { consume(idxA(i), tsA(i), valA(i)); i += 1 }
-                  }
-                }
-              }
-            }
-            if (pending.isEmpty && !drained) {
-              drained = true
-              emitSeg(); closeBin()
-              fs.delete(attemptDir, true)
-            }
-          }
-          override def hasNext: Boolean = { if (pending.isEmpty) pump(); pending.nonEmpty }
-          override def next(): org.apache.spark.sql.Row = {
-            if (!hasNext) throw new NoSuchElementException
-            pending.removeHead()
-          }
+          prevTs = ts
+          n += 1
+          if (buf.remaining() < 8) flushBuf()
+          buf.putDouble(v)
+        }
+        def finish(): Discovered = {
+          endChunk()
+          flushBuf(); bin.close(); chunks.close()
+          commit(fs, binTmp, new Path(jobTmpStr, binTmpName(fileStr, chanStr)))
+          commit(fs, chunkTmp, new Path(jobTmpStr, chunkTmpName(fileStr, chanStr)))
+          Discovered(fileStr, chanStr, rate, unit, start, end, n)
         }
       }
 
-    // 2. distributed manifest-chunk assembly: every channel's discovery
-    // + segment rows land in one partition pre-sorted by (kind,
-    // start_index); the owning task MERGES part-seam segments (a part's
-    // first segment with no time gap to its predecessor continues the
-    // predecessor's chunk), streams the channel's NEW chunk entries to a
-    // job-temp file (never holding them in memory), and emits one
-    // summary row. Because the segments are the dump's map-side output,
-    // this stage is the reduce side of the dump's own shuffle: the whole
-    // discovery+write is ONE job, one pass over sample volume.
-    val segDf = spark.createDataFrame(segRows, discSegSchema)
-    val summaries: Seq[Discovered] = segDf
-      .repartition(col("file"), col("channel"))
-      .sortWithinPartitions(col("file"), col("channel"), col("kind"), col("start_index"))
-      .rdd.mapPartitions { rows =>
-        val tc = TaskContext.get()
-        val fs = new Path(jobTmpStr).getFileSystem(EdfFile.confFromEntries(confEntries))
-        val attemptDir = new Path(jobTmpStr,
-          s"attempt-a-${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}")
-        tc.addTaskCompletionListener[Unit] { _ =>
-          try fs.delete(attemptDir, true) catch { case _: Exception => () }
+      // a cursor mid-merge: an overlapping in-memory block, or a
+      // spilled sorted run read back from executor-local disk
+      sealed abstract class Cur {
+        def idx: Long; def ts: Long; def v: Double
+        def advance(): Boolean // false once exhausted
+      }
+      final class BlockCur(first: Long, idxA: Array[Long],
+                           tsA: Array[Long], valA: Array[Double]) extends Cur {
+        private var pos = 0
+        def idx: Long = if (idxA == null) first + pos else idxA(pos)
+        def ts: Long = tsA(pos)
+        def v: Double = valA(pos)
+        def advance(): Boolean = { pos += 1; pos < valA.length }
+      }
+      final class SpillCur(f: java.io.File, n: Long) extends Cur {
+        private val in = new java.io.DataInputStream(
+          new java.io.BufferedInputStream(new java.io.FileInputStream(f), 1 << 16))
+        private var remaining = n
+        private var i = 0L; private var t = 0L; private var x = 0.0
+        load()
+        private def load(): Unit = {
+          i = in.readLong(); t = in.readLong(); x = in.readDouble(); remaining -= 1
         }
-        val existing = bExisting.value
-        val exOff = bExOffsets.value
-        val outBuf = new scala.collection.mutable.ArrayBuffer[Discovered]()
-        var file: String = null; var channel: String = null
-        var rate = 0.0; var unit: String = null
-        var parts = List.empty[(Long, String)]
-        var start = Long.MaxValue; var end = Long.MinValue
-        var prevEnd = Long.MinValue; var nChunks = 0L; var newValues = 0L
-        var gapUs = Long.MaxValue
-        // chunk 'index' is the chunk's position within the STORED value
-        // stream (reference base.py:336-342) — append offset + running
-        // sum of emitted values. Identical to sample_idx for dense
-        // input; reference-correct (and within the binary's bounds) for
-        // filtered/non-dense input where sample_idx has holes.
-        var storedPos = 0L
-        // pending NEW chunk being extended across part seams
-        var havePend = false
-        var pendStartTs = 0L; var pendEndTs = 0L; var pendN = 0L
-        var chunkTmp: Path = null
-        var chunkOut: BufferedOutputStream = null
-        def flushPend(): Unit = if (havePend) {
-          writeChunk(chunkOut, nChunks == 0, storedPos, pendStartTs)
-          nChunks += 1
-          storedPos += pendN
-          newValues += pendN
-          if (pendStartTs < start) start = pendStartTs
-          if (pendEndTs > end) end = pendEndTs
-          havePend = false
+        def idx: Long = i; def ts: Long = t; def v: Double = x
+        def advance(): Boolean =
+          if (remaining > 0) { load(); true }
+          else { in.close(); f.delete(); false }
+      }
+
+      // one-block lookahead: the sort's output iterator REUSES its
+      // UnsafeRow, so a peeked block materializes its arrays at once
+      var peeked = false
+      var nFile: UTF8String = null
+      var nChan: UTF8String = null
+      var nFirst = 0L
+      var nIdx: Array[Long] = null
+      var nTs: Array[Long] = null
+      var nVal: Array[Double] = null
+      var nRate = 0.0; var nUnit: String = null
+      def peek(): Boolean = peeked || {
+        if (blocks.hasNext) {
+          val r = blocks.next()
+          nFile = r.getUTF8String(0).clone(); nChan = r.getUTF8String(1).clone()
+          nFirst = r.getLong(2)
+          nIdx = if (r.isNullAt(3)) null else r.getArray(3).toLongArray()
+          nTs = r.getArray(4).toLongArray()
+          nVal = r.getArray(5).toDoubleArray()
+          nRate = r.getDouble(6); nUnit = r.getUTF8String(7).toString
+          peeked = true
         }
-        def finishChannel(): Unit = if (channel != null) {
-          flushPend()
-          chunkOut.close(); chunkOut = null
-          commit(fs, chunkTmp, new Path(jobTmpStr, chunkTmpName(file, channel)))
-          outBuf += Discovered(file, channel, rate, unit, start, end, newValues, nChunks,
-            parts.reverse)
-          channel = null
+        peeked
+      }
+      var cur: ChannelOut = null
+      def peekedIsCur: Boolean = cur != null && nFile.equals(cur.file) && nChan.equals(cur.channel)
+
+      // heap merge for overlapping blocks of one channel: admits every
+      // block whose first_idx precedes the frontier, so the emitted
+      // sample order equals a full per-sample sort's whatever the
+      // cross-partition interleaving. Memory is bounded by
+      // MaxMergeCursors open blocks (~4M samples); input MORE
+      // disordered than that (e.g. a relation round-robin
+      // repartitioned >1024 ways scatters every channel across all map
+      // partitions) SPILLS: the open cursors merge-drain to one sorted
+      // run on executor-local disk and re-enter the heap as a single
+      // streaming cursor — unbounded disorder degrades to external-merge
+      // I/O instead of failing. Each spill absorbs
+      // >=MaxMergeCursors-1 block cursors, so a channel pays at most
+      // blocks/(MaxMergeCursors-1) extra read+write passes of its own
+      // bytes.
+      val MaxMergeCursors = 1024
+      val heap = new java.util.PriorityQueue[Cur](4,
+        new java.util.Comparator[Cur] {
+          override def compare(a: Cur, b: Cur): Int = java.lang.Long.compare(a.idx, b.idx)
+        })
+      def spillHeap(): Unit = {
+        spillAcc.add(1L)
+        val f = java.io.File.createTempFile("graft-sink-spill-", ".run")
+        spillFiles += f
+        val sOut = new java.io.DataOutputStream(
+          new java.io.BufferedOutputStream(new java.io.FileOutputStream(f), 1 << 16))
+        var n = 0L
+        while (!heap.isEmpty) {
+          val c = heap.poll()
+          sOut.writeLong(c.idx); sOut.writeLong(c.ts); sOut.writeDouble(c.v); n += 1
+          if (c.advance()) heap.add(c)
         }
-        rows.foreach { r =>
-          val f = r.getString(0); val c = r.getString(1)
-          if (c != channel || f != file) {
-            finishChannel()
-            file = f; channel = c
-            rate = 0.0; unit = null; parts = Nil
-            start = Long.MaxValue; end = Long.MinValue
-            nChunks = 0L; newValues = 0L
-            val ex = matchExisting(existing, c, r.getDouble(9), Continuous)
-            prevEnd = ex.map(_.end).getOrElse(Long.MinValue)
-            storedPos = ex.map(e => exOff.getOrElse(e.ord, 0L)).getOrElse(0L)
-            chunkTmp = new Path(attemptDir, "chunks")
-            chunkOut = new BufferedOutputStream(fs.create(chunkTmp, true), 1 << 16)
+        sOut.close()
+        heap.add(new SpillCur(f, n))
+      }
+      def merge(): Unit = while (!heap.isEmpty) {
+        while (peek() && peekedIsCur && nFirst <= heap.peek().idx) {
+          if (heap.size() >= MaxMergeCursors) spillHeap()
+          heap.add(new BlockCur(nFirst, nIdx, nTs, nVal)); peeked = false
+        }
+        val c = heap.poll()
+        cur.add(c.ts, c.v)
+        if (c.advance()) heap.add(c)
+      }
+
+      val done = new scala.collection.mutable.ArrayBuffer[Discovered]()
+      try {
+        while (peek()) {
+          if (!peekedIsCur) {
+            if (cur != null) done += cur.finish()
+            cur = new ChannelOut(nFile, nChan, nRate, nUnit)
           }
-          if (r.getInt(2) == 0) {
-            // discovery row: first one fixes the channel's rate/unit
-            if (unit == null) {
-              rate = r.getDouble(9); unit = r.getString(10)
-              gapUs = (2e6 / rate).toLong
-            }
-            parts ::= (r.getLong(3), r.getString(11))
+          val (first, idxA, tsA, valA) = (nFirst, nIdx, nTs, nVal)
+          peeked = false
+          val n = valA.length
+          val lastIdx = if (idxA == null) first + n - 1 else idxA(n - 1)
+          if (peek() && peekedIsCur && nFirst <= lastIdx) {
+            heap.add(new BlockCur(first, idxA, tsA, valA))
+            merge()
           } else {
-            val startTs = r.getLong(5)
-            val endTs = r.getLong(6)
-            // non-overlap invariant (reference base.py:87-95): appended
-            // chunks start strictly after everything already committed
-            require(startTs > prevEnd, s"overlapping chunks in channel $channel")
-            prevEnd = endTs
-            if (havePend && !r.getBoolean(8) && startTs - pendEndTs <= gapUs) {
-              // part-seam continuation: the segment's part began with
-              // no time gap to the previous part's tail — same chunk
-              pendEndTs = endTs; pendN += r.getLong(7)
-            } else {
-              flushPend()
-              havePend = true
-              pendStartTs = startTs
-              pendEndTs = endTs; pendN = r.getLong(7)
-            }
+            var i = 0
+            while (i < n) { cur.add(tsA(i), valA(i)); i += 1 }
           }
         }
-        finishChannel()
-        outBuf.iterator
-      }.collect().toSeq.sortBy(d => (d.file, d.channel))
+        if (cur != null) done += cur.finish()
+      } finally {
+        try fs.delete(attemptDir, true) catch { case _: Exception => () }
+        spillFiles.foreach(f => { f.delete(): Unit })
+      }
+      done.iterator
+    }.collect().toSeq.sortBy(d => (d.file, d.channel))
 
     // ---- driver reconcile: channel-cardinality, zero sample I/O ----
-    val plan = planDir(Continuous, existing,
-      summaries.map(d => ((d.file, d.channel), d.rate, d.parts.map(_._1))))
+    val plan = planDir(Continuous, existing, discovered.map(d => ((d.file, d.channel), d.rate)))
     prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
-    val commitTasks: Seq[CommitTask] = summaries.map { d =>
-      val binRenames = d.parts.sortBy(_._1).map { case (p, tmpN) =>
-        (tmpN, plan.names((d.file, d.channel, p)))
-      }
-      val newBins = binRenames.map(_._2)
-      plan.matched.get((d.file, d.channel)) match {
-        case Some(ex) =>
-          CommitTask(ex.ord, ex.name, ex.unit, ex.rate,
-            binRenames, ex.binaryFiles ++ newBins,
-            exOffsets(ex.ord), Some(ex.start), Some(ex.end), replayTag,
-            Some(Continuous.stagedName(ex.ord)), chunkTmpName(d.file, d.channel),
-            d.start, d.end, d.newValues, d.nChunks)
-        case None =>
-          CommitTask(plan.ords((d.file, d.channel)), d.channel, d.unit, d.rate,
-            binRenames, newBins, 0L, None, None, replayTag,
-            None, chunkTmpName(d.file, d.channel),
-            d.start, d.end, d.newValues, d.nChunks)
-      }
+    val commitTasks: Seq[CommitTask] = discovered.map { d =>
+      val key = (d.file, d.channel)
+      val ex = plan.matched.get(key)
+      CommitTask(plan.ords(key), ex.fold(d.channel)(_.name), ex.fold(d.unit)(_.unit),
+        ex.fold(d.rate)(_.rate), binTmpName(d.file, d.channel),
+        ex.fold(Seq.empty[String])(_.binaryFiles) :+ plan.names(key),
+        ex.fold(0L)(e => exOffsets(e.ord)), ex.map(_.start), ex.map(_.end), replayTag,
+        ex.map(e => Continuous.stagedName(e.ord)), chunkTmpName(d.file, d.channel),
+        d.start, d.end, d.newValues)
     }
 
     // ---- commit job: channel-cardinality renames + manifest compose ----
@@ -1245,12 +1032,10 @@ object EdfSink {
         val fs = new Path(outDirStr).getFileSystem(EdfFile.confFromEntries(confEntries))
         val attemptDir = new Path(jobTmpStr, s"attempt-c-${tc.partitionId()}-${tc.taskAttemptId()}")
         try {
-          // binaries: job-temp -> final. commit() makes retries and
+          // binary: job-temp -> final. commit() makes retries and
           // speculative duplicates idempotent (both attempts rename the
           // SAME job-temp source; the loser sees the committed dest).
-          t.binRenames.foreach { case (tmpN, dest) =>
-            commit(fs, new Path(jobTmpStr, tmpN), new Path(outDirStr, dest))
-          }
+          commit(fs, new Path(jobTmpStr, t.binTmp), new Path(outDirStr, t.binaryFiles.last))
           // manifest: existing chunks (from the staged original, streamed
           // — never materialized) then new chunks; header fields were
           // computed at reconcile
@@ -1266,11 +1051,9 @@ object EdfSink {
                 wrote += 1
               }
             }
-            if (t.nChunksNew > 0) {
-              if (wrote > 0) out.write(", ".getBytes(StandardCharsets.UTF_8))
-              // copy WITHOUT deleting: a task retry must find it again
-              copyFile(fs, new Path(jobTmpStr, t.chunkTmp), out)
-            }
+            if (wrote > 0) out.write(", ".getBytes(StandardCharsets.UTF_8))
+            // copy WITHOUT deleting: a task retry must find it again
+            copyFile(fs, new Path(jobTmpStr, t.chunkTmp), out)
           }
         } finally {
           try fs.delete(attemptDir, true) catch { case _: Exception => () }
@@ -1319,10 +1102,9 @@ object EdfSink {
     val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverDir(driverFs, outPath, Spikes)
     val existing = if (mode == "append") readExisting(spark, driverFs, outPath, Spikes) else Nil
-    // one binary (part 0) per channel per run
     val keys = spikes.select(col("file"), col("channel")).distinct()
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val plan = planDir(Spikes, existing, keys.map(k => (k, 0.0, Seq(0L))))
+    val plan = planDir(Spikes, existing, keys.map(k => (k, 0.0)))
     prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
     val bPlan = spark.sparkContext.broadcast(plan)
     val outDirStr = outPath.toString
@@ -1367,7 +1149,7 @@ object EdfSink {
           copyFile(fs, wfTmp, out)
           out.close()
           val p = bPlan.value
-          val bin = p.names((key._1, key._2, 0L))
+          val bin = p.names(key)
           commit(fs, tmp, new Path(outDirStr, bin))
           // UNIT channel manifest (reference base.py:253-261: channel
           // start/end extend to the spike horizon; append merges the

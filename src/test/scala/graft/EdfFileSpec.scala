@@ -120,7 +120,11 @@ class EdfFileSpec extends AnyFunSuite {
       variant("duration")(put(_, 244, 8, "x.5")) -> "'duration of a data record' is not a number: 'x.5'",
       variant("digrange")(b => put(put(b, 376, 8, "7"), 384, 8, "7")) ->
         "'digital minimum' and 'digital maximum' of signal 0 ('C3') are both 7.0",
-      variant("nrneg")(put(_, 472, 8, "-4")) -> "'number of samples of signal 0' is negative: -4")
+      variant("nrneg")(put(_, 472, 8, "-4")) -> "'number of samples of signal 0' is negative: -4",
+      // 10^8 samples per record in a file of three 4-sample records: a
+      // reader would allocate 200 MB per record buffer before reading
+      variant("nrhuge")(put(_, 472, 8, "99999999")) ->
+        "'number of samples' give 199999998 bytes per data record, more than the file's 24 data bytes")
     cases.foreach { case (p, field) =>
       val e = intercept[IllegalArgumentException](EdfFile.readHeader(p))
       assert(e.getMessage.contains(p) && e.getMessage.contains(field), e.getMessage)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.{ByteBuffer, ByteOrder}
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,41 +58,6 @@ class EdfSinkSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(s"$outDir/_tmp-9-9-attempt-9")), "stale temp dirs swept")
   }
 
-  test("oversized channels range-partition into ordered part files") {
-    val outDir = Files.createTempDirectory("edfparts").toString
-    val df = EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf)).cache()
-    EdfSink.write(df, outDir, maxSamplesPerFile = 5000L)
-    val ch0 = df.select(col("channel")).distinct().collect().map(_.getString(0)).sorted.head
-    val safe = ch0.replaceAll("[^A-Za-z0-9._-]", "_")
-    val sizes = (0 until 3).map(p => Files.size(Paths.get(f"$outDir/$safe-part$p%05d.ts.bin")))
-    assert(sizes == Seq(5000L * 8, 5000L * 8, 2000L * 8), s"12000 samples split 5000/5000/2000: $sizes")
-    // part 1 starts at global sample 5000
-    val expected = df.filter(col("channel") === ch0).orderBy(col("sample_idx"))
-      .select(col("value")).limit(5001).collect().last.getDouble(0)
-    val bytes = Files.readAllBytes(Paths.get(f"$outDir/$safe-part${1}%05d.ts.bin"))
-    val got = ByteBuffer.wrap(bytes, 0, 8).order(ByteOrder.LITTLE_ENDIAN).getDouble
-    assert(got == expected, "parts concatenate to the single-file stream")
-    assert(new String(Files.readAllBytes(Paths.get(s"$outDir/channels.json")))
-      .contains(s"$safe-part00002.ts.bin"), "manifest lists every part")
-    df.unpersist()
-  }
-
-  test("multi-file AND multi-part combine: per-file stems, per-part suffixes") {
-    val tmp = Files.createTempDirectory("edfmp")
-    val c1 = s"$tmp/s1.edf"; val c2 = s"$tmp/s2.edf"
-    Files.copy(Paths.get(EdfDFixtures.sinWaveEdf), Paths.get(c1))
-    Files.copy(Paths.get(EdfDFixtures.sinWaveEdf), Paths.get(c2))
-    val outDir = Files.createTempDirectory("edfmpout").toString
-    EdfSink.write(EdfFile.read(spark, Seq(c1, c2)), outDir, maxSamplesPerFile = 5000L)
-    val bins = new java.io.File(outDir).listFiles().map(_.getName).filter(_.endsWith(".ts.bin")).sorted
-    assert(bins.length == 12, s"2 files x 2 channels x 3 parts: ${bins.toSeq}")
-    assert(bins.forall(n => (n.startsWith("s1__") || n.startsWith("s2__")) && n.contains("-part")),
-      s"stem and part suffix both present: ${bins.toSeq}")
-    val sizes = bins.map(n => Files.size(Paths.get(s"$outDir/$n"))).sorted
-    assert(sizes.toSeq == Seq.fill(4)(2000L * 8) ++ Seq.fill(8)(5000L * 8),
-      s"each channel splits 5000/5000/2000: ${sizes.toSeq}")
-  }
-
   // contiguous EDF: `labels` signals, nRecords x 4 samples @1s records
   // (4 Hz), digital values = record*4 + sample + channel offset
   private def makeEdfC(path: String, startTime: String, labels: Seq[String],
@@ -111,15 +77,15 @@ class EdfSinkSpec extends AnyFunSuite {
 
     EdfSink.write(EdfFile.read(spark, Seq(s2)), outDir, mode = "append")
 
-    // committed session-1 bytes untouched; session 2 landed as a new generation part
+    // committed session-1 bytes untouched; session 2 landed as a new generation binary
     assert(Files.readAllBytes(Paths.get(s"$outDir/C3.ts.bin")).toSeq == before.toSeq)
-    val gPart = Paths.get(s"$outDir/C3-g01-part00000.ts.bin")
-    assert(Files.exists(gPart), "appended generation part written")
-    assert(Files.size(gPart) == 12 * 8)
+    val gen = Paths.get(s"$outDir/C3-g01.ts.bin")
+    assert(Files.exists(gen), "appended generation part written")
+    assert(Files.size(gen) == 12 * 8)
     // appended bytes = session 2's own calibrated stream
     val s2first = EdfFile.read(spark, Seq(s2)).filter(col("channel") === "C3")
       .orderBy(col("sample_idx")).select(col("value")).limit(1).collect()(0).getDouble(0)
-    val gotFirst = ByteBuffer.wrap(Files.readAllBytes(gPart), 0, 8)
+    val gotFirst = ByteBuffer.wrap(Files.readAllBytes(gen), 0, 8)
       .order(ByteOrder.LITTLE_ENDIAN).getDouble
     assert(gotFirst == s2first)
 
@@ -129,7 +95,7 @@ class EdfSinkSpec extends AnyFunSuite {
     assert("\\{\"index\": ".r.findAllIn(c3).size == 2, s"two contiguous chunks: $c3")
     assert(c3.contains("{\"index\": 12,"), s"appended chunk continues the value stream: $c3")
     assert(c3.contains("\"numValues\", \"value\": \"24\""))
-    assert(c3.contains("C3.ts.bin") && c3.contains("C3-g01-part00000.ts.bin"))
+    assert(c3.contains("C3.ts.bin") && c3.contains("C3-g01.ts.bin"))
     // start stays at session 1, end extends to session 2 (3600s later)
     val start = "\"start\": (\\d+)".r.findFirstMatchIn(c3).get.group(1).toLong
     val end = "\"end\": (\\d+)".r.findFirstMatchIn(c3).get.group(1).toLong
@@ -200,39 +166,6 @@ class EdfSinkSpec extends AnyFunSuite {
     }
   }
 
-  test("append + maxSamplesPerFile: part planning follows the shifted sample_idx") {
-    // session 2's 12 samples land at value-stream idx 12..23; with an
-    // 8-sample part bound that is parts {1, 2} — planning from the
-    // UNSHIFTED idx (parts {0, 1}) would make executors look up part
-    // keys absent from the broadcast name map and fail the job
-    val tmp = Files.createTempDirectory("edfappendmax")
-    val s1 = s"$tmp/s1.edf"; val s2 = s"$tmp/s2.edf"
-    makeEdfC(s1, "00.00.00", Seq("C3"))
-    makeEdfC(s2, "01.00.00", Seq("C3"))
-    val outDir = Files.createTempDirectory("edfappendmaxout").toString
-    EdfSink.write(EdfFile.read(spark, Seq(s1)), outDir, maxSamplesPerFile = 8L)
-    EdfSink.write(EdfFile.read(spark, Seq(s2)), outDir, maxSamplesPerFile = 8L, mode = "append")
-
-    val manifest = new String(Files.readAllBytes(Paths.get(s"$outDir/channel.json")))
-    val bins = "\"binaryFiles\", \"value\": \\[([^\\]]+)\\]".r
-      .findFirstMatchIn(manifest).get.group(1)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-    assert(bins.length == 4, s"2 original parts + 2 appended: $bins")
-    // appended parts split at the SHIFTED boundary: idx 12..15, then 16..23
-    val sizes = bins.map(b => Files.size(Paths.get(s"$outDir/$b")))
-    assert(sizes == Seq(8L * 8, 4L * 8, 4L * 8, 8L * 8), s"part sizes: $sizes")
-    // concatenating the listed binaries reproduces both sessions' streams
-    val expected = Seq(s1, s2).flatMap { p =>
-      EdfFile.read(spark, Seq(p)).filter(col("channel") === "C3")
-        .orderBy(col("sample_idx")).select(col("value")).collect().map(_.getDouble(0))
-    }
-    val gotBytes = bins.flatMap(b => Files.readAllBytes(Paths.get(s"$outDir/$b")).toSeq).toArray
-    val bb = ByteBuffer.wrap(gotBytes).order(ByteOrder.LITTLE_ENDIAN)
-    val got = (0 until gotBytes.length / 8).map(_ => bb.getDouble)
-    assert(got == expected, s"concatenated stream matches (${got.length}/${expected.length})")
-    assert(manifest.contains("\"numValues\", \"value\": \"24\""))
-  }
-
   test("packed dump handles adversarial input order: random shuffle == sorted bytes") {
     // the r16 packed exchange assumes nothing about arrival order: a
     // randomly re-partitioned sample relation exercises the pack's
@@ -287,11 +220,9 @@ class EdfSinkSpec extends AnyFunSuite {
 
   test("append shift across a part boundary works at maxSamplesPerFile = MaxValue (negative idx)") {
     // review r16 ADVICE: a matched append whose raw sample_idx is
-    // negative shifts to a DIFFERENT floorDiv part than the raw plan
-    // computed, and the pre-r17 shifted-part re-derivation skipped the
-    // maxSamplesPerFile == Long.MaxValue case entirely. Part discovery
-    // now happens exclusively on the shifted idx inside the pack, so the
-    // plan cannot disagree with the executors by construction.
+    // negative shifts across zero (raw -20..3, offset 12 existing values
+    // -> -8..15). The pack routes on the SHIFTED idx, so the appended
+    // session still lands in one generation binary, in sample_idx order.
     import org.apache.spark.sql.Row
     val base = 1577836800000000L
     def mk(idxs: Seq[Long], tsBase: Long) = spark.createDataFrame(
@@ -300,16 +231,14 @@ class EdfSinkSpec extends AnyFunSuite {
       EdfFile.sampleSchema)
     val outDir = Files.createTempDirectory("edfnegappend").toString
     EdfSink.write(mk(0L to 11L, base), outDir)
-    // raw idx -20..3; offset = 12 existing values -> shifted -8..15,
-    // spanning floorDiv parts {-1, 0} even at the MaxValue part size
     EdfSink.write(mk(-20L to 3L, base + 3600L * 1000000L), outDir, mode = "append")
     val m = new String(Files.readAllBytes(Paths.get(s"$outDir/channel.json")))
     val bins = "\"binaryFiles\", \"value\": \\[([^\\]]+)\\]".r
       .findFirstMatchIn(m).get.group(1)
       .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-    assert(bins.length == 3, s"original + 2 shifted parts: $bins")
+    assert(bins.length == 2, s"original + one generation binary: $bins")
     val sizes = bins.map(b => Files.size(Paths.get(s"$outDir/$b")))
-    assert(sizes == Seq(12L * 8, 8L * 8, 16L * 8), s"part sizes follow the shifted split: $sizes")
+    assert(sizes == Seq(12L * 8, 24L * 8), s"binary sizes: $sizes")
     // concatenating the listed binaries reproduces both sessions in idx order
     val gotBytes = bins.flatMap(b => Files.readAllBytes(Paths.get(s"$outDir/$b")).toSeq).toArray
     val bb = ByteBuffer.wrap(gotBytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -317,29 +246,26 @@ class EdfSinkSpec extends AnyFunSuite {
     assert(got == (0L to 11L).map(_.toDouble) ++ (-20L to 3L).map(_.toDouble),
       "concatenated stream = session1 ++ session2 in sample order")
     assert(m.contains("\"numValues\", \"value\": \"36\""), s"36 total values: $m")
-    // the 250 ms seam between the shifted parts is NOT a gap (4 Hz):
-    // the appended session stays one chunk, indices continue the stream
+    // the appended session is one chunk whose index continues the stream
     val idxs = "\\{\"index\": (\\d+)".r.findAllMatchIn(m).map(_.group(1).toLong).toSeq
     assert(idxs == Seq(0L, 12L), s"one appended chunk continuing the value stream: $m")
   }
 
   test("negative sample_idx routes consistently: plan floorDiv == pack floorDiv") {
-    // write() accepts arbitrary sample relations; SQL `div` truncates
-    // toward zero while the pack loop floor-divides — review r16 found
-    // the plan and executors disagreeing on which part a NEGATIVE
-    // sample_idx belongs to (a loud routing-miss job failure). The plan
-    // expression is now floor semantics too.
+    // write() accepts arbitrary sample relations: a NEGATIVE sample_idx
+    // sorts into the channel's one binary like any other
     import org.apache.spark.sql.Row
     val rows = (-5L to 5L).map(i =>
       Row("f.edf", 0, "NC", "uV", 4.0, 0L, i, 1577836800000000L + i * 250000L, i.toDouble))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 3), EdfFile.sampleSchema)
     val out = Files.createTempDirectory("edfnegidx").toString
-    EdfSink.write(df, out, maxSamplesPerFile = 4) // parts -2..1 under floorDiv
-    val parts = new java.io.File(out).listFiles().map(_.getName).filter(_.endsWith(".ts.bin")).sorted
-    assert(parts.length == 4, s"floorDiv parts all planned and written: ${parts.toSeq}")
-    val total = parts.map(p => Files.size(Paths.get(s"$out/$p"))).sum
-    assert(total == 11L * 8, "all 11 samples landed")
+    EdfSink.write(df, out)
+    val bins = new java.io.File(out).listFiles().map(_.getName).filter(_.endsWith(".ts.bin")).toSeq
+    assert(bins == Seq("NC.ts.bin"), s"one binary: $bins")
+    val bb = ByteBuffer.wrap(Files.readAllBytes(Paths.get(s"$out/NC.ts.bin"))).order(ByteOrder.LITTLE_ENDIAN)
+    val got = (0 until bb.capacity / 8).map(_ => bb.getDouble)
+    assert(got == (-5L to 5L).map(_.toDouble), s"all 11 samples in sample_idx order: $got")
   }
 
   test("packed dump bounds pack memory on very wide inputs (>MaxOpenBins channels)") {
@@ -418,12 +344,12 @@ class EdfSinkSpec extends AnyFunSuite {
     // replaying b1 must skip C3 (tagged) and re-append C4 only,
     // reconverging byte-for-byte
     Files.write(Paths.get(s"$outDir/channel-00001.json"), preAppendManifest1)
-    Files.delete(Paths.get(s"$outDir/C4-g01-part00000.ts.bin"))
+    Files.delete(Paths.get(s"$outDir/C4-g01.ts.bin"))
     // Hadoop's local ChecksumFileSystem keeps DOT-prefixed .crc sidecars;
     // a byte-level restore outside the FS API must drop them or the
     // replay's manifest read fails on a stale checksum
     Files.deleteIfExists(Paths.get(s"$outDir/.channel-00001.json.crc"))
-    Files.deleteIfExists(Paths.get(s"$outDir/.C4-g01-part00000.ts.bin.crc"))
+    Files.deleteIfExists(Paths.get(s"$outDir/.C4-g01.ts.bin.crc"))
     EdfSink.write(EdfFile.read(spark, Seq(s2)), outDir, mode = "append", replayTag = Some("b1"))
     assert(snapshot() == committed, "mixed-state replay healed C4 without double-appending C3")
 
@@ -656,7 +582,7 @@ class EdfSinkSpec extends AnyFunSuite {
     // append after a filtered run: the appended chunk's index continues
     // the STORED stream (8 values on disk), not the original sample_idx
     // space (12) — and sits strictly above every existing index, so the
-    // assembly's sort-interleave invariant holds for non-dense history
+    // merged chunk array stays sorted for non-dense history
     val s2 = s"$tmp/f2.edf"
     makeEdfC(s2, "01.00.00", Seq("C3"))
     EdfSink.write(EdfFile.read(spark, Seq(s2)), outDir, mode = "append")
@@ -675,16 +601,6 @@ class EdfSinkSpec extends AnyFunSuite {
     assert(m2.contains("\"numValues\", \"value\": \"11\""), s"numValues counts actual rows: $m2")
   }
 
-  test("part-file seams never split a contiguous chunk") {
-    val outDir = Files.createTempDirectory("edfseam").toString
-    val df = EdfFile.read(spark, Seq(EdfDFixtures.sinWaveEdf))
-    EdfSink.write(df, outDir, maxSamplesPerFile = 5000L)
-    val m = new String(Files.readAllBytes(Paths.get(s"$outDir/channel.json")))
-    assert("\\{\"index\": ".r.findAllIn(m).size == 1,
-      s"12000 contiguous samples across 3 parts = ONE chunk: $m")
-    assert(m.contains("\"numValues\", \"value\": \"12000\""))
-  }
-
   test("multi-file inputs with shared channel labels never interleave") {
     // same file twice under different paths = same channel labels twice
     val tmp = Files.createTempDirectory("edfmulti")
@@ -698,6 +614,27 @@ class EdfSinkSpec extends AnyFunSuite {
     assert(bins.length == 4, s"2 files x 2 channels, got ${bins.toSeq}")
     assert(bins.forall(n => n.startsWith("night1__") || n.startsWith("night2__")))
     bins.foreach { n => assert(Files.size(Paths.get(s"$outDir/$n")) == 12000L * 8) }
+  }
+
+  test("an overwrite write runs three jobs: pack, writer and commit") {
+    val tmp = Files.createTempDirectory("edfjobs")
+    val src = s"$tmp/s.edf"
+    makeEdfC(src, "00.00.00", Seq("C3", "C4"))
+    val samples = EdfFile.read(spark, Seq(src))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      EdfSink.write(samples, s"$tmp/out")
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get() == 3, s"jobs: ${jobs.get()}")
+    Seq("C3", "C4").foreach(ch => assert(Files.size(Paths.get(s"$tmp/out/$ch.ts.bin")) == 12L * 8))
   }
 
   test("the pack reads a direct EDF scan's column batches and any other input's rows") {

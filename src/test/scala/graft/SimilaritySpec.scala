@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
@@ -57,19 +58,21 @@ class SimilaritySpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
+    // the ANALYZE jobs above must reach the bus before the counter attaches
+    ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       assert(Similarity.corpusRows(spark.table("emb_stats")) == 123L)
-      Thread.sleep(1500) // listener bus is async; drain before asserting
+      ListenerBus.drain(spark.sparkContext)
       assert(jobs.get() == 0, "stats-backed cardinality must not scan")
       // control: a stat-less source falls back to count() — a real job —
       // proving the listener would have seen a scan above
       val dir = java.nio.file.Files.createTempDirectory("embnostat").toString
       spark.table("emb_stats").write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      Thread.sleep(1500)
+      ListenerBus.drain(spark.sparkContext)
       val afterWrite = jobs.get()
       assert(Similarity.corpusRows(spark.read.parquet(s"$dir/embeddings.parquet")) == 123L)
-      Thread.sleep(1500)
+      ListenerBus.drain(spark.sparkContext)
       assert(jobs.get() > afterWrite, "fallback path runs a count job")
     } finally spark.sparkContext.removeSparkListener(l)
   }

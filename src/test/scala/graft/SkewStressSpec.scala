@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -37,8 +38,7 @@ class SkewStressSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       action
-      // listener bus drains asynchronously after the action returns
-      Thread.sleep(1500)
+      ListenerBus.drain(spark.sparkContext)
       l.synchronized(l.rows.toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
   }

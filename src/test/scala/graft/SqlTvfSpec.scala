@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,18 +14,6 @@ class SqlTvfSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
-
-  /** Block until every event already posted to the async listener bus has
-    * been delivered. `LiveListenerBus.waitUntilEmpty` is private[spark]
-    * (public in bytecode), so reach it reflectively — deterministic,
-    * unlike a fixed sleep on a loaded machine.
-    */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    ()
-  }
 
   test("graft_curate runs from pure SQL and matches the DataFrame API") {
     val sql = spark.sql(s"SELECT * FROM graft_curate('$sf') ORDER BY doc_id").collect()
@@ -96,7 +85,7 @@ class SqlTvfSpec extends AnyFunSuite {
     // bus; let them land BEFORE attaching the counter or they get
     // delivered to it and fail the zero-jobs assertion spuriously.
     // waitUntilEmpty (vs a fixed sleep) is deterministic on loaded CI.
-    drainListenerBus()
+    ListenerBus.drain(spark.sparkContext)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -107,7 +96,7 @@ class SqlTvfSpec extends AnyFunSuite {
     try {
       // spark.sql analyzes eagerly: the TVF builds the operator plan here
       val df = spark.sql(s"SELECT * FROM graft_q('embed_neardup', '$sf')")
-      drainListenerBus() // listener bus is async; drain before asserting
+      ListenerBus.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"stats-backed registration must remove the plan-build cardinality scan, saw ${jobs.get()} job(s)")
       assert(df.count() > 0, "and the registered plan still executes")

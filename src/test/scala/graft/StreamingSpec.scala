@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -446,7 +447,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(stripTag(a) == b, s"$m: streamed vs batch append\n$a\nvs\n$b")
     }
     Seq("C3", "C4").foreach { ch =>
-      Seq(s"$ch.ts.bin", s"$ch-g01-part00000.ts.bin").foreach { bin =>
+      Seq(s"$ch.ts.bin", s"$ch-g01.ts.bin").foreach { bin =>
         assert(Files.readAllBytes(Paths.get(s"$outStream/$bin")).toSeq ==
           Files.readAllBytes(Paths.get(s"$outBatch/$bin")).toSeq, s"$bin bytes")
       }
@@ -485,7 +486,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(stripTag(a) == b, s"$m: processStream vs batch process+append")
     }
     Seq("F7", "F8").foreach { ch =>
-      Seq(s"$ch.ts.bin", s"$ch-g01-part00000.ts.bin").foreach { bin =>
+      Seq(s"$ch.ts.bin", s"$ch-g01.ts.bin").foreach { bin =>
         assert(Files.readAllBytes(Paths.get(s"$outStream/$bin")).toSeq ==
           Files.readAllBytes(Paths.get(s"$outBatch/$bin")).toSeq, s"$bin bytes")
       }
@@ -517,7 +518,7 @@ class StreamingSpec extends AnyFunSuite {
     val c3 = new String(Files.readAllBytes(Paths.get(s"$out/channel.json")))
     assert(c3.contains("\"numValues\", \"value\": \"24\""),
       s"lineage B's batch 0 appended (not skipped on a colliding tag): $c3")
-    assert(Files.exists(Paths.get(s"$out/C3-g01-part00000.ts.bin")), "B's generation binary landed")
+    assert(Files.exists(Paths.get(s"$out/C3-g01.ts.bin")), "B's generation binary landed")
   }
 
   test("A13b: streamed EDF+D files get onset sidecars, written in executor tasks") {
@@ -548,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
         .format("noop")
         .start()
       q.awaitTermination()
-      Thread.sleep(1500) // listener bus is async; drain before asserting
+      ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     val side = Paths.get(graft.sources.EdfOnsetIndex.sidecarPath(path))
     assert(Files.exists(side), "streamed EDF+D file got its onset sidecar at land time")

@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -95,22 +96,8 @@ class WindowKeySpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(l)
-    try { action; drainListenerBus(); rows.synchronized(rows.toSeq) }
+    try { action; ListenerBus.drain(spark.sparkContext); rows.synchronized(rows.toSeq) }
     finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  /** Block until every queued listener event has been delivered, so the
-    * snapshot below is complete regardless of host load (a fixed sleep
-    * is a race on a contended box). `LiveListenerBus.waitUntilEmpty` is
-    * `private[spark]` — package-private only to scalac, public in
-    * bytecode — hence the reflective call.
-    */
-  private def drainListenerBus(timeoutMs: Long = 30000L): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-      .invoke(bus, java.lang.Long.valueOf(timeoutMs))
-    ()
   }
 
   test("composite key lifts the ordered-window parallelism ceiling (per-task bounds)") {
