@@ -151,10 +151,14 @@ object EdfFile {
           s"('${sig.label}') are both ${sig.digMin}; calibration would divide by zero")
       sig
     }
+    // readers seek to headerBytes + rec * recordBytes: a wrong count decodes header text as samples
+    val headerBytes = num(path, "number of bytes in header", str(bytes, 184, 8))(_.toInt)
+    require(headerBytes == 256 + ns * 256, s"$path: EDF header field 'number of bytes in header' " +
+      s"is $headerBytes, not ${256 + ns * 256} (256 + 256 per signal)")
     EdfHeader(
       version = str(bytes, 0, 8), patientId = str(bytes, 8, 80), recordId = str(bytes, 88, 80),
       startDate = str(bytes, 168, 8), startTime = str(bytes, 176, 8),
-      headerBytes = num(path, "number of bytes in header", str(bytes, 184, 8))(_.toInt),
+      headerBytes = headerBytes,
       reserved = str(bytes, 192, 44),
       nbDataRec = num(path, "number of data records", str(bytes, 236, 8))(_.toInt),
       duration = num(path, "duration of a data record", str(bytes, 244, 8))(_.toDouble),
@@ -164,7 +168,8 @@ object EdfFile {
   /** Read a file's header via the Hadoop FS API (driver-side, tiny read).
     * A hostile header fails with an `IllegalArgumentException` naming the
     * file and the field: a file shorter than its header, a count or a
-    * number that does not parse, a negative signal count, a data signal
+    * number that does not parse, a negative signal count, a header byte
+    * count other than `256 + ns·256`, a data signal
     * whose digital range is empty, or a data record larger than the
     * file's data bytes (when it claims any record) or than
     * `Int.MaxValue` bytes.

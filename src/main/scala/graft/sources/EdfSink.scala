@@ -17,19 +17,21 @@ import org.apache.spark.sql.types._
   * unit, rate, type, group, lastAnnotation, contiguousChunks, properties;
   * reference base.py:47-65).
   *
-  * Scale shape: sample data is hash-partitioned by (file, channel) and
-  * one task owns each channel: it streams the channel's samples to its
-  * binary and its contiguous-chunk entries to a chunk file (a gap-heavy
-  * 100 TB corpus can have millions of chunks per channel — they never
-  * visit the driver), and returns one summary row. The driver only
-  * stream-concatenates the finished per-channel manifest files into
-  * `channels.json` (file-level I/O, memory O(copy buffer)). The only
-  * driver-side plan state is the (file, channel) name index — bounded by
-  * channels, independent of both sample and chunk volume.
+  * Scale shape: each writer hash-partitions its input by
+  * (file, channel), so one task owns each channel. The task streams the
+  * channel to its binary under the run's job-temp dir (the sample writer
+  * also streams its contiguous-chunk entries to a chunk file: a
+  * gap-heavy 100 TB corpus can have millions of chunks per channel, and
+  * they never visit the driver) and returns one summary row. A
+  * channel-cardinality commit job then renames the binaries and composes
+  * the manifests, and the driver stream-concatenates the committed
+  * manifests into the index (file-level I/O, memory O(copy buffer)).
+  * Driver state is bounded by channels, independent of both sample and
+  * chunk volume.
   *
   * CHANNEL DIRECTORY: `write` (CONTINUOUS channels) and `writeSpikes`
-  * (UNIT channels) share one directory protocol, parameterised by a
-  * [[Namespace]]:
+  * (UNIT channels) share one directory protocol and one commit path
+  * ([[writeDir]]), parameterised by a [[Namespace]]:
   * {{{
   *              manifests                 index               staged copy              count      binary
   * CONTINUOUS   channel[-NNNNN].json      channels.json       staged-manifest-N        numValues  .ts.bin
@@ -38,11 +40,14 @@ import org.apache.spark.sql.types._
   * Every file of one namespace is named so no pattern of the other
   * matches it, so both writers can share one outDir and an overwrite
   * run replaces only its own namespace. The protocol's steps, in order:
-  * crash recovery (restore staged manifests, sweep temp dirs), read the
-  * existing manifests, match incoming channels, plan final binary names
-  * and ordinals, stage matched manifests and pre-clean, commit (binaries
-  * and manifests, executor-side, rendered by one renderer), then check
-  * every rewritten manifest exists and concatenate the index.
+  * recover (restore staged manifests, sweep temp dirs; an append reads
+  * the manifest headers on the driver and broadcasts them); discover (the
+  * writer job: each task commits its channels' binaries under the
+  * job-temp dir and returns one [[Discovered]] row per channel);
+  * reconcile on the driver (match, plan final binary names and ordinals,
+  * stage matched manifests, pre-clean); commit (one job renames the
+  * binaries and composes every rewritten manifest with one renderer);
+  * finish (check every rewritten manifest exists, concatenate the index).
   *
   * APPEND MODE (reference base.py:146-221 `get_or_create_channel` /
   * `_get_platform_channel`): `mode = "append"` fuzzy-matches incoming
@@ -67,8 +72,8 @@ import org.apache.spark.sql.types._
   * FileSystem API (the Hadoop conf is captured on the driver and rebuilt
   * executor-side, so object-store credentials/endpoints reach the tasks
   * and output lands in the shared filesystem, never a task-local disk).
-  * Each task writes to a task-attempt temp directory under outDir and
-  * commits each finished file by rename; if a speculative or retried
+  * Each task writes to a task-attempt temp directory under the run's
+  * job-temp dir and commits each finished file by rename; if a speculative or retried
   * attempt already committed the same file, the loser detects the
   * existing destination and discards its temp file, so concurrent
   * attempts can never truncate or interleave a committed stream.
@@ -97,8 +102,9 @@ object EdfSink {
     } + "\""
 
   /** A manifest namespace of the channel directory (see the object doc).
-    * `sampled` channels carry a rate (matched within 2 %); spike channels
-    * have none. Both write one binary per channel per run.
+    * `sampled` channels carry a rate (matched within 2 %) and contiguous
+    * chunks; spike channels have neither. Both write one binary per
+    * channel per run.
     */
   private final case class Namespace(
       chanType: String,
@@ -154,10 +160,10 @@ object EdfSink {
     * temp file and moves on — both attempts wrote identical content
     * because a (file, channel) group is wholly owned by one partition.
     * An existing destination can ONLY be a racing attempt from this run:
-    * [[prepareDir]] pre-deletes every planned destination (and
-    * [[recoverDir]] sweeps stale task-attempt temp dirs) before any task
-    * starts, so a re-run into a non-empty outDir can never silently keep
-    * a previous run's bytes.
+    * writer tasks commit into the run's own job-temp dir, and
+    * [[prepareDir]] pre-deletes every planned final destination before
+    * the commit job starts, so a re-run into a non-empty outDir can never
+    * silently keep a previous run's bytes.
     */
   private def commit(fs: FileSystem, tmp: Path, dest: Path): Unit = {
     if (!fs.rename(tmp, dest)) {
@@ -176,8 +182,10 @@ object EdfSink {
     } finally in.close()
   }
 
-  /** An existing channel parsed (driver-side, chunk-free) from its
-    * committed manifest file. `count` is the namespace's count property.
+  /** An existing channel, from its committed manifest's header (read on
+    * the driver, chunk array streamed past). `count` is the namespace's
+    * count property, the count an append continues from: the sample pack
+    * shifts sample_idx by it and the commit adds the new count to it.
     */
   private case class ExistingChannel(
       ord: Int,
@@ -188,15 +196,8 @@ object EdfSink {
       start: Long,
       end: Long,
       binaryFiles: Seq[String],
-      count: Option[Long],
+      count: Long,
       appendTag: Option[String] = None)
-
-  private val descSchema = StructType(Seq(
-    StructField("name", StringType), StructField("start", LongType),
-    StructField("end", LongType), StructField("unit", StringType),
-    StructField("rate", DoubleType), StructField("type", StringType),
-    StructField("properties", ArrayType(StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType)))))))
 
   /** Crash recovery, before anything reads the directory. A staged
     * manifest with no committed destination is the surviving original of
@@ -217,38 +218,91 @@ object EdfSink {
     fs.globStatus(new Path(outPath, "_tmp-*")).foreach(s => fs.delete(s.getPath, true))
   }
 
-  /** Parse the namespace's committed manifests (ordinal order) WITHOUT
-    * their chunk arrays — driver state stays channel-cardinality however
-    * chunk-heavy the history is. Returns Nil when the directory has no
-    * prior run.
+  private lazy val manifestJson = new com.fasterxml.jackson.core.JsonFactoryBuilder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+
+  /** Parse one committed manifest with Jackson's streaming parser (on
+    * Spark's classpath), in O(1) memory in its chunk count: returns its
+    * scalar header fields and its properties (a value's string, or its
+    * array's strings), and hands each `contiguousChunks` entry
+    * (index, start) to `onChunk` as it is read. The driver reads headers
+    * with a no-op `onChunk`; the commit task that merges an append
+    * streams the staged original's chunks. A file that is not valid JSON
+    * fails with an `IllegalArgumentException` naming it.
     */
-  private def readExisting(spark: SparkSession, fs: FileSystem, outPath: Path,
-                           ns: Namespace): Seq[ExistingChannel] = {
-    val paths = Iterator.from(0).map(i => new Path(outPath, ns.manifestName(i)))
-      .takeWhile(fs.exists).toSeq
-    if (paths.isEmpty) return Nil
-    val rows = spark.read.schema(descSchema).option("multiLine", true)
-      .json(paths.map(_.toString): _*)
-      .withColumn("src", input_file_name())
-      .collect()
-    val byFile = rows.map(r => r.getAs[String]("src").split("/").last -> r).toMap
-    paths.zipWithIndex.map { case (p, i) =>
-      val r = byFile.getOrElse(p.getName,
-        throw new IllegalStateException(s"manifest ${p.getName} unreadable"))
-      val props = Option(r.getAs[Seq[org.apache.spark.sql.Row]]("properties")).getOrElse(Seq.empty)
-        .map(pr => pr.getAs[String]("key") -> pr.getAs[String]("value")).toMap
-      // "binaryFiles" is a JSON array rendered into a string property
-      val bins = props.get("binaryFiles")
-        .map(_.stripPrefix("[").stripSuffix("]").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
-        .orElse(props.get("binaryFile").map(Seq(_)))
-        .getOrElse(Seq.empty)
-      ExistingChannel(i, r.getAs[String]("name"), r.getAs[String]("unit"),
-        r.getAs[Double]("rate"), Option(r.getAs[String]("type")).getOrElse(ns.chanType),
-        r.getAs[Long]("start"), r.getAs[Long]("end"), bins,
-        props.get(ns.countKey).map(_.toLong),
-        props.get("appendTag"))
-    }
+  private def readManifest(fs: FileSystem, p: Path)(onChunk: (Long, Long) => Unit)
+      : (Map[String, String], Map[String, Seq[String]]) = {
+    import com.fasterxml.jackson.core.{JsonProcessingException, JsonToken}
+    def bad(why: String) = new IllegalArgumentException(s"manifest $p is not valid JSON: $why")
+    val in = fs.open(p)
+    try {
+      val jp = manifestJson.createParser(in: java.io.InputStream)
+      val header = Map.newBuilder[String, String]
+      val props = Map.newBuilder[String, Seq[String]]
+      // each field of the object the parser has just opened, with its value
+      // token current; a value `f` leaves unread is skipped whole
+      def fields(f: String => Unit): Unit =
+        while (jp.nextToken() == JsonToken.FIELD_NAME) {
+          val n = jp.currentName(); jp.nextToken(); f(n); jp.skipChildren()
+        }
+      def objects(f: => Unit): Unit =
+        if (jp.currentToken() == JsonToken.START_ARRAY) while (jp.nextToken() == JsonToken.START_OBJECT) f
+      def values(): Seq[String] =
+        if (jp.currentToken() != JsonToken.START_ARRAY) Option(jp.getValueAsString).toSeq
+        else Iterator.continually(jp.nextToken()).takeWhile(t => t != null && t != JsonToken.END_ARRAY)
+          .map { _ => val v = jp.getText; jp.skipChildren(); v }.toSeq
+      if (jp.nextToken() != JsonToken.START_OBJECT) throw bad("not an object")
+      fields {
+        case "contiguousChunks" => objects {
+          var idx, st = 0L
+          fields {
+            case "index" => idx = jp.getLongValue
+            case "start" => st = jp.getLongValue
+            case _ => ()
+          }
+          onChunk(idx, st)
+        }
+        case "properties" => objects {
+          var k: String = null; var v = Seq.empty[String]
+          fields {
+            case "key" => k = jp.getValueAsString
+            case "value" => v = values()
+            case _ => ()
+          }
+          Option(k).foreach(props += _ -> v)
+        }
+        case f => Option(jp.getValueAsString).foreach(header += f -> _)
+      }
+      if (jp.currentToken() != JsonToken.END_OBJECT) throw bad("the object does not close")
+      (header.result(), props.result())
+    } catch {
+      case e: JsonProcessingException => throw bad(e.getOriginalMessage)
+    } finally in.close()
   }
+
+  /** The namespace's committed manifests, in ordinal order, as existing
+    * channels (driver state stays channel-cardinality however
+    * chunk-heavy the history is). Returns Nil when the directory has no
+    * prior run. A manifest that lacks a header field, or whose field or
+    * count does not parse, fails with an `IllegalArgumentException`
+    * naming it. A CONTINUOUS manifest without a count falls back to its
+    * binaries' sizes (channel-cardinality file stats).
+    */
+  private def readExisting(fs: FileSystem, outPath: Path, ns: Namespace): Seq[ExistingChannel] =
+    Iterator.from(0).map(i => new Path(outPath, ns.manifestName(i))).takeWhile(fs.exists)
+      .zipWithIndex.map { case (p, i) =>
+        val (head, props) = readManifest(fs, p)((_, _) => ())
+        def field[T](k: String, v: Option[String])(parse: String => Option[T]): T =
+          v.flatMap(parse).getOrElse(throw new IllegalArgumentException(s"manifest $p lacks a well-formed '$k'"))
+        def str(k: String) = field(k, head.get(k))(Some(_))
+        def long(k: String) = field(k, head.get(k))(_.toLongOption)
+        val bins = props.get("binaryFiles").orElse(props.get("binaryFile")).getOrElse(Nil)
+        ExistingChannel(i, str("name"), str("unit"), field("rate", head.get("rate"))(_.toDoubleOption),
+          head.getOrElse("type", ns.chanType), long("start"), long("end"), bins,
+          props.get(ns.countKey).map(v => field(ns.countKey, v.headOption)(_.toLongOption)).getOrElse(
+            if (!ns.sampled) 0L else bins.map(b => fs.getFileStatus(new Path(outPath, b)).getLen / 8).sum),
+          props.get("appendTag").flatMap(_.headOption))
+      }.toSeq
 
   /** The reference's fuzzy channel-match rule (base.py:186-200): name
     * equal after lowercase+trim, same type, and for sampled channels rate
@@ -447,9 +501,8 @@ object EdfSink {
     StructField("rate", DoubleType, nullable = false),
     StructField("unit", StringType, nullable = false)))
 
-  private def packedBlocks(projected: DataFrame,
+  private def packedDump(projected: DataFrame,
       bExisting: org.apache.spark.broadcast.Broadcast[Seq[ExistingChannel]],
-      bExOffsets: org.apache.spark.broadcast.Broadcast[Map[Int, Long]],
       replayTag: Option[String]): DataFrame = {
     val spark = projected.sparkSession
     val packedRdd = packInput(projected).mapPartitions { it =>
@@ -464,7 +517,6 @@ object EdfSink {
         }
         val open = new java.util.HashMap[(String, String), PackBuf]()
         val existing = bExisting.value
-        val exOff = bExOffsets.value
         // per-(file, channel) route memo: (sample_idx shift, replay skip).
         // The append match is the same deterministic matchExisting the
         // driver reconcile re-applies to the discovered keys.
@@ -491,7 +543,7 @@ object EdfSink {
           if (r == null) {
             r = matchExisting(existing, mk._2, rate, Continuous) match {
               case Some(ex) =>
-                (exOff.getOrElse(ex.ord, 0L), replayTag.exists(t => ex.appendTag.contains(t)))
+                (ex.count, replayTag.exists(t => ex.appendTag.contains(t)))
               case None => (0L, false)
             }
             routeMemo.put(mk, r)
@@ -584,8 +636,16 @@ object EdfSink {
           }
         }
       }
+    // the exchange: hash repartition on the (file, channel) key and a
+    // BLOCK-cardinality sort on (file, channel, first_idx). The keys are
+    // the raw strings — at block cardinality (1 row per 4096 samples) the
+    // hash/compare cost of a string key is noise, and it frees the sink
+    // from any pre-computed key -> id map (the r16 plan scan this design
+    // deleted).
     org.apache.spark.sql.graft.DatasetShim
       .internalCreateDataFrame(spark, packedRdd, packSchema)
+      .repartition(col("file"), col("channel"))
+      .sortWithinPartitions(col("file"), col("channel"), col("first_idx"))
   }
 
   /** The raw sample projection the pack reads. */
@@ -638,29 +698,16 @@ object EdfSink {
     }
   }
 
-  /** Packed blocks + the exchange: hash repartition on the
-    * (file, channel) key and a BLOCK-cardinality sort on
-    * (file, channel, first_idx). The keys are the raw strings — at block
-    * cardinality (1 row per 4096 samples) the hash/compare cost of a
-    * string key is noise, and it frees the sink from any pre-computed
-    * key -> id map (the r16 plan scan this design deleted).
-    */
-  private def packedDump(projected: DataFrame,
-      bExisting: org.apache.spark.broadcast.Broadcast[Seq[ExistingChannel]],
-      bExOffsets: org.apache.spark.broadcast.Broadcast[Map[Int, Long]],
-      replayTag: Option[String]): DataFrame =
-    packedBlocks(projected, bExisting, bExOffsets, replayTag)
-      .repartition(col("file"), col("channel"))
-      .sortWithinPartitions(col("file"), col("channel"), col("first_idx"))
-
   /** One incoming channel as its writer task streamed it: the reconcile
     * step's whole input (channel-cardinality). The task has committed
-    * the channel's binary and chunk entries under the job dir
-    * ([[binTmpName]], [[chunkTmpName]]).
+    * the channel's binary under the job dir ([[binTmpName]]; a CONTINUOUS
+    * channel also its chunk entries, [[chunkTmpName]]). `count` is this
+    * run's values or spikes; `extra` properties follow the namespace's
+    * count property in the manifest.
     */
   private case class Discovered(
       file: String, channel: String, rate: Double, unit: String,
-      start: Long, end: Long, newValues: Long)
+      start: Long, end: Long, count: Long, extra: Seq[(String, String)] = Nil)
 
   /** Test observability: merge-window spills, counted through a Spark
     * accumulator so executor-JVM spills aggregate back to the driver
@@ -669,10 +716,7 @@ object EdfSink {
     * stayed correct. Reassigned per write() call; reads are last-write.
     */
   @volatile private[graft] var mergeSpillAcc: org.apache.spark.util.LongAccumulator = _
-  private[graft] def mergeSpillCount: Long = {
-    val a = mergeSpillAcc
-    if (a == null) 0L else a.value
-  }
+  private[graft] def mergeSpillCount: Long = Option(mergeSpillAcc).fold(0L)(_.value)
 
   private def sha1Hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-1")
@@ -683,68 +727,120 @@ object EdfSink {
   private def chunkTmpName(file: String, channel: String): String =
     "chunks-" + sha1Hex(file + "\u0000" + channel)
 
-  /** Stream the `contiguousChunks` (index, start) pairs out of a
-    * committed manifest without materializing the array (Jackson
-    * streaming — on Spark's classpath). Executor-side: the commit task
-    * that merges an append reads the staged original here.
+  /** One output channel's commit work: rename its job-temp binary to its
+    * final name `binary` and compose + commit its manifest at ordinal
+    * `ord`, merging the existing channel `ex` when it continues one.
+    * Built by the driver reconcile, executed by the (channel-cardinality)
+    * commit job.
     */
-  private def streamExistingChunks(fs: FileSystem, p: Path)(emit: (Long, Long) => Unit): Unit = {
-    import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-    val in = fs.open(p)
-    try {
-      val jp = new JsonFactory().createParser(in: java.io.InputStream)
-      require(jp.nextToken() == JsonToken.START_OBJECT, s"manifest $p is not a JSON object")
-      var t = jp.nextToken()
-      while (t == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val v = jp.nextToken()
-        if (name == "contiguousChunks" && v == JsonToken.START_ARRAY) {
-          var e = jp.nextToken()
-          while (e == JsonToken.START_OBJECT) {
-            var idx = 0L; var st = 0L
-            var f = jp.nextToken()
-            while (f == JsonToken.FIELD_NAME) {
-              val fn = jp.currentName(); jp.nextToken()
-              if (fn == "index") idx = jp.getLongValue
-              else if (fn == "start") st = jp.getLongValue
-              else jp.skipChildren()
-              f = jp.nextToken()
-            }
-            emit(idx, st)
-            e = jp.nextToken()
-          }
-        } else if (v == JsonToken.START_ARRAY || v == JsonToken.START_OBJECT) {
-          jp.skipChildren(): Unit
-        }
-        t = jp.nextToken()
-      }
-      jp.close()
-    } finally in.close()
+  private case class CommitTask(d: Discovered, ord: Int, binary: String, ex: Option[ExistingChannel])
+
+  /** What a writer job gets from [[writeDir]]: the namespace's existing
+    * channels (broadcast; empty for an overwrite), the job-temp dir its
+    * tasks commit under, and the driver's Hadoop conf entries.
+    */
+  private final case class WriterRun(
+      existing: org.apache.spark.broadcast.Broadcast[Seq[ExistingChannel]],
+      jobTmp: String,
+      confEntries: Seq[(String, String)]) {
+
+    /** The job-temp dir's file system, rebuilt in a task, without the
+      * local ChecksumFileSystem layer (same rationale as
+      * EdfFile.openSeekable, write side): Hadoop's FSOutputSummer pushes
+      * every byte through 512-B checksum chunks and writes a .crc
+      * sidecar — measurable drag at GB/s output rates for binaries, and
+      * the read path handles crc-less binaries. Manifests keep the
+      * checksummed path (the commit job's).
+      */
+    def rawFs: FileSystem = new Path(jobTmp).getFileSystem(EdfFile.confFromEntries(confEntries)) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
   }
 
-  /** One output channel's commit work: rename its job-temp binary to its
-    * final name and compose + commit its manifest. Built by the driver
-    * reconcile, executed by the (channel-cardinality) commit job.
+  /** The channel-directory protocol of the object doc for one run in
+    * namespace `ns`: recover and read the existing manifest headers, run
+    * `writer` (the discover job, which commits each channel's binary
+    * under the job-temp dir and returns its [[Discovered]] rows), then
+    * reconcile, run the commit job and finish. Returns the index path.
     */
-  private case class CommitTask(
-      ord: Int,
-      name: String,
-      unit: String,
-      rate: Double,
-      binTmp: String,                    // this run's binary, under jobTmp
-      binaryFiles: Seq[String],          // existing binaries, then this run's (last), concat order
-      exNumValues: Long,
-      exStart: Option[Long],
-      exEnd: Option[Long],
-      appendTag: Option[String],
-      stagedManifest: Option[String],    // matched channels: staged original to merge
-      chunkTmp: String,                  // bare new-chunk entries under jobTmp
-      newStart: Long,
-      newEnd: Long,
-      newValues: Long)
+  private def writeDir(spark: SparkSession, outDir: String, ns: Namespace, mode: String,
+                       appendTag: Option[String])(writer: WriterRun => Seq[Discovered]): String = {
+    require(mode == "overwrite" || mode == "append", s"mode must be overwrite|append, got $mode")
+    require(appendTag.isEmpty || mode == "append", "replayTag only applies to append mode")
+    val confEntries = EdfFile.captureConfEntries(spark)
+    val outPath = new Path(outDir)
+    val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverDir(driverFs, outPath, ns)
+    val existing = if (mode == "append") readExisting(driverFs, outPath, ns) else Nil
+    val jobTmp = new Path(outPath, s"_tmp-job-${java.util.UUID.randomUUID().toString.take(8)}")
+    driverFs.mkdirs(jobTmp)
+    val outDirStr = outPath.toString
+    val jobTmpStr = jobTmp.toString
+    val plan = try {
+      val discovered = writer(WriterRun(spark.sparkContext.broadcast(existing), jobTmpStr, confEntries))
+        .sortBy(d => (d.file, d.channel))
+
+      // ---- reconcile, on the driver: channel-cardinality, zero data I/O ----
+      val plan = planDir(ns, existing, discovered.map(d => ((d.file, d.channel), d.rate)))
+      prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
+      val commitTasks = discovered.map { d =>
+        val key = (d.file, d.channel)
+        CommitTask(d, plan.ords(key), plan.names(key), plan.matched.get(key))
+      }
+
+      // ---- commit job: channel-cardinality renames + manifest compose ----
+      if (commitTasks.nonEmpty) {
+        val slices = math.min(commitTasks.size,
+          math.max(1, spark.sparkContext.defaultParallelism))
+        spark.sparkContext.parallelize(commitTasks, slices).foreach { case CommitTask(d, ord, binary, ex) =>
+          val tc = TaskContext.get()
+          val fs = new Path(outDirStr).getFileSystem(EdfFile.confFromEntries(confEntries))
+          val attemptDir = new Path(jobTmpStr, s"attempt-c-${tc.partitionId()}-${tc.taskAttemptId()}")
+          try {
+            // binary: job-temp -> final. commit() makes retries and
+            // speculative duplicates idempotent (both attempts rename the
+            // SAME job-temp source; the loser sees the committed dest).
+            commit(fs, new Path(jobTmpStr, binTmpName(d.file, d.channel)), new Path(outDirStr, binary))
+            // manifest: a matched channel keeps its name, unit and rate;
+            // existing chunks (from the staged original, streamed — never
+            // materialized) then new chunks
+            commitManifest(fs, new Path(attemptDir, f"manifest-$ord%05d"), outDirStr, ns, ord,
+              ex.fold(d.channel)(_.name), ex.fold(d.start)(e => math.min(d.start, e.start)),
+              ex.fold(d.end)(e => math.max(d.end, e.end)), ex.fold(d.unit)(_.unit),
+              ex.fold(d.rate)(_.rate), ex.fold(Seq.empty[String])(_.binaryFiles) :+ binary,
+              ex.fold(0L)(_.count) + d.count, d.extra, appendTag) { out =>
+              var wrote = 0L
+              ex.foreach { e =>
+                readManifest(fs, new Path(outDirStr, ns.stagedName(e.ord))) { (idx, st) =>
+                  writeChunk(out, wrote == 0, idx, st)
+                  wrote += 1
+                }: Unit
+              }
+              if (ns.sampled) {
+                if (wrote > 0) out.write(", ".getBytes(StandardCharsets.UTF_8))
+                // copy WITHOUT deleting: a task retry must find it again
+                copyFile(fs, new Path(jobTmpStr, chunkTmpName(d.file, d.channel)), out)
+              }
+            }
+          } finally {
+            try fs.delete(attemptDir, true) catch { case _: Exception => () }
+          }
+        }
+      }
+      plan
+    } finally driverFs.delete(jobTmp, true)
+    finishDir(driverFs, outPath, plan)
+  }
 
   /** Write the binary + manifest output for a sample DataFrame
-    * (schema = EdfFile.sampleSchema). Returns the manifest path.
+    * (schema = EdfFile.sampleSchema). Returns the index path.
+    *
+    * Three jobs per call, in overwrite and append mode alike: the pack's
+    * shuffle map, the writer (the discover step of [[writeDir]]: one task
+    * owns each channel and commits its binary and chunk entries under the
+    * job-temp dir) and the commit job. An append reads the existing
+    * manifest headers on the driver, with no job.
     *
     * Chunk stats (start/end ts, counts) are derived from the rows
     * actually streamed, so FILTERED input (artifact-removed samples,
@@ -766,34 +862,15 @@ object EdfSink {
   def write(samples: DataFrame, outDir: String,
             mode: String = "overwrite",
             replayTag: Option[String] = None): String = {
-    require(mode == "overwrite" || mode == "append", s"mode must be overwrite|append, got $mode")
-    require(replayTag.isEmpty || mode == "append", "replayTag only applies to append mode")
-    val spark = samples.sparkSession
-    val spillAcc = spark.sparkContext.longAccumulator("graft.sink.mergeSpills")
+    val spillAcc = samples.sparkSession.sparkContext.longAccumulator("graft.sink.mergeSpills")
     mergeSpillAcc = spillAcc
-    val confEntries = EdfFile.captureConfEntries(spark)
-    val outPath = new Path(outDir)
-    val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(driverFs, outPath, Continuous)
-    val existing: Seq[ExistingChannel] =
-      if (mode == "append") readExisting(spark, driverFs, outPath, Continuous) else Nil
-    // append offset per existing ordinal: the channel's committed value
-    // count (manifest property; fallback = committed binary sizes —
-    // channel-cardinality file stats). Used identically by the pack
-    // (sample_idx shift) and the writer (stored-stream positions).
-    val exOffsets: Map[Int, Long] = existing.map { ex =>
-      ex.ord -> ex.count.getOrElse(
-        ex.binaryFiles.map(b => driverFs.getFileStatus(new Path(outPath, b)).getLen / 8).sum)
-    }.toMap
-    val bExisting = spark.sparkContext.broadcast(existing)
-    val bExOffsets = spark.sparkContext.broadcast(exOffsets)
+    writeDir(samples.sparkSession, outDir, Continuous, mode, replayTag)(
+      sampleWriter(samples, replayTag, spillAcc))
+  }
 
-    val jobTmpName = s"_tmp-job-${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobTmp = new Path(outPath, jobTmpName)
-    driverFs.mkdirs(jobTmp)
-    val outDirStr = outPath.toString
-    val jobTmpStr = jobTmp.toString
-
+  /** The sample writer's discover job (see `write`). */
+  private def sampleWriter(samples: DataFrame, replayTag: Option[String],
+      spillAcc: org.apache.spark.util.LongAccumulator)(run: WriterRun): Seq[Discovered] = {
     // ---- THE job: the sink's ONLY pass over sample volume. ----
     // map:    pack samples into per-(file, channel) blocks, append
     //         routing (shift/skip) resolved inline from the broadcast
@@ -807,28 +884,15 @@ object EdfSink {
     //         holding them in memory), and returns one summary row;
     //         collecting those summaries (channel-cardinality) is what
     //         triggers the job.
-    val dumpRows = packedDump(packProjection(samples), bExisting, bExOffsets, replayTag).queryExecution.toRdd
-    val discovered: Seq[Discovered] = dumpRows.mapPartitions { blocks =>
+    val dumpRows = packedDump(packProjection(samples), run.existing, replayTag).queryExecution.toRdd
+    dumpRows.mapPartitions { blocks =>
       import org.apache.spark.unsafe.types.UTF8String
       val tc = TaskContext.get()
-      // Binary SAMPLE bytes bypass the local ChecksumFileSystem layer
-      // (same rationale as EdfFile.openSeekable, write side): Hadoop's
-      // FSOutputSummer pushes every byte through 512-B checksum chunks
-      // and writes a .crc sidecar — measurable drag at GB/s output
-      // rates, and the read path already handles crc-less binaries.
-      // Cluster filesystems (HDFS, object stores) are not
-      // ChecksumFileSystems and pass through untouched. Manifests keep
-      // the checksummed path (tiny, and append-mode re-READS them
-      // through the checksum layer).
-      val fs = new Path(jobTmpStr).getFileSystem(EdfFile.confFromEntries(confEntries)) match {
-        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-        case other => other
-      }
-      val attemptDir = new Path(jobTmpStr,
+      val fs = run.rawFs
+      val attemptDir = new Path(run.jobTmp,
         s"attempt-b-${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}")
       val spillFiles = new scala.collection.mutable.ArrayBuffer[java.io.File]()
-      val existing = bExisting.value
-      val exOff = bExOffsets.value
+      val existing = run.existing.value
       val buf = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
 
       /** One channel's new output: its samples go to a temp binary,
@@ -845,7 +909,7 @@ object EdfSink {
         // written so far. Identical to sample_idx for dense input;
         // reference-correct (and within the binary's bounds) for
         // filtered/non-dense input where sample_idx has holes.
-        private val offset = ex.fold(0L)(e => exOff.getOrElse(e.ord, 0L))
+        private val offset = ex.fold(0L)(_.count)
         // non-overlap invariant (reference base.py:87-95): appended
         // chunks start strictly after everything already committed,
         // and each chunk after its predecessor's end
@@ -877,8 +941,8 @@ object EdfSink {
         def finish(): Discovered = {
           endChunk()
           flushBuf(); bin.close(); chunks.close()
-          commit(fs, binTmp, new Path(jobTmpStr, binTmpName(fileStr, chanStr)))
-          commit(fs, chunkTmp, new Path(jobTmpStr, chunkTmpName(fileStr, chanStr)))
+          commit(fs, binTmp, new Path(run.jobTmp, binTmpName(fileStr, chanStr)))
+          commit(fs, chunkTmp, new Path(run.jobTmp, chunkTmpName(fileStr, chanStr)))
           Discovered(fileStr, chanStr, rate, unit, start, end, n)
         }
       }
@@ -1007,61 +1071,7 @@ object EdfSink {
         spillFiles.foreach(f => { f.delete(): Unit })
       }
       done.iterator
-    }.collect().toSeq.sortBy(d => (d.file, d.channel))
-
-    // ---- driver reconcile: channel-cardinality, zero sample I/O ----
-    val plan = planDir(Continuous, existing, discovered.map(d => ((d.file, d.channel), d.rate)))
-    prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
-    val commitTasks: Seq[CommitTask] = discovered.map { d =>
-      val key = (d.file, d.channel)
-      val ex = plan.matched.get(key)
-      CommitTask(plan.ords(key), ex.fold(d.channel)(_.name), ex.fold(d.unit)(_.unit),
-        ex.fold(d.rate)(_.rate), binTmpName(d.file, d.channel),
-        ex.fold(Seq.empty[String])(_.binaryFiles) :+ plan.names(key),
-        ex.fold(0L)(e => exOffsets(e.ord)), ex.map(_.start), ex.map(_.end), replayTag,
-        ex.map(e => Continuous.stagedName(e.ord)), chunkTmpName(d.file, d.channel),
-        d.start, d.end, d.newValues)
-    }
-
-    // ---- commit job: channel-cardinality renames + manifest compose ----
-    if (commitTasks.nonEmpty) {
-      val slices = math.min(commitTasks.size,
-        math.max(1, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(commitTasks, slices).foreach { t =>
-        val tc = TaskContext.get()
-        val fs = new Path(outDirStr).getFileSystem(EdfFile.confFromEntries(confEntries))
-        val attemptDir = new Path(jobTmpStr, s"attempt-c-${tc.partitionId()}-${tc.taskAttemptId()}")
-        try {
-          // binary: job-temp -> final. commit() makes retries and
-          // speculative duplicates idempotent (both attempts rename the
-          // SAME job-temp source; the loser sees the committed dest).
-          commit(fs, new Path(jobTmpStr, t.binTmp), new Path(outDirStr, t.binaryFiles.last))
-          // manifest: existing chunks (from the staged original, streamed
-          // — never materialized) then new chunks; header fields were
-          // computed at reconcile
-          commitManifest(fs, new Path(attemptDir, f"manifest-${t.ord}%05d"), outDirStr,
-            Continuous, t.ord, t.name,
-            math.min(t.newStart, t.exStart.getOrElse(Long.MaxValue)),
-            math.max(t.newEnd, t.exEnd.getOrElse(Long.MinValue)),
-            t.unit, t.rate, t.binaryFiles, t.exNumValues + t.newValues, Nil, t.appendTag) { out =>
-            var wrote = 0L
-            t.stagedManifest.foreach { sm =>
-              streamExistingChunks(fs, new Path(outDirStr, sm)) { (idx, st) =>
-                writeChunk(out, wrote == 0, idx, st)
-                wrote += 1
-              }
-            }
-            if (wrote > 0) out.write(", ".getBytes(StandardCharsets.UTF_8))
-            // copy WITHOUT deleting: a task retry must find it again
-            copyFile(fs, new Path(jobTmpStr, t.chunkTmp), out)
-          }
-        } finally {
-          try fs.delete(attemptDir, true) catch { case _: Exception => () }
-        }
-      }
-    }
-    driverFs.delete(jobTmp, true)
-    finishDir(driverFs, outPath, plan)
+    }.collect().toSeq
   }
 
   /** A8b sink: UNIT (spike) channel serialization in the reference's
@@ -1084,127 +1094,101 @@ object EdfSink {
     * forward — a latent bug nothing in the reference reads back. We
     * write waveforms in spike-record order.
     *
-    * Scale shape: one shuffle keyed by (file, channel); each owning task
-    * streams records and waveforms to two temp files (counts are only
-    * known at stream end — the header + record + waveform compose happens
-    * at commit, nothing buffers in memory) and commits the channel's UNIT
-    * manifest (start/end from first/last spike, reference
-    * base.py:253-261). Directory handling — recovery, append matching
-    * (name only), generation names, ordinals, staging and the
+    * Scale shape: one shuffle keyed by (file, channel), the only
+    * evaluation of `spikes`; each owning task streams records and
+    * waveforms to two temp files (counts are only known at stream end —
+    * the header + record + waveform compose happens once the channel
+    * ends, nothing buffers in memory) and commits the composed binary
+    * under the job-temp dir. The commit job of [[writeDir]] then renames
+    * it and commits the channel's UNIT manifest (start/end from
+    * first/last spike, reference base.py:253-261), as it does for sample
+    * channels. Directory handling — recovery, append matching (name
+    * only), generation names, ordinals, staging and the
     * `channels_unit.json` index — is the channel-directory protocol of
     * the object doc, in its UNIT namespace. Returns the index path.
     */
-  def writeSpikes(spikes: DataFrame, outDir: String, mode: String = "overwrite"): String = {
-    require(mode == "overwrite" || mode == "append", s"mode must be overwrite|append, got $mode")
-    val spark = spikes.sparkSession
-    val confEntries = EdfFile.captureConfEntries(spark)
-    val outPath = new Path(outDir)
-    val driverFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(driverFs, outPath, Spikes)
-    val existing = if (mode == "append") readExisting(spark, driverFs, outPath, Spikes) else Nil
-    val keys = spikes.select(col("file"), col("channel")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val plan = planDir(Spikes, existing, keys.map(k => (k, 0.0)))
-    prepareDir(driverFs, outPath, plan, overwrite = mode == "overwrite")
-    val bPlan = spark.sparkContext.broadcast(plan)
-    val outDirStr = outPath.toString
-
-    spikes
-      .select(col("file"), col("channel"), col("ts_us"), col("unit_id"), col("waveform"))
-      .repartition(col("file"), col("channel"))
-      .sortWithinPartitions(col("file"), col("channel"), col("ts_us"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val tc = TaskContext.get()
-        // spike waveform volume takes the same raw-FS write path as the
-        // sample binaries (see the sample writer's rationale); the tiny
-        // UNIT manifests ride along — pre-cleans all go through the
-        // checksum-aware driver FS, so no stale .crc pair can survive
-        val fs = new Path(outDirStr).getFileSystem(EdfFile.confFromEntries(confEntries)) match {
-          case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-          case other => other
-        }
-        val attemptDir = new Path(outDirStr,
-          s"_tmp-s${tc.stageId()}-${tc.partitionId()}-attempt-${tc.taskAttemptId()}")
-        var key: (String, String) = null
-        var recTmp: Path = null; var wfTmp: Path = null
-        var recOut: BufferedOutputStream = null; var wfOut: BufferedOutputStream = null
-        var nSpikes = 0L; var nSamples = -1L
-        var firstTs = 0L; var lastTs = 0L
-        val b8 = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-        def putLong(out: java.io.OutputStream, v: Long): Unit = {
-          b8.clear(); b8.putLong(v); out.write(b8.array())
-        }
-        def putDouble(out: java.io.OutputStream, v: Double): Unit = {
-          b8.clear(); b8.putDouble(v); out.write(b8.array())
-        }
-        def finishChannel(): Unit = if (key != null) {
-          recOut.close(); recOut = null
-          wfOut.close(); wfOut = null
-          val tmp = new Path(attemptDir, "composed")
-          val out = new BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-          putLong(out, 9L * nSpikes)   // waveform_offset = len(spike record region)
-          putLong(out, nSpikes)
-          putLong(out, math.max(nSamples, 0L))
-          copyFile(fs, recTmp, out)
-          copyFile(fs, wfTmp, out)
-          out.close()
-          val p = bPlan.value
-          val bin = p.names(key)
-          commit(fs, tmp, new Path(outDirStr, bin))
-          // UNIT channel manifest (reference base.py:253-261: channel
-          // start/end extend to the spike horizon; append merges the
-          // existing descriptor and lists every generation binary)
-          val ex = p.matched.get(key)
-          require(ex.forall(firstTs > _.end),
-            s"appended spikes must start after channel ${key._2}'s existing end")
-          commitManifest(fs, new Path(attemptDir, "manifest"), outDirStr, Spikes, p.ords(key),
-            ex.fold(key._2)(_.name),
-            ex.fold(firstTs)(e => math.min(firstTs, e.start)),
-            ex.fold(lastTs)(e => math.max(lastTs, e.end)),
-            "uV", 0.0, ex.fold(Seq.empty[String])(_.binaryFiles) :+ bin,
-            ex.flatMap(_.count).getOrElse(0L) + nSpikes,
-            Seq("numSamples" -> math.max(nSamples, 0L).toString), None)(_ => ())
-          key = null
-        }
-        try {
-          rows.foreach { r =>
-            val k = (r.getString(0), r.getString(1))
-            if (k != key) {
-              finishChannel()
-              key = k; nSpikes = 0L; nSamples = -1L
-              recTmp = new Path(attemptDir, "records"); wfTmp = new Path(attemptDir, "waveforms")
-              recOut = new BufferedOutputStream(fs.create(recTmp, true), 1 << 16)
-              wfOut = new BufferedOutputStream(fs.create(wfTmp, true), 1 << 16)
-            }
-            val ts = r.getLong(2)
-            if (nSpikes == 0L) firstTs = ts
-            lastTs = ts
-            putLong(recOut, ts)
-            val unitId = r.getInt(3)
-            // uint8 on disk — out-of-range must fail loudly (the
-            // reference's bytearray([unit]) raises), never truncate
-            require(unitId >= 0 && unitId <= 255,
-              s"unit_id $unitId out of uint8 range in channel ${key._2}")
-            recOut.write(unitId)
-            val wf = r.getSeq[Any](4)
-            if (nSamples < 0) nSamples = wf.size.toLong
-            require(wf.size.toLong == nSamples,
-              s"ragged waveforms in channel ${key._2}: ${wf.size} vs $nSamples")
-            wf.foreach {
-              case null => putDouble(wfOut, Double.NaN)
-              case d: Double => putDouble(wfOut, d)
-              case other => throw new IllegalArgumentException(s"waveform element $other")
-            }
-            nSpikes += 1
+  def writeSpikes(spikes: DataFrame, outDir: String, mode: String = "overwrite"): String =
+    writeDir(spikes.sparkSession, outDir, Spikes, mode, None) { run =>
+      spikes
+        .select(col("file"), col("channel"), col("ts_us"), col("unit_id"), col("waveform"))
+        .repartition(col("file"), col("channel"))
+        .sortWithinPartitions(col("file"), col("channel"), col("ts_us"))
+        .rdd.mapPartitions { rows =>
+          val tc = TaskContext.get()
+          val fs = run.rawFs
+          val attemptDir = new Path(run.jobTmp,
+            s"attempt-s-${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}")
+          val existing = run.existing.value
+          var key: (String, String) = null
+          val recTmp = new Path(attemptDir, "records"); val wfTmp = new Path(attemptDir, "waveforms")
+          var recOut: BufferedOutputStream = null; var wfOut: BufferedOutputStream = null
+          var nSpikes = 0L; var nSamples = -1L
+          var firstTs = 0L; var lastTs = 0L
+          val b8 = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
+          def putLong(out: java.io.OutputStream, v: Long): Unit = {
+            b8.clear(); b8.putLong(v); out.write(b8.array())
           }
-          finishChannel()
-        } finally {
-          if (recOut != null) recOut.close()
-          if (wfOut != null) wfOut.close()
-          fs.delete(attemptDir, true)
-        }
-      }
-
-    finishDir(driverFs, outPath, plan)
-  }
+          def putDouble(out: java.io.OutputStream, v: Double): Unit = {
+            b8.clear(); b8.putDouble(v); out.write(b8.array())
+          }
+          val done = new scala.collection.mutable.ArrayBuffer[Discovered]()
+          def finishChannel(): Unit = if (key != null) {
+            recOut.close(); recOut = null
+            wfOut.close(); wfOut = null
+            val tmp = new Path(attemptDir, "composed")
+            val out = new BufferedOutputStream(fs.create(tmp, true), 1 << 16)
+            putLong(out, 9L * nSpikes)   // waveform_offset = len(spike record region)
+            putLong(out, nSpikes)
+            putLong(out, math.max(nSamples, 0L))
+            copyFile(fs, recTmp, out)
+            copyFile(fs, wfTmp, out)
+            out.close()
+            commit(fs, tmp, new Path(run.jobTmp, binTmpName(key._1, key._2)))
+            done += Discovered(key._1, key._2, 0.0, "uV", firstTs, lastTs, nSpikes,
+              Seq("numSamples" -> math.max(nSamples, 0L).toString))
+            key = null
+          }
+          try {
+            rows.foreach { r =>
+              val k = (r.getString(0), r.getString(1))
+              val ts = r.getLong(2)
+              if (k != key) {
+                finishChannel()
+                // non-overlap invariant (reference base.py:87-95): a matched
+                // channel's appended spikes start after its existing end
+                require(matchExisting(existing, k._2, 0.0, Spikes).forall(ts > _.end),
+                  s"appended spikes must start after channel ${k._2}'s existing end")
+                key = k; nSpikes = 0L; nSamples = -1L
+                recOut = new BufferedOutputStream(fs.create(recTmp, true), 1 << 16)
+                wfOut = new BufferedOutputStream(fs.create(wfTmp, true), 1 << 16)
+              }
+              if (nSpikes == 0L) firstTs = ts
+              lastTs = ts
+              putLong(recOut, ts)
+              val unitId = r.getInt(3)
+              // uint8 on disk — out-of-range must fail loudly (the
+              // reference's bytearray([unit]) raises), never truncate
+              require(unitId >= 0 && unitId <= 255,
+                s"unit_id $unitId out of uint8 range in channel ${key._2}")
+              recOut.write(unitId)
+              val wf = r.getSeq[Any](4)
+              if (nSamples < 0) nSamples = wf.size.toLong
+              require(wf.size.toLong == nSamples,
+                s"ragged waveforms in channel ${key._2}: ${wf.size} vs $nSamples")
+              wf.foreach {
+                case null => putDouble(wfOut, Double.NaN)
+                case d: Double => putDouble(wfOut, d)
+                case other => throw new IllegalArgumentException(s"waveform element $other")
+              }
+              nSpikes += 1
+            }
+            finishChannel()
+          } finally {
+            if (recOut != null) recOut.close()
+            if (wfOut != null) wfOut.close()
+            fs.delete(attemptDir, true)
+          }
+          done.iterator
+        }.collect().toSeq
+    }
 }

@@ -100,9 +100,9 @@ class EdfFileSpec extends AnyFunSuite {
 
   test("hostile headers fail with the file and the field named") {
     val tmp = java.nio.file.Files.createTempDirectory("edfhostile")
-    // one data signal: the signal count sits at byte 252, the record
-    // duration at 244, signal 0's digital min/max at 376/384 and its
-    // samples per record at 472
+    // one data signal: the header byte count sits at byte 184, the signal
+    // count at 252, the record duration at 244, signal 0's digital min/max
+    // at 376/384 and its samples per record at 472
     def variant(name: String)(patch: Array[Byte] => Array[Byte]): String = {
       val p = s"$tmp/$name.edf"
       EdfDFixtures.makeEdfC(p, "00.00.00", Seq("C3"))
@@ -121,6 +121,9 @@ class EdfFileSpec extends AnyFunSuite {
       variant("digrange")(b => put(put(b, 376, 8, "7"), 384, 8, "7")) ->
         "'digital minimum' and 'digital maximum' of signal 0 ('C3') are both 7.0",
       variant("nrneg")(put(_, 472, 8, "-4")) -> "'number of samples of signal 0' is negative: -4",
+      // a byte count short of the signal headers: readers would decode
+      // signal 0's header text as samples
+      variant("hdrbytes")(put(_, 184, 8, "256")) -> "'number of bytes in header' is 256, not 512",
       // 10^8 samples per record in a file of three 4-sample records: a
       // reader would allocate 200 MB per record buffer before reading
       variant("nrhuge")(put(_, 472, 8, "99999999")) ->

@@ -616,11 +616,8 @@ class EdfSinkSpec extends AnyFunSuite {
     bins.foreach { n => assert(Files.size(Paths.get(s"$outDir/$n")) == 12000L * 8) }
   }
 
-  test("an overwrite write runs three jobs: pack, writer and commit") {
-    val tmp = Files.createTempDirectory("edfjobs")
-    val src = s"$tmp/s.edf"
-    makeEdfC(src, "00.00.00", Seq("C3", "C4"))
-    val samples = EdfFile.read(spark, Seq(src))
+  /** The Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -630,11 +627,91 @@ class EdfSinkSpec extends AnyFunSuite {
     ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
-      EdfSink.write(samples, s"$tmp/out")
+      body
       ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 3, s"jobs: ${jobs.get()}")
+    jobs.get()
+  }
+
+  test("an overwrite write runs three jobs: pack, writer and commit") {
+    val tmp = Files.createTempDirectory("edfjobs")
+    val src = s"$tmp/s.edf"
+    makeEdfC(src, "00.00.00", Seq("C3", "C4"))
+    val samples = EdfFile.read(spark, Seq(src))
+    val jobs = jobsOf(EdfSink.write(samples, s"$tmp/out"))
+    assert(jobs == 3, s"jobs: $jobs")
     Seq("C3", "C4").foreach(ch => assert(Files.size(Paths.get(s"$tmp/out/$ch.ts.bin")) == 12L * 8))
+  }
+
+  test("an append write runs three jobs too: the existing manifests are read on the driver") {
+    val tmp = Files.createTempDirectory("edfappjobs")
+    val s1 = s"$tmp/s1.edf"; val s2 = s"$tmp/s2.edf"
+    makeEdfC(s1, "00.00.00", Seq("C3", "C4"))
+    makeEdfC(s2, "01.00.00", Seq("C3", "C4"))
+    EdfSink.write(EdfFile.read(spark, Seq(s1)), s"$tmp/out")
+    val jobs = jobsOf(EdfSink.write(EdfFile.read(spark, Seq(s2)), s"$tmp/out", mode = "append"))
+    assert(jobs == 3, s"jobs: $jobs")
+    Seq("C3", "C4").foreach(ch => assert(Files.size(Paths.get(s"$tmp/out/$ch-g01.ts.bin")) == 12L * 8))
+    val m = new String(Files.readAllBytes(Paths.get(s"$tmp/out/channel.json")))
+    assert(m.contains("\"numValues\", \"value\": \"24\""), m)
+  }
+
+  test("writeSpikes evaluates its input once") {
+    import spark.implicits._
+    val evals = spark.sparkContext.longAccumulator("spikeInputEvals")
+    val tap = udf { (c: String) => evals.add(1L); c }
+    val spikes = Seq(
+      ("rec.edf", "unit1", 1000L, 0, Seq(1.0, 2.0)),
+      ("rec.edf", "unit1", 2000L, 1, Seq(3.0, 4.0)),
+      ("rec.edf", "unit2", 1500L, 2, Seq(5.0, 6.0)))
+      .toDF("file", "channel", "ts_us", "unit_id", "waveform")
+      .select(col("file"), tap(col("channel")).as("channel"), col("ts_us"), col("unit_id"), col("waveform"))
+    val outDir = Files.createTempDirectory("edfspikeonce").toString
+    EdfSink.writeSpikes(spikes, outDir)
+    assert(evals.value == 3L, s"input rows evaluated ${evals.value} times for 3 rows")
+    assert(Files.size(Paths.get(s"$outDir/unit1.spikes.bin")) == 24 + 9 * 2 + 2 * 2 * 8)
+  }
+
+  test("a spike append overlapping the channel's existing end fails and leaves the directory as it was") {
+    import spark.implicits._
+    val s1 = Seq(("rec.edf", "unit1", 1000L, 0, Seq(1.0, 2.0)),
+                 ("rec.edf", "unit1", 2000L, 1, Seq(3.0, 4.0)))
+      .toDF("file", "channel", "ts_us", "unit_id", "waveform")
+    // starts AT the existing end: appended spikes must start after it
+    val s2 = Seq(("rec2.edf", "unit1", 2000L, 2, Seq(5.0, 6.0)))
+      .toDF("file", "channel", "ts_us", "unit_id", "waveform")
+    val outDir = Files.createTempDirectory("edfspikeoverlap").toString
+    EdfSink.writeSpikes(s1, outDir)
+    def listing = new java.io.File(outDir).listFiles().map(_.getName).sorted.toSeq
+    val before = listing
+    val manifest = Files.readAllBytes(Paths.get(s"$outDir/unit-channel.json")).toSeq
+    val e = intercept[org.apache.spark.SparkException](EdfSink.writeSpikes(s2, outDir, mode = "append"))
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    assert(msgs(e).exists(_.contains("appended spikes must start after channel unit1's existing end")),
+      s"got: ${msgs(e)}")
+    assert(listing == before, "no generation binary, staged manifest or temp dir left behind")
+    assert(Files.readAllBytes(Paths.get(s"$outDir/unit-channel.json")).toSeq == manifest)
+  }
+
+  test("an append over a manifest that is not valid JSON or lacks a field fails naming the manifest") {
+    val tmp = Files.createTempDirectory("edfbadmanifest")
+    val s1 = s"$tmp/s1.edf"; val s2 = s"$tmp/s2.edf"
+    makeEdfC(s1, "00.00.00", Seq("C3"))
+    makeEdfC(s2, "01.00.00", Seq("C3"))
+    Seq("{\"name\": \"C3\", \"start\": 0, \"end\"" -> "is not valid JSON",
+        "{\"name\": \"C3\", \"start\": 0, \"end\": 1, \"rate\": 4.0}" -> "lacks a well-formed 'unit'")
+      .zipWithIndex.foreach { case ((text, why), i) =>
+        val outDir = s"$tmp/out$i"
+        EdfSink.write(EdfFile.read(spark, Seq(s1)), outDir)
+        // rewritten outside Hadoop: no checksum sidecar vouches for it
+        Files.write(Paths.get(s"$outDir/channel.json"), text.getBytes("UTF-8"))
+        Files.delete(Paths.get(s"$outDir/.channel.json.crc"))
+        val e = intercept[IllegalArgumentException] {
+          EdfSink.write(EdfFile.read(spark, Seq(s2)), outDir, mode = "append")
+        }
+        assert(e.getMessage.contains(s"$outDir/channel.json") && e.getMessage.contains(why), e.getMessage)
+      }
   }
 
   test("the pack reads a direct EDF scan's column batches and any other input's rows") {
